@@ -1127,8 +1127,8 @@ object Dedup {
     * [[Similarity.kmeansCentroids]]) so training never re-scans the
     * full corpus per iteration; the corpus is assigned exactly once.
     */
-  /** Cluster-id assignment shared by [[semDedup]] and
-    * [[semDedupCandidateVolume]]. `nLists = 0` means AUTO: grow the
+  /** Cluster-id assignment behind [[semDedup]].
+    * `nLists = 0` means AUTO: grow the
     * list count with the corpus — `k = max(8, ⌈n/targetListSize⌉)` —
     * so the per-list candidate volume stays BOUNDED instead of
     * quadratic (the SemDeDup paper's own k-selection rule: cluster
@@ -1218,27 +1218,6 @@ object Dedup {
       .agg(min(struct(col("keeper"), col("cosine"))).as("k"))
       .select(col("list"), col("vec_id"), col("k.keeper").as("keeper_id"),
         round(col("k.cosine"), 4).as("cosine"))
-  }
-
-  /** Candidate-pair volume of [[semDedup]]'s clustering stage: Σ over
-    * k-means lists of C(n,2) — the exact number of within-list pairs
-    * the cosine kernel evaluates (the kernel sits inside the join
-    * condition, so no candidate relation exists to observe). Runs the
-    * same quantizer + assignment, then one list-count aggregate.
-    */
-  def semDedupCandidateVolume(
-      emb: DataFrame, vecCol: String, idCol: String,
-      nLists: Int = 8, iters: Int = 2, dims: Int = -1,
-      trainCap: Int = 262144, targetListSize: Int = 256): Long = {
-    semLists(emb, vecCol, idCol, nLists, iters, dims, trainCap,
-        targetListSize)
-      .groupBy("list").agg(count(lit(1)).as("n"))
-      // n·(n−1) is always even, so `div` is exact — `/` would be
-      // DOUBLE division and lose integer exactness past ~2^27-row
-      // blocks, i.e. exactly the blow-up regime this count detects
-      .agg(coalesce(sum(expr("n * (n - 1) div 2")), lit(0L))
-        .cast("long"))
-      .head().getLong(0)
   }
 
   /** Soft deduplication: DOWN-WEIGHT common documents instead of
@@ -1374,26 +1353,6 @@ object Dedup {
       .select(col("id_a"), col("id_b"), lev.as("dist"),
         round(lev / col("mx").cast("double"), 4).as("norm_dist"))
   }
-
-  /** Candidate-pair volume of [[editDistancePairs]]'s blocking stage:
-    * Σ over blocks of C(n,2) — the exact number of id-ordered pairs the
-    * join generates before the O(1) guards and the Levenshtein kernel.
-    * The operator pins verification INSIDE the join condition (no
-    * separate candidate relation exists to observe), so the scaling
-    * sweep measures its candidate growth with this one-aggregate
-    * companion instead: same blocking expression, block-count shuffle
-    * only, no pair is ever materialized.
-    */
-  def editDistanceCandidateVolume(df: DataFrame, textCol: String,
-      idCol: String, blockTokens: Int = 2): Long =
-    df.select(md5(array_join(
-        slice(tokens(col(textCol)), 1, blockTokens), " ")).as("blk"))
-      .groupBy("blk").agg(count(lit(1)).as("n"))
-      // integer `div`: n·(n−1) is even, and DOUBLE division would
-      // quantize above 2^53 — the regime the telemetry exists for
-      .agg(coalesce(sum(expr("n * (n - 1) div 2")), lit(0L))
-        .cast("long"))
-      .head().getLong(0)
 
   /** Cross-document duplicate-span statistics — exact substring
     * deduplication at n-gram granularity (the distributed shape of

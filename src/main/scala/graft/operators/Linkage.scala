@@ -152,7 +152,7 @@ object Linkage {
           blockCols, leftId, salt))
         cold.unionByName(hot)
       }
-    // 1:1 with candidate pairs — the scaling sweep's volume signal
+    // 1:1 with candidate pairs — a scaling sweep's volume signal
     Telemetry.mark(scored, "linkage_candidates")
   }
 

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions.{count, lit}
 
 /** Opt-in candidate-count telemetry for the dedup/similarity operators.
   *
-  * The scaling sweep measures SECONDS across decades; seconds alone
+  * A scaling sweep measures SECONDS across decades; seconds alone
   * can't distinguish "the candidate volume is genuinely bounded" from
   * "the machine absorbed a super-linear candidate blow-up this time".
   * When enabled, the candidate-generating operators mark their
@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions.{count, lit}
   * Disabled (the default, and the state all gates/specs run under),
   * [[mark]] is the identity and the plan is byte-identical to before.
   *
-  * Usage (Bench's 100x tier):
+  * Usage (around one query whose candidate count is wanted):
   * {{{
   *   Telemetry.enable(spark)
   *   Telemetry.reset()

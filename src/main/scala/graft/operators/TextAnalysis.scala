@@ -1223,18 +1223,6 @@ object TextAnalysis {
         round(col("n_novel").cast("double") / col("n_grams"), 6).as("novelty"))
   }
 
-  /** Shuffle volume of [[saturationReport]]: the count of (doc,
-    * distinct n-gram) instance rows — exactly the rows its
-    * first-occurrence aggregate and join carry. The scaling sweep's
-    * candidate-count telemetry for the saturation query: linear gram
-    * volume across a corpus decade means the plan's shuffles are
-    * linear too (there is no pairwise stage to blow up).
-    */
-  def saturationVolume(df: DataFrame, textCol: String, n: Int = 3): Long =
-    df.select(tokens(col(textCol)).as("__t"))
-      .select(explode(array_distinct(wordShingles(col("__t"), n))).as("g"))
-      .count()
-
   /** Domain-level quality gating (the RefinedWeb/C4 "bad domain" rule
     * applied data-dependently): a SOURCE is dropped when its mean
     * document quality falls below `minSourceScore` — low-quality

@@ -62,8 +62,8 @@ object VcfApi {
   /** Above this many ids the point lookup switches from an IN-list
     * predicate to a broadcast left-semi join: a 100k-element `isin`
     * is a planning-time killer (one expression-tree node per id),
-    * while a broadcast of 100k longs is ~1 MB — trivially fine. Same
-    * threshold as [[pullByIds]].
+    * while a broadcast of 100k longs is ~1 MB — trivially fine. Used
+    * by [[filterByGeneIndexed]] and [[pullByIds]] alike.
     */
   private val InListMaxIds = 1000
 
@@ -115,18 +115,21 @@ object VcfApi {
           broadcast(pairs.where(col("symbol") === symbol).select("variant_id")),
           Seq("variant_id"), "left_semi")
       case None =>
-        val hit = index.ids.getOrElse(symbol, Array.empty[Long])
-        if (hit.length <= InListMaxIds)
-          base.filter(col("variant_id").isin(hit.toSeq: _*))
-        else {
-          val spark = info.sparkSession
-          import spark.implicits._
-          base.join(broadcast(hit.toSeq.toDF("variant_id")),
-            Seq("variant_id"), "left_semi")
-        }
+        keepIds(base, index.ids.getOrElse(symbol, Array.empty[Long]).toSeq)
     }
     matched.withColumn("symbol", lit(symbol))
   }
+
+  /** Rows of `df` whose `variant_id` is in `ids`: a pushed IN filter up
+    * to [[InListMaxIds]] ids, a broadcast left-semi join above.
+    */
+  private def keepIds(df: DataFrame, ids: Seq[Long]): DataFrame =
+    if (ids.size <= InListMaxIds) df.filter(col("variant_id").isin(ids: _*))
+    else {
+      val spark = df.sparkSession
+      import spark.implicits._
+      df.join(broadcast(ids.toDF("variant_id")), Seq("variant_id"), "left_semi")
+    }
 
   /** Genotype pull by id set (`pull_vars_by_id`, `00:10-55`): a
     * broadcast semi-join filter on the long geno table. The sorted
@@ -134,13 +137,7 @@ object VcfApi {
     * replacement for both the file-per-variant mode and the B-tree
     * index mode.
     */
-  def pullByIds(geno: DataFrame, ids: Seq[Long]): DataFrame =
-    if (ids.size <= 1000) geno.filter(col("variant_id").isin(ids: _*))
-    else {
-      val spark = geno.sparkSession
-      import spark.implicits._
-      geno.join(broadcast(ids.toDF("variant_id")), Seq("variant_id"), "left_semi")
-    }
+  def pullByIds(geno: DataFrame, ids: Seq[Long]): DataFrame = keepIds(geno, ids)
 
   /** Composed filter + pull (`pull_geno_test`, `00:105-147`). */
   def pullByGene(
@@ -426,7 +423,7 @@ object VcfApi {
     val b = sites.select(col("variant_id").as("id_b"), col("chr"),
       col("start").as("pos_b"), col("dose").as("db"), col("bucket"))
     // telemetry is 1:1 with the qualifying window pairs — the volume
-    // the scaling sweep tracks against variant density (identity when
+    // a scaling sweep tracks against variant density (identity when
     // telemetry is disabled, which is every gate/spec run).
     // Explicit-count repartition on the bucket key: the join INPUTS
     // are variant-count-sized but the output is window-pairs × the

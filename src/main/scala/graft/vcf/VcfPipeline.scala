@@ -36,14 +36,10 @@ object VcfPipeline {
     val outDir = opts.getOrElse("out",
       sys.error("--out <dir> is required"))
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
+    val spark = graft.GraftSession.builder(
+        shufflePartitions = sys.env.get("SPARK_GRAFT_CPUS")
+          .fold(Runtime.getRuntime.availableProcessors())(_.toInt))
       .appName("graft-vcf-pipeline")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS",
-          Runtime.getRuntime.availableProcessors().toString))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

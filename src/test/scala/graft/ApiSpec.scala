@@ -64,6 +64,28 @@ class ApiSpec extends SparkSpec {
     assert(!small.queryExecution.executedPlan.toString.contains("LeftSemi"))
   }
 
+  test("pullByIds above 1k ids: semi-join fallback, no IN-list in plan") {
+    // same id-set switch as the giant-gene lookup, on the genotype side:
+    // >1k ids take the broadcast left-semi path and return every
+    // requested variant's genotype rows
+    val geno = (1 to 3000).flatMap(i => Seq("S1", "S2").map(s => (i.toLong, s, 1)))
+      .toDF("variant_id", "sample", "gt")
+    val ids = (1 to 3000 by 2).map(_.toLong)
+    assert(ids.size > 1000)
+    val pulled = VcfApi.pullByIds(geno, ids)
+    val plan = pulled.queryExecution.executedPlan.toString
+    assert(plan.contains("LeftSemi"), s"expected semi-join fallback:\n$plan")
+    assert(!plan.contains("INSET") && !plan.contains(" IN ("),
+      s"large id set must not plan an IN-list:\n$plan")
+    val got = pulled.select("variant_id").as[Long].collect()
+    assert(got.length == 2 * ids.size)
+    assert(got.toSet == ids.toSet)
+    // exactly 1k ids keeps the IN-list path
+    val small = VcfApi.pullByIds(geno, ids.take(1000))
+    assert(!small.queryExecution.executedPlan.toString.contains("LeftSemi"))
+    assert(small.count() == 2000)
+  }
+
   test("buildGeneIndex spills to a DataFrame-backed index above the driver cap") {
     val n = 2500
     val impact = (1 to n)

@@ -4025,42 +4025,6 @@ class OperatorsSpec extends SparkSpec {
     } finally { Telemetry.disable(); Telemetry.reset(); Dedup.clearCaches() }
   }
 
-  test("Dedup.editDistanceCandidateVolume: exact block-pair count") {
-    val docs = telemetryDocs
-    val volume = Dedup.editDistanceCandidateVolume(docs, "text", "doc_id",
-      blockTokens = 2)
-    // brute-force the same blocking in Scala: first-2-token prefix
-    val blocks = docs.collect().map { r =>
-      r.getString(1).toLowerCase.split("[^a-z0-9]+").filter(_.nonEmpty)
-        .take(2).mkString(" ")
-    }
-    val expected = blocks.groupBy(identity).values
-      .map(g => g.size.toLong * (g.size - 1) / 2).sum
-    assert(volume == expected)
-    assert(volume == 3L * 8 * 7 / 2) // only family blocks collide
-  }
-
-  test("Dedup.semDedupCandidateVolume: single list = all pairs, more lists prune") {
-    val emb = (0 until 20).map(i =>
-      (i.toLong, Array.tabulate(8)(d => math.sin(i * 0.7 + d).toFloat)))
-      .toDF("vec_id", "embedding")
-    val all = Dedup.semDedupCandidateVolume(emb, "embedding", "vec_id",
-      nLists = 1, iters = 1, dims = 8)
-    assert(all == 20L * 19 / 2) // one list ⇒ the full pair set
-    val pruned = Dedup.semDedupCandidateVolume(emb, "embedding", "vec_id",
-      nLists = 4, iters = 2, dims = 8)
-    assert(pruned <= all && pruned >= 0)
-  }
-
-  test("TextAnalysis.saturationVolume equals the report's gram total") {
-    val docs = telemetryDocs
-    val volume = TextAnalysis.saturationVolume(docs, "text", n = 3)
-    val fromReport = TextAnalysis.saturationReport(docs, "text", "doc_id", n = 3)
-      .agg(sum("n_grams")).head().getLong(0)
-    assert(volume == fromReport)
-    assert(volume > 0)
-  }
-
   test("Dedup.softDedupWeights: hand-computed commonness and weights") {
     // unigrams (n=1): A and B share {x, y} (df 2 each), C has {z, w}
     // (df 1 each), N = 3 docs.

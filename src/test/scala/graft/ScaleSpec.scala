@@ -693,7 +693,7 @@ class ScaleSpec extends SparkSpec {
   }
 
   test("64×64 kinship grid: per-cell bound holds, KING identical to unblocked") {
-    // the EXACT grid the 50k-sample RefScaleBench row runs (B = 64):
+    // the EXACT grid a 50k-sample kinship run uses (B = 64):
     // 200 samples → no cell may exceed ⌈200/64⌉² = 16 pairs of one
     // variant, and the blocked KING stays row-identical
     val geno = (for {
