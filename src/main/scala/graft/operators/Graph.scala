@@ -778,7 +778,8 @@ object Graph {
     * same pair set and runs the O(log n) large-star/small-star CC.
     * |thresholds| is a small constant. The per-threshold solves are
     * INDEPENDENT, and each is a driver-sequenced round loop — run
-    * them from a thread pool so the scheduler overlaps their jobs
+    * them from a thread pool (one thread per threshold, at most one
+    * per core) so the scheduler overlaps their jobs
     * (guide §2.6: actions are only sequential because the driver
     * calls them sequentially); wall-clock ≈ the slowest solve, not
     * the sum. Each solve's rounds, checkpoints and telemetry are
@@ -794,13 +795,15 @@ object Graph {
     // out: three concurrent first-touches would each recompute the
     // upstream LSH pipeline into the same cache partitions
     cached.count()
+    import scala.concurrent.{Await, ExecutionContext, Future, Promise}
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      thresholds.size)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutor(pool)
+      math.min(thresholds.size, Runtime.getRuntime.availableProcessors))
+    val solver = ExecutionContext.fromExecutor(pool)
+    // solves run on the pool; only completion callbacks run inline
+    implicit val ec: ExecutionContext = ExecutionContext.parasitic
     try {
       val futs = thresholds.sorted.map { t =>
-        scala.concurrent.Future {
+        Future {
           val comps = connectedComponents(
             cached.where(col("__sim") >= t), "__a", "__b")
           comps.groupBy("comp").agg(count(lit(1)).as("__sz"))
@@ -808,10 +811,19 @@ object Graph {
               coalesce(sum("__sz"), lit(0L)).as("n_nodes"),
               count(lit(1)).as("n_components"),
               coalesce(max("__sz"), lit(0L)).as("largest_component"))
-        }
+        }(solver)
       }
-      futs.map(scala.concurrent.Await.result(
-          _, scala.concurrent.duration.Duration.Inf))
+      // the first failed solve interrupts its siblings (shutdown() alone
+      // lets them run to completion after this call has already thrown)
+      // and fails the wait without queueing behind unfinished solves
+      val firstFailure = Promise[Seq[DataFrame]]()
+      futs.foreach(_.failed.foreach { e =>
+        pool.shutdownNow()
+        firstFailure.tryFailure(e)
+      })
+      Await.result(
+          Future.firstCompletedOf(Seq(Future.sequence(futs), firstFailure.future)),
+          scala.concurrent.duration.Duration.Inf)
         .reduce(_ unionByName _).orderBy("threshold")
     } finally pool.shutdown()
   }

@@ -74,7 +74,7 @@ object VcfBuild {
     * declarative and columnar: no eager offsets job (zipWithIndex fires
     * one at call time, costing a thrown-away parse+sort of the whole
     * input), no Row materialization (the RDD detour decodes every
-    * nested genotype struct into JVM objects once per consumer — GC
+    * wide staging row into JVM objects once per consumer — GC
     * amplification under a loaded heap), and never a single-partition
     * window (the row_number partitions on the sort's own range
     * partitions, which the range partitioner keeps balanced).
@@ -87,13 +87,15 @@ object VcfBuild {
     import org.apache.spark.sql.expressions.Window
     val keys = Seq("chr", "pos", "ref", "alt")
     // `spark.graft.stagingStorage` escapes to DISK_ONLY for giant
-    // builds: the wide sorted rows (one genotype struct per sample)
-    // columnar-cache at ~40 KB/row at 1,000 samples, and MEMORY_AND_DISK
-    // builds every in-flight partition's batches ON HEAP before it can
-    // decide to spill — at 1.4M×1000 that GC-starved a 96 GB driver
-    // until its own heartbeats expired. DISK_ONLY streams batches out
-    // and bounds heap by in-flight partitions only; the layout
-    // invariant below cares about partitioning, not residence.
+    // builds: the sorted rows carry the sample columns as one string
+    // and columnar-cache at ~7 KB/row at 1,000 samples (about the VCF
+    // line itself; the per-sample struct array this row once carried
+    // cached at ~48 KB/row), and MEMORY_AND_DISK builds every in-flight
+    // partition's batches ON HEAP before it can decide to spill — at
+    // 1.4M×1000 the wide form GC-starved a 96 GB driver until its own
+    // heartbeats expired. DISK_ONLY streams batches out and bounds heap
+    // by in-flight partitions only; the layout invariant below cares
+    // about partitioning, not residence.
     val level = org.apache.spark.storage.StorageLevel.fromString(
       parsed.sparkSession.conf.get("spark.graft.stagingStorage",
         "MEMORY_AND_DISK"))
@@ -235,6 +237,10 @@ object VcfBuild {
     * key once per variant instead of once per (variant × sample) row
     * (at cohort width that is a ×n_samples saving on the build's
     * widest stage for free — values are identical by definition).
+    *
+    * Sample names attach here ([[VcfReader.sampleFields]]), after the
+    * global sort: the sorted, cached staging row carries each variant's
+    * sample columns as one untokenized string.
     */
   def variantGeno(ids: DataFrame, header: VcfHeaderInfo): DataFrame = {
     // key order: GT first (gt/gt_raw), then the declared extras
@@ -245,7 +251,8 @@ object VcfBuild {
     val base = ids.select(
       (Seq(col("variant_id"), col("genotypes")) ++ posCols): _*)
       .select(
-        (Seq(col("variant_id"), explode(col("genotypes")).as("g")) ++
+        (Seq(col("variant_id"),
+          explode(VcfReader.sampleFields(col("genotypes"), header)).as("g")) ++
           keys.indices.map(i => col(s"_p$i"))): _*)
       .select(
         (Seq(col("variant_id"),

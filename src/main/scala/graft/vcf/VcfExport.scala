@@ -94,7 +94,8 @@ object VcfExport {
     if (header.samples.isEmpty) fixed
     else concat_ws("\t", fixed, dot(col("format")),
       array_join(
-        transform(col("genotypes"), g => coalesce(g.getField("raw"), lit("."))),
+        transform(VcfReader.sampleFields(col("genotypes"), header),
+          g => coalesce(g.getField("raw"), lit("."))),
         "\t"))
   }
 

@@ -20,8 +20,15 @@ import org.apache.spark.sql.types._
   *   qual double?, filter string?,
   *   <one typed column per INFO def: scalar / array / flag boolean>,
   *   csq array<string>?              (raw VEP strings, if CSQ declared)
-  *   genotypes array<struct<sample string, raw string>>  (FORMAT-encoded)
-  *   format string                   (per-row FORMAT key order)
+  *   genotypes string?               (the sample columns, tab-separated,
+  *                                    exactly as in the file)
+  *   format string?                  (per-row FORMAT key order)
+  *
+  * The sample columns stay one untokenized string through the build's
+  * global sort and staging cache, so those carry about the file's own
+  * bytes per variant; [[sampleFields]] pairs them with the header's
+  * sample names where the per-sample form is consumed (the genotype
+  * explode, VCF export).
   *
   * Multi-valued INFO/FORMAT fields become native `ArrayType` columns — a
   * documented capability upgrade over the reference, which skips or
@@ -157,20 +164,24 @@ object VcfReader {
     * behavior, 01-generate-variant-ranges-index.R:37-40): the fixed
     * fields and INFO read from a PREFIX-ONLY tokenization
     * (`split(value, "\t", 9)` stops splitting before the sample tail
-    * — the 9th element is one untokenized remainder), while FORMAT
-    * and the per-sample fields are the only expressions referencing
-    * the full split. Catalyst's column pruning therefore decides the
-    * physical parse cost: a positions-only scan keeps only
-    * prefix-split expressions and never tokenizes the genotype tail —
-    * which at 1,000+ samples is ~40× the bytes of the fields it
-    * needs. (`str_to_map` on INFO was already pruned logically when
-    * no info column survives.)
+    * — the 9th element is one untokenized remainder). FORMAT and the
+    * sample columns come from splitting that remainder once more, at
+    * its first tab; the sample columns themselves are never tokenized
+    * here. Catalyst's column pruning therefore decides the physical
+    * parse cost: a positions-only scan keeps only prefix-split
+    * expressions and never tokenizes the genotype tail — which at
+    * 1,000+ samples is ~40× the bytes of the fields it needs — and a
+    * full read carries that tail as one string instead of one value
+    * per sample. (`str_to_map` on INFO was already pruned logically
+    * when no info column survives.)
     */
   def parse(lines: Dataset[String], header: VcfHeaderInfo): DataFrame = {
-    // full tokenization: referenced ONLY by FORMAT + sample columns
-    val f = split(col("value"), "\t")
     // prefix tokenization: fixed fields + INFO; stops before the tail
     val p = split(col("value"), "\t", 9)
+    // FORMAT + untokenized sample columns; sites-only VCFs stop after
+    // INFO, so access must be null-tolerant (ANSI get(), not ordinal
+    // indexing)
+    val tail = split(get(p, lit(8)), "\t", 2)
 
     def nullable(c: Column): Column = when(c === Missing, lit(null)).otherwise(c)
 
@@ -191,10 +202,8 @@ object VcfReader {
       // present it is still exact because the limit-9 split keeps
       // fields 0-7 intact and only leaves the tail unsplit in item 8
       p.getItem(7).as("_info_raw"),
-      // sites-only VCFs stop after INFO: FORMAT/sample access must be
-      // null-tolerant (ANSI get(), not ordinal indexing)
-      get(f, lit(8)).as("format"),
-      slice(f, 10, Int.MaxValue - 16).as("_samples_raw"))
+      get(tail, lit(0)).as("format"),
+      get(tail, lit(1)).as("genotypes"))
 
     val withInfo = fixed.withColumn("_info", infoMap)
 
@@ -218,31 +227,40 @@ object VcfReader {
       c.as(if (d.id == "CSQ") "csq" else d.id.toLowerCase)
     }
 
-    // Per-sample struct array; sample names come from the header.
-    // (Typed empty for sites-only files so downstream explode is a
-    // well-formed no-op.) The zip of names × raw fields MUST be a
-    // constant-size expression: the obvious
-    // `array(struct(lit(s_i), get(raw, i)) for every sample)` plants
-    // ~5 expression nodes PER SAMPLE in the plan, and at 1,000 samples
-    // Catalyst replans + regenerates + JIT-compiles that ~5k-node tree
-    // on every action — a 100k×1000 build spent ~30 min of
-    // single-threaded driver time there while executors idled. One
-    // array literal + one zip_with is O(1) in sample count; zip_with
-    // null-pads short genotype rows exactly like the old per-index
-    // ANSI get(). The cast names the lambda's struct fields.
-    val genotypes =
-      if (header.samples.isEmpty)
-        array().cast("array<struct<sample:string,raw:string>>")
-      else
-        zip_with(typedLit(header.samples), col("_samples_raw"),
-            (n, v) => struct(n, v))
-          .cast("array<struct<sample:string,raw:string>>")
-
     withInfo.select(
       (Seq(col("chr"), col("pos"), col("id"), col("ref"), col("alt"),
         col("qual"), col("filter")) ++
         infoCols ++
-        Seq(genotypes.as("genotypes"), col("format"))): _*)
+        Seq(col("genotypes"), col("format"))): _*)
+  }
+
+  /** The per-sample form of a parsed row's `genotypes` string:
+    * `array<struct<sample, raw>>`, one entry per header sample, names
+    * from the header. Null-pads: a row with fewer sample columns than
+    * the header (or none: `genotypes` null) still yields one entry per
+    * header sample, with a null `raw` for each missing one. Typed empty for sites-only
+    * files, so a downstream explode is a well-formed no-op.
+    *
+    * The zip of names × raw fields MUST be a constant-size expression:
+    * the obvious `array(struct(lit(s_i), get(raw, i)) for every
+    * sample)` plants ~5 expression nodes PER SAMPLE in the plan, and at
+    * 1,000 samples Catalyst replans + regenerates + JIT-compiles that
+    * ~5k-node tree on every action — a 100k×1000 build spent ~30 min of
+    * single-threaded driver time there while executors idled. One array
+    * literal + one zip_with is O(1) in sample count. The cast names the
+    * lambda's struct fields.
+    */
+  private[vcf] def sampleFields(genotypes: Column, header: VcfHeaderInfo): Column = {
+    val asStructs = "array<struct<sample:string,raw:string>>"
+    if (header.samples.isEmpty) array().cast(asStructs)
+    else
+      zip_with(typedLit(header.samples),
+          // a null tail (no sample columns) zips as all-missing; a bare
+          // split would null the whole array and the explode would drop
+          // the variant's rows
+          coalesce(split(genotypes, "\t"), typedLit(Seq.empty[String])),
+          (n, v) => struct(n, v))
+        .cast(asStructs)
   }
 }
 

@@ -49,6 +49,32 @@ class EdgeSpec extends SparkSpec {
     assert(g == (("0/1", None)))
   }
 
+  test("short sample rows null-pad to one geno row per header sample") {
+    val lines = Seq(
+      "##FORMAT=<ID=GT,Number=1,Type=String,Description=\"gt\">",
+      "##FORMAT=<ID=DP,Number=1,Type=Integer,Description=\"dp\">",
+      "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\tFORMAT\tS1\tS2\tS3",
+      "1\t10\t.\tA\tG\t5\tPASS\t.\tGT:DP\t0/1:4", // S2, S3 absent
+      "1\t20\t.\tC\tT\t9\tPASS\t.") // stops after INFO
+    val v = VcfReader.fromLines(spark, lines)
+    val geno = VcfBuild.variantGeno(VcfBuild.withVariantIds(v.df), v.header)
+      .select("variant_id", "sample", "gt_raw", "gt", "dp")
+      .as[(Long, String, Option[String], Option[Double], Option[Long])]
+      .collect().sortBy(r => (r._1, r._2)).toSeq
+    assert(geno == Seq(
+      (1L, "S1", Some("0/1"), Some(1.0), Some(4L)),
+      (1L, "S2", None, None, None),
+      (1L, "S3", None, None, None),
+      (2L, "S1", None, None, None),
+      (2L, "S2", None, None, None),
+      (2L, "S3", None, None, None)))
+    // export re-emits "." for every missing FORMAT / sample column
+    val tails = VcfExport.renderLines(v).collect().map(_.split("\t", -1).drop(8).toSeq)
+    assert(tails.toSeq == Seq(
+      Seq("GT:DP", "0/1:4", ".", "."),
+      Seq(".", ".", ".", ".")))
+  }
+
   test("INFO field shadowing a fixed/derived column is dropped (END vs end)") {
     val lines = Seq(
       "##INFO=<ID=END,Number=1,Type=Integer,Description=\"sv end\">",

@@ -130,6 +130,39 @@ class ScaleSpec extends SparkSpec {
     assert(wide <= small + 10, s"3 samples -> $small nodes, 1000 -> $wide")
   }
 
+  test("VcfBuild.variantGeno plan size is O(1) in sample count") {
+    // the sample-name literal and its zip moved from the parse to the
+    // genotype explode; the same O(1) bound must hold there
+    def planNodes(n: Int): Int = {
+      val h = VcfHeader.parse(SyntheticVcf.header(n))
+      val parsed = VcfReader.parse(
+        spark.createDataset(Seq(SyntheticVcf.line(0, n, 10)))(
+          org.apache.spark.sql.Encoders.STRING), h)
+      VcfBuild.variantGeno(VcfBuild.withVariantIds(parsed), h)
+        .queryExecution.analyzed
+        .collect { case p => p.expressions.map(_.collect { case _ => 1 }.sum).sum }
+        .sum
+    }
+    val small = planNodes(3)
+    val wide = planNodes(1000)
+    assert(wide <= small + 10, s"3 samples -> $small nodes, 1000 -> $wide")
+  }
+
+  test("the build's sorted staging row stays narrow") {
+    // the global sort and the staging cache carry each variant's sample
+    // columns as ONE string; a per-sample struct array there repeats
+    // every sample name in every row and grows the sort's shuffle and
+    // the cache several-fold
+    import org.apache.spark.sql.types.{ArrayType, StringType, StructType}
+    val staged = VcfBuild.withVariantIds(
+      SyntheticVcf.generate(spark, 10, nSamples = 4, nGenes = 2).df)
+    assert(staged.schema("genotypes").dataType == StringType, staged.schema)
+    assert(!staged.schema.exists(_.dataType match {
+      case ArrayType(_: StructType, _) => true
+      case _ => false
+    }), staged.schema)
+  }
+
   test("sampleToTokenBudget never windows over a bare group (skew-immune plan)") {
     // one giant group next to small ones: the correctness is covered by
     // the OperatorsSpec equivalence test; here we pin the PLAN — every

@@ -55,9 +55,14 @@ class VcfSpec extends SparkSpec {
       s"positions-only scan still tokenizes the full line:\n$plan")
     assert(!plan.contains("str_to_map"),
       s"positions-only scan still parses INFO:\n$plan")
-    // and the wide read is unchanged
-    assert(parsed.select("chr", "pos", "genotypes").queryExecution
-      .optimizedPlan.toString.contains(", -1)"))
+    // the wide read takes the sample tail as one string: item 8 of the
+    // prefix split, split once more at its first tab — never the
+    // full-line split
+    val wide = parsed.select("chr", "pos", "genotypes").queryExecution
+      .optimizedPlan.toString
+    assert(!wide.contains(", -1)"), s"wide read tokenizes the full line:\n$wide")
+    assert(wide.contains(", 9)[8], \t, 2)"),
+      s"sample tail not read through the limit-2 split of item 8:\n$wide")
   }
 
   test("variant ids are contiguous and (chr,pos)-ordered") {
