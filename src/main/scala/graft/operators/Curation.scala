@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Caches
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions._
@@ -18,31 +19,10 @@ import graft.functions._
   * persisted (each feeds 2–3 downstream plan branches: the next
   * stage's build side, its probe side, and the audit aggregate —
   * without a persist the quality regexes and shingle explodes
-  * re-execute per branch; measured ~3× on the funnel). Caches
-  * register in [[clearCaches]] for long-lived sessions, mirroring
-  * [[Dedup.clearCaches]].
+  * re-execute per branch; measured ~3× on the funnel). The caches
+  * belong to the caller's [[graft.Caches]] scope.
   */
 object Curation {
-
-  private val liveCaches = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-
-  private def persistTracked(df: DataFrame): DataFrame = {
-    val p = df.persist()
-    liveCaches.add(p)
-    p
-  }
-
-  /** Unpersist every stage cache registered so far. */
-  def clearCaches(): Int = {
-    var n = 0
-    var df = liveCaches.poll()
-    while (df != null) {
-      try df.unpersist(false) catch { case scala.util.control.NonFatal(_) => () }
-      n += 1
-      df = liveCaches.poll()
-    }
-    n
-  }
 
   /** The four stage DataFrames (quality, deduped, decontaminated,
     * balanced), each persisted and registered.
@@ -51,7 +31,7 @@ object Curation {
       groupCol: String, probes: DataFrame, probeTextCol: String,
       shingleN: Int): (DataFrame, DataFrame, DataFrame, DataFrame) = {
     // 1. row-local quality rules
-    val quality = persistTracked(docs
+    val quality = Caches.persist(docs
       .withColumn("_qf", TextAnalysis.qualityFlags(col(textCol)))
       .where(col("_qf.keep")).drop("_qf"))
     // 2. exact dedup on the token fingerprint: keep the smallest id
@@ -60,13 +40,13 @@ object Curation {
     val fp = md5(array_join(tokens(col(textCol)), " "))
     val keepers = quality.select(col(idCol), fp.as("_fp"))
       .groupBy("_fp").agg(min(col(idCol)).as(idCol))
-    val deduped = persistTracked(quality.join(keepers, Seq(idCol), "left_semi"))
+    val deduped = Caches.persist(quality.join(keepers, Seq(idCol), "left_semi"))
     // 3. decontamination: drop docs sharing any word n-gram with the
     //    probe set (blocked equi-join on the shingle)
     val hits = TextAnalysis.contaminated(
       deduped, textCol, idCol, probes, probeTextCol, shingleN)
       .select(col("doc_id").as(idCol))
-    val clean = persistTracked(deduped.join(hits, Seq(idCol), "left_anti"))
+    val clean = Caches.persist(deduped.join(hits, Seq(idCol), "left_anti"))
     // 4. rebalance sources to the smallest surviving source
     val balanced = Mixture.balance(clean, idCol, groupCol)
     (quality, deduped, clean, balanced)

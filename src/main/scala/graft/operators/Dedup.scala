@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Caches
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions._
@@ -16,39 +17,13 @@ import graft.functions._
   *
   * Hashes are md5-derived ([[graft.functions.md5Long]]) so results are
   * deterministic and reproducible across engines.
+  *
+  * Signature caches must outlive plan construction (several plan
+  * branches read them), so the operators cannot unpersist before
+  * returning: they persist into the caller's [[graft.Caches]] scope,
+  * which the caller closes once the returned plans are consumed.
   */
 object Dedup {
-
-  /** Signature caches created by [[minHashLsh]] / [[ngramJaccardPairs]]
-    * must outlive plan construction (three plan branches read them), so
-    * the operators cannot unpersist before returning. They register
-    * here; a long-lived session (a 58-query bench, a shared cluster
-    * app) calls [[clearCaches]] once the returned plans are consumed.
-    */
-  private val liveCaches = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-
-  private[graft] def persistTracked(df: DataFrame): DataFrame = {
-    val p = df.persist()
-    liveCaches.add(p)
-    p
-  }
-
-  /** Unpersist every signature cache registered so far (non-blocking)
-    * and return how many were released. Safe once the DataFrames
-    * returned by the dedup operators have been fully consumed; new
-    * operator calls re-cache as needed.
-    */
-  def clearCaches(): Int = {
-    var n = 0
-    var df = liveCaches.poll()
-    while (df != null) {
-      // best-effort: unpersist can race an already-stopping SparkContext
-      try df.unpersist(false) catch { case scala.util.control.NonFatal(_) => () }
-      n += 1
-      df = liveCaches.poll()
-    }
-    n
-  }
 
   /** 64-bucket counting sketch of a token array, 8-bit lanes packed
     * into 8 longs (bucket = murmur3 mod 64, low lane first). Counts
@@ -198,9 +173,9 @@ object Dedup {
       threshold: Double = 0.5): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val rpb = numHashes / bands
-    val newSigs = persistTracked(
+    val newSigs = Caches.persist(
       nearSignatures(newDocs, textCol, idCol, numHashes, shingleSize))
-    val hist = persistTracked(historySigs)
+    val hist = Caches.persist(historySigs)
     def verified(cands: DataFrame, right: DataFrame): DataFrame =
       cands
         .join(newSigs.select(col("id").as("id_n"), col("shash").as("sh_n")), "id_n")
@@ -301,7 +276,7 @@ object Dedup {
     // are computed once per row (expression trees referenced from
     // lambda bodies are re-evaluated per reference — Catalyst's
     // subexpression elimination cannot reach into them).
-    val docs = persistTracked(parallelize(df)
+    val docs = Caches.persist(parallelize(df)
       .select(col(idCol).as("id"), tokens(col(textCol)).as("toks"))
       .select(col("id"),
         array_distinct(wordShingles(col("toks"), shingleSize)).as("shingles"))
@@ -478,9 +453,9 @@ object Dedup {
       bands: Int = 4,
       shingleSize: Int = 3,
       threshold: Double = 0.5): DataFrame = {
-    val scored = persistTracked(lshScoredCandidates(df, textCol, idCol,
+    val scored = Caches.persist(lshScoredCandidates(df, textCol, idCol,
       numHashes, bands, shingleSize, saltHotBuckets = 0))
-    val sets = persistTracked(parallelize(df)
+    val sets = Caches.persist(parallelize(df)
       .select(col(idCol).as("id"), tokens(col(textCol)).as("toks"))
       .select(col("id"),
         array_distinct(wordShingles(col("toks"), shingleSize)).as("shingles"))
@@ -583,7 +558,7 @@ object Dedup {
       blockCols: Seq[String],
       shingleSize: Int = 3,
       threshold: Double = 0.6): DataFrame = {
-    val docs = persistTracked(parallelize(df)
+    val docs = Caches.persist(parallelize(df)
       .select((col(idCol).as("id") +: blockCols.map(col)) :+
         tokens(col(textCol)).as("toks"): _*)
       .select((col("id") +: blockCols.map(col)) :+
@@ -653,7 +628,7 @@ object Dedup {
     // longs): bucket counts under-merge distinct tokens, so the
     // lane-wise L1 between two sketches LOWER-bounds |A Δ B| — the
     // deterministic refutation the candidate join prunes with.
-    val docs = persistTracked(parallelize(df)
+    val docs = Caches.persist(parallelize(df)
       .select(col(idCol).as("id"), tokens(col(textCol)).as("__t"))
       .select(col("id"),
         hashedSet(wordShingles(col("__t"), shingleSize)).as("sh"))
@@ -671,7 +646,7 @@ object Dedup {
     // persisted: BOTH prefix slices below read it, and the two slices
     // are no longer the identical subplan Spark's ReusedExchange would
     // have deduplicated for free
-    val ordered = persistTracked(docs
+    val ordered = Caches.persist(docs
       .select(col("id"), size(col("sh")).as("sz"), explode(col("sh")).as("tok"))
       .join(dfreq, "tok")
       .groupBy("id", "sz")
@@ -917,7 +892,7 @@ object Dedup {
       shingleSize, threshold)
     // the signature scan feeds BOTH sides of the pair join — persist
     // or the tokenize+shingle+minhash pass runs twice
-    val sigs = persistTracked(
+    val sigs = Caches.persist(
       nearSignatures(df, textCol, idCol, numHashes, shingleSize)
         .select(col("id"), col("sig")))
     val est = size(filter(zip_with(col("sa"), col("sb"),
@@ -988,7 +963,7 @@ object Dedup {
       threshold: Double = 0.5): DataFrame = {
     val pairs = minHashLsh(df, textCol, idCol, numHashes, bands,
       shingleSize, threshold)
-    val sets = persistTracked(parallelize(df)
+    val sets = Caches.persist(parallelize(df)
       .select(col(idCol).cast("long").as("id"),
         tokens(col(textCol)).as("__t"))
       .select(col("id"),
@@ -1199,7 +1174,7 @@ object Dedup {
       trainCap: Int = 262144,
       targetListSize: Int = 256): DataFrame = {
     graft.plans.GraftExtensions.ensureRegistered(emb.sparkSession)
-    val assigned = persistTracked(
+    val assigned = Caches.persist(
       semLists(emb, vecCol, idCol, nLists, iters, dims, trainCap,
         targetListSize))
     val a = assigned.as("a"); val b = assigned.as("b")
@@ -1244,13 +1219,13 @@ object Dedup {
     */
   def softDedupWeights(df: DataFrame, textCol: String, idCol: String,
       n: Int = 3, alpha: Double = 1.0): DataFrame = {
-    val grams = persistTracked(df
+    val grams = Caches.persist(df
       .select(col(idCol).as("__id"), tokens(col(textCol)).as("__t"))
       .select(col("__id"),
         explode(array_distinct(wordShingles(col("__t"), n))).as("g")))
     val nDocs = grams.select(countDistinct(col("__id")).as("__n_docs"))
     val dfreq = grams.groupBy("g").agg(count(lit(1)).as("df"))
-    val perDoc = persistTracked(grams.join(dfreq, "g")
+    val perDoc = Caches.persist(grams.join(dfreq, "g")
       .crossJoin(broadcast(nDocs))
       .groupBy("__id")
       .agg(count(lit(1)).as("n_grams"),
@@ -1296,7 +1271,7 @@ object Dedup {
       idCol: String,
       blockTokens: Int = 2,
       maxNormDist: Double = 0.05): DataFrame = {
-    val docs = persistTracked(parallelize(df).select(
+    val docs = Caches.persist(parallelize(df).select(
       col(idCol).as("id"), col(textCol).as("txt"),
       md5(array_join(slice(tokens(col(textCol)), 1, blockTokens), " ")).as("blk"),
       length(col(textCol)).as("len")))
@@ -1470,7 +1445,7 @@ object Dedup {
   def winnowingOverlap(docs: DataFrame, textCol: String, idCol: String,
       k: Int = 5, w: Int = 4, maxDocFreq: Long = 20,
       minShared: Long = 2): DataFrame = {
-    val fps = persistTracked(
+    val fps = Caches.persist(
       winnowingFingerprints(docs, textCol, idCol, k, w)
         .select(col(idCol).cast("long").as("id"), col("fingerprint"))
         .distinct())
@@ -1478,7 +1453,7 @@ object Dedup {
       .agg(count_distinct(col("id")).as("__df"))
       .where(col("__df") <= maxDocFreq)
       .select("fingerprint")
-    val kept = persistTracked(fps.join(keep, Seq("fingerprint")))
+    val kept = Caches.persist(fps.join(keep, Seq("fingerprint")))
     val sizes = kept.groupBy("id").agg(count(lit(1)).as("__nf"))
     val pairs = kept.as("a")
       .join(kept.as("b"),

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Caches
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -62,7 +63,7 @@ object Eval {
       .join(qterms, "term")
       .groupBy("query_id", "doc_id", "term")
       .agg(count(lit(1)).cast("double").as("tf"), max("dl").as("dl"))
-    val hitsP = Dedup.persistTracked(hits)
+    val hitsP = Caches.persist(hits)
 
     val dfreq = hitsP.groupBy("query_id", "term")
       .agg(count(lit(1)).cast("double").as("df"))
@@ -74,7 +75,7 @@ object Eval {
           / (col("tf") + lit(k1) * (lit(1 - b) + lit(b) * col("dl") / col("avgdl"))))
       .groupBy("query_id", "doc_id")
       .agg(sum("_s").as("_bm25"), count(lit(1)).cast("int").as("_nterms"))
-    val scoredP = Dedup.persistTracked(
+    val scoredP = Caches.persist(
       scored.withColumn("rel", greatest(col("_nterms") - 1, lit(0))))
 
     // ranked top-depth per query (partial WindowGroupLimit)
@@ -252,7 +253,7 @@ object Eval {
       rankColA: String, rankColB: String, depth: Int): DataFrame = {
     val joined = a.select(col(idCol).as("__id"), col(rankColA).as("__ra"))
       .join(b.select(col(idCol).as("__id"), col(rankColB).as("__rb")), "__id")
-    val reranked = Dedup.persistTracked(joined
+    val reranked = Caches.persist(joined
       .withColumn("__xa", row_number().over(
         Window.orderBy(col("__ra").asc, col("__id").asc)))
       .withColumn("__xb", row_number().over(
@@ -795,7 +796,7 @@ object Eval {
   def cohensKappa(df: DataFrame, raterA: Column, raterB: Column): DataFrame = {
     val pairs = df.select(raterA.as("__ra"), raterB.as("__rb"))
       .where(col("__ra").isNotNull && col("__rb").isNotNull)
-    val persisted = Dedup.persistTracked(pairs)
+    val persisted = Caches.persist(pairs)
     val tot = persisted.agg(count(lit(1)).as("__n"),
       sum(when(col("__ra") === col("__rb"), lit(1L)).otherwise(lit(0L)))
         .as("__agree"))
@@ -843,7 +844,7 @@ object Eval {
       alpha: Double = 0.1, tol: Double = 0.02,
       salt: Int = 11): DataFrame = {
     require(alpha > 0 && alpha < 1, "alpha must be in (0, 1)")
-    val base = Dedup.persistTracked(df.select(
+    val base = Caches.persist(df.select(
         (pmod(md5Long(id, salt), lit(2)) === 0).as("__cal"),
         x.cast("double").as("__x"), y.cast("double").as("__y"))
       .where(col("__x").isNotNull && col("__y").isNotNull))
@@ -859,7 +860,7 @@ object Eval {
       .select(col("__n"), col("__slope"),
         ((col("__sy") - col("__slope") * col("__sx")) / col("__n"))
           .as("__itc"))
-    val scored = Dedup.persistTracked(base.crossJoin(broadcast(co))
+    val scored = Caches.persist(base.crossJoin(broadcast(co))
       .select(col("__cal"), col("__n"),
         abs(col("__y") - (col("__slope") * col("__x") + col("__itc")))
           .as("__s")))
@@ -1137,7 +1138,7 @@ object Eval {
     def lnTerm(c: Column): Column =
       floor(c.cast("double") * log(c.cast("double")) * 1e6 + 0.5)
         .cast("long")
-    val base = Dedup.persistTracked(
+    val base = Caches.persist(
       df.filter(col(xCol).isNotNull && col(yCol).isNotNull)
         .groupBy(col(xCol).as("__x"), col(yCol).as("__y"))
         .agg(count(lit(1)).as("__c")))
@@ -1242,7 +1243,7 @@ object Eval {
     val w = Window.partitionBy(groupCol)
       .orderBy(col(tsCol), col(idCol))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val scored = Dedup.persistTracked(
+    val scored = Caches.persist(
       df.select(col(groupCol), col(tsCol), col(idCol),
           when(success, 1L).otherwise(0L).as("__x"))
         .select(col(groupCol),
@@ -1650,7 +1651,7 @@ object Eval {
       .select(col(groupCol).as("__g"),
         floor(col(valueCol).cast("double") * 100d + 0.5).cast("long")
           .as("__c"))
-    val grid = Dedup.persistTracked(
+    val grid = Caches.persist(
       base.groupBy("__g", "__c").agg(count(lit(1)).as("__cnt")))
     val full = grid.select("__c").distinct()
       .crossJoin(grid.select("__g").distinct())
@@ -1769,7 +1770,7 @@ object Eval {
     // persisted: the rater-count action below and the main plan both
     // read this (item × rater) aggregate — without the cache the full
     // corpus pass runs twice per call
-    val cells = Dedup.persistTracked(df.groupBy(col(itemCol).as("__i"),
+    val cells = Caches.persist(df.groupBy(col(itemCol).as("__i"),
         col(raterCol).as("__r"))
       .agg(max(when(pred, 1L).otherwise(0L)).as("__x")))
     val m = cells.select("__r").distinct().count()
@@ -1931,7 +1932,7 @@ object Eval {
   def dbscan1d(df: DataFrame, x: Column, eps: Long,
       minPts: Long): DataFrame = {
     require(eps >= 1 && minPts >= 1, "eps and minPts must be >= 1")
-    val grid = Dedup.persistTracked(
+    val grid = Caches.persist(
       df.select(x.cast("long").as("__c")).where(col("__c").isNotNull)
         .groupBy("__c").agg(count(lit(1)).as("__cnt")))
     val wRange = Window.orderBy("__c").rangeBetween(-eps, eps)
@@ -1946,7 +1947,7 @@ object Eval {
       .withColumn("__cl", sum("__new").over(
         wLag.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .select(col("__c").as("__core"), col("__cl"))
-    val coreSet = Dedup.persistTracked(islands)
+    val coreSet = Caches.persist(islands)
     val borders = dens.join(coreSet,
         col("__c") =!= col("__core") &&
           abs(col("__c") - col("__core")) <= eps, "left")
@@ -2163,7 +2164,7 @@ object Eval {
       pred: Column): DataFrame = {
     // persisted for the same reason as fleissKappa's cells: the
     // treatment-count action and the main plan share one aggregate pass
-    val cells = Dedup.persistTracked(df.groupBy(col(blockCol).as("__b"),
+    val cells = Caches.persist(df.groupBy(col(blockCol).as("__b"),
         col(treatCol).as("__t"))
       .agg(max(when(pred, 1L).otherwise(0L)).as("__x")))
     val k = cells.select("__t").distinct().count()
@@ -2264,7 +2265,7 @@ object Eval {
         max("__x").as("__thr"))
     val wCum = Window.orderBy("__b")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cum = Dedup.persistTracked(per
+    val cum = Caches.persist(per
       .withColumn("__cw", sum("__w").over(wCum))
       .withColumn("__cs", sum("__s").over(wCum)))
     val ks = cum.select(col("__b").as("__k"),
@@ -2323,7 +2324,7 @@ object Eval {
       .filter(col("__na") > 0 && col("__nb") > 0)
     val dv = col("__sa").cast("double") / col("__na") / 100d -
       col("__sb").cast("double") / col("__nb") / 100d
-    val diffs = Dedup.persistTracked(per.select(col("__u"),
+    val diffs = Caches.persist(per.select(col("__u"),
       when(dv >= 0, floor(dv * 1e4 + 0.5))
         .otherwise(-floor(-dv * 1e4 + 0.5)).cast("long").as("__d4")))
     val obs = diffs.agg(count(lit(1)).as("n_units"),
@@ -2471,10 +2472,10 @@ object Eval {
     require(iters >= 1 && iters <= 8, "iters in [1, 8]")
     // directed win counts → symmetric pair totals n_ij (both
     // orientations materialized so the per-i fold sees every opponent)
-    val wins = Dedup.persistTracked(df.groupBy(
+    val wins = Caches.persist(df.groupBy(
         col(winnerCol).as("__w"), col(loserCol).as("__l"))
       .agg(count(lit(1)).as("__c")))
-    val pairs = Dedup.persistTracked(wins
+    val pairs = Caches.persist(wins
       .select(col("__w").as("__i"), col("__l").as("__j"), col("__c"))
       .unionByName(wins.select(col("__l").as("__i"),
         col("__w").as("__j"), lit(0L).as("__c")))
@@ -2484,7 +2485,7 @@ object Eval {
         col("__wij").as("__wji")), Seq("__i", "__j"))
       .select(col("__i"), col("__j"),
         (col("__wij") + col("__wji")).as("__nij"))
-    val items = Dedup.persistTracked(pairs.groupBy("__i")
+    val items = Caches.persist(pairs.groupBy("__i")
       .agg(sum("__wij").as("wins"))
       .join(nij.groupBy("__i").agg(sum("__nij").as("comparisons")),
         Seq("__i")))
@@ -2678,7 +2679,7 @@ object Eval {
     */
   def brownForsythe(df: DataFrame, groupCol: String,
       valueCol: String): DataFrame = {
-    val base = Dedup.persistTracked(df.filter(col(valueCol).isNotNull)
+    val base = Caches.persist(df.filter(col(valueCol).isNotNull)
       .select(col(groupCol).as("__g"),
         floor(col(valueCol).cast("double") * 100d + 0.5).cast("long")
           .as("__c")))
@@ -2954,7 +2955,7 @@ object Eval {
     */
   def moodMedian(df: DataFrame, groupCol: String,
       valueCol: String): DataFrame = {
-    val base = Dedup.persistTracked(df.filter(col(valueCol).isNotNull)
+    val base = Caches.persist(df.filter(col(valueCol).isNotNull)
       .select(col(groupCol).as("__g"),
         floor(col(valueCol).cast("double") * 100d + 0.5).cast("long")
           .as("__c")))
@@ -3032,7 +3033,7 @@ object Eval {
         coalesce(col("__t"), lit(0L)).as("__t"))
     val w = Window.partitionBy("__g").orderBy("__c")
       .rowsBetween(Window.unboundedPreceding, -1)
-    val withCum = Dedup.persistTracked(cells.withColumn("__lt",
+    val withCum = Caches.persist(cells.withColumn("__lt",
       coalesce(sum("__t").over(w), lit(0L))))
     // 2U_ij summed over ordered pairs i<j at every grid value
     val lo = withCum.select(col("__g").as("__gi"), col("__c"),
@@ -3099,7 +3100,7 @@ object Eval {
         coalesce(col("__t"), lit(0L)).as("__t"))
     val w = Window.partitionBy("__g").orderBy("__c")
       .rowsBetween(Window.unboundedPreceding, -1)
-    val withCum = Dedup.persistTracked(cells.withColumn("__lt",
+    val withCum = Caches.persist(cells.withColumn("__lt",
       coalesce(sum("__t").over(w), lit(0L))))
     def dec(c: Column): Column = c.cast("decimal(38,0)")
     val aSide = withCum.where(col("__g") === ga)

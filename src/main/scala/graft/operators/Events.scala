@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Caches
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -172,7 +173,7 @@ object Events {
     val pairs = df.withColumn("__next", lead(col(typeCol), 1).over(w))
       .where(col("__next").isNotNull)
       .select(col(typeCol).as("from"), col("__next").as("to"))
-    val states = Dedup.persistTracked(pairs.select(col("from").as("s")).distinct())
+    val states = Caches.persist(pairs.select(col("from").as("s")).distinct())
     val kept = pairs.join(states.select(col("s").as("to")), Seq("to"), "left_semi")
     val cnt = kept.groupBy("from", "to").agg(count(lit(1)).as("__n"))
     val totals = cnt.groupBy("from").agg(sum("__n").as("__tot"))
@@ -201,10 +202,10 @@ object Events {
         when(lit(total) <= 0d, 0L)
           .otherwise(floor(col("__w18").cast("double") / lit(total)
             * 1e12 + 0.5)).cast("long").as("__v12"))
-      if (prev != null) Graph.unpersistCheckpoint(prev)
+      if (prev != null) Caches.unpersistCheckpoint(prev)
       prev = wp
     }
-    Graph.unpersistCheckpoint(p)
+    Caches.unpersistCheckpoint(p)
     states.join(v, Seq("s"), "left")
       .na.fill(0L, Seq("__v12"))
       .select(col("s").as("state"),
@@ -395,8 +396,8 @@ object Events {
       typeCol: String, tieBreak: String): DataFrame = {
     val w = Window.partitionBy(userCol).orderBy(col(tsNs), col(tieBreak))
     // both the model and the test score read the transition pairs —
-    // persist (tracked) or the lead window re-shuffles the corpus twice
-    val pairs = Dedup.persistTracked(df
+    // persist (caller's scope) or the lead window re-shuffles the corpus twice
+    val pairs = Caches.persist(df
       .withColumn("__next", lead(col(typeCol), 1).over(w))
       .where(col("__next").isNotNull)
       .withColumn("__train",
@@ -967,7 +968,7 @@ object Events {
     */
   def mannKendall(df: DataFrame, keyCol: String, tsNs: String,
       windowNs: Long): DataFrame = {
-    val g = Dedup.persistTracked(gridCounts(df, keyCol, tsNs, windowNs))
+    val g = Caches.persist(gridCounts(df, keyCol, tsNs, windowNs))
     val s = g.as("a").join(g.as("b"),
         col("a.k") === col("b.k") && col("a.t") < col("b.t"))
       .groupBy(col("a.k").as("k"))
@@ -1001,7 +1002,7 @@ object Events {
     */
   def theilSen(df: DataFrame, keyCol: String, tsNs: String,
       windowNs: Long): DataFrame = {
-    val g = Dedup.persistTracked(gridCounts(df, keyCol, tsNs, windowNs))
+    val g = Caches.persist(gridCounts(df, keyCol, tsNs, windowNs))
     val slopes = g.as("a").join(g.as("b"),
         col("a.k") === col("b.k") && col("a.t") < col("b.t"))
       .select(col("a.k").as("k"),
@@ -1109,9 +1110,9 @@ object Events {
     */
   def madOutliers(df: DataFrame, keyCol: String, tsNs: String,
       windowNs: Long, threshold: Double = 3.5): DataFrame = {
-    val g = Dedup.persistTracked(gridCounts(df, keyCol, tsNs, windowNs))
+    val g = Caches.persist(gridCounts(df, keyCol, tsNs, windowNs))
     val med = g.groupBy("k").agg(expr("percentile(n, 0.5d)").as("med"))
-    val dev = Dedup.persistTracked(
+    val dev = Caches.persist(
       g.join(med, Seq("k")).withColumn("dev", abs(col("n") - col("med"))))
     val mad = dev.groupBy("k").agg(expr("percentile(dev, 0.5d)").as("mad"))
     dev.join(mad, Seq("k"))
@@ -1232,7 +1233,7 @@ object Events {
     val tmax = broadcast(purch.agg(max(col(tsNs)).as("__tmax")))
     // consumed by BOTH the cutpoint aggregate and the scoring pass —
     // persist or the user-grain corpus aggregate runs twice
-    val users = Dedup.persistTracked(purch.groupBy(col(userCol))
+    val users = Caches.persist(purch.groupBy(col(userCol))
       .agg(max(col(tsNs)).as("__last"),
         count(lit(1)).as("freq"),
         sum(round(col(valueCol) * 100).cast("long")).as("cents"))
@@ -1307,10 +1308,10 @@ object Events {
     */
   def acf(df: DataFrame, keyCol: String, tsNs: String, windowNs: Long,
       maxLag: Int): DataFrame = {
-    val g = Dedup.persistTracked(gridCounts(df, keyCol, tsNs, windowNs))
+    val g = Caches.persist(gridCounts(df, keyCol, tsNs, windowNs))
     val stats = g.groupBy("k")
       .agg(count(lit(1)).as("__w"), sum("n").as("__s"))
-    val dev = Dedup.persistTracked(
+    val dev = Caches.persist(
       g.join(stats, Seq("k"))
         .select(col("k"), col("t"),
           (col("__w") * col("n") - col("__s")).as("d")))
@@ -1395,7 +1396,7 @@ object Events {
     */
   def dispersionIndex(df: DataFrame, keyCol: String, tsNs: String,
       windowNs: Long): DataFrame = {
-    val g = Dedup.persistTracked(gridCounts(df, keyCol, tsNs, windowNs))
+    val g = Caches.persist(gridCounts(df, keyCol, tsNs, windowNs))
     g.groupBy("k")
       .agg(count(lit(1)).as("__w"), sum("n").as("__s"),
         sum(col("n") * col("n")).as("__q"))
@@ -1661,7 +1662,7 @@ object Events {
   def interArrival(df: DataFrame, keyCol: String, tsNs: String,
       tieBreak: String): DataFrame = {
     val w = Window.partitionBy(col(keyCol)).orderBy(col(tsNs), col(tieBreak))
-    val gaps = Dedup.persistTracked(df
+    val gaps = Caches.persist(df
       .withColumn("__gap", col(tsNs) - lag(col(tsNs), 1).over(w))
       .where(col("__gap").isNotNull)
       .select(col(keyCol), col("__gap")))
@@ -1828,7 +1829,7 @@ object Events {
         .cast("long")
     // persisted: three aggregates (A, B, n_states) derive from it — the
     // per-user lead-window corpus pass must run once, not three times
-    val cells = Dedup.persistTracked(
+    val cells = Caches.persist(
       df.withColumn("__next", lead(col(typeCol), 1).over(w))
         .where(col("__next").isNotNull)
         .groupBy(col(typeCol).as("__f"), col("__next").as("__t"))

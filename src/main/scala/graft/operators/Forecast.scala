@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Caches
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -145,7 +146,7 @@ object Forecast {
     val ev = df.select(expr(s"$tsNsCol div ${DayNs}L").as("__d"))
     // day-grained (metadata-scale) — persisted so the span guard's
     // 1-row action and the power sums share one corpus pass
-    val cnts = Dedup.persistTracked(
+    val cnts = Caches.persist(
       ev.groupBy("__d").agg(count(lit(1)).as("__y"))
         .crossJoin(ev.agg(min("__d").as("__d0")))
         .select((col("__d") - col("__d0")).cast("int").as("t"),
@@ -477,7 +478,7 @@ object Forecast {
     val idx = perPhase.withColumn("__raw6",
       when(rawQ >= 0, floor(rawQ + 0.5)).otherwise(-floor(-rawQ + 0.5))
         .cast("long"))
-    val resid = Dedup.persistTracked(
+    val resid = Caches.persist(
       withD6.join(broadcast(idx.select(col("__ph"), col("__raw6"))),
           Seq("__ph"))
         .select(col("t"), (col("__d6") - col("__raw6")).as("__r6")))
@@ -849,7 +850,7 @@ object Forecast {
       .select((col("__d") - col("__d0")).as("t"),
         coalesce(col("__y"), lit(0L)).as("__y"))
     val tot = series.agg(count(lit(1)).as("__n"), sum("__y").as("__s"))
-    val z = Dedup.persistTracked(series.crossJoin(broadcast(tot))
+    val z = Caches.persist(series.crossJoin(broadcast(tot))
       .select(col("t"), (col("__y") * col("__n") - col("__s")).as("__z"),
         col("__n")))
     val den = z.agg(sum(col("__z") * col("__z")).as("__zz"),
@@ -1055,7 +1056,7 @@ object Forecast {
     val ev = df.select(expr(s"$tsNsCol div ${DayNs}L").as("__d"))
     // persisted: the pair join, the day count and the tie grouping all
     // read the series — one corpus scan, everything after is grid-sized
-    val cnts0 = Dedup.persistTracked(
+    val cnts0 = Caches.persist(
       ev.groupBy("__d").agg(count(lit(1)).as("__y")))
     val bounds = cnts0.agg(min("__d").as("__d0"), max("__d").as("__d1"))
     val grid = bounds.select(col("__d0"),
@@ -1118,7 +1119,7 @@ object Forecast {
     val bounds = cnts0.agg(min("__d").as("__d0"), max("__d").as("__d1"))
     val grid = bounds.select(col("__d0"),
       explode(sequence(col("__d0"), col("__d1"))).as("__d"))
-    val series = Dedup.persistTracked(grid.join(cnts0, Seq("__d"), "left")
+    val series = Caches.persist(grid.join(cnts0, Seq("__d"), "left")
       .select((col("__d") - col("__d0")).as("t"),
         coalesce(col("__y"), lit(0L)).as("__y")))
     val tot = series.agg(count(lit(1)).as("__n"))
@@ -1239,7 +1240,7 @@ object Forecast {
       col(typeCol).as("__ty"))
     // persisted: bounds and the series join both read it — one corpus
     // scan total
-    val cnts0 = Dedup.persistTracked(ev.groupBy("__d").agg(
+    val cnts0 = Caches.persist(ev.groupBy("__d").agg(
       sum(when(col("__ty") === typeA, 1L).otherwise(0L)).as("__a"),
       sum(when(col("__ty") === typeB, 1L).otherwise(0L)).as("__b")))
     val bounds = cnts0.agg(min("__d").as("__d0"), max("__d").as("__d1"))
@@ -1316,7 +1317,7 @@ object Forecast {
     import spark.implicits._
     val ev = df.select(expr(s"$tsNsCol div ${DayNs}L").as("__d"),
       col(typeCol).as("__ty"))
-    val cnts0 = Dedup.persistTracked(ev.groupBy("__d").agg(
+    val cnts0 = Caches.persist(ev.groupBy("__d").agg(
       sum(when(col("__ty") === typeA, 1L).otherwise(0L)).as("__a"),
       sum(when(col("__ty") === typeB, 1L).otherwise(0L)).as("__b")))
     val bounds = cnts0.agg(min("__d").as("__d0"), max("__d").as("__d1"))
@@ -1425,7 +1426,7 @@ object Forecast {
     val spark = df.sparkSession
     import spark.implicits._
     val ev = df.select(expr(s"$tsNsCol div ${DayNs}L").as("__d"))
-    val cnts0 = Dedup.persistTracked(
+    val cnts0 = Caches.persist(
       ev.groupBy("__d").agg(count(lit(1)).as("__y")))
     val bounds = cnts0.agg(min("__d").as("__d0"), max("__d").as("__d1"))
     val grid = bounds.select(col("__d0"),
@@ -1485,7 +1486,7 @@ object Forecast {
     val spark = df.sparkSession
     import spark.implicits._
     val ev = df.select(expr(s"$tsNsCol div ${DayNs}L").as("__d"))
-    val cnts0 = Dedup.persistTracked(
+    val cnts0 = Caches.persist(
       ev.groupBy("__d").agg(count(lit(1)).as("__y")))
     val bounds = cnts0.agg(min("__d").as("__d0"), max("__d").as("__d1"))
     val grid = bounds.select(col("__d0"),
@@ -1555,7 +1556,7 @@ object Forecast {
     val ev = df.select(expr(s"$tsNsCol div ${DayNs}L").as("__d"))
     // persisted: bounds, the day count and the conditional fold all
     // read it — one corpus scan total
-    val cnts0 = Dedup.persistTracked(
+    val cnts0 = Caches.persist(
       ev.groupBy("__d").agg(count(lit(1)).as("__y")))
     val bounds = cnts0.agg(min("__d").as("__d0"), max("__d").as("__d1"))
     val grid = bounds.select(col("__d0"),
@@ -1631,7 +1632,7 @@ object Forecast {
     val cells = grid.join(cnts0, Seq("__d", "__ty"), "left")
       .select(col("__d"), col("__ty"),
         coalesce(col("__c"), lit(0L)).as("__c"))
-    val vals = Dedup.persistTracked(
+    val vals = Caches.persist(
       cells.groupBy("__d", "__c").agg(count(lit(1)).as("__t")))
     val wDay = org.apache.spark.sql.expressions.Window
       .partitionBy("__d").orderBy("__c")
@@ -1755,12 +1756,12 @@ object Forecast {
     */
   def breuschPaganDaily(df: DataFrame, tsNsCol: String): DataFrame = {
     val ev = df.select(expr(s"$tsNsCol div ${DayNs}L").as("__d"))
-    val cnts0 = Dedup.persistTracked(
+    val cnts0 = Caches.persist(
       ev.groupBy("__d").agg(count(lit(1)).as("__y")))
     val bounds = cnts0.agg(min("__d").as("__d0"), max("__d").as("__d1"))
     val grid = bounds.select(col("__d0"),
       explode(sequence(col("__d0"), col("__d1"))).as("__d"))
-    val series = Dedup.persistTracked(grid.join(cnts0, Seq("__d"), "left")
+    val series = Caches.persist(grid.join(cnts0, Seq("__d"), "left")
       .select((col("__d") - col("__d0")).as("t"),
         coalesce(col("__y"), lit(0L)).as("__y")))
     val mom = series.agg(count(lit(1)).as("__k"),
@@ -1889,12 +1890,12 @@ object Forecast {
   def pettittDaily(df: DataFrame, tsNsCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val ev = df.select(expr(s"$tsNsCol div ${DayNs}L").as("__d"))
-    val cnts0 = Dedup.persistTracked(
+    val cnts0 = Caches.persist(
       ev.groupBy("__d").agg(count(lit(1)).as("__y")))
     val bounds = cnts0.agg(min("__d").as("__d0"), max("__d").as("__d1"))
     val grid = bounds.select(col("__d0"),
       explode(sequence(col("__d0"), col("__d1"))).as("__d"))
-    val series = Dedup.persistTracked(grid.join(cnts0, Seq("__d"), "left")
+    val series = Caches.persist(grid.join(cnts0, Seq("__d"), "left")
       .select((col("__d") - col("__d0") + 1L).as("t"),
         coalesce(col("__y"), lit(0L)).as("__y")))
     val vgrid = series.groupBy("__y").agg(count(lit(1)).as("__c"))

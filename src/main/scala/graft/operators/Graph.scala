@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Caches
 import org.apache.spark.sql.{DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -29,22 +30,6 @@ import org.apache.spark.sql.functions._
   * pitfall).
   */
 object Graph {
-
-  /** Drop the cached blocks behind a lazily-localCheckpointed plan.
-    * `Dataset.localCheckpoint` persists its internal RDD (that's the
-    * lineage truncation); once a later round supersedes the frame,
-    * those blocks are dead weight in executor storage. The RDD handle
-    * lives on the plan's `LogicalRDD` leaf.
-    */
-  private[graft] def unpersistCheckpoint(df: DataFrame): Unit =
-    // match ONLY a frame that is itself the checkpoint root: a derived
-    // frame (select/filter over a checkpoint) shares a LIVE ancestor's
-    // blocks, which must not be dropped from under it
-    df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(false)
-      case _ => ()
-    }
 
   /** Component label (= min member id) for every vertex appearing in
     * `edges`. Output: `id`, `comp`. Edges are treated as undirected;
@@ -120,7 +105,7 @@ object Graph {
       // no longer needs the PREVIOUS round's checkpointed blocks —
       // drop them now, or every round's edge set stays in executor
       // storage for the life of the session
-      unpersistCheckpoint(cur)
+      Caches.unpersistCheckpoint(cur)
       cur = next
       curFp = nextFp
       iter += 1
@@ -227,10 +212,10 @@ object Graph {
         .localCheckpoint(true)
       // the eager checkpoint above just materialized the new ranks —
       // the superseded round's blocks are dead weight from here on
-      unpersistCheckpoint(prev)
+      Caches.unpersistCheckpoint(prev)
     }
-    unpersistCheckpoint(nodes)
-    unpersistCheckpoint(withDeg)
+    Caches.unpersistCheckpoint(nodes)
+    Caches.unpersistCheckpoint(withDeg)
     ranks.select(col("id"), round(col("rank"), roundTo).as("rank"))
   }
 
@@ -258,10 +243,9 @@ object Graph {
         greatest(col(aCol).cast("long"), col(bCol).cast("long")).as("v"))
       .where(col("u").isNotNull && col("u") =!= col("v"))
       .distinct()
-      // tracked (Dedup registry): three plan branches read the edge
-      // set, which may itself be an expensive LSH derivation; the
-      // session releases it via Dedup.clearCaches() once consumed
-      .transform(Dedup.persistTracked)
+      // persisted into the caller's scope: three plan branches read the
+      // edge set, which may itself be an expensive LSH derivation
+      .transform(Caches.persist(_))
     val deg = und.select(explode(array(col("u"), col("v"))).as("id"))
       .groupBy("id").agg(count(lit(1)).as("degree"))
     val withDeg = und
@@ -362,13 +346,13 @@ object Graph {
       hubs = l1Normalize(hub1, "hub").localCheckpoint(true)
       // both replacement rounds are materialized (eager checkpoints);
       // release the superseded rounds' blocks
-      unpersistCheckpoint(prevAuths)
-      unpersistCheckpoint(prevHubs)
+      Caches.unpersistCheckpoint(prevAuths)
+      Caches.unpersistCheckpoint(prevHubs)
     }
     val out = auths.join(hubs, Seq("id"))
       .select(col("id"), round(col("auth"), roundTo).as("authority"),
         round(col("hub"), roundTo).as("hub"))
-    unpersistCheckpoint(e); unpersistCheckpoint(nodes)
+    Caches.unpersistCheckpoint(e); Caches.unpersistCheckpoint(nodes)
     out
   }
 
@@ -452,7 +436,7 @@ object Graph {
         .join(keep.withColumnRenamed("__keep", "src"), Seq("src"), "left_semi")
         .join(keep.withColumnRenamed("__keep", "dst"), Seq("dst"), "left_semi")
         .localCheckpoint(true)
-      unpersistCheckpoint(prevSym)
+      Caches.unpersistCheckpoint(prevSym)
       prevEdges = nEdges
       nEdges = sym.count()
       round += 1
@@ -482,7 +466,7 @@ object Graph {
         greatest(col(aCol), col(bCol)).as("v"))
       .where(col("u") =!= col("v")).distinct()
     val asg = comms.select(col(idCol).as("__id"), col(commCol).as("__c"))
-    val tagged = Dedup.persistTracked(und
+    val tagged = Caches.persist(und
       .join(asg.select(col("__id").as("u"), col("__c").as("cu")), Seq("u"))
       .join(asg.select(col("__id").as("v"), col("__c").as("cv")), Seq("v")))
     val m = tagged.agg(count(lit(1)).as("__m"))
@@ -543,7 +527,7 @@ object Graph {
         .localCheckpoint(true)
       // no-op on round 1 (the seed labels are a projection over nodes,
       // not their own checkpoint); drops superseded rounds after that
-      unpersistCheckpoint(prevLabels)
+      Caches.unpersistCheckpoint(prevLabels)
     }
     labels
   }
@@ -590,8 +574,8 @@ object Graph {
       visited = visited
         .union(frontier.select(col("id"), lit(depth).as("hops")))
         .localCheckpoint(true)
-      unpersistCheckpoint(prevFrontier)
-      unpersistCheckpoint(prevVisited)
+      Caches.unpersistCheckpoint(prevFrontier)
+      Caches.unpersistCheckpoint(prevVisited)
     }
     visited
   }
@@ -619,13 +603,13 @@ object Graph {
       minShared: Int = 2, maxAttrDeg: Int = 1000, topK: Int = 50): DataFrame = {
     // the incidence may be an expensive derivation (tokenize + explode
     // + distinct); it feeds the degree count AND both join sides, so
-    // pay it once (tracked persist — released by Dedup.clearCaches)
-    val inc = Dedup.persistTracked(
+    // pay it once (persisted into the caller's scope)
+    val inc = Caches.persist(
       df.select(col(nodeCol).as("u"), col(attrCol).as("i")).distinct())
     val deg = inc.groupBy("i").agg(count(lit(1)).as("__deg"))
     // no broadcast hint: attribute cardinality is corpus-bounded in
     // general (AQE broadcasts the degree table when it is small)
-    val keyed = Dedup.persistTracked(inc.join(deg, Seq("i"))
+    val keyed = Caches.persist(inc.join(deg, Seq("i"))
       .where(col("__deg") >= 2 && col("__deg") <= maxAttrDeg))
     keyed.as("a").join(keyed.as("b"),
         col("a.i") === col("b.i") && col("a.u") < col("b.u"))
@@ -701,10 +685,10 @@ object Graph {
       // new mis/undecided are materialized; the round's temporaries and
       // the superseded frames can release their blocks (round 1's
       // prevs are projections over `nodes`, where this is a no-op)
-      unpersistCheckpoint(u)
-      unpersistCheckpoint(winners)
-      unpersistCheckpoint(prevMis)
-      unpersistCheckpoint(prevUndecided)
+      Caches.unpersistCheckpoint(u)
+      Caches.unpersistCheckpoint(winners)
+      Caches.unpersistCheckpoint(prevMis)
+      Caches.unpersistCheckpoint(prevUndecided)
       done = undecided.isEmpty
     }
     require(done,
@@ -739,7 +723,7 @@ object Graph {
     val ea = edges.select(col(aCol).as("__a"), col(bCol).as("__b"))
     val na = nodes.select(col(idCol).as("__a"), col(attrCol).as("__ga"))
     val nb = nodes.select(col(idCol).as("__b"), col(attrCol).as("__gb"))
-    val tagged = Dedup.persistTracked(
+    val tagged = Caches.persist(
       ea.join(na, Seq("__a")).join(nb, Seq("__b")))
     val same = col("__ga") === col("__gb")
     val contrib = tagged.select(col("__ga").as("attr"),
@@ -788,7 +772,7 @@ object Graph {
   def percolation(pairs: DataFrame, aCol: String, bCol: String,
       simCol: String, thresholds: Seq[Double]): DataFrame = {
     require(thresholds.nonEmpty, "need at least one threshold")
-    val cached = Dedup.persistTracked(
+    val cached = Caches.persist(
       pairs.select(col(aCol).as("__a"), col(bCol).as("__b"),
         col(simCol).as("__sim")))
     // materialize the shared pair cache ONCE before the solves fan
@@ -850,7 +834,7 @@ object Graph {
         greatest(col(aCol).cast("long"), col(bCol).cast("long")).as("v"))
       .where(col("u").isNotNull && col("u") =!= col("v"))
       .distinct()
-      .transform(Dedup.persistTracked)
+      .transform(Caches.persist(_))
     val deg = und.select(explode(array(col("u"), col("v"))).as("id"))
       .groupBy("id").agg(count(lit(1)).as("__d"))
     val kDf = broadcast(ks.toDF("k"))
@@ -940,10 +924,10 @@ object Graph {
       if (kn == n) {
         // fixpoint: every surviving edge already meets the bound —
         // `kept` carries the final supports (und's checkpoint backs it)
-        unpersistCheckpoint(keptE)
+        Caches.unpersistCheckpoint(keptE)
         return kept
       }
-      unpersistCheckpoint(und)
+      Caches.unpersistCheckpoint(und)
       und = keptE
       n = kn
       round += 1
@@ -980,8 +964,8 @@ object Graph {
         greatest(col(aCol).cast("long"), col(bCol).cast("long")).as("v"))
       .where(col("u").isNotNull && col("u") =!= col("v"))
       .distinct()
-    val undP = Dedup.persistTracked(und)
-    val deg = Dedup.persistTracked(undP
+    val undP = Caches.persist(und)
+    val deg = Caches.persist(undP
       .select(explode(array(col("u"), col("v"))).as("id"))
       .groupBy("id").agg(count(lit(1)).as("degree")))
     val withDeg = undP

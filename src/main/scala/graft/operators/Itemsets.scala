@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Caches
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -33,9 +34,9 @@ object Itemsets {
       minSupport: Long = 2): DataFrame = {
     // the distinct (basket, item) projection feeds item counts, the
     // basket total, AND both sides of the pair join — persist it
-    // (tracked; released by Dedup.clearCaches) or each consumer
+    // (caller's scope) or each consumer
     // re-runs the distinct's shuffle over the raw table
-    val pairs = Dedup.persistTracked(
+    val pairs = Caches.persist(
       df.select(col(basketCol).as("__b"), col(itemCol).as("__i"))
         .where(col("__i").isNotNull)
         .distinct())
@@ -79,7 +80,7 @@ object Itemsets {
     */
   def itemItemCosine(df: DataFrame, basketCol: String,
       itemCol: String): DataFrame = {
-    val counts = Dedup.persistTracked(
+    val counts = Caches.persist(
       df.select(col(basketCol).as("__b"), col(itemCol).as("__i"))
         .where(col("__i").isNotNull)
         .groupBy("__b", "__i").agg(count(lit(1)).as("__c")))
@@ -122,7 +123,7 @@ object Itemsets {
     */
   def tripleLift(df: DataFrame, basketCol: String, itemCol: String,
       minSupport: Long = 2): DataFrame = {
-    val rows = Dedup.persistTracked(
+    val rows = Caches.persist(
       df.select(col(basketCol).as("__b"), col(itemCol).as("__i"))
         .where(col("__i").isNotNull)
         .distinct())
@@ -131,7 +132,7 @@ object Itemsets {
     val total = rows.select(col("__b")).distinct()
       .agg(count(lit(1)).as("__total"))
     val frequent = rows.join(broadcast(itemN.select("__i")), Seq("__i"))
-    val pairRows = Dedup.persistTracked(
+    val pairRows = Caches.persist(
       frequent.as("a")
         .join(frequent.as("b"),
           col("a.__b") === col("b.__b") && col("a.__i") < col("b.__i"))

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Caches
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions._
@@ -137,16 +138,16 @@ object Mixture {
         .select(col("_id"),
           pmod(md5Long(col("_gram")), lit(buckets.toLong)).as("_f"))
     // the per-doc bucket counts feed BOTH the raw model and the final
-    // scoring join — tracked persist (Dedup.clearCaches lifecycle) so
+    // scoring join — persisted into the caller's scope so
     // the corpus is tokenized/exploded once, not twice
-    val docFeats = Dedup.persistTracked(
+    val docFeats = Caches.persist(
       bucketed(raw, col(idCol).cast("long"))
         .groupBy("_id", "_f").agg(count(lit(1)).cast("long").as("_c")))
     val rawBuckets = docFeats.groupBy("_f")
       .agg(sum("_c").as("_cr"))
     // ≤buckets rows, but building it costs a target-corpus pass and
     // it feeds both the ratio join and the totals — persist likewise
-    val tgtBuckets = Dedup.persistTracked(
+    val tgtBuckets = Caches.persist(
       bucketed(target, lit(0L)).groupBy("_f")
         .agg(count(lit(1)).cast("long").as("_ct")))
     // the two models joined over buckets present on either side; the

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Caches
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -464,7 +465,7 @@ object Multimodal {
 
   /** Partition-wise 64-bit fingerprint seam shared by the perceptual
     * near-dup operators: one long per decodable payload, undecodable
-    * rows dropped. Persisted (tracked) — the banded join reads it
+    * rows dropped. Persisted (caller's scope) — the banded join reads it
     * from both sides.
     */
   private def fingerprint64(media: DataFrame,
@@ -482,7 +483,7 @@ object Multimodal {
           .map(h => Row(r.getLong(idIdx), h))
       }
     }
-    Dedup.persistTracked(spark.createDataFrame(rdd, schema))
+    Caches.persist(spark.createDataFrame(rdd, schema))
   }
 
   /** Decode a PCM payload to (sampleRate, channels, interleaved int16

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Caches
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -24,25 +25,6 @@ import org.apache.spark.sql.functions._
   * the approximation honors its contract.
   */
 object Percentiles {
-
-  /** The global-sort stage persists its input (the stats pass and the
-    * rank pass both read it); caches register here and a long-lived
-    * session releases them once results are consumed — same discipline
-    * as [[Dedup.clearCaches]].
-    */
-  private val liveCaches = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-
-  /** Unpersist every sort cache registered so far; returns the count. */
-  def clearCaches(): Int = {
-    var n = 0
-    var df = liveCaches.poll()
-    while (df != null) {
-      try df.unpersist(false) catch { case scala.util.control.NonFatal(_) => () }
-      n += 1
-      df = liveCaches.poll()
-    }
-    n
-  }
 
   /** Interpolated percentiles over the non-null values of `value`, one
     * row per group: `keys*, <name per p>, n_values`. Groups with no
@@ -137,11 +119,11 @@ object Percentiles {
     import org.apache.spark.sql.expressions.Window
     val spark = df.sparkSession
     val kcols = keys.map(col)
-    val base = df.where(col(value).isNotNull)
+    // the stats pass and the rank pass both read the sort (persisted
+    // into the caller's scope)
+    val base = Caches.persist(df.where(col(value).isNotNull)
       .select(kcols :+ col(value).cast("double").as("_v"): _*)
-      .orderBy(kcols :+ col("_v"): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    liveCaches.add(base)
+      .orderBy(kcols :+ col("_v"): _*))
 
     // Rank reconstruction stays DECLARATIVE (no rdd round-trip — that
     // would deserialize every UnsafeRow to GenericRow and back, and it
@@ -156,12 +138,10 @@ object Percentiles {
     val withMid = base
       .withColumn("_pid", spark_partition_id())
       .withColumn("_mid", monotonically_increasing_id())
-    val statsDf = withMid
+    val statsDf = Caches.persist(withMid
       .groupBy(col("_pid") +: kcols: _*)
       .agg(count(lit(1)).as("_c"), min(col("_mid")).as("_mid0"),
-        max(col("_mid")).as("_mid1"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    liveCaches.add(statsDf)
+        max(col("_mid")).as("_mid1")))
     val maxStats = spark.conf.getOption("spark.graft.percentiles.maxDriverStats")
       .map(_.toLong).getOrElse(DefaultMaxDriverStats)
     // One tiny job over the persisted stats yields BOTH the cardinality
@@ -296,7 +276,7 @@ object Percentiles {
     import org.apache.spark.sql.expressions.Window
     val spark = df.sparkSession
     import spark.implicits._
-    val counts = Dedup.persistTracked(
+    val counts = Caches.persist(
       df.select(col(groupCol).as("__g"), scoreQ.as("__s"))
         .groupBy("__g", "__s").agg(count(lit(1)).as("__c")))
     val dec = broadcast((1 to 9).toDF("decile"))

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Caches
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{NumericType, StringType}
@@ -119,7 +120,7 @@ object Profile {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("__g").orderBy("__v")
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-    val cdf = Dedup.persistTracked(
+    val cdf = Caches.persist(
       groups.crossJoin(grid)
         .join(counts, Seq("__g", "__v"), "left")
         .withColumn("__c", coalesce(col("__c"), lit(0L)))
@@ -190,7 +191,7 @@ object Profile {
     */
   def populationStability(df: DataFrame, groupCol: String,
       valueCol: String): DataFrame = {
-    val vals = Dedup.persistTracked(
+    val vals = Caches.persist(
       df.select(col(groupCol).as("__g"),
           col(valueCol).cast("double").as("__v"))
         .where(col("__v").isNotNull))

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Caches
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -254,12 +255,11 @@ object Similarity {
       trainCap: Int = 262144): Array[Array[Double]] = {
     graft.plans.GraftExtensions.ensureRegistered(corpus.sparkSession)
     val dim = if (dims > 0) dims else inferDims(corpus, vecCol)
-    val train = corpus
-      .select(col(idCol), col(vecCol).cast("array<double>").as("_vd"))
-      .orderBy(md5(concat_ws(":", lit("km"), col(idCol).cast("string"))))
-      .limit(trainCap)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Caches.scoped {
+      val train = Caches.persist(corpus
+        .select(col(idCol), col(vecCol).cast("array<double>").as("_vd"))
+        .orderBy(md5(concat_ws(":", lit("km"), col(idCol).cast("string"))))
+        .limit(trainCap))
       var cents: Array[Array[Double]] = train
         .orderBy(col(idCol)).limit(nLists)
         .select(col("_vd")).collect()
@@ -284,7 +284,7 @@ object Similarity {
         cents = next
       }
       cents
-    } finally train.unpersist(false)
+    }
   }
 
   /** Two-level (coarse → fine) k-means quantizer — the IVF practice
@@ -313,14 +313,13 @@ object Similarity {
     val k2 = math.ceil(nLists.toDouble / k1).toInt
     val coarse = kmeansCentroids(corpus, vecCol, idCol, k1, iters, dims,
       trainCap)
-    val train = corpus
-      .select(col(idCol).as("__id"), col(vecCol).cast("array<double>").as("_vd"))
-      .orderBy(md5(concat_ws(":", lit("km"), col("__id").cast("string"))))
-      .limit(trainCap)
-      .select(col("__id"), col("_vd"),
-        element_at(nearestLists(col("_vd"), coarse, 1), 1).as("__c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Caches.scoped {
+      val train = Caches.persist(corpus
+        .select(col(idCol).as("__id"), col(vecCol).cast("array<double>").as("_vd"))
+        .orderBy(md5(concat_ws(":", lit("km"), col("__id").cast("string"))))
+        .limit(trainCap)
+        .select(col("__id"), col("_vd"),
+          element_at(nearestLists(col("_vd"), coarse, 1), 1).as("__c")))
       val w = Window.partitionBy("__c").orderBy("__id")
       val initRows = train.withColumn("__rn", row_number().over(w))
         .where(col("__rn") <= k2)
@@ -347,7 +346,7 @@ object Similarity {
         cur = next
       }
       (coarse, cur)
-    } finally train.unpersist(false)
+    }
   }
 
   /** Fine-list argmax for [[twoLevelCentroids]]: per row, filter the
@@ -544,14 +543,13 @@ object Similarity {
     require(dim % m == 0, s"dims=$dim not divisible by m=$m")
     val dsub = dim / m
     val subCols = (0 until m).map(j => col(s"_s$j"))
-    val train = corpus
-      .select(col(idCol).as("_id"), col(vecCol).cast("array<double>").as("_vd"))
-      .orderBy(md5(concat_ws(":", lit("km"), col("_id").cast("string"))))
-      .limit(trainCap)
-      .select(col("_id") +: (0 until m).map(j =>
-        slice(col("_vd"), j * dsub + 1, dsub).as(s"_s$j")): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Caches.scoped {
+      val train = Caches.persist(corpus
+        .select(col(idCol).as("_id"), col(vecCol).cast("array<double>").as("_vd"))
+        .orderBy(md5(concat_ws(":", lit("km"), col("_id").cast("string"))))
+        .limit(trainCap)
+        .select(col("_id") +: (0 until m).map(j =>
+          slice(col("_vd"), j * dsub + 1, dsub).as(s"_s$j")): _*))
       val init = train.orderBy(col("_id")).limit(ksub)
         .select(subCols: _*).collect()
       require(init.length == ksub,
@@ -576,7 +574,7 @@ object Similarity {
         cbs = next
       }
       cbs
-    } finally train.unpersist(false)
+    }
   }
 
   /** PQ-encode: `m` codebook codes per vector (`array<int>`), staged
@@ -873,7 +871,7 @@ object Similarity {
       element_at(
         nearestLists(col(vecCol).cast("array<double>"), cents, 1), 1)
         .as("list"))
-    val cells = Dedup.persistTracked(
+    val cells = Caches.persist(
       assigned.groupBy("list", "lbl").agg(count(lit(1)).as("c")))
     val rk = cells.groupBy("list").agg(sum("c").as("nk"), max("c").as("mk"))
     val rl = cells.groupBy("lbl").agg(sum("c").as("nl"))
@@ -915,7 +913,7 @@ object Similarity {
   def pairDistanceHistogram(emb: DataFrame, vecCol: String, idCol: String,
       sampleN: Int = 100): DataFrame = {
     graft.plans.GraftExtensions.ensureRegistered(emb.sparkSession)
-    val sample = Dedup.persistTracked(emb
+    val sample = Caches.persist(emb
       .select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))
       .orderBy(md5(concat_ws(":", lit("pd"), col("id").cast("string"))))
       .limit(sampleN))
@@ -1104,9 +1102,8 @@ object Similarity {
     val exploded = v.select(posexplode(col("v")).as(Seq("i", "vi")), col("v"))
     val aggs = (0 until d).map(j => sum(col("vi") * col("v")(j)).as(s"s$j"))
     // d-row aggregate consumed by TWO branches (cells + means) —
-    // persist it or each branch re-runs the corpus pass (tracked;
-    // released by Dedup.clearCaches)
-    val sums = Dedup.persistTracked(exploded.groupBy(col("i"))
+    // persist it (caller's scope) or each branch re-runs the corpus pass
+    val sums = Caches.persist(exploded.groupBy(col("i"))
       .agg(count(lit(1)).as("n"),
         (sum(col("vi")).as("si") +: aggs): _*))
     val perCell = sums.select(
@@ -1496,7 +1493,7 @@ object Similarity {
     import org.apache.spark.sql.expressions.Window
     require(m >= 2, "m must be >= 2")
     val d = emb.select(size(col(vecCol))).head().getInt(0)
-    val pts = Dedup.persistTracked(emb.select(col(idCol).as("__id"),
+    val pts = Caches.persist(emb.select(col(idCol).as("__id"),
         col(vecCol).cast("array<double>").as("__v"))
       .filter(size(col("__v")) === d && !exists(col("__v"), x => isnan(x))))
     val probes = pts
@@ -1562,7 +1559,7 @@ object Similarity {
         when(col("__x") >= 0, floor(col("__x") * 1e7 + 0.5))
           .otherwise(-floor(-col("__x") * 1e7 + 0.5)).cast("long")
           .as("__x7"))
-    val perLD = Dedup.persistTracked(cells.groupBy("__l", "__p")
+    val perLD = Caches.persist(cells.groupBy("__l", "__p")
       .agg(count(lit(1)).as("__n"), sum("__x7").as("__s"),
         sum(col("__x7").cast("decimal(38,0)") * col("__x7")).as("__q")))
     // NOT "__N"/"__S": Spark resolution is case-INSENSITIVE and the
@@ -1582,7 +1579,7 @@ object Similarity {
           * (col("__s").cast("double") / col("__n") / 1e7
             - col("__ts").cast("double") / col("__tn") / 1e7)
           * 1e9 + 0.5).cast("long").as("__b9"))
-    val perClass = Dedup.persistTracked(terms.groupBy("__l")
+    val perClass = Caches.persist(terms.groupBy("__l")
       .agg((max("__n")).as("n_vecs"), sum("__w9").as("__w9s"),
         sum("__b9").as("__b9s")))
     val tot = perClass.agg(sum("__w9s").as("__W"), sum("__b9s").as("__B"))
@@ -1626,7 +1623,7 @@ object Similarity {
     val spark = emb.sparkSession
     // clean corpus: full-width vectors, no NaN (the q142 audit's gate)
     val d = emb.select(size(col(vecCol))).head().getInt(0)
-    val pts = Dedup.persistTracked(emb.select(col(idCol).as("__id"),
+    val pts = Caches.persist(emb.select(col(idCol).as("__id"),
         col(vecCol).cast("array<double>").as("__v"))
       .filter(size(col("__v")) === d &&
         !exists(col("__v"), x => isnan(x))))
@@ -1701,7 +1698,7 @@ object Similarity {
       rounds: Int = 3): DataFrame = {
     require(k >= 2 && rounds >= 1, "need k >= 2 and rounds >= 1")
     val d = emb.select(size(col(vecCol))).head().getInt(0)
-    val pts = Dedup.persistTracked(emb.select(col(idCol).as("__id"),
+    val pts = Caches.persist(emb.select(col(idCol).as("__id"),
         col(vecCol).cast("array<double>").as("__v"))
       .filter(size(col("__v")) === d && !exists(col("__v"), x => isnan(x)))
       .withColumn("__v7", transform(col("__v"), x =>
@@ -1764,7 +1761,7 @@ object Similarity {
         .select(col("__c"), coalesce(col("__cvNew"), col("__cv"))
           .as("__cv"))
         .localCheckpoint(true)
-      graft.operators.Graph.unpersistCheckpoint(prev)
+      Caches.unpersistCheckpoint(prev)
     }
     val fin = assign(centroids)
     def g6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
@@ -1792,7 +1789,7 @@ object Similarity {
       labelCol: String, mProbes: Int = 20, k: Int = 3): DataFrame = {
     require(mProbes >= 1 && k >= 1, "need mProbes >= 1 and k >= 1")
     val d = emb.select(size(col(vecCol))).head().getInt(0)
-    val pts = Dedup.persistTracked(emb.select(col(idCol).as("__id"),
+    val pts = Caches.persist(emb.select(col(idCol).as("__id"),
         col(vecCol).cast("array<double>").as("__v"),
         col(labelCol).cast("long").as("__lb"))
       .filter(size(col("__v")) === d && !exists(col("__v"), x => isnan(x))))
@@ -1819,7 +1816,7 @@ object Similarity {
       .agg(count(lit(1)).as("__nv"))
       .withColumn("__vr", row_number().over(wVote))
       .where(col("__vr") === 1)
-    val scored = Dedup.persistTracked(voted.select(
+    val scored = Caches.persist(voted.select(
       col("__pid").as("probe_id"), col("true_label"),
       col("__lb").as("predicted_label"), col("__nv").as("votes"),
       (col("true_label") === col("__lb")).as("correct")))
@@ -1855,7 +1852,7 @@ object Similarity {
       mProbes: Int = 10, k: Int = 3): DataFrame = {
     require(mProbes >= 1 && k >= 2, "need mProbes >= 1 and k >= 2")
     val d = emb.select(size(col(vecCol))).head().getInt(0)
-    val pts = Dedup.persistTracked(emb.select(col(idCol).as("__id"),
+    val pts = Caches.persist(emb.select(col(idCol).as("__id"),
         col(vecCol).cast("array<double>").as("__v"))
       .filter(size(col("__v")) === d && !exists(col("__v"), x => isnan(x))))
     def d2(a: Column, b: Column): Column =
@@ -1876,11 +1873,11 @@ object Similarity {
       .orderBy(md5Long(concat(lit("lof:"), col("__id"))), col("__id"))
       .limit(mProbes)
       .select(col("__id").as("__qid"), col("__v").as("__qv"))
-    val nn0 = Dedup.persistTracked(knn(probes))
-    val s1 = Dedup.persistTracked(nn0.select(col("__id")).distinct()
+    val nn0 = Caches.persist(knn(probes))
+    val s1 = Caches.persist(nn0.select(col("__id")).distinct()
       .join(pts, Seq("__id"))
       .select(col("__id").as("__qid"), col("__v").as("__qv")))
-    val nn1 = Dedup.persistTracked(knn(s1))
+    val nn1 = Caches.persist(knn(s1))
     val s2 = nn1.select(col("__id")).distinct()
       .join(pts, Seq("__id"))
       .select(col("__id").as("__qid"), col("__v").as("__qv"))
@@ -1949,7 +1946,7 @@ object Similarity {
   def clusterValidity(emb: DataFrame, vecCol: String, labelCol: String,
       idCol: String): DataFrame = {
     val d = emb.select(size(col(vecCol))).head().getInt(0)
-    val cells = Dedup.persistTracked(emb
+    val cells = Caches.persist(emb
       .filter(size(col(vecCol).cast("array<double>")) === d &&
         !exists(col(vecCol).cast("array<double>"), x => isnan(x)))
       .select(col(idCol).as("__id"), col(labelCol).as("__l"),
@@ -1958,7 +1955,7 @@ object Similarity {
         when(col("__x") >= 0, floor(col("__x") * 1e7 + 0.5))
           .otherwise(-floor(-col("__x") * 1e7 + 0.5)).cast("long")
           .as("__x7")))
-    val perLD = Dedup.persistTracked(cells.groupBy("__l", "__p")
+    val perLD = Caches.persist(cells.groupBy("__l", "__p")
       .agg(count(lit(1)).as("__n"), sum("__x7").as("__s"),
         sum(col("__x7").cast("decimal(38,0)") * col("__x7")).as("__q")))
     val perD = perLD.groupBy("__p")

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Caches
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions._
@@ -286,7 +287,7 @@ object TextAnalysis {
       probes: DataFrame, probeTextCol: String, n: Int = 8,
       estimatedItems: Long = 1L << 20, numBits: Long = 1L << 23): DataFrame = {
     graft.plans.GraftExtensions.ensureRegistered(df.sparkSession)
-    val probeShingles = Dedup.persistTracked(probes
+    val probeShingles = Caches.persist(probes
       .select(tokens(col(probeTextCol)).as("_t"))
       .select(explode(array_distinct(wordShingles(col("_t"), n))).as("sh"))
       .distinct())
@@ -406,7 +407,7 @@ object TextAnalysis {
   def classTfidf(df: DataFrame, textCol: String, groupCol: String,
       k: Int = 5): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val tf = Dedup.persistTracked(
+    val tf = Caches.persist(
       df.select(col(groupCol).as("_g"), explode(tokens(col(textCol))).as("term"))
         .groupBy("_g", "term").agg(count(lit(1)).cast("long").as("tf")))
     val ft = tf.groupBy("term").agg(sum("tf").as("ft"))
@@ -569,10 +570,10 @@ object TextAnalysis {
       numHashes, bands, shingleSize, threshold)
     val comps = Graph.connectedComponents(pairs, "id_a", "id_b")
       .withColumnRenamed("id", idCol)
-    // persisted (tracked in Dedup's cache registry): the spanning
+    // persisted (caller's scope): the spanning
     // aggregate and the per-split aggregate both consume it, and
     // without the cache each would replay the LSH + iterative closure
-    val assigned = Dedup.persistTracked(df.select(col(idCol))
+    val assigned = Caches.persist(df.select(col(idCol))
       .join(comps, Seq(idCol), "left")
       .withColumn("comp", coalesce(col("comp"), col(idCol)))
       .withColumn("split", splitAssign(col("comp"), weights)))
@@ -676,7 +677,7 @@ object TextAnalysis {
       numHashes, bands, shingleSize, threshold)
     val comps = Graph.connectedComponents(pairs, "id_a", "id_b")
       .withColumnRenamed("id", idCol)
-    val assigned = Dedup.persistTracked(df.select(col(idCol))
+    val assigned = Caches.persist(df.select(col(idCol))
       .join(comps, Seq(idCol), "left")
       .withColumn("comp", coalesce(col("comp"), col(idCol)))
       .withColumn("fold", pmod(md5Long(col("comp")), lit(k.toLong))))
@@ -1033,7 +1034,7 @@ object TextAnalysis {
   def spanSurprisal(df: DataFrame, textCol: String, idCol: String,
       size: Int = 32, stride: Int = 16): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val freq = Dedup.persistTracked(
+    val freq = Caches.persist(
       df.select(explode(tokens(col(textCol))).as("__t"))
         .groupBy("__t").agg(count(lit(1)).as("__c")))
     val total = freq.agg(sum("__c").as("__tot"))
@@ -1071,9 +1072,9 @@ object TextAnalysis {
   def sourceJsDivergence(df: DataFrame, textCol: String,
       sourceCol: String): DataFrame = {
     // (source, term, count) is model-sized but its lineage is the full
-    // corpus explode — persist it (tracked) since THREE branches read
+    // corpus explode — persist it (caller's scope) since THREE branches read
     // it (totals, and both sides of the pair self-join via dist)
-    val counts = Dedup.persistTracked(df
+    val counts = Caches.persist(df
       .select(col(sourceCol).as("__s"), explode(tokens(col(textCol))).as("__t"))
       .groupBy("__s", "__t").agg(count(lit(1)).as("__c")))
     val totals = counts.groupBy("__s").agg(sum("__c").as("__n"))
@@ -1165,7 +1166,7 @@ object TextAnalysis {
     */
   def dataCard(df: DataFrame, textCol: String, idCol: String,
       groupCol: String, langCol: String): DataFrame = {
-    val base = Dedup.persistTracked(df.select(
+    val base = Caches.persist(df.select(
       col(groupCol).as("grp"), col(langCol).as("lang"),
       textFingerprint(col(textCol)).as("fp"),
       size(tokens(col(textCol))).cast("long").as("ntok"),
@@ -1210,7 +1211,7 @@ object TextAnalysis {
     */
   def saturationReport(df: DataFrame, textCol: String, idCol: String,
       n: Int = 3): DataFrame = {
-    val grams = Dedup.persistTracked(df
+    val grams = Caches.persist(df
       .select(col(idCol).as("__id"), tokens(col(textCol)).as("_t"))
       .select(col("__id"),
         explode(array_distinct(wordShingles(col("_t"), n))).as("g")))
@@ -1278,7 +1279,7 @@ object TextAnalysis {
   def keywordSaliency(df: DataFrame, textCol: String, groupCol: String,
       topK: Int = 5, minCount: Long = 5): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val tc = Dedup.persistTracked(
+    val tc = Caches.persist(
       df.select(col(groupCol).as("grp"), explode(tokens(col(textCol))).as("term"))
         .groupBy("grp", "term").agg(count(lit(1)).as("a")))
     val grpTot = tc.groupBy("grp").agg(sum("a").as("c"))
@@ -1364,7 +1365,7 @@ object TextAnalysis {
     val k = features.size
     val cols = lit(1d).as("x0") +:
       features.zipWithIndex.map { case (f, i) => f.cast("double").as(s"x${i + 1}") }
-    val fts = Dedup.persistTracked(
+    val fts = Caches.persist(
       df.select(cols :+ label.cast("boolean").cast("double").as("y"): _*))
     var w = Array.fill(k + 1)(0d)
     def z(weights: Array[Double]): Column =
@@ -1406,7 +1407,7 @@ object TextAnalysis {
     */
   def burrowsDelta(df: DataFrame, textCol: String, groupCol: String,
       vocabSize: Int = 30): DataFrame = {
-    val toks = Dedup.persistTracked(
+    val toks = Caches.persist(
       df.select(col(groupCol).as("__g"), explode(tokens(col(textCol))).as("__t")))
     val vocab = toks.groupBy("__t").agg(count(lit(1)).as("__c"))
       .orderBy(col("__c").desc, col("__t").asc)
@@ -1425,7 +1426,7 @@ object TextAnalysis {
       sum(col("__f") * col("__f")).as("__sf2"))
       .withColumn("__sigma",
         sqrt(col("__sf2") / col("__s") - col("__mu") * col("__mu")))
-    val z = Dedup.persistTracked(
+    val z = Caches.persist(
       fGrid.join(broadcast(stats), Seq("__t"))
         .where(col("__sigma") > 0)
         .select(col("__g"), col("__t"),
@@ -1510,7 +1511,7 @@ object TextAnalysis {
     */
   def noveltyRate(df: DataFrame, idCol: String, textCol: String,
       n: Int): DataFrame = {
-    val grams = Dedup.persistTracked(df
+    val grams = Caches.persist(df
       .select(col(idCol).as("__id"), tokens(col(textCol)).as("__t"))
       .select(col("__id"),
         explode(array_distinct(wordShingles(col("__t"), n))).as("__g")))
@@ -1581,7 +1582,7 @@ object TextAnalysis {
       .distinct()
     // the bucket-load relation feeds BOTH the histogram and the
     // summary — persist or the corpus explode+distinct runs twice
-    val load = Dedup.persistTracked(types
+    val load = Caches.persist(types
       .select(pmod(graft.functions.md5Long(col("t")), lit(buckets.toLong))
         .as("b"))
       .groupBy("b").agg(count(lit(1)).as("load")))
@@ -1870,7 +1871,7 @@ object TextAnalysis {
       .withColumn("__stop", col("__w").isInCollection(stops))
     val wSeq = Window.partitionBy("__id").orderBy("__i")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val phrases = Dedup.persistTracked(
+    val phrases = Caches.persist(
       tok.withColumn("__grp",
           sum(when(col("__stop"), 1L).otherwise(0L)).over(wSeq))
         .filter(!col("__stop"))
@@ -1961,7 +1962,7 @@ object TextAnalysis {
     val counts = df.select(tokens(col(textCol)).as("__t"))
       .select(explode(wordShingles(col("__t"), n)).as("w"))
       .groupBy("w").agg(count(lit(1)).as("r"))
-    val freqOfFreq = Dedup.persistTracked(
+    val freqOfFreq = Caches.persist(
       counts.groupBy("r").agg(count(lit(1)).as("n_r")))
     val total = counts.agg(sum("r").as("__N"))
     val nextF = freqOfFreq.select((col("r") - 1).as("r"),
@@ -2009,7 +2010,7 @@ object TextAnalysis {
     */
   def logOddsTerms(df: DataFrame, textCol: String, groupCol: String,
       topV: Int = 50, alpha0: Double = 100.0): DataFrame = {
-    val docTok = Dedup.persistTracked(
+    val docTok = Caches.persist(
       df.select(col(groupCol).as("src"),
           explode(tokens(col(textCol))).as("w"))
         .groupBy("src", "w").agg(count(lit(1)).as("y_iw")))
@@ -2077,7 +2078,7 @@ object TextAnalysis {
     val und = pairs.select(least(col("__w"), col("__w2")).as("wa"),
         greatest(col("__w"), col("__w2")).as("wb"))
       .groupBy("wa", "wb").agg(count(lit(1)).as("__wt"))
-    val sym = Dedup.persistTracked(
+    val sym = Caches.persist(
       und.select(col("wa").as("src"), col("wb").as("dst"), col("__wt"))
         .union(und.select(col("wb").as("src"), col("wa").as("dst"),
           col("__wt"))))
@@ -2108,10 +2109,10 @@ object TextAnalysis {
             (coalesce(col("__s12"), lit(0L)).cast("double") / 1e12))
             .as("rank"))
         .localCheckpoint(true)
-      Graph.unpersistCheckpoint(prev)
+      Caches.unpersistCheckpoint(prev)
     }
-    Graph.unpersistCheckpoint(symS)
-    Graph.unpersistCheckpoint(nodes)
+    Caches.unpersistCheckpoint(symS)
+    Caches.unpersistCheckpoint(nodes)
     val w = org.apache.spark.sql.expressions.Window
       .orderBy(col("rank").desc, col("id").asc)
     ranks.withColumn("__rn", row_number().over(w))
@@ -2146,7 +2147,7 @@ object TextAnalysis {
       col("__w").as("__wn"))
     // at joined position p: __wn is the token from p−1 (the CONTEXT v),
     // __w is the token at p (the continuation w)
-    val c2 = Dedup.persistTracked(
+    val c2 = Caches.persist(
       base.join(nxt, Seq("__doc", "__p"))
         .select(col("__wn").as("__v"), col("__w").as("__w"))
         .groupBy("__v", "__w").agg(count(lit(1)).as("__cvw")))
@@ -2195,7 +2196,7 @@ object TextAnalysis {
       shingleSize: Int = 3, rounds: Int = 5): DataFrame = {
     require(rounds >= 1 && rounds <= 16,
       "rounds in [1, 16] (the oracle unrolls the same count)")
-    val pairs = Dedup.persistTracked(df
+    val pairs = Caches.persist(df
       .select(col(idCol).as("__doc"), tokens(col(textCol)).as("__t"))
       .select(col("__doc"),
         explode(wordShingles(col("__t"), shingleSize)).as("__sh"))

@@ -14,51 +14,40 @@ import graft.vcf.{ToyVcf, VcfApi, VcfBuild, VcfReader, VcfTables}
 object VcfQ {
 
   // Build once per JVM: the toy fixture is static, and every query
-  // reads a different derived table of the same build.
-  @volatile private var cached: VcfTables = _
-  private def tables(s: SparkSession): VcfTables = {
-    if (cached == null) synchronized {
-      if (cached == null) {
-        val vcf = VcfReader.fromLines(s, ToyVcf.lines)
-        VcfBuild.requireNormalized(vcf.df)
-        cached = VcfBuild.build(vcf)
-      }
-    }
-    cached
+  // reads a different derived table of the same build. The staging
+  // caches live in this never-released scope, not in the per-query
+  // scope of whichever gate touches them first: releasing them would
+  // turn every later gate's id assignment into two independent sorts.
+  private val builds = new graft.Caches
+  private val built = new java.util.concurrent.ConcurrentHashMap[String, VcfTables]
+  private def once(key: String)(build: => VcfTables): VcfTables =
+    built.computeIfAbsent(key, _ => builds { build })
+
+  private def tables(s: SparkSession): VcfTables = once("toy") {
+    val vcf = VcfReader.fromLines(s, ToyVcf.lines)
+    VcfBuild.requireNormalized(vcf.df)
+    VcfBuild.build(vcf)
   }
 
   // Clinvar-annotated variant of the fixture: gates the INFO-side
   // clinvar unnest + left-join onto impact (02-build-db.R:286-305).
-  @volatile private var cachedClinvar: VcfTables = _
-  private def tablesClinvar(s: SparkSession): VcfTables = {
-    if (cachedClinvar == null) synchronized {
-      if (cachedClinvar == null) {
-        val vcf = VcfReader.fromLines(s, ToyVcf.clinvarLines)
-        cachedClinvar = VcfBuild.build(vcf)
-      }
-    }
-    cachedClinvar
+  private def tablesClinvar(s: SparkSession): VcfTables = once("clinvar") {
+    VcfBuild.build(VcfReader.fromLines(s, ToyVcf.clinvarLines))
   }
 
   // Same fixture round-tripped through a bgzip file and the splittable
   // BGZF scan — gates the compressed-input path (S1) against the same
   // golden rows as the in-memory parse. Tiny blocks + tiny splits force
   // a genuinely multi-partition compressed read even on the toy file.
-  @volatile private var cachedBgzf: VcfTables = _
-  private def tablesBgzf(s: SparkSession): VcfTables = {
-    if (cachedBgzf == null) synchronized {
-      if (cachedBgzf == null) {
-        val f = java.nio.file.Files
-          .createTempFile("graft_toy_bgzf", ".vcf.gz").toFile
-        f.deleteOnExit()
-        graft.vcf.Bgzf.writeLocalFile(f.getAbsolutePath, ToyVcf.lines, blockData = 200)
-        val vcf = VcfReader.read(s, f.getAbsolutePath, splitSize = Some(512L))
-        require(vcf.df.rdd.getNumPartitions > 1,
-          "BGZF scan must plan multiple input partitions")
-        cachedBgzf = VcfBuild.build(vcf)
-      }
-    }
-    cachedBgzf
+  private def tablesBgzf(s: SparkSession): VcfTables = once("bgzf") {
+    val f = java.nio.file.Files
+      .createTempFile("graft_toy_bgzf", ".vcf.gz").toFile
+    f.deleteOnExit()
+    graft.vcf.Bgzf.writeLocalFile(f.getAbsolutePath, ToyVcf.lines, blockData = 200)
+    val vcf = VcfReader.read(s, f.getAbsolutePath, splitSize = Some(512L))
+    require(vcf.df.rdd.getNumPartitions > 1,
+      "BGZF scan must plan multiple input partitions")
+    VcfBuild.build(vcf)
   }
 
   /** Trio fixture shared by q294 (Mendel errors) and q303 (TDT):

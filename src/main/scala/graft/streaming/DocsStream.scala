@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, Trigger}
+import org.apache.spark.sql.streaming.OutputMode
 import graft.operators.TextAnalysis
 
 /** Streaming document curation: the ingest-time shape of the batch
@@ -59,15 +59,7 @@ object DocsStream {
     val schema = spark.read.parquet(staged).schema
     val stream = spark.readStream.schema(schema).parquet(staged)
     val name = s"docs_curation_${System.nanoTime()}"
-    EventsStream.withStatePartitions(spark, 8) {
-      val q = curationAgg(stream).writeStream
-        .outputMode(OutputMode.Complete())
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    EventsStream.runAvailableNow(curationAgg(stream), OutputMode.Complete(), name)
     spark.table(name)
   }
 }

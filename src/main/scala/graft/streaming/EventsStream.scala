@@ -52,32 +52,34 @@ object EventsStream {
     staged.toString
   }
 
-  /** Run `body` with the shuffle-partition count (= state-store count
-    * for a streaming query started inside) temporarily pinned. Every
+  /** Run the streaming query `out` once (AvailableNow: the whole file
+    * set, then stop) into the memory table `name`, with the
+    * shuffle-partition count (= state-store count) pinned to `n`. Every
     * stateful operator commits one store per partition per micro-batch,
     * so the local AvailableNow harnesses size it down from 32 — the
     * same knob a deployment pins before a stateful query's first start
-    * (the count is frozen into the checkpoint). Results are
-    * partition-count invariant; the DuckDB gates re-verify that.
+    * (the count is frozen into the checkpoint). The pin is
+    * session-global (concurrent queries see it; overlapping runs may
+    * leave it set), which is safe because results are partition-count
+    * invariant; the DuckDB gates re-verify that.
     *
-    * The block also pins the query's CHECKPOINT to a RAM-backed
-    * scratch dir, deleted when the block exits. These AvailableNow
-    * harness runs replay a static table into a memory sink: their
-    * offset/commit/state files are pure verification scratch — written
-    * once, never read back, discarded with the query — so placing them
-    * on `/dev/shm` (override: `spark.graft.streamScratch`; fallback:
-    * `java.io.tmpdir` when absent) removes disk-write latency from
-    * every micro-batch commit without touching the durable-checkpoint
-    * story of a real deployment, where the location is an explicit
-    * required choice. The throughput PROBES (rate source) do not run
-    * through this block — their measurement conditions are unchanged.
+    * The query checkpoints to a RAM-backed scratch dir of its own,
+    * passed as its `checkpointLocation` option (never through the
+    * session conf) and deleted when it ends. These harness runs replay
+    * a static table into a memory sink: their offset/commit/state files
+    * are pure verification scratch — written once, never read back,
+    * discarded with the query — so placing them on `/dev/shm`
+    * (override: `spark.graft.streamScratch`; fallback: `java.io.tmpdir`
+    * when absent) removes disk-write latency from every micro-batch
+    * commit without touching the durable-checkpoint story of a real
+    * deployment, where the location is an explicit required choice. The throughput PROBES (rate source) do not run
+    * through here — their measurement conditions are unchanged.
     */
-  private[streaming] def withStatePartitions[A](spark: SparkSession, n: Int)
-      (body: => A): A = {
-    import java.nio.file.{Files, Paths, Path}
+  private[streaming] def runAvailableNow(out: DataFrame, mode: OutputMode,
+      name: String, n: Int = 8): Unit = {
+    import java.nio.file.{Files, Paths}
+    val spark = out.sparkSession
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    val prevCkpt =
-      spark.conf.getOption("spark.sql.streaming.checkpointLocation")
     val root = spark.conf.getOption("spark.graft.streamScratch")
       .getOrElse(
         if (Files.isDirectory(Paths.get("/dev/shm"))) "/dev/shm"
@@ -91,16 +93,16 @@ object EventsStream {
           Paths.get(sys.props("java.io.tmpdir")), "graft_stream_ckpt_")
       }
     spark.conf.set("spark.sql.shuffle.partitions", n.toString)
-    spark.conf.set("spark.sql.streaming.checkpointLocation",
-      scratch.toString)
-    try body finally {
+    try out.writeStream
+      .option("checkpointLocation", scratch.toString)
+      .outputMode(mode)
+      .format("memory")
+      .queryName(name)
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
+    finally {
       spark.conf.set("spark.sql.shuffle.partitions", prev)
-      prevCkpt match {
-        case Some(v) =>
-          spark.conf.set("spark.sql.streaming.checkpointLocation", v)
-        case None =>
-          spark.conf.unset("spark.sql.streaming.checkpointLocation")
-      }
       try {
         import scala.jdk.CollectionConverters._
         Files.walk(scratch).iterator().asScala.toSeq.reverse
@@ -120,15 +122,7 @@ object EventsStream {
     val stream = graft.Tables.tsAsNanos(spark.readStream.schema(schema).parquet(staged))
     val agg = tumblingAgg(stream, windowNs)
     val name = s"events_tumbling_${System.nanoTime()}"
-    withStatePartitions(spark, 8) {
-      val q = agg.writeStream
-        .outputMode(OutputMode.Complete())
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    runAvailableNow(agg, OutputMode.Complete(), name)
     spark.table(name)
   }
 
@@ -175,15 +169,7 @@ object EventsStream {
     val stream = graft.Tables.tsAsNanos(spark.readStream.schema(schema).parquet(staged))
     val agg = dailyActiveAgg(stream, keyCol, periodNs)
     val name = s"events_dau_${System.nanoTime()}"
-    withStatePartitions(spark, 8) {
-      val q = agg.writeStream
-        .outputMode(OutputMode.Complete())
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    runAvailableNow(agg, OutputMode.Complete(), name)
     spark.table(name)
   }
 
@@ -210,15 +196,7 @@ object EventsStream {
       .groupBy(col(keyCol).as("u"))
       .agg(expr(s"min(ts div $periodNs)").as("p"))
     val name = s"events_firstseen_${System.nanoTime()}"
-    withStatePartitions(spark, 8) {
-      val q = firstSeen.writeStream
-        .outputMode(OutputMode.Complete())
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    runAvailableNow(firstSeen, OutputMode.Complete(), name)
     val state = spark.table(name)
     val news = state.groupBy("p").agg(count(lit(1)).as("new_users"))
     val bounds = broadcast(spark.read.parquet(staged)
@@ -252,15 +230,7 @@ object EventsStream {
     val counts = stream.groupBy(col(keyCol))
       .agg(count(lit(1)).as("n"), sum("value").as("__sv"))
     val name = s"events_topk_${System.nanoTime()}"
-    withStatePartitions(spark, 8) {
-      val q = counts.writeStream
-        .outputMode(OutputMode.Complete())
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    runAvailableNow(counts, OutputMode.Complete(), name)
     spark.table(name)
       .select(col(keyCol), col("n"), round(col("__sv"), 2).as("sum_value"))
       .orderBy(col("n").desc, col(keyCol).asc)
@@ -390,15 +360,7 @@ object EventsStream {
     val out = dedupeStream(doubled, "event_id")
       .select("event_id", "user_id", "event_type", "value")
     val name = s"events_dedup_${System.nanoTime()}"
-    withStatePartitions(spark, 8) {
-      val q = out.writeStream
-        .outputMode(OutputMode.Append())
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    runAvailableNow(out, OutputMode.Append(), name)
     spark.table(name)
   }
 
@@ -427,15 +389,7 @@ object EventsStream {
       .dropDuplicatesWithinWatermark("event_id")
       .select("event_id", "user_id", "event_type", "value")
     val name = s"events_dedup_ttl_${System.nanoTime()}"
-    withStatePartitions(spark, 8) {
-      val q = out.writeStream
-        .outputMode(OutputMode.Append())
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    runAvailableNow(out, OutputMode.Append(), name)
     spark.table(name)
   }
 
@@ -584,15 +538,7 @@ object EventsStream {
       .groupBy("tier", "event_type")
       .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("sum_value"))
     val name = s"events_stream_static_${System.nanoTime()}"
-    withStatePartitions(spark, statePartitions) {
-      val q = out.writeStream
-        .outputMode(OutputMode.Complete())
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    runAvailableNow(out, OutputMode.Complete(), name, statePartitions)
     spark.table(name)
   }
 
@@ -638,15 +584,7 @@ object EventsStream {
       spark.readStream.schema(schema).parquet(staged))
     val out = sessionWindowAgg(stream, gap)
     val name = s"events_session_window_${System.nanoTime()}"
-    withStatePartitions(spark, statePartitions) {
-      val q = out.writeStream
-        .outputMode(OutputMode.Append())
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    runAvailableNow(out, OutputMode.Append(), name, statePartitions)
     // sentinel filtered at the SINK — a source-side filter would be
     // pushed below the watermark node and un-drain the tail (see
     // runOuterJoinOnce's NOTE)
@@ -742,15 +680,7 @@ object EventsStream {
     val stream = graft.Tables.tsAsNanos(spark.readStream.schema(schema).parquet(staged))
     val out = sessionize(stream, gapNs)
     val name = s"events_sessions_${System.nanoTime()}"
-    withStatePartitions(spark, 8) {
-      val q = out.writeStream
-        .outputMode(OutputMode.Append())
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    runAvailableNow(out, OutputMode.Append(), name)
     spark.table(name)
   }
 
@@ -835,15 +765,7 @@ object EventsStream {
       .as[(Long, Long, Long)]
     val out = tokenBucketFold(typed, capacityMicro, nsPerMicroToken)
     val name = s"events_bucket_${System.nanoTime()}"
-    withStatePartitions(spark, 8) {
-      val q = out.writeStream
-        .outputMode(OutputMode.Append())
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    runAvailableNow(out, OutputMode.Append(), name)
     // final row per user = the one with the full event count
     spark.table(name)
       .groupBy("user_id")
@@ -918,15 +840,7 @@ object EventsStream {
       .as[(Long, Long, Long, Boolean)]
     val out = patternFold(typed, horizonNs)
     val name = s"events_pattern_${System.nanoTime()}"
-    withStatePartitions(spark, 8) {
-      val q = out.writeStream
-        .outputMode(OutputMode.Append())
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    runAvailableNow(out, OutputMode.Append(), name)
     spark.table(name)
   }
 
@@ -963,15 +877,7 @@ object EventsStream {
       .as[(Long, Long, Long, Long)]
     val out = ledgerFold(typed)
     val name = s"events_ledger_${System.nanoTime()}"
-    withStatePartitions(spark, 8) {
-      val q = out.writeStream
-        .outputMode(OutputMode.Append())
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    runAvailableNow(out, OutputMode.Append(), name)
     // final row per user = the one with the full event count
     spark.table(name)
       .groupBy("user_id")
@@ -1053,15 +959,7 @@ object EventsStream {
     val stream = graft.Tables.tsAsNanos(spark.readStream.schema(schema).parquet(staged))
     val out = cusumMonitor(stream, windowNs, mu0, slack, h)
     val name = s"events_cusum_${System.nanoTime()}"
-    withStatePartitions(spark, 8) {
-      val q = out.writeStream
-        .outputMode(OutputMode.Append())
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    runAvailableNow(out, OutputMode.Append(), name)
     spark.table(name)
   }
 }

@@ -43,7 +43,8 @@ object VcfApi {
     * primitive long; at ~100× genome scale that is O(100M) longs of
     * driver heap. [[buildGeneIndex]] therefore counts first and above
     * `maxDriverIds` returns the SPILLED form — `ids` empty, `spill` a
-    * cached distinct (symbol, variant_id) DataFrame — and
+    * distinct (symbol, variant_id) DataFrame cached in the caller's
+    * [[graft.Caches]] scope, which lives as long as the index — and
     * [[filterByGeneIndexed]] serves point lookups from it with a
     * per-gene broadcast semi-join (cluster memory, executor-side
     * filter; the per-gene subset is always gene-sized even when the
@@ -90,10 +91,9 @@ object VcfApi {
       // their min/max stats instead of scanning the full pair table —
       // the same batch-stats pruning the in-heap path gets from the
       // pushed IN-list (measured at exome shape: 0.164 → ~0.07 s/gene)
-      GeneIndex(Map.empty, Some(
+      GeneIndex(Map.empty, Some(graft.Caches.persist(
         pairs.repartitionByRange(64, col("symbol"))
-          .sortWithinPartitions("symbol")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
+          .sortWithinPartitions("symbol"))))
   }
 
   /** [[filterByGene]] through a prebuilt [[GeneIndex]]: the impact-side
@@ -834,14 +834,14 @@ object VcfApi {
         when(lit(lastNorm) <= 0d, 0L)
           .when(vd >= 0, floor(vd * 1e12 + 0.5))
           .otherwise(-floor(-vd * 1e12 + 0.5)).cast("long").as("v12"))
-      if (prev != null) graft.operators.Graph.unpersistCheckpoint(prev)
+      if (prev != null) graft.Caches.unpersistCheckpoint(prev)
       prev = wp
     }
     val flipSign =
       if (v.orderBy("s").limit(1).head().getLong(1) < 0) -1L else 1L
     // the returned frame depends only on the LAST round's checkpoint
     // (v) — the GRM blocks are dead weight from here
-    graft.operators.Graph.unpersistCheckpoint(full)
+    graft.Caches.unpersistCheckpoint(full)
     val lambda1 = math.floor(lastNorm * 1e6 + 0.5) / 1e6
     v.select(col("s").as("sample"),
         ((col("v12") * lit(flipSign)).cast("double") / 1e12).as("pc1"),
@@ -1163,7 +1163,10 @@ object VcfApi {
     * occupancy², position-bucketed — never all-pairs); each round is
     * two broadcast-scale anti/semi-joins on the shrinking undecided
     * set, and per-round state (decided ids + flag) is slim and
-    * persisted. No driver-side collect anywhere.
+    * persisted. No driver-side collect anywhere. The returned frame
+    * reads every round's checkpoint; they belong to the caller's
+    * [[graft.Caches]] scope, which frees them once the result is
+    * consumed.
     */
   def ldPrune(geno: DataFrame, info: DataFrame, maxDist: Long,
       r2Max: Double, maxRounds: Int = 16): DataFrame = {
@@ -1203,10 +1206,9 @@ object VcfApi {
       // undecided-count job and once under the decided checkpoint —
       // and the progress count now derives from the (trivial) count of
       // the already-checkpointed blocks instead of a second chain run.
-      val newly = decidable
+      val newly = graft.Caches.checkpoint(decidable
         .join(keptUp.withColumn("__k", lit(false)), Seq("variant_id"), "left")
-        .select(col("variant_id"), coalesce(col("__k"), lit(true)).as("kept"))
-        .localCheckpoint(true)
+        .select(col("variant_id"), coalesce(col("__k"), lit(true)).as("kept")))
       val newlyCount = newly.count()
       require(newlyCount > 0,
         s"ldPrune made no progress at round $rounds — conflict graph " +

@@ -42,27 +42,13 @@ object VcfBuild {
     */
   private val clinvarInfoCols = Seq("clinvar_sig", "clinvar_disease_name")
 
-  private val trackedCaches =
-    scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-
-  /** Drop the staging caches [[withVariantIds]] registered (mirrors
-    * `Dedup.clearCaches`). Returns how many were released.
-    *
-    * INVARIANT: only call after every output derived from the build
-    * (info/impact/geno writes, collects) has been materialized. The
-    * id assignment's offsets branch and probe branch must observe the
-    * IDENTICAL partition layout for `monotonically_increasing_id`;
-    * the tracked persist guarantees that. Unpersisting while derived
-    * plans are still lazy silently reverts them to two independent
-    * sort evaluations — safe today only because the range
-    * partitioning happens to be deterministic, and not a contract.
+  /** Release what was cached outside any [[graft.Caches]] scope, such
+    * as the staging of unscoped builds: a delegate to
+    * [[graft.Caches.releaseUnscoped]], kept only because the benchmark
+    * (`perfbench`) calls it. Once the benchmark calls
+    * `Caches.releaseUnscoped` itself (ROADMAP item 1), delete it.
     */
-  def clearCaches(): Int = trackedCaches.synchronized {
-    val n = trackedCaches.size
-    trackedCaches.foreach(_.unpersist(false))
-    trackedCaches.clear()
-    n
-  }
+  def clearCaches(): Int = graft.Caches.releaseUnscoped()
 
   /** Deterministic contiguous `variant_id` (1-based): global sort on
     * (chr, pos, ref, alt) — a stable total order — then a distributed
@@ -79,9 +65,20 @@ object VcfBuild {
     * window (the row_number partitions on the sort's own range
     * partitions, which the range partitioner keeps balanced).
     *
-    * The SORTED scan persists (tracked, see [[clearCaches]]): info,
-    * impact and geno all fan out from it, so the one unavoidable wide
-    * stage — parse + global sort — runs exactly once.
+    * The SORTED scan persists into the caller's [[graft.Caches]]
+    * scope: info, impact and geno all fan out from it, so the one
+    * unavoidable wide stage — parse + global sort — runs exactly once.
+    *
+    * INVARIANT: close that scope only after every output derived from
+    * the build (info/impact/geno writes, collects) has been
+    * materialized. The id assignment's offsets branch and probe branch
+    * must observe the IDENTICAL partition layout for
+    * `monotonically_increasing_id`; the persist guarantees that.
+    * Releasing it while derived plans are still lazy silently reverts
+    * them to two independent sort evaluations — safe today only
+    * because the range partitioning happens to be deterministic, and
+    * not a contract. The scope's holder count keeps a concurrent
+    * build of the same input in another scope from releasing it.
     */
   def withVariantIds(parsed: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -94,13 +91,12 @@ object VcfBuild {
     // partition's batches ON HEAP before it can decide to spill — at
     // 1.4M×1000 the wide form GC-starved a 96 GB driver until its own
     // heartbeats expired. DISK_ONLY streams batches out and bounds heap
-    // by in-flight partitions only; the layout invariant below cares
+    // by in-flight partitions only; the layout invariant above cares
     // about partitioning, not residence.
     val level = org.apache.spark.storage.StorageLevel.fromString(
       parsed.sparkSession.conf.get("spark.graft.stagingStorage",
         "MEMORY_AND_DISK"))
-    val sorted = parsed.orderBy(keys.map(col): _*).persist(level)
-    trackedCaches.synchronized { trackedCaches += sorted }
+    val sorted = graft.Caches.persist(parsed.orderBy(keys.map(col): _*), level)
     // monotonically_increasing_id encodes (partition << 33 | position)
     // over the pinned cache partitioning — order-consistent with the
     // sort but non-contiguous; the offsets table re-bases each
@@ -342,8 +338,9 @@ object VcfBuild {
     * cache each would re-parse and re-sort the entire input (3× the
     * dominant cost). At cluster scale this is the standard
     * materialize-the-staging-table step; storage is MEMORY_AND_DISK so
-    * oversized inputs spill rather than OOM. Release with
-    * [[clearCaches]] when the build's outputs are written.
+    * oversized inputs spill rather than OOM. It belongs to the
+    * caller's [[graft.Caches]] scope; close that scope once the
+    * build's outputs are written.
     */
   def build(vcf: VcfDataset): VcfTables =
     fromStaged(withVariantIds(vcf.df), vcf.header)
@@ -353,7 +350,7 @@ object VcfBuild {
     * by a resumed pipeline run ([[VcfPipeline.run]]). In the
     * resumed-from-parquet case the ids are literal data, so none of the
     * partition-layout determinism the in-memory id assignment relies on
-    * ([[clearCaches]]) is needed — every derived table is a plain
+    * ([[withVariantIds]]) is needed — every derived table is a plain
     * narrow read of the staging table.
     */
   def fromStaged(ids: DataFrame, header: VcfHeaderInfo): VcfTables = {

@@ -93,11 +93,13 @@ object VcfPipeline {
           s"multiallelic sites found; report written to $outDir/multiallelic_sites — " +
             "normalize the VCF (e.g. bcftools norm -m-) and rerun")
       }
-      VcfBuild.withVariantIds(vcf.df)
-        .write.mode("overwrite").parquet(stagingDir)
-      // staging is materialized; the sorted scan cache has no further
-      // consumers (everything below reads the parquet back)
-      VcfBuild.clearCaches()
+      // the sorted scan cache has no consumer past the staging write
+      // (everything below reads the parquet back): this call's scope
+      // releases it, and only it
+      graft.Caches.scoped {
+        VcfBuild.withVariantIds(vcf.df)
+          .write.mode("overwrite").parquet(stagingDir)
+      }
     }
     val ids = spark.read.parquet(stagingDir)
     val tables = VcfBuild.fromStaged(ids, vcf.header)

@@ -799,4 +799,41 @@ class ApiSpec extends SparkSpec {
     val m = graft.vcf.VcfApi.inbreedingF(mono).collect().head
     assert(m.isNullAt(m.fieldIndex("f")))
   }
+
+  test("VcfApi.ldPrune: the caller's Caches scope frees every round checkpoint") {
+    val dup = Seq(0d, 0d, 1d, 1d, 2d, 2d)
+    val geno = (1 to 4).flatMap(v => dup.zipWithIndex.map {
+      case (g, i) => (v.toLong, s"s$i", g)
+    }).toDF("variant_id", "sample", "gt")
+    val info = (1 to 4).map(v => (v.toLong, "1", v * 100L))
+      .toDF("variant_id", "chr", "start")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet.toSet
+    var madeInside = Set.empty[Int]
+    val got = Caches.scoped {
+      val r = VcfApi.ldPrune(geno, info, 150L, 0.5).orderBy("variant_id").collect()
+        .map(row => (row.getLong(0), row.getAs[Boolean]("kept"))).toSeq
+      madeInside = sc.getPersistentRDDs.keySet.toSet -- before
+      r
+    }
+    assert(got == Seq((1L, true), (2L, false), (3L, true), (4L, false)))
+    // the anti-chain needs several rounds, each one checkpoint
+    assert(madeInside.size >= 2, madeInside)
+    val left = madeInside & sc.getPersistentRDDs.keySet.toSet
+    assert(left.isEmpty, s"RDDs persisted inside the scope outlived it: $left")
+  }
+
+  test("buildGeneIndex: the spilled index is released with the caller's scope") {
+    import org.apache.spark.storage.StorageLevel
+    val impact = (1 to 300).map(i => (i.toLong, s"G${i % 5}")).toDF("variant_id", "symbol")
+    val info = (1 to 300).map(i => (i.toLong, 0.001)).toDF("variant_id", "af")
+    val spill = Caches.scoped {
+      val idx = VcfApi.buildGeneIndex(impact, maxDriverIds = 0L)
+      assert(idx.ids.isEmpty && idx.spill.isDefined)
+      assert(VcfApi.filterByGeneIndexed(idx, info, "G1").count() == 60)
+      assert(idx.spill.get.storageLevel != StorageLevel.NONE)
+      idx.spill.get
+    }
+    assert(spill.storageLevel == StorageLevel.NONE)
+  }
 }

@@ -83,7 +83,7 @@ class EvalSpec extends SparkSpec {
       .collect().head
     assert(rev.getAs[Double]("spearman_rho") == -1.0)
     assert(rev.getAs[Double]("kendall_tau") == -1.0)
-    graft.operators.Dedup.clearCaches()
+    Caches.releaseUnscoped()
   }
 
   test("selectionCurve: tie blocks kept whole, hand-computed deciles") {

@@ -480,16 +480,18 @@ class OperatorsSpec extends SparkSpec {
     assert(MjpegAvi.decode(full.take(full.length / 2)).isEmpty)
   }
 
-  test("Dedup.clearCaches releases signature caches after consumption") {
+  test("a Caches scope releases the dedup signature caches after consumption") {
     val docs = (1 to 60).map(i => (i.toLong, s"some text body number ${i % 20} with words"))
       .toDF("id", "text")
-    Dedup.clearCaches() // drain anything left by other tests
-    Dedup.minHashLsh(docs, "text", "id").count()
-    Dedup.ngramJaccardPairs(docs.withColumn("b", lit(1)), "text", "id", Seq("b")).count()
-    // exactly the two signature caches were registered and released
-    // (global getPersistentRDDs is racy across parallel suites)
-    assert(Dedup.clearCaches() == 2)
-    assert(Dedup.clearCaches() == 0)
+    val scope = new Caches
+    scope {
+      Dedup.minHashLsh(docs, "text", "id").count()
+      Dedup.ngramJaccardPairs(docs.withColumn("b", lit(1)), "text", "id", Seq("b")).count()
+    }
+    // exactly the two signature caches were registered in the scope
+    // and released by its close; a second close has nothing left
+    assert(scope.release() == 2)
+    assert(scope.release() == 0)
   }
 
   test("Percentiles.exact ≡ built-in percentile() (randomized groups)") {
@@ -555,7 +557,7 @@ class OperatorsSpec extends SparkSpec {
         "expected the window-plan dispatch above maxDriverStats")
     } finally {
       spark.conf.unset(confKey)
-      Percentiles.clearCaches()
+      Caches.releaseUnscoped()
     }
   }
 
@@ -570,21 +572,24 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("Percentiles.globalSortRanks: one giant group spans partitions, ranks exact") {
-    val n = 40000
-    val df = (1 to n).map(i => ("giant", (n - i).toDouble))
-      .toDF("k", "v").repartition(8)
-    val ranked = Percentiles.globalSortRanks(df, Seq("k"), "v")
-    // the whole point: a single group must NOT serialize onto one task
-    assert(ranked.rdd.getNumPartitions > 1,
-      s"single group pinned to ${ranked.rdd.getNumPartitions} partition(s)")
-    val rows = ranked.select("_v", "_rn", "_n").as[(Double, Long, Long)]
-      .collect().sortBy(_._2)
-    assert(rows.length == n)
-    // ranks are the exact 1..n order statistics of the sorted values
-    assert(rows.map(_._2).toSeq == (1L to n.toLong))
-    assert(rows.map(_._1).toSeq == (0 until n).map(_.toDouble))
-    assert(rows.forall(_._3 == n.toLong))
-    assert(Percentiles.clearCaches() >= 1)
+    val scope = new Caches
+    scope {
+      val n = 40000
+      val df = (1 to n).map(i => ("giant", (n - i).toDouble))
+        .toDF("k", "v").repartition(8)
+      val ranked = Percentiles.globalSortRanks(df, Seq("k"), "v")
+      // the whole point: a single group must NOT serialize onto one task
+      assert(ranked.rdd.getNumPartitions > 1,
+        s"single group pinned to ${ranked.rdd.getNumPartitions} partition(s)")
+      val rows = ranked.select("_v", "_rn", "_n").as[(Double, Long, Long)]
+        .collect().sortBy(_._2)
+      assert(rows.length == n)
+      // ranks are the exact 1..n order statistics of the sorted values
+      assert(rows.map(_._2).toSeq == (1L to n.toLong))
+      assert(rows.map(_._1).toSeq == (0 until n).map(_.toDouble))
+      assert(rows.forall(_._3 == n.toLong))
+    }
+    assert(scope.release() == 2)
   }
 
   test("Percentiles.approxWithBounds keeps NULL-key and all-null groups") {
@@ -819,7 +824,7 @@ class OperatorsSpec extends SparkSpec {
     val kept = Dedup.nearDedup(docs, "text", "id",
         numHashes = 16, bands = 16, threshold = 0.4)
       .select("id").as[Long].collect().sorted.toSeq
-    Dedup.clearCaches()
+    Caches.releaseUnscoped()
     assert(kept == Seq(1L, 4L), s"kept $kept")
   }
 
@@ -837,13 +842,13 @@ class OperatorsSpec extends SparkSpec {
     val keepers = Dedup.nearDupClusterKeepers(docs, "text", "id", "score",
         numHashes = 16, bands = 16, threshold = 0.4)
       .as[(Long, Long, Long, Long)].collect().toSeq
-    Dedup.clearCaches()
+    Caches.releaseUnscoped()
     // one cluster {1,2,3}: max score 25 is tied between 2 and 3 → min id 2
     assert(keepers == Seq((1L, 2L, 25L, 3L)), s"keepers $keepers")
     val kept = Dedup.nearDedupKeepBest(docs, "text", "id", "score",
         numHashes = 16, bands = 16, threshold = 0.4)
       .select("id").as[Long].collect().sorted.toSeq
-    Dedup.clearCaches()
+    Caches.releaseUnscoped()
     assert(kept == Seq(2L, 4L), s"kept $kept")
   }
 
@@ -858,7 +863,7 @@ class OperatorsSpec extends SparkSpec {
         numHashes = 16, bands = 16, threshold = 0.4)
       .select("id_a", "id_b", "label").as[(Long, Long, String)]
       .collect().sortBy(p => (p._1, p._2)).toSeq
-    Dedup.clearCaches()
+    Caches.releaseUnscoped()
     assert(got == Seq((1L, 2L, "positive"), (1L, 3L, "hard_negative"),
       (2L, 3L, "positive")), s"got $got")
   }
@@ -873,12 +878,12 @@ class OperatorsSpec extends SparkSpec {
     val got = TextAnalysis.classTfidf(docs, "text", "source", k = 1)
       .select("source", "term", "tf").as[(String, String, Long)]
       .collect().sortBy(_._1).toSeq
-    Dedup.clearCaches()
+    Caches.releaseUnscoped()
     assert(got == Seq(("a", "spark", 2L), ("b", "flink", 2L)), s"got $got")
     // hand-check one value: tf=2, f_t=2, A = 12 tokens / 2 classes = 6
     val full = TextAnalysis.classTfidf(docs, "text", "source", k = 10)
       .where(col("term") === "spark").select("ctfidf").as[Double].head()
-    Dedup.clearCaches()
+    Caches.releaseUnscoped()
     assert(math.abs(full - 2 * math.log(1 + 6.0 / 2)) < 1e-6, s"got $full")
   }
 
@@ -1225,7 +1230,7 @@ class OperatorsSpec extends SparkSpec {
     val guarded = Dedup.winnowingOverlap(boiler.toDF("doc_id", "text"),
       "text", "doc_id", k = 3, w = 4, maxDocFreq = 5, minShared = 1)
     assert(guarded.count() == 0)
-    Dedup.clearCaches()
+    Caches.releaseUnscoped()
   }
 
   test("Graph.triangleCounts: clique vs star, matches brute force on a random graph") {
@@ -1261,7 +1266,7 @@ class OperatorsSpec extends SparkSpec {
     got2.foreach { r =>
       assert(want(r._1) == ((r._1, r._2, r._3)), s"node ${r._1}: got $r")
     }
-    Dedup.clearCaches()
+    Caches.releaseUnscoped()
   }
 
   test("Mixture.serpentineShards: snake deal matches hand computation, balance near 1") {
@@ -1772,7 +1777,7 @@ class OperatorsSpec extends SparkSpec {
     // every removed vector keeps to the smallest qualifying lower id
     assert(removed == Seq((2L, 0L), (3L, 1L), (4L, 0L)))
     // cross-cluster near-ties are never compared: only 3 removals
-    Dedup.clearCaches()
+    Caches.releaseUnscoped()
   }
 
   test("Dedup.editDistancePairs: prefix-blocked Levenshtein verify") {
@@ -1786,7 +1791,7 @@ class OperatorsSpec extends SparkSpec {
         blockTokens = 2, maxNormDist = 0.05)
       .select("id_a", "id_b", "dist").as[(Long, Long, Int)].collect().toSeq
     assert(pairs == Seq((0L, 1L, 1)))
-    Dedup.clearCaches()
+    Caches.releaseUnscoped()
   }
 
   test("Dedup.semanticContaminated/Decontaminate: bucketed probe matches") {
@@ -1838,7 +1843,7 @@ class OperatorsSpec extends SparkSpec {
         .orderBy("id_a", "id_b")
         .select("id_a", "id_b", "dist").as[(Long, Long, Int)].collect().toSeq
       assert(got == expected, s"got $got\nexpected $expected")
-      Dedup.clearCaches()
+      Caches.releaseUnscoped()
     }
   }
 
@@ -1876,7 +1881,7 @@ class OperatorsSpec extends SparkSpec {
       .orderBy("vec_id")
       .select("vec_id", "keeper_id").as[(Long, Long)].collect().toSeq
     assert(got == expected, s"got $got\nexpected $expected")
-    Dedup.clearCaches()
+    Caches.releaseUnscoped()
   }
 
   test("TextAnalysis.piiAudit counts on the original text and redacts all families") {
@@ -2013,7 +2018,7 @@ class OperatorsSpec extends SparkSpec {
       ("test", 1L, 1L, 0L),   // doc 6
       ("train", 3L, 2L, 0L),  // docs 0, 1 (one cluster) + doc 2
       ("val", 1L, 1L, 0L)))   // doc 7
-    Dedup.clearCaches()
+    Caches.releaseUnscoped()
   }
 
   test("TextAnalysis.hybridRrf: fusion math and one-sided rankings") {
@@ -2122,7 +2127,7 @@ class OperatorsSpec extends SparkSpec {
     assert(a == 1L && b == 2L)
     assert(ca == 1.0 && cont == 1.0)      // 1's 4 shingles all inside 2
     assert(cb == 4d / 7 && jac == 4d / 7) // 2 has 7 shingles
-    Dedup.clearCaches()
+    Caches.releaseUnscoped()
   }
 
   test("Events.decayedActivity: half-life weighting anchored at max ts") {
@@ -2269,7 +2274,7 @@ class OperatorsSpec extends SparkSpec {
     assert(nDocs == 5L && nPairs == 10L)
     assert(nTrue == 2L && nFound == 2L && recall == 1.0)
     assert(nCand >= 2L && candFrac == nCand.toDouble / 10)
-    Dedup.clearCaches()
+    Caches.releaseUnscoped()
   }
 
   test("TextAnalysis.spanSurprisal: rare-token chunk scores above doc mean") {
@@ -2288,7 +2293,7 @@ class OperatorsSpec extends SparkSpec {
     assert(doc1(1)._6 > 0 && doc1(0)._6 < 0 && doc1(2)._6 < 0)
     // deltas within a doc sum to ~0 (mean-centered)
     assert(math.abs(doc1.map(_._6).sum) < 1e-5)
-    Dedup.clearCaches()
+    Caches.releaseUnscoped()
   }
 
   test("Similarity.standardizeEmbeddings: z-scores hand-computed, zero-variance dim → 0") {
@@ -2322,7 +2327,7 @@ class OperatorsSpec extends SparkSpec {
     // F_A = (.5, 1, 1), F_B = (0, .5, 1) over grid {1,2,3} → D = .5;
     // C is identical to A → D = 0
     assert(got == Seq(("A", "B", 0.5), ("A", "C", 0.0), ("B", "C", 0.5)))
-    Dedup.clearCaches()
+    Caches.releaseUnscoped()
   }
 
   test("TextAnalysis.splitContamination: pair totals and leak flags consistent") {
@@ -2342,7 +2347,7 @@ class OperatorsSpec extends SparkSpec {
     val crossPairs = (0 until 5).count(i =>
       expected(i.toLong) != expected(i + 100L)).toLong
     assert(got.filter(_._4).map(_._3).sum == crossPairs)
-    Dedup.clearCaches()
+    Caches.releaseUnscoped()
   }
 
   test("TextAnalysis.leakageSafeFolds: clusters never span folds") {
@@ -2356,7 +2361,7 @@ class OperatorsSpec extends SparkSpec {
     assert(got.forall(r => r._1 >= 0 && r._1 < 5))
     // the dup family counts as ONE cluster in exactly one fold
     assert(got.map(_._3).sum == 21L)
-    Dedup.clearCaches()
+    Caches.releaseUnscoped()
   }
 
   test("Dedup.ingestNovelNear: history hits and batch-internal dominance drop") {
@@ -2374,7 +2379,7 @@ class OperatorsSpec extends SparkSpec {
         numHashes = 16, bands = 16, shingleSize = 2, threshold = 0.5)
       .select("doc_id").as[Long].collect().toSeq.sorted
     assert(got == Seq(5L, 7L))
-    Dedup.clearCaches()
+    Caches.releaseUnscoped()
   }
 
   test("Events.volumeAnomalies: the spike window flags, steady windows don't") {
@@ -2471,7 +2476,7 @@ class OperatorsSpec extends SparkSpec {
       if inter / uni >= 0.4
     } yield (a, b)).toSet
     assert(brute.nonEmpty && got == brute)
-    Dedup.clearCaches()
+    Caches.releaseUnscoped()
   }
 
   test("Dedup.setSimilarityJoin: lossless on a randomized shared-vocab corpus") {
@@ -2510,7 +2515,7 @@ class OperatorsSpec extends SparkSpec {
     assert(brute.nonEmpty, "fixture must plant at least one real pair")
     assert(got == brute,
       s"missing=${(brute -- got).take(5)} extra=${(got -- brute).take(5)}")
-    Dedup.clearCaches()
+    Caches.releaseUnscoped()
   }
 
   test("graft_packed_l1: codegen kernel == interpreted, lower-bounds |AΔB|") {
@@ -2562,7 +2567,7 @@ class OperatorsSpec extends SparkSpec {
     val exp = math.rint(2d * 5 * math.log(5d / 2.5) * 1e4) / 1e4
     assert(got("s1") == (("s1", "spark", 5L, 0L, exp)))
     assert(got("s2") == (("s2", "flink", 5L, 0L, exp)))
-    Dedup.clearCaches()
+    Caches.releaseUnscoped()
   }
 
   test("Events.rollingDistinct: hand-computed trailing-window distincts") {
@@ -2621,7 +2626,7 @@ class OperatorsSpec extends SparkSpec {
       probes.limit(0), "p", n = 6)
     assert(none.count() == 0 &&
       none.columns.toSeq == Seq("doc_id", "n_hits", "first_hit"))
-    Dedup.clearCaches()
+    Caches.releaseUnscoped()
   }
 
   test("TextAnalysis.sourceQualityGate: bad source drops, strong doc rescued") {
@@ -2664,7 +2669,7 @@ class OperatorsSpec extends SparkSpec {
         numHashes = 16, bands = 4, shingleSize = 1, threshold = 0.5)
       .as[(Long, Long, Long, Long, String, String)].collect().toSeq
     assert(got == Seq((10L, 3L, 3L, 10L, "reuters", "blogspam,mirror,reuters")))
-    Dedup.clearCaches()
+    Caches.releaseUnscoped()
   }
 
   test("Similarity.ivfRecallReport: probing every list gives recall 1") {
@@ -2700,7 +2705,7 @@ class OperatorsSpec extends SparkSpec {
     val got = TextAnalysis.saturationReport(docs, "text", "doc_id", n = 3)
       .as[(Long, Long, Long, Double)].collect().toSeq.sortBy(_._1)
     assert(got == Seq((1L, 2L, 2L, 1.0), (2L, 2L, 0L, 0.0), (3L, 2L, 2L, 1.0)))
-    Dedup.clearCaches()
+    Caches.releaseUnscoped()
   }
 
   test("Sketches.rollingDistinctHll: estimates within tolerance, exact sides match") {
@@ -2726,7 +2731,7 @@ class OperatorsSpec extends SparkSpec {
         numHashes = 16, bands = 4, shingleSize = 2, threshold = 0.5)
       .as[(Long, Long, Double, Double, Double)].collect().toSeq
     assert(got == Seq((1L, 2L, 1.0, 1.0, 0.0)))
-    Dedup.clearCaches()
+    Caches.releaseUnscoped()
   }
 
   test("TextAnalysis.dataCard: counts, dup rate, and dominant language") {
@@ -2743,7 +2748,7 @@ class OperatorsSpec extends SparkSpec {
       .map(r => r._1 -> r).toMap
     assert(got("s1") == (("s1", 3L, 2L, math.rint(1d / 3 * 1e6) / 1e6, "en", 0.666667)))
     assert(got("s2") == (("s2", 1L, 1L, 0.0, "fr", 1.0)))
-    Dedup.clearCaches()
+    Caches.releaseUnscoped()
   }
 
   test("Dedup.dupFlowMatrix: pair sources ordered, intra-source on the diagonal") {
@@ -2758,7 +2763,7 @@ class OperatorsSpec extends SparkSpec {
       .as[(String, String, Long)].collect().toSet
     // pairs: (1,2) a_src-b_src, (1,3) b_src-b_src, (2,3) a_src-b_src
     assert(got == Set(("a_src", "b_src", 2L), ("b_src", "b_src", 1L)))
-    Dedup.clearCaches()
+    Caches.releaseUnscoped()
   }
 
   test("Similarity.pqDistortionReport: centroid-coincident corpus has zero MSE") {
@@ -2825,7 +2830,7 @@ class OperatorsSpec extends SparkSpec {
     val p12 = got((1L, 2L))
     assert(p12._4 == 0.7626 && p12._4 > p12._3)
     got.get((3L, 4L)).foreach(p => assert(p._4 < p._3))
-    Dedup.clearCaches()
+    Caches.releaseUnscoped()
   }
 
   test("Percentiles.winsorizeReport: clip counts and means, hand-computed") {
@@ -2895,7 +2900,7 @@ class OperatorsSpec extends SparkSpec {
     assert(r.getAs[Double]("support") == 0.5)
     // lift = n_abc·N² / (n_a·n_b·n_c) = 2·16/27
     assert(r.getAs[Double]("lift") == math.rint(32d / 27 * 1e6) / 1e6)
-    Dedup.clearCaches()
+    Caches.releaseUnscoped()
   }
 
   test("Percentiles.quantileAlign: single group matches global, exact deciles") {
@@ -2909,7 +2914,7 @@ class OperatorsSpec extends SparkSpec {
       assert(r.getAs[Double]("global_q") == (i + 1) / 10d)
       assert(r.getAs[Double]("gap") == 0.0)
     }
-    Dedup.clearCaches()
+    Caches.releaseUnscoped()
   }
 
   test("Events.nextEventEval: a deterministic grammar scores accuracy 1") {
@@ -2929,7 +2934,7 @@ class OperatorsSpec extends SparkSpec {
     }
     assert(got(0).getAs[String]("predicted") == "b")
     assert(got(1).getAs[String]("predicted") == "a")
-    Dedup.clearCaches()
+    Caches.releaseUnscoped()
   }
 
   test("TextAnalysis.burrowsDelta: identical sources at distance 0") {
@@ -2942,7 +2947,7 @@ class OperatorsSpec extends SparkSpec {
         (r.getAs[Long]("n_terms"), r.getAs[Double]("delta"))).toMap
     assert(got(("A", "B")) == ((2L, 0.0)))
     assert(got(("A", "C"))._2 > 0 && got(("B", "C"))._2 > 0)
-    Dedup.clearCaches()
+    Caches.releaseUnscoped()
   }
 
   test("Mixture.waterfillAllocation: small source caps, rest splits by weight") {
@@ -3143,7 +3148,7 @@ class OperatorsSpec extends SparkSpec {
       features = Seq(col("f")), label = col("yv") === 1.0,
       eta = 5.0, iters = 5).collect().head
     assert(r == r2)
-    Dedup.clearCaches()
+    Caches.releaseUnscoped()
   }
 
   test("Similarity.hubnessReport: duplicated hub point dominates in-degree") {
@@ -3168,7 +3173,7 @@ class OperatorsSpec extends SparkSpec {
       k = 2, sampleSize = 5).collect()
       .map(r => r.getAs[Long]("in_degree") -> r.getAs[Long]("n_points")).toMap
     assert(sampled(0L) >= 13)
-    Dedup.clearCaches()
+    Caches.releaseUnscoped()
   }
 
   test("Events.kaplanMeier: textbook worked example with censoring") {
@@ -3254,7 +3259,7 @@ class OperatorsSpec extends SparkSpec {
     assert(r.getAs[Long]("s") == 10)
     val z = 9d / math.sqrt(300d / 18)
     assert(r.getAs[Double]("z") == math.rint(z * 1e6) / 1e6)
-    Dedup.clearCaches()
+    Caches.releaseUnscoped()
   }
 
   test("Events.theilSen: outlier-immune where OLS is not") {
@@ -3269,7 +3274,7 @@ class OperatorsSpec extends SparkSpec {
       .collect().head
     assert(r.getAs[Long]("n_pairs") == 10)
     assert(r.getAs[Double]("slope") == 1.0)
-    Dedup.clearCaches()
+    Caches.releaseUnscoped()
   }
 
   test("Eval.abTest: hand-computed two-proportion z") {
@@ -3314,7 +3319,7 @@ class OperatorsSpec extends SparkSpec {
         (r.getAs[Long]("n_co"), r.getAs[Double]("cosine"))).toMap
     assert(!got.contains(("x", "y")) && !got.contains(("x", "z")))
     assert(got(("y", "z")) == ((2L, 1.0)))
-    Dedup.clearCaches()
+    Caches.releaseUnscoped()
   }
 
   test("Sketches.hllIntersectionAudit: exact fields + certified sketch") {
@@ -3445,7 +3450,7 @@ class OperatorsSpec extends SparkSpec {
       .select("lag", "n_pairs", "acf")
       .as[(Int, Long, Double)].collect().toSeq
     assert(got == Seq((1, 3L, 0.25), (2, 2L, -0.3), (3, 1L, -0.45)))
-    Dedup.clearCaches()
+    Caches.releaseUnscoped()
   }
 
   test("Events.positionAttribution: U-shaped credits, open journey dropped") {
@@ -3524,7 +3529,7 @@ class OperatorsSpec extends SparkSpec {
     assert(r.getAs[Double]("mean_gap_sec") == 2.0)
     assert(r.getAs[Double]("lambda_per_sec") == 0.5)
     assert(r.getAs[Double]("p50_gap_sec") == 2.0)
-    Dedup.clearCaches(); Percentiles.clearCaches()
+    Caches.releaseUnscoped()
   }
 
   test("Events.sessionEntryExit: bounce and modal exit per entry type") {
@@ -3702,7 +3707,7 @@ class OperatorsSpec extends SparkSpec {
       .map(r => r._1 -> r).toMap
     assert(got("steady") == (("steady", 3L, 2.0, Some(0.5), false)))
     assert(got("bursty") == (("bursty", 3L, 2.0, Some(6.0), true)))
-    Dedup.clearCaches()
+    Caches.releaseUnscoped()
   }
 
   test("Events.firstSeenGrowth: gap-filled new/cumulative curve") {
@@ -3799,7 +3804,7 @@ class OperatorsSpec extends SparkSpec {
     assert(got.map(r => r._1 * r._2).sum == nTypes) // Σ load·buckets = types
     val used = got.head._4
     assert(got.head._5 == math.rint((1.0 - used.toDouble / 16) * 1e6) / 1e6)
-    Dedup.clearCaches()
+    Caches.releaseUnscoped()
   }
 
   test("Eval.rankBiasedOverlap: identical lists saturate, disjoint score 0") {
@@ -3824,7 +3829,7 @@ class OperatorsSpec extends SparkSpec {
       "embedding", "vec_id", sampleN = 8)
       .as[(Long, Double, Long, Double)].collect().toSeq
     assert(got == Seq((0L, 0.0, 28L, 1.0))) // all 28 pairs at cos 0
-    Dedup.clearCaches()
+    Caches.releaseUnscoped()
   }
 
   test("Graph.modularity: two disjoint triangles score exactly 0.5") {
@@ -3837,7 +3842,7 @@ class OperatorsSpec extends SparkSpec {
     assert(r.getAs[Long]("m_edges") == 6)
     assert(r.getAs[Long]("n_communities") == 2)
     assert(r.getAs[Double]("modularity") == 0.5)
-    Dedup.clearCaches()
+    Caches.releaseUnscoped()
   }
 
   test("Graph.labelPropagation: triangle converges, 2-node pair oscillates deterministically") {
@@ -4006,7 +4011,7 @@ class OperatorsSpec extends SparkSpec {
         .select("n_candidates").head().getLong(0)
       assert(observed.get == expected)
       assert(expected >= 3 * 8 * 7 / 2) // every within-family pair collides
-    } finally { Telemetry.disable(); Telemetry.reset(); Dedup.clearCaches() }
+    } finally { Telemetry.disable(); Telemetry.reset(); Caches.releaseUnscoped() }
   }
 
   test("Telemetry: observed set-similarity candidates bound the survivors") {
@@ -4022,7 +4027,7 @@ class OperatorsSpec extends SparkSpec {
       // structure guarantees survivors exist so the bound is non-vacuous
       assert(survivors > 0)
       assert(observed.get >= survivors)
-    } finally { Telemetry.disable(); Telemetry.reset(); Dedup.clearCaches() }
+    } finally { Telemetry.disable(); Telemetry.reset(); Caches.releaseUnscoped() }
   }
 
   test("Dedup.softDedupWeights: hand-computed commonness and weights") {

@@ -68,7 +68,7 @@ class ScaleSpec extends SparkSpec {
     val fuzzyPlan = fuzzy.queryExecution.executedPlan.toString
     assert(!fuzzyPlan.contains("CartesianProduct") &&
       !fuzzyPlan.contains("BroadcastNestedLoopJoin"), fuzzyPlan)
-    Dedup.clearCaches()
+    Caches.releaseUnscoped()
   }
 
   test("hybridRrf truncates both rankings with TakeOrdered before windows") {
@@ -215,7 +215,7 @@ class ScaleSpec extends SparkSpec {
       distinct.toDF("id", "text"), "text", "id", threshold = 0.3)
     assert(!uniform.queryExecution.executedPlan.toString.contains("__salt"),
       "auto mode must not salt a uniform key distribution")
-    operators.Dedup.clearCaches()
+    Caches.releaseUnscoped()
   }
 
   test("keySkewProfile flags the hot key") {
@@ -536,7 +536,7 @@ class ScaleSpec extends SparkSpec {
         s"expected a shuffled cluster-map join in:\n$plan")
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-      Dedup.clearCaches()
+      Caches.releaseUnscoped()
     }
   }
 
@@ -588,7 +588,7 @@ class ScaleSpec extends SparkSpec {
     val plan = out.queryExecution.executedPlan.toString
     assert(plan.contains("InMemoryTableScan"),
       s"bucket counts not persisted:\n$plan")
-    Dedup.clearCaches()
+    Caches.releaseUnscoped()
   }
 
   test("Layout.zorder clusters BOTH dimensions tighter than hash layout") {
@@ -623,7 +623,7 @@ class ScaleSpec extends SparkSpec {
     val plan = out.queryExecution.executedPlan.toString
     assert(plan.contains("InMemoryTableScan"),
       s"per-dimension sums not persisted:\n$plan")
-    Dedup.clearCaches()
+    Caches.releaseUnscoped()
   }
 
   test("sourceJsDivergence persists (source,term,count): one corpus explode") {
@@ -636,7 +636,7 @@ class ScaleSpec extends SparkSpec {
     val plan = out.queryExecution.executedPlan.toString
     assert(plan.contains("InMemoryTableScan"),
       s"term counts not persisted:\n$plan")
-    Dedup.clearCaches()
+    Caches.releaseUnscoped()
   }
 
   test("blocklistScreen keeps the term-dimension join broadcast under -1 threshold") {
@@ -666,7 +666,7 @@ class ScaleSpec extends SparkSpec {
     val plan = out.queryExecution.executedPlan.toString
     assert(plan.contains("InMemoryTableScan"),
       s"(basket,item) projection not persisted:\n$plan")
-    Dedup.clearCaches()
+    Caches.releaseUnscoped()
   }
 
   test("rankingEval: rank cutoff plans a WindowGroupLimit, hits table persisted") {
@@ -684,7 +684,7 @@ class ScaleSpec extends SparkSpec {
     val plan = out.queryExecution.executedPlan.toString
     assert(plan.contains("WindowGroupLimit"), plan)
     assert(plan.contains("InMemoryTableScan"), plan)
-    Dedup.clearCaches()
+    Caches.releaseUnscoped()
   }
 
   test("sample-blocked kinship ≡ unblocked, per-cell pair volume ≤ ⌈S/B⌉²") {
@@ -782,5 +782,92 @@ class ScaleSpec extends SparkSpec {
     // no second shuffle, no sort beyond the final orderBy's range
     assert("Exchange hashpartitioning".r.findAllIn(plan).size == 1, plan)
     assert(!plan.contains("CartesianProduct"), plan)
+  }
+
+  // ---- cache ownership: a scope releases only what it registered ----
+
+  /** Every row of the build's three data tables, sorted: an exact,
+    * order-independent fingerprint of what a build produced.
+    */
+  private def buildRows(t: graft.vcf.VcfTables): Seq[Seq[String]] =
+    Seq(t.info, t.impact.get, t.geno).map(_.collect().map(_.toString).sorted.toSeq)
+
+  private def synthLines(n: Int, from: Int): Seq[String] =
+    SyntheticVcf.header(4) ++ (from until from + n).map(i => SyntheticVcf.line(i, 4, 10))
+
+  test("Caches: two scopes holding one plan — closing one keeps the other's cache") {
+    import org.apache.spark.storage.StorageLevel
+    def plan() = spark.range(0, 500).selectExpr("id", "id * 7 AS x", "'own' AS tag")
+    // the premise: Spark keeps ONE entry for equal plans, and a bare
+    // unpersist (what a hand-written registry calls) drops it for both
+    val p1 = plan().persist(); val p2 = plan().persist()
+    p1.unpersist(false)
+    assert(p2.storageLevel == StorageLevel.NONE)
+
+    val a = new Caches; val b = new Caches
+    val dfA = a { Caches.persist(plan()) }
+    val dfB = b { Caches.persist(plan()) }
+    assert(dfA.count() == 500)
+    assert(a.release() == 1)
+    assert(dfB.storageLevel != StorageLevel.NONE, "closing A dropped B's cache")
+    assert(dfB.queryExecution.withCachedData.toString.contains("InMemoryRelation"))
+    // the root scope's release never touches an entry a scope holds
+    Caches.persist(plan())
+    assert(Caches.releaseUnscoped() >= 1)
+    assert(dfB.storageLevel != StorageLevel.NONE, "releaseUnscoped dropped B's cache")
+    assert(b.release() == 1)
+    assert(dfB.storageLevel == StorageLevel.NONE)
+  }
+
+  test("Caches: a thread started inside a scope registers into it") {
+    import org.apache.spark.storage.StorageLevel
+    val scope = new Caches
+    var df: org.apache.spark.sql.DataFrame = null
+    scope {
+      val t = new Thread(() => { df = Caches.persist(spark.range(0, 77).toDF("inherited")) })
+      t.start(); t.join()
+    }
+    assert(df.storageLevel != StorageLevel.NONE)
+    assert(scope.release() == 1)
+    assert(df.storageLevel == StorageLevel.NONE)
+    intercept[IllegalStateException](scope.exit())
+  }
+
+  test("VcfPipeline.run leaves a build held in another scope cached and intact") {
+    val xLines = synthLines(300, 0)
+    val want = Caches.scoped { buildRows(VcfBuild.build(VcfReader.fromLines(spark, xLines))) }
+    val dir = java.nio.file.Files.createTempDirectory("graft_own_pipe")
+    val yFile = dir.resolve("y.vcf")
+    java.nio.file.Files.write(yFile, ToyVcf.lines.mkString("\n").getBytes("UTF-8"))
+    val a = new Caches
+    try {
+      val x = a { VcfBuild.build(VcfReader.fromLines(spark, xLines)) }
+      assert(x.info.count() == 300)
+      vcf.VcfPipeline.run(spark, yFile.toString, dir.resolve("db").toString)
+      // X's staging sort is still the cached scan behind all its tables
+      Seq(x.info, x.impact.get, x.geno).foreach { t =>
+        assert(t.queryExecution.withCachedData.toString.contains("InMemoryRelation"),
+          "the pipeline's release dropped another build's staging cache")
+      }
+      assert(buildRows(x) == want)
+    } finally a.release()
+    assert(spark.read.parquet(dir.resolve("db/variant_info").toString).count() == 6)
+  }
+
+  test("two concurrent builds on two threads equal two sequential builds") {
+    val inputs = Seq(synthLines(200, 0), synthLines(200, 1000), synthLines(200, 0))
+    def built(lines: Seq[String]): Seq[Seq[String]] =
+      Caches.scoped { buildRows(VcfBuild.build(VcfReader.fromLines(spark, lines))) }
+    val sequential = inputs.map(built)
+    // the first and last input are the same plan: two scopes share one
+    // Spark cache entry, and the first to finish must not drop it
+    val results = new Array[Seq[Seq[String]]](inputs.size)
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val threads = inputs.zipWithIndex.map { case (lines, i) =>
+      new Thread(() => try results(i) = built(lines) catch { case e: Throwable => errors.add(e) })
+    }
+    threads.foreach(_.start()); threads.foreach(_.join())
+    assert(errors.isEmpty, errors)
+    assert(results.toSeq == sequential)
   }
 }

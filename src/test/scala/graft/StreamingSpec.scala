@@ -779,4 +779,41 @@ class StreamingSpec extends SparkSpec {
     assert(got == Seq((1L, 6L, 4L, 0L), (2L, 1L, 1L, 2000000L)),
       s"got $got")
   }
+
+  test("runTumblingOnce on two driver threads: own checkpoints, sequential results") {
+    import java.nio.file.Files
+    val hourNs = 3600L * 1000 * 1000 * 1000
+    // runTumblingOnce reads one `events.parquet` FILE under `dir`
+    val dir = Files.createTempDirectory("graft_tumbling")
+    val written = dir.resolve("written").toString
+    (0 until 400).map(i => (i * 13L * 60 * 1000 * 1000 * 1000, s"t${i % 3}", i * 0.5))
+      .toDF("ts", "event_type", "value").coalesce(1).write.parquet(written)
+    Files.move(new java.io.File(written).listFiles().find(_.getName.endsWith(".parquet")).get
+      .toPath, dir.resolve("events.parquet"))
+    val windows = Seq(hourNs, hourNs / 4)
+    def run(w: Long): Seq[String] =
+      EventsStream.runTumblingOnce(spark, dir.toString, w).collect().map(_.toString).sorted.toSeq
+    val ckptKey = "spark.sql.streaming.checkpointLocation"
+    val ckptBefore = spark.conf.getOption(ckptKey)
+    val partsBefore = spark.conf.get("spark.sql.shuffle.partitions")
+    try {
+      val sequential = windows.map(run)
+      val results = new Array[Seq[String]](windows.size)
+      val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+      val threads = windows.zipWithIndex.map { case (w, i) =>
+        new Thread(() => try results(i) = run(w) catch { case e: Throwable => errors.add(e) })
+      }
+      threads.foreach(_.start()); threads.foreach(_.join())
+      assert(errors.isEmpty, errors)
+      assert(sequential.forall(_.nonEmpty))
+      assert(results.toSeq == sequential)
+      // each query got its scratch root as an option; the session's
+      // checkpoint conf was never set
+      assert(spark.conf.getOption(ckptKey) == ckptBefore)
+    } finally {
+      // the shuffle-partition pin is session-global; overlapping blocks
+      // may leave it pinned
+      spark.conf.set("spark.sql.shuffle.partitions", partsBefore)
+    }
+  }
 }
