@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Caches
+import graft.{Caches, Par}
 import org.apache.spark.sql.{DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -762,12 +762,11 @@ object Graph {
     * same pair set and runs the O(log n) large-star/small-star CC.
     * |thresholds| is a small constant. The per-threshold solves are
     * INDEPENDENT, and each is a driver-sequenced round loop — run
-    * them from a thread pool (one thread per threshold, at most one
-    * per core) so the scheduler overlaps their jobs
-    * (guide §2.6: actions are only sequential because the driver
-    * calls them sequentially); wall-clock ≈ the slowest solve, not
-    * the sum. Each solve's rounds, checkpoints and telemetry are
-    * private to its thread; results are unchanged by construction.
+    * them through [[graft.Par.all]] (one thread per threshold, at most
+    * one per core) so the scheduler overlaps their jobs; wall-clock ≈
+    * the slowest solve, not the sum, and the first failed solve
+    * cancels the others. Each solve's rounds, checkpoints and telemetry
+    * are private to its thread; results are unchanged by construction.
     */
   def percolation(pairs: DataFrame, aCol: String, bCol: String,
       simCol: String, thresholds: Seq[Double]): DataFrame = {
@@ -779,37 +778,16 @@ object Graph {
     // out: three concurrent first-touches would each recompute the
     // upstream LSH pipeline into the same cache partitions
     cached.count()
-    import scala.concurrent.{Await, ExecutionContext, Future, Promise}
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(thresholds.size, Runtime.getRuntime.availableProcessors))
-    val solver = ExecutionContext.fromExecutor(pool)
-    // solves run on the pool; only completion callbacks run inline
-    implicit val ec: ExecutionContext = ExecutionContext.parasitic
-    try {
-      val futs = thresholds.sorted.map { t =>
-        Future {
-          val comps = connectedComponents(
-            cached.where(col("__sim") >= t), "__a", "__b")
-          comps.groupBy("comp").agg(count(lit(1)).as("__sz"))
-            .agg(lit(t).as("threshold"),
-              coalesce(sum("__sz"), lit(0L)).as("n_nodes"),
-              count(lit(1)).as("n_components"),
-              coalesce(max("__sz"), lit(0L)).as("largest_component"))
-        }(solver)
-      }
-      // the first failed solve interrupts its siblings (shutdown() alone
-      // lets them run to completion after this call has already thrown)
-      // and fails the wait without queueing behind unfinished solves
-      val firstFailure = Promise[Seq[DataFrame]]()
-      futs.foreach(_.failed.foreach { e =>
-        pool.shutdownNow()
-        firstFailure.tryFailure(e)
-      })
-      Await.result(
-          Future.firstCompletedOf(Seq(Future.sequence(futs), firstFailure.future)),
-          scala.concurrent.duration.Duration.Inf)
-        .reduce(_ unionByName _).orderBy("threshold")
-    } finally pool.shutdown()
+    val solves = Par.all(pairs.sparkSession)(thresholds.sorted.map { t => () =>
+      val comps = connectedComponents(
+        cached.where(col("__sim") >= t), "__a", "__b")
+      comps.groupBy("comp").agg(count(lit(1)).as("__sz"))
+        .agg(lit(t).as("threshold"),
+          coalesce(sum("__sz"), lit(0L)).as("n_nodes"),
+          count(lit(1)).as("n_components"),
+          coalesce(max("__sz"), lit(0L)).as("largest_component"))
+    })
+    solves.reduce(_ unionByName _).orderBy("threshold")
   }
 
   /** Rich-club coefficient (Zhou & Mondragón 2004): for each degree

@@ -52,36 +52,35 @@ object VcfBuild {
 
   /** Deterministic contiguous `variant_id` (1-based): global sort on
     * (chr, pos, ref, alt) — a stable total order — then a distributed
-    * ordinal (X4, `02-build-db.R:258-259`) via the two-phase
-    * partition-offset pattern: per-partition counts (a partitions-sized
-    * metadata table) → exclusive-prefix offsets (window over that tiny
-    * table) → broadcast-joined back, id = offset + row_number within
-    * the partition. Equivalent to `rdd.zipWithIndex` but fully
-    * declarative and columnar: no eager offsets job (zipWithIndex fires
-    * one at call time, costing a thrown-away parse+sort of the whole
-    * input), no Row materialization (the RDD detour decodes every
-    * wide staging row into JVM objects once per consumer — GC
-    * amplification under a loaded heap), and never a single-partition
-    * window (the row_number partitions on the sort's own range
-    * partitions, which the range partitioner keeps balanced).
+    * ordinal (X4, `02-build-db.R:258-259`) as partition offset +
+    * position within the partition.
     *
     * The SORTED scan persists into the caller's [[graft.Caches]]
     * scope: info, impact and geno all fan out from it, so the one
     * unavoidable wide stage — parse + global sort — runs exactly once.
+    * One eager job then collects the per-partition row counts over that
+    * cache. It reads no cached column, and it is the job that fills the
+    * cache, so nothing is thrown away: every later consumer (and every
+    * concurrent table write) reads a materialized cache instead of
+    * racing to compute the same partitions. The driver takes the
+    * exclusive prefix sums (an empty partition carries the running
+    * offset) and each row's id is a literal-array lookup on its
+    * partition plus its position — no window, no join, and no
+    * per-consumer re-run of the counts.
     *
     * INVARIANT: close that scope only after every output derived from
     * the build (info/impact/geno writes, collects) has been
-    * materialized. The id assignment's offsets branch and probe branch
-    * must observe the IDENTICAL partition layout for
-    * `monotonically_increasing_id`; the persist guarantees that.
-    * Releasing it while derived plans are still lazy silently reverts
-    * them to two independent sort evaluations — safe today only
+    * materialized. The offsets are driver literals counted over the
+    * cache's partition layout, and every derived plan must observe the
+    * IDENTICAL layout for `monotonically_increasing_id`; the persist
+    * guarantees that. Releasing it while derived plans are still lazy
+    * silently reverts them to a fresh sort evaluation — safe today only
     * because the range partitioning happens to be deterministic, and
-    * not a contract. The scope's holder count keeps a concurrent
-    * build of the same input in another scope from releasing it.
+    * not a contract (a layout with more partitions fails the array
+    * lookup loudly). The scope's holder count keeps a concurrent build
+    * of the same input in another scope from releasing it.
     */
   def withVariantIds(parsed: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val keys = Seq("chr", "pos", "ref", "alt")
     // `spark.graft.stagingStorage` escapes to DISK_ONLY for giant
     // builds: the sorted rows carry the sample columns as one string
@@ -99,23 +98,26 @@ object VcfBuild {
     val sorted = graft.Caches.persist(parsed.orderBy(keys.map(col): _*), level)
     // monotonically_increasing_id encodes (partition << 33 | position)
     // over the pinned cache partitioning — order-consistent with the
-    // sort but non-contiguous; the offsets table re-bases each
-    // partition's positions to a contiguous 1-based ordinal. A window
-    // partitioned on a DERIVED partition id would not satisfy the
-    // range-partitioned cache's distribution and Catalyst would insert
-    // a second full shuffle — this shape never touches the wide rows
-    // with anything but a broadcast hash join.
+    // sort but non-contiguous; the offsets re-base each partition's
+    // positions to a contiguous 1-based ordinal
     val withMid = sorted.withColumn("_mid", monotonically_increasing_id())
     val pid = shiftright(col("_mid"), 33)
     val pos = col("_mid").bitwiseAND(lit((1L << 33) - 1))
-    val wOff = Window.orderBy("_pid")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = withMid.groupBy(pid.as("_pid")).agg(count(lit(1)).as("_n"))
-      .withColumn("_off", coalesce(sum("_n").over(wOff), lit(0L)))
-      .select("_pid", "_off")
-    withMid.join(broadcast(offsets), pid === col("_pid"))
-      .withColumn("variant_id", col("_off") + pos + lit(1L))
+    val offsets = partitionOffsets(withMid.groupBy(pid).count().collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap)
+    withMid
+      .withColumn("variant_id",
+        element_at(typedLit(offsets), (pid + 1).cast(IntegerType)) + pos + lit(1L))
       .select(col("variant_id") +: parsed.columns.map(col): _*)
+  }
+
+  /** Exclusive prefix sums of per-partition row counts, indexed by
+    * partition id up to the last non-empty partition; a partition with
+    * no rows (absent from `counts`) carries the running offset.
+    */
+  private[graft] def partitionOffsets(counts: Map[Long, Long]): Array[Long] = {
+    val nParts = if (counts.isEmpty) 0L else counts.keys.max + 1
+    (0L until nParts).scanLeft(0L)(_ + counts.getOrElse(_, 0L)).init.toArray
   }
 
   /** `variant_info`: one row per variant — genomic interval, fixed VCF
@@ -333,14 +335,15 @@ object VcfBuild {
 
   /** Build the full relational model.
     *
-    * The sorted scan is persisted inside [[withVariantIds]] before the
-    * fan-out: info, impact and geno all derive from it, and without the
-    * cache each would re-parse and re-sort the entire input (3× the
-    * dominant cost). At cluster scale this is the standard
-    * materialize-the-staging-table step; storage is MEMORY_AND_DISK so
-    * oversized inputs spill rather than OOM. It belongs to the
-    * caller's [[graft.Caches]] scope; close that scope once the
-    * build's outputs are written.
+    * Eager up to the sorted, id-assigned staging cache
+    * ([[withVariantIds]]: one parse + sort job that also counts the
+    * partition offsets); the tables themselves stay lazy plans over that
+    * cache. Without the cache info, impact and geno would each re-parse
+    * and re-sort the entire input (3× the dominant cost). At cluster
+    * scale this is the standard materialize-the-staging-table step;
+    * storage is MEMORY_AND_DISK so oversized inputs spill rather than
+    * OOM. It belongs to the caller's [[graft.Caches]] scope; close that
+    * scope once the build's outputs are written.
     */
   def build(vcf: VcfDataset): VcfTables =
     fromStaged(withVariantIds(vcf.df), vcf.header)
@@ -377,81 +380,55 @@ final case class VcfTables(
     samples: DataFrame,
     meta: Map[String, DataFrame]) {
 
-  /** Persist as bucketed managed tables (`spark.sql.warehouse.dir`):
-    * `variant_info`, `variant_impact` and `variant_geno` are bucketed
-    * and sorted by `variant_id` into the same bucket count, so
-    * info⨝impact⨝geno joins on `variant_id` are co-located — zero
-    * Exchange in the join plan (verified in `VcfSpec`). This is the
-    * cluster-scale layout; [[write]] is the plain-directory variant.
-    */
-  def writeBucketed(prefix: String, buckets: Int = 32): Unit = {
-    def save(df: DataFrame, name: String): Unit =
-      df.write.mode("overwrite")
-        .bucketBy(buckets, "variant_id")
-        .sortBy("variant_id")
-        .format("parquet")
-        .saveAsTable(s"${prefix}_$name")
-    save(info, "variant_info")
-    impact.foreach(save(_, "variant_impact"))
-    save(geno, "variant_geno")
-  }
-
-  /** Write every table under `outDir`. With `skipComplete` each table
-    * whose directory already carries a `_SUCCESS` marker is left
-    * untouched — the resume contract of [[VcfPipeline.run]]: a build
-    * killed mid-write redoes only the tables that never committed
-    * (Spark writes `_SUCCESS` last, so a torn write never looks
-    * complete). Returns the names of the tables actually written.
+  /** Write every table under `outDir`, concurrently: the writes are
+    * independent, so they run through [[graft.Par.all]] (at most one
+    * thread per core) and the scheduler overlaps the small one-task
+    * tables with the big ones. The first failed write cancels the
+    * others' jobs and is rethrown. With `skipComplete` each table whose
+    * directory already carries a `_SUCCESS` marker is left untouched —
+    * the resume contract of [[VcfPipeline.run]]: a build killed
+    * mid-write redoes only the tables that never committed (Spark
+    * writes `_SUCCESS` last, so a torn or cancelled write never looks
+    * complete). Returns the names of the tables actually written, in
+    * the fixed order info, impact, geno, gene_map, samples, meta_*.
     */
   def write(outDir: String, partitionByChr: Boolean = false,
       skipComplete: Boolean = false): Seq[String] = {
-    val written = Seq.newBuilder[String]
-    def stage(name: String)(body: => Unit): Unit = {
-      if (!(skipComplete && VcfPipeline.isComplete(info.sparkSession, s"$outDir/$name"))) {
-        body
-        written += name
+    val spark = info.sparkSession
+    def parquet(df: DataFrame, name: String): Unit =
+      df.write.mode("overwrite").parquet(s"$outDir/$name")
+    val stages: Seq[(String, () => Unit)] =
+      Seq("variant_info" -> (() =>
+        if (partitionByChr)
+          // genomic layout: hive-partition dirs on chr (directory pruning
+          // for range queries) + start-sorted files (min/max stats prune
+          // row groups within a chromosome) — the parquet replacement for
+          // the reference's tabix index (SURVEY §1.4, §4.2)
+          info.repartition(col("chr")).sortWithinPartitions("start")
+            .write.mode("overwrite").partitionBy("chr")
+            .parquet(s"$outDir/variant_info")
+        else parquet(info.sortWithinPartitions("variant_id"), "variant_info"))) ++
+      impact.map(i => "variant_impact" -> (() =>
+        parquet(i.sortWithinPartitions("variant_id"), "variant_impact"))) ++
+      // geno needs NO shuffle here: it derives from the range-sorted ids
+      // scan by a generator (explode preserves row order), so its
+      // partitions are already contiguous variant_id ranges with
+      // (variant_id, sample) runs — exactly the clustering the dropped
+      // repartitionByRange + sort re-created, minus the range-sampling
+      // pass and a full shuffle of the widest table. Parquet min/max
+      // stats stay tight; cap oversized outputs with
+      // spark.sql.files.maxRecordsPerFile if nSamples inflates a
+      // partition past target file size.
+      Seq("variant_geno" -> (() => parquet(geno, "variant_geno"))) ++
+      geneMap.map(g => "gene_map" -> (() => parquet(g.coalesce(1), "gene_map"))) ++
+      Seq("samples" -> (() => parquet(samples.coalesce(1), "samples"))) ++
+      meta.map { case (name, df) =>
+        s"meta_$name" -> (() => parquet(df.coalesce(1), s"meta_$name"))
       }
+    val todo = stages.filterNot { case (name, _) =>
+      skipComplete && VcfPipeline.isComplete(spark, s"$outDir/$name")
     }
-    stage("variant_info") {
-      if (partitionByChr)
-        // genomic layout: hive-partition dirs on chr (directory pruning
-        // for range queries) + start-sorted files (min/max stats prune
-        // row groups within a chromosome) — the parquet replacement for
-        // the reference's tabix index (SURVEY §1.4, §4.2)
-        info.repartition(col("chr")).sortWithinPartitions("start")
-          .write.mode("overwrite").partitionBy("chr")
-          .parquet(s"$outDir/variant_info")
-      else
-        info.sortWithinPartitions("variant_id")
-          .write.mode("overwrite").parquet(s"$outDir/variant_info")
-    }
-    impact.foreach(i => stage("variant_impact") {
-      i.sortWithinPartitions("variant_id")
-        .write.mode("overwrite").parquet(s"$outDir/variant_impact")
-    })
-    // geno needs NO shuffle here: it derives from the range-sorted ids
-    // scan by a generator (explode preserves row order), so its
-    // partitions are already contiguous variant_id ranges with
-    // (variant_id, sample) runs — exactly the clustering the dropped
-    // repartitionByRange + sort re-created, minus the range-sampling
-    // pass and a full shuffle of the widest table. Parquet min/max
-    // stats stay tight; cap oversized outputs with
-    // spark.sql.files.maxRecordsPerFile if nSamples inflates a
-    // partition past target file size.
-    stage("variant_geno") {
-      geno.write.mode("overwrite").parquet(s"$outDir/variant_geno")
-    }
-    geneMap.foreach(g => stage("gene_map") {
-      g.coalesce(1).write.mode("overwrite").parquet(s"$outDir/gene_map")
-    })
-    stage("samples") {
-      samples.coalesce(1).write.mode("overwrite").parquet(s"$outDir/samples")
-    }
-    meta.foreach { case (name, df) =>
-      stage(s"meta_$name") {
-        df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/meta_$name")
-      }
-    }
-    written.result()
+    graft.Par.all(spark)(todo.map(_._2))
+    todo.map(_._1)
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.functions.spark_partition_id
 import graft.vcf._
 
 /** Edge-shape inputs: sites-only VCF (no samples), no-CSQ VCF. */
@@ -118,5 +119,52 @@ class EdgeSpec extends SparkSpec {
     val t = VcfBuild.build(VcfReader.fromLines(spark, lines))
     assert(t.impact.isEmpty)
     assert(t.geno.select("gt").as[Option[Double]].head.contains(1.0))
+  }
+
+  test("ids stay 1..n with more shuffle partitions than rows, empty sort partitions included") {
+    val header = Seq(
+      "##FORMAT=<ID=GT,Number=1,Type=String,Description=\"gt\">",
+      "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\tFORMAT\tS1")
+    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.coalescePartitions.enabled")
+    val prev = keys.map(k => k -> spark.conf.getOption(k))
+    spark.conf.set(keys(0), "16"); spark.conf.set(keys(1), "false")
+    try Caches.scoped {
+      val t = VcfBuild.build(VcfReader.fromLines(spark, header ++ Seq(
+        "1\t20\t.\tC\tT\t9\tPASS\t.\tGT\t1|1",
+        "1\t10\t.\tA\tG\t5\tPASS\t.\tGT\t0|1")))
+      assert(t.info.select("variant_id", "start").as[(Long, Long)].collect().sorted.toSeq ==
+        Seq((1L, 10L), (2L, 20L)))
+      assert(t.geno.select("variant_id", "gt_raw").as[(Long, String)].collect().sorted.toSeq ==
+        Seq((1L, "0|1"), (2L, "1|1")))
+      // a duplicate record leaves the range sort's last partition empty
+      val dup = VcfBuild.build(VcfReader.fromLines(spark, header ++ Seq(
+        "1\t20\t.\tC\tT\t9\tPASS\t.\tGT\t1|1",
+        "1\t10\t.\tA\tG\t5\tPASS\t.\tGT\t0|1",
+        "1\t10\t.\tA\tG\t5\tPASS\t.\tGT\t0|1"))).info
+      assert(dup.rdd.getNumPartitions >
+        dup.select(spark_partition_id()).distinct().count(), "no empty sort partition")
+      assert(dup.select("variant_id", "start").as[(Long, Long)].collect().sorted.toSeq ==
+        Seq((1L, 10L), (2L, 10L), (3L, 20L)))
+    } finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+    // an empty partition anywhere carries the running offset
+    assert(VcfBuild.partitionOffsets(Map(0L -> 2L, 2L -> 3L, 5L -> 1L)).toSeq ==
+      Seq(0L, 2L, 2L, 5L, 5L, 5L))
+    assert(VcfBuild.partitionOffsets(Map(1L -> 4L)).toSeq == Seq(0L, 0L))
+    assert(VcfBuild.partitionOffsets(Map.empty).isEmpty)
+  }
+
+  test("a header-only VCF builds and writes all nine tables, the variant ones empty") {
+    val v = VcfReader.fromLines(spark, ToyVcf.lines.filter(_.startsWith("#")))
+    val dir = java.nio.file.Files.createTempDirectory("vcfempty").toString
+    val written = VcfBuild.build(v).write(dir)
+    assert(written.size == 9, written)
+    Seq("variant_info", "variant_impact", "variant_geno", "gene_map").foreach { n =>
+      assert(spark.read.parquet(s"$dir/$n").count() == 0, n)
+    }
+    assert(spark.read.parquet(s"$dir/samples").count() == 2)
+    assert(spark.read.parquet(s"$dir/meta_info").count() == 5)
   }
 }

@@ -419,27 +419,6 @@ class ScaleSpec extends SparkSpec {
     assert(pulled.select("variant_id").as[Long].collect().sorted.toSeq == Seq(2L, 3L))
   }
 
-  test("bucketed tables join without a shuffle exchange") {
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ path
-    try {
-      val tables = VcfBuild.build(VcfReader.fromLines(spark, ToyVcf.lines))
-      tables.writeBucketed("toy", buckets = 4)
-      val info = spark.table("toy_variant_info")
-      val geno = spark.table("toy_variant_geno")
-      val joined = info.join(geno, "variant_id")
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange"),
-        s"bucketed join should be co-located, got:\n$plan")
-      assert(joined.count() == 12)
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-      spark.sql("DROP TABLE IF EXISTS toy_variant_info")
-      spark.sql("DROP TABLE IF EXISTS toy_variant_impact")
-      spark.sql("DROP TABLE IF EXISTS toy_variant_geno")
-    }
-  }
-
   test("Layout.compact merges a many-small-file table, contents intact") {
     val dir = java.nio.file.Files.createTempDirectory("graft_compact").toString + "/t"
     spark.range(1000).selectExpr("id", "id % 7 AS k")
@@ -869,5 +848,55 @@ class ScaleSpec extends SparkSpec {
     threads.foreach(_.start()); threads.foreach(_.join())
     assert(errors.isEmpty, errors)
     assert(results.toSeq == sequential)
+  }
+
+  test("Par.all: the first failure cancels a running sibling job and is rethrown at once") {
+    import org.apache.spark.scheduler.{JobSucceeded, SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val siblingStarted = new java.util.concurrent.CountDownLatch(1)
+    val siblingJobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val siblingEnds = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerJobEnd]()
+    val siblingEnded = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("graft.test.par") == "sibling")) {
+          siblingJobs.add(e.jobId); siblingStarted.countDown()
+        }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (siblingJobs.contains(e.jobId)) { siblingEnds.add(e); siblingEnded.countDown() }
+    }
+    val poolThreads = new java.util.concurrent.ConcurrentLinkedQueue[Thread]()
+    val siblingMs = 100 * 100 // 100 rows of 100 ms on each of 4 slots
+    sc.addSparkListener(listener)
+    val t0 = System.nanoTime()
+    try {
+      val e = intercept[IllegalStateException](Par.all(spark)(Seq(
+        () => {
+          poolThreads.add(Thread.currentThread())
+          sc.setLocalProperty("graft.test.par", "sibling")
+          sc.setInterruptOnCancel(true) // kill the sleeping tasks, not just the job
+          spark.range(0, 400, 1, 4).map { x => Thread.sleep(100); x.longValue }.count()
+        },
+        () => {
+          poolThreads.add(Thread.currentThread())
+          assert(siblingStarted.await(30, java.util.concurrent.TimeUnit.SECONDS))
+          throw new IllegalStateException("first failure")
+        })))
+      val ms = (System.nanoTime() - t0) / 1e6
+      assert(e.getMessage == "first failure")
+      assert(ms < siblingMs / 2, s"rethrown after $ms ms; the sibling job runs $siblingMs ms")
+      // the scheduler fails the job's waiter before it posts the job's
+      // end, so the event can trail the call's return
+      assert(siblingEnded.await(10, java.util.concurrent.TimeUnit.SECONDS))
+      org.apache.spark.SpecAccess.drainListeners(sc)
+      assert(siblingEnds.size == siblingJobs.size &&
+        siblingEnds.stream().noneMatch(_.jobResult == JobSucceeded),
+        "the sibling's job was not cancelled")
+      poolThreads.forEach(_.join(1000))
+      assert(poolThreads.size == 2 && poolThreads.stream().noneMatch(_.isAlive),
+        "a pool thread outlived the call")
+    } finally sc.removeSparkListener(listener)
+    // the caller's own thread never carries the pool's job tag
+    assert(sc.getJobTags().isEmpty)
   }
 }

@@ -73,6 +73,54 @@ class VcfSpec extends SparkSpec {
       Seq(("1", 100L), ("1", 200L), ("1", 300L), ("2", 150L), ("2", 250L), ("2", 400L)))
   }
 
+  test("variant ids need no window and no broadcast join") {
+    // the partition offsets are driver literals counted once over the
+    // staging cache; only impact's clinvar re-join may broadcast
+    Seq(tables.info, tables.geno).foreach { t =>
+      val plan = t.queryExecution.executedPlan.toString
+      assert(!plan.contains("Window") && !plan.contains("BroadcastExchange"), plan)
+    }
+  }
+
+  test("variant_id is the 1-based rank in (chr, pos, ref, alt) order") {
+    import org.apache.spark.sql.expressions.Window
+    def check(t: VcfTables, n: Long): Unit = {
+      val rank = row_number().over(Window.orderBy("chr", "start", "ref", "alt"))
+      val ranked = t.info.select($"variant_id", rank.cast("long").as("rank"))
+      assert(ranked.count() == n)
+      assert(ranked.where($"variant_id" =!= $"rank").count() == 0)
+      assert(t.geno.select("variant_id").distinct().join(t.info, "variant_id").count() == n)
+    }
+    check(tables, 6)
+    check(VcfBuild.build(SyntheticVcf.generate(spark, 300, nSamples = 37, nGenes = 10)), 300)
+  }
+
+  test("VcfTables.write: pool threads inherit the caller's local properties and scope") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val ops = new java.util.concurrent.ConcurrentLinkedQueue[Option[String]]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        ops.add(Option(e.properties).flatMap(p => Option(p.getProperty("graft.test.op"))))
+    }
+    val dir = java.nio.file.Files.createTempDirectory("vcfpool").toString
+    val persistent = sc.getPersistentRDDs.keySet
+    sc.addSparkListener(listener)
+    sc.setLocalProperty("graft.test.op", "42")
+    val written = try Caches.scoped {
+      VcfBuild.build(VcfReader.fromLines(spark, ToyVcf.lines)).write(dir)
+    } finally {
+      sc.setLocalProperty("graft.test.op", null)
+      org.apache.spark.SpecAccess.drainListeners(sc)
+      sc.removeSparkListener(listener)
+    }
+    assert(written == Seq("variant_info", "variant_impact", "variant_geno", "gene_map",
+      "samples", "meta_info", "meta_format", "meta_filter", "meta_contig"))
+    assert(ops.size >= written.size && ops.stream().allMatch(_.contains("42")), ops)
+    assert((sc.getPersistentRDDs.keySet -- persistent).isEmpty,
+      "the scope left the build's staging cache behind")
+  }
+
   test("README worked-example analog: one variant decomposes into 3 tables") {
     // variant 2 (1:200 C>T): info row, 2 impact rows (term split), 2 geno rows
     val info = tables.info.filter($"variant_id" === 2)
