@@ -24,9 +24,7 @@ object VcfQ {
     built.computeIfAbsent(key, _ => builds { build })
 
   private def tables(s: SparkSession): VcfTables = once("toy") {
-    val vcf = VcfReader.fromLines(s, ToyVcf.lines)
-    VcfBuild.requireNormalized(vcf.df)
-    VcfBuild.build(vcf)
+    VcfBuild.build(VcfReader.fromLines(s, ToyVcf.lines))
   }
 
   // Clinvar-annotated variant of the fixture: gates the INFO-side

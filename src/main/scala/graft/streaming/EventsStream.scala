@@ -69,21 +69,21 @@ object EventsStream {
     * a static table into a memory sink: their offset/commit/state files
     * are pure verification scratch — written once, never read back,
     * discarded with the query — so placing them on `/dev/shm`
-    * (override: `spark.graft.streamScratch`; fallback: `java.io.tmpdir`
-    * when absent) removes disk-write latency from every micro-batch
-    * commit without touching the durable-checkpoint story of a real
-    * deployment, where the location is an explicit required choice. The throughput PROBES (rate source) do not run
-    * through here — their measurement conditions are unchanged.
+    * (`java.io.tmpdir` when it is absent or unwritable) removes
+    * disk-write latency from every micro-batch commit without touching
+    * the durable-checkpoint story of a real deployment, where the
+    * location is an explicit required choice. The throughput PROBES
+    * (rate source) do not run through here — their measurement
+    * conditions are unchanged.
     */
   private[streaming] def runAvailableNow(out: DataFrame, mode: OutputMode,
       name: String, n: Int = 8): Unit = {
     import java.nio.file.{Files, Paths}
     val spark = out.sparkSession
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    val root = spark.conf.getOption("spark.graft.streamScratch")
-      .getOrElse(
-        if (Files.isDirectory(Paths.get("/dev/shm"))) "/dev/shm"
-        else sys.props("java.io.tmpdir"))
+    val root =
+      if (Files.isDirectory(Paths.get("/dev/shm"))) "/dev/shm"
+      else sys.props("java.io.tmpdir")
     // an unwritable scratch root (read-only /dev/shm in a locked-down
     // sandbox) must degrade to tmpdir, never fail the gate
     val scratch =

@@ -50,22 +50,39 @@ object VcfBuild {
     */
   def clearCaches(): Int = graft.Caches.releaseUnscoped()
 
-  /** Deterministic contiguous `variant_id` (1-based): global sort on
-    * (chr, pos, ref, alt) — a stable total order — then a distributed
-    * ordinal (X4, `02-build-db.R:258-259`) as partition offset +
-    * position within the partition.
+  /** Deterministic contiguous `variant_id` (1-based): the rank of each
+    * record in a total order — a global sort on (chr, pos, ref, alt)
+    * with ties broken on input position, so duplicate records get ids
+    * in file order and every id is a function of the input files alone
+    * (not of split sizes or partition counts) — assigned as partition
+    * offset + position within the partition (X4,
+    * `02-build-db.R:258-259`).
+    *
+    * Input position is (file name, split start,
+    * `monotonically_increasing_id`), all taken BEFORE the sort. The id
+    * encodes (input partition, line within it), and both in-memory
+    * lines and the BGZF scan plan their partitions in (sorted path,
+    * byte offset) order; there the file name and split start read as
+    * the constants "" and -1. A file-source scan (plain text) packs
+    * splits by size instead, so there those two lead. Spark computes
+    * the keys in a projection below the sort and drops them above: the
+    * cached rows are the parsed columns only.
     *
     * The SORTED scan persists into the caller's [[graft.Caches]]
     * scope: info, impact and geno all fan out from it, so the one
     * unavoidable wide stage — parse + global sort — runs exactly once.
     * One eager job then collects the per-partition row counts over that
-    * cache. It reads no cached column, and it is the job that fills the
-    * cache, so nothing is thrown away: every later consumer (and every
-    * concurrent table write) reads a materialized cache instead of
-    * racing to compute the same partitions. The driver takes the
-    * exclusive prefix sums (an empty partition carries the running
-    * offset) and each row's id is a literal-array lookup on its
-    * partition plus its position — no window, no join, and no
+    * cache, and counts the multiallelic records with them: the engine,
+    * like the reference (`01-generate-variant-ranges-index.R:43-53`),
+    * requires normalized input, so any such record fails the build
+    * here with an [[IllegalArgumentException]] naming the count and one
+    * site — no extra pass when the input is clean. That job is the one
+    * that fills the cache, so nothing is thrown away: every later
+    * consumer (and every concurrent table write) reads a materialized
+    * cache instead of racing to compute the same partitions. The
+    * driver takes the exclusive prefix sums (an empty partition carries
+    * the running offset) and each row's id is a literal-array lookup on
+    * its partition plus its position — no window, no join, and no
     * per-consumer re-run of the counts.
     *
     * INVARIANT: close that scope only after every output derived from
@@ -81,7 +98,8 @@ object VcfBuild {
     * of the same input in another scope from releasing it.
     */
   def withVariantIds(parsed: DataFrame): DataFrame = {
-    val keys = Seq("chr", "pos", "ref", "alt")
+    val keys = Seq(col("chr"), col("pos"), col("ref"), col("alt"),
+      input_file_name(), input_file_block_start(), monotonically_increasing_id())
     // `spark.graft.stagingStorage` escapes to DISK_ONLY for giant
     // builds: the sorted rows carry the sample columns as one string
     // and columnar-cache at ~7 KB/row at 1,000 samples (about the VCF
@@ -95,7 +113,16 @@ object VcfBuild {
     val level = org.apache.spark.storage.StorageLevel.fromString(
       parsed.sparkSession.conf.get("spark.graft.stagingStorage",
         "MEMORY_AND_DISK"))
-    val sorted = graft.Caches.persist(parsed.orderBy(keys.map(col): _*), level)
+    numberSorted(graft.Caches.persist(parsed.orderBy(keys: _*), level))
+  }
+
+  /** The id job of [[withVariantIds]] over its pinned sorted cache:
+    * counts each partition's rows (and the multiallelic ones, which
+    * fail the build), then adds `variant_id` = the partition's offset +
+    * the row's position within it + 1. Returns `sorted`'s columns after
+    * `variant_id`.
+    */
+  private[graft] def numberSorted(sorted: DataFrame): DataFrame = {
     // monotonically_increasing_id encodes (partition << 33 | position)
     // over the pinned cache partitioning — order-consistent with the
     // sort but non-contiguous; the offsets re-base each partition's
@@ -103,12 +130,19 @@ object VcfBuild {
     val withMid = sorted.withColumn("_mid", monotonically_increasing_id())
     val pid = shiftright(col("_mid"), 33)
     val pos = col("_mid").bitwiseAND(lit((1L << 33) - 1))
-    val offsets = partitionOffsets(withMid.groupBy(pid).count().collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap)
+    val counts = withMid.groupBy(pid)
+      .agg(count(lit(1)), count_if(col("alt").contains(","))).collect()
+    val multiallelic = counts.map(_.getLong(2)).sum
+    if (multiallelic > 0)
+      throw new IllegalArgumentException(
+        s"$multiallelic multiallelic record(s) found (e.g. " +
+          s"${multiallelicSites(sorted).head().mkString(" ")}); normalize the VCF " +
+          "first (e.g. bcftools norm -m-)")
+    val offsets = partitionOffsets(counts.map(r => r.getLong(0) -> r.getLong(1)).toMap)
     withMid
       .withColumn("variant_id",
         element_at(typedLit(offsets), (pid + 1).cast(IntegerType)) + pos + lit(1L))
-      .select(col("variant_id") +: parsed.columns.map(col): _*)
+      .select(col("variant_id") +: sorted.columns.map(col): _*)
   }
 
   /** Exclusive prefix sums of per-partition row counts, indexed by
@@ -124,7 +158,7 @@ object VcfBuild {
     * fields, one column per single-valued INFO field. Multi-valued
     * (Number=A/R/G) arrays are scalarized to their single element — the
     * engine, like the reference, requires normalized (no-multiallelic)
-    * input, which it validates up front ([[requireNormalized]]); truly
+    * input, which [[withVariantIds]] validates; truly
     * list-valued INFO (Number=. or n>1) stays a native array column
     * (capability upgrade; the reference stringifies).
     *
@@ -319,44 +353,29 @@ object VcfBuild {
       "filter" -> of(header.filterDefs), "contig" -> contig)
   }
 
-  /** Multiallelic guard (`01-generate-variant-ranges-index.R:43-53`):
-    * the engine requires normalized input; offending sites are returned
-    * for reporting, and [[requireNormalized]] throws if any exist.
+  /** Multiallelic sites (`01-generate-variant-ranges-index.R:43-53`),
+    * for reporting: [[withVariantIds]] rejects input that has any.
     */
   def multiallelicSites(parsed: DataFrame): DataFrame =
     parsed.where(col("alt").contains(",")).select("chr", "pos", "ref", "alt")
 
-  def requireNormalized(parsed: DataFrame): Unit = {
-    val bad = multiallelicSites(parsed).limit(1).collect()
-    if (bad.nonEmpty)
-      throw new IllegalArgumentException(
-        s"multiallelic site found (e.g. ${bad(0)}); normalize the VCF first")
-  }
-
-  /** Build the full relational model.
+  /** Build the full relational model: the one build path, shared by
+    * [[VcfPipeline.run]], the benchmark and the gates.
     *
     * Eager up to the sorted, id-assigned staging cache
     * ([[withVariantIds]]: one parse + sort job that also counts the
-    * partition offsets); the tables themselves stay lazy plans over that
-    * cache. Without the cache info, impact and geno would each re-parse
-    * and re-sort the entire input (3× the dominant cost). At cluster
-    * scale this is the standard materialize-the-staging-table step;
-    * storage is MEMORY_AND_DISK so oversized inputs spill rather than
-    * OOM. It belongs to the caller's [[graft.Caches]] scope; close that
-    * scope once the build's outputs are written.
+    * partition offsets and rejects multiallelic input); the tables
+    * themselves stay lazy plans over that cache. Without the cache
+    * info, impact and geno would each re-parse and re-sort the entire
+    * input (3× the dominant cost). Storage is MEMORY_AND_DISK so
+    * oversized inputs spill rather than OOM. It belongs to the caller's
+    * [[graft.Caches]] scope; close that scope once the build's outputs
+    * are written. Every table is a deterministic function of the input
+    * files, so a rebuild rewrites any one table row for row.
     */
-  def build(vcf: VcfDataset): VcfTables =
-    fromStaged(withVariantIds(vcf.df), vcf.header)
-
-  /** Derive the relational model from an id-assigned scan — either the
-    * in-memory staging cache ([[build]]) or a staging parquet read back
-    * by a resumed pipeline run ([[VcfPipeline.run]]). In the
-    * resumed-from-parquet case the ids are literal data, so none of the
-    * partition-layout determinism the in-memory id assignment relies on
-    * ([[withVariantIds]]) is needed — every derived table is a plain
-    * narrow read of the staging table.
-    */
-  def fromStaged(ids: DataFrame, header: VcfHeaderInfo): VcfTables = {
+  def build(vcf: VcfDataset): VcfTables = {
+    val ids = withVariantIds(vcf.df)
+    val header = vcf.header
     val spark = ids.sparkSession
     val impact =
       if (header.csqColumns.isDefined) Some(variantImpact(ids, header))

@@ -117,6 +117,11 @@ object VcfHeader {
       case l if l.startsWith("#CHROM") =>
         val cols = l.stripPrefix("#").split("\t")
         samples = cols.drop(9).toSeq // CHROM..FORMAT are the first 9
+        // a repeated name would give two geno rows per (variant, sample)
+        val dups = samples.diff(samples.distinct).distinct
+        if (dups.nonEmpty)
+          throw new IllegalArgumentException(
+            s"duplicate sample names in #CHROM: ${dups.mkString(", ")}")
       case _ => ()
     }
     VcfHeaderInfo(info.result(), fmt.result(), filt.result(), contigs.result(), samples)

@@ -1,5 +1,8 @@
 package graft.vcf
 
+import java.nio.charset.StandardCharsets.UTF_8
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 /** CLI pipeline driver — the analog of the reference's `VCFdb.R`
@@ -8,18 +11,18 @@ import org.apache.spark.sql.SparkSession
   *
   *   - stage 1 (scan planning / chunk ranges) disappears: Catalyst
   *     plans the distributed scan, `spark.read.text` splits by block;
-  *   - stage 2 (chunked ETL loop + progress file) becomes a staged
-  *     declarative build: the parse+sort+id scan commits to a staging
-  *     parquet, then each derived table commits independently. Task
-  *     failure is Spark retry; JOB failure resumes from the last
-  *     committed stage — the Spark-native analog of the reference's
-  *     progress file (`pipeline/02-build-db.R:97-98,521-528`), keyed on
-  *     `_SUCCESS` markers instead of a counter;
+  *   - stage 2 (chunked ETL loop + progress file) becomes the one build
+  *     path, [[VcfBuild.build]] + [[VcfTables.write]], with each table
+  *     committed independently. Task failure is Spark retry; JOB failure
+  *     resumes by rewriting only the tables that never committed — the
+  *     Spark-native analog of the reference's progress file
+  *     (`pipeline/02-build-db.R:97-98,521-528`), keyed on `_SUCCESS`
+  *     markers instead of a counter;
   *   - stage 3 (DDL indexing) becomes the parquet physical layout
   *     (sorted/range-partitioned files ⇒ min-max-stat pruning).
   *
   * Usage:
-  *   runMain graft.vcf.VcfPipeline --vcf <path> --out <dir> [--mode table]
+  *   runMain graft.vcf.VcfPipeline --vcf <path> --out <dir>
   *
   * The reference's table/file GT mode split (`VCFdb.R:30-40`) is
   * intentionally collapsed: the columnar layout serves both access
@@ -27,14 +30,17 @@ import org.apache.spark.sql.SparkSession
   */
 object VcfPipeline {
 
+  private val Usage = "usage: VcfPipeline --vcf <path> --out <dir>"
+
   def main(args: Array[String]): Unit = {
-    val opts = args.sliding(2, 2).collect {
-      case Array(k, v) if k.startsWith("--") => k.stripPrefix("--") -> v
+    val opts = args.grouped(2).map {
+      case Array(k @ ("--vcf" | "--out"), v) => k -> v
+      case bad => throw new IllegalArgumentException(
+        s"$Usage (unexpected: ${bad.mkString(" ")})")
     }.toMap
-    val vcfPath = opts.getOrElse("vcf",
-      sys.error("--vcf <path> is required"))
-    val outDir = opts.getOrElse("out",
-      sys.error("--out <dir> is required"))
+    def required(k: String) = opts.getOrElse(k,
+      throw new IllegalArgumentException(s"$Usage ($k is required)"))
+    val (vcfPath, outDir) = (required("--vcf"), required("--out"))
 
     val spark = graft.GraftSession.builder(
         shufflePartitions = sys.env.get("SPARK_GRAFT_CPUS")
@@ -43,7 +49,9 @@ object VcfPipeline {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    run(spark, vcfPath, outDir)
+    val written = run(spark, vcfPath, outDir)
+    println(s"[pipeline] $outDir: wrote " +
+      (if (written.isEmpty) "nothing (already complete)" else written.mkString(", ")))
     spark.stop()
   }
 
@@ -52,58 +60,89 @@ object VcfPipeline {
     * a killed write never looks complete).
     */
   def isComplete(spark: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir, "_SUCCESS")
+    val p = new Path(dir, "_SUCCESS")
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
-  /** Parse → validate → stage → derive → write, each stage keyed on its
-    * output's `_SUCCESS` marker so a killed build RESUMES instead of
-    * restarting:
+  /** Read → [[VcfBuild.build]] → [[VcfTables.write]] with
+    * `skipComplete`, restartable: returns the names of the tables this
+    * call wrote.
     *
-    *   1. staging (`<out>/_staging/ids`): the one wide stage —
-    *      parse + global sort + variant-id assignment — committed to
-    *      parquet. Present ⇒ the input is never re-read (ids become
-    *      literal data, so resumed derivations don't depend on any
-    *      in-memory partition-layout invariant);
-    *   2. derived tables: each written only if its directory lacks a
-    *      marker ([[VcfTables.write]] with `skipComplete`) — a build
-    *      that died at 90% redoes only the torn table, not the ETL.
-    *
-    * A 100 TB build killed after staging costs a staging re-read, not
-    * a re-parse/re-sort of the input. Resume is keyed on OUTPUT
-    * presence: rerunning over a changed input with the same outDir
-    * resumes the old build — use a fresh outDir per input, as with the
-    * reference's per-DB progress file.
+    *   - `<out>/_input` fingerprints the input (path, size and mtime of
+    *     every input file) before any table is written. A rerun whose
+    *     input differs from it, or that finds tables without it, fails
+    *     naming `outDir` and the changed file: resuming would mix tables
+    *     of two inputs.
+    *   - `<out>/_SUCCESS` is written once every table is. A rerun that
+    *     finds it (and a matching fingerprint) returns `Seq.empty` at
+    *     once: no Spark job, no re-sort.
+    *   - Otherwise the input is re-read and re-sorted, and only the
+    *     tables without a `_SUCCESS` marker are written — a build that
+    *     died at 90% redoes the torn table, not the committed ones. The
+    *     sort is a total order ([[VcfBuild.withVariantIds]]), so the
+    *     rewritten rows carry the committed tables' ids. That re-sort is
+    *     the price of keeping no parquet copy of the sorted input.
     *
     * Validation parity with the reference's stage-1 guard
-    * (`01-generate-variant-ranges-index.R:43-53`): multiallelic sites
-    * are written to `<out>/multiallelic_sites` as TSV for inspection,
-    * then the build aborts (before any staging commit).
+    * (`01-generate-variant-ranges-index.R:43-53`): the build rejects
+    * multiallelic input; the sites are then written to
+    * `<out>/multiallelic_sites` as TSV for inspection (a re-parse, on
+    * that failure path only) and the rejection is rethrown, before any
+    * table or fingerprint is written.
     */
-  def run(spark: SparkSession, vcfPath: String, outDir: String): VcfTables = {
-    val stagingDir = s"$outDir/_staging/ids"
-    val vcf = VcfReader.read(spark, vcfPath) // header is driver-side; df stays lazy
-    if (!isComplete(spark, stagingDir)) {
-      val bad = VcfBuild.multiallelicSites(vcf.df)
-      if (!bad.isEmpty) {
-        bad.coalesce(1).write.mode("overwrite")
-          .option("sep", "\t").option("header", "true")
-          .csv(s"$outDir/multiallelic_sites")
-        throw new IllegalArgumentException(
-          s"multiallelic sites found; report written to $outDir/multiallelic_sites — " +
-            "normalize the VCF (e.g. bcftools norm -m-) and rerun")
-      }
-      // the sorted scan cache has no consumer past the staging write
-      // (everything below reads the parquet back): this call's scope
-      // releases it, and only it
-      graft.Caches.scoped {
-        VcfBuild.withVariantIds(vcf.df)
-          .write.mode("overwrite").parquet(stagingDir)
+  def run(spark: SparkSession, vcfPath: String, outDir: String): Seq[String] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val out = new Path(outDir)
+    val fs = out.getFileSystem(conf)
+    val inputMark = new Path(out, "_input")
+    val report = new Path(out, "multiallelic_sites")
+    val fingerprint = BgzfTextSource.listFiles(vcfPath, conf)
+      .map(st => s"${st.getPath}\t${st.getLen}\t${st.getModificationTime}")
+    val built =
+      if (fs.exists(inputMark)) {
+        val in = fs.open(inputMark)
+        try Some(new String(in.readAllBytes(), UTF_8).linesIterator.toSeq)
+        finally in.close()
+      } else None
+    built.foreach { prior =>
+      (prior.diff(fingerprint) ++ fingerprint.diff(prior)).headOption.foreach { line =>
+        throw new IllegalStateException(
+          s"$outDir was built from another input: ${line.takeWhile(_ != '\t')} " +
+            "changed since; build into a fresh --out")
       }
     }
-    val ids = spark.read.parquet(stagingDir)
-    val tables = VcfBuild.fromStaged(ids, vcf.header)
-    tables.write(outDir, skipComplete = true)
-    tables
+    if (built.isEmpty && fs.exists(out) &&
+        fs.listStatus(out).exists(st => st.isDirectory && st.getPath.getName != report.getName))
+      throw new IllegalStateException(
+        s"$outDir holds tables but no input fingerprint ($inputMark); " +
+          "build into a fresh --out")
+    if (built.isDefined && isComplete(spark, outDir)) Seq.empty
+    else {
+      val vcf = VcfReader.read(spark, vcfPath)
+      val written = graft.Caches.scoped {
+        val tables = try VcfBuild.build(vcf) catch {
+          case e: IllegalArgumentException
+              if !VcfBuild.multiallelicSites(vcf.df).isEmpty =>
+            VcfBuild.multiallelicSites(vcf.df).coalesce(1).write.mode("overwrite")
+              .option("sep", "\t").option("header", "true").csv(report.toString)
+            throw new IllegalArgumentException(
+              s"${e.getMessage}; report written to $report", e)
+        }
+        fs.delete(report, true)
+        if (built.isEmpty) {
+          // written aside and renamed on, as the tables commit: a kill
+          // mid-write leaves no torn fingerprint
+          val tmp = new Path(out, "_input.tmp")
+          val o = fs.create(tmp, true)
+          try o.write(fingerprint.mkString("", "\n", "\n").getBytes(UTF_8))
+          finally o.close()
+          if (!fs.rename(tmp, inputMark))
+            throw new java.io.IOException(s"could not rename $tmp to $inputMark")
+        }
+        tables.write(outDir, skipComplete = true)
+      }
+      fs.create(new Path(out, "_SUCCESS"), true).close()
+      written
+    }
   }
 }

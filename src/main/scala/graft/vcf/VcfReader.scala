@@ -85,19 +85,39 @@ object VcfReader {
       val raw = withOpt.load(path).select("value").as[String]
       // Header blocks sit at the file head: decompress them driver-side
       // instead of filtering the distributed scan.
-      val headerLines = Bgzf.headLines(
-        first.get.getPath.getFileSystem(conf), first.get.getPath)
+      def headOf(st: org.apache.hadoop.fs.FileStatus) =
+        Bgzf.headLines(st.getPath.getFileSystem(conf), st.getPath)
+      val headerLines = headOf(first.get)
+      // every shard's sample columns are named by the first one's
+      // header; a headerless shard (as `VcfExport.exportSharded` writes
+      // after shard 0) inherits it
+      def chromLine(lines: Seq[String]) = lines.find(_.startsWith("#CHROM"))
+      val chrom = chromLine(headerLines)
+      files.tail.find(st => chromLine(headOf(st)).exists(c => !chrom.contains(c)))
+        .foreach { st =>
+          throw new IllegalArgumentException(
+            s"VCF shards disagree on their #CHROM line: ${st.getPath} " +
+              s"differs from ${first.get.getPath}; read them separately")
+        }
       val header = VcfHeader.parse(headerLines)
-      VcfDataset(parse(raw.filter(l => !l.startsWith("#")), header), header)
+      VcfDataset(parse(body(raw), header), header)
     } else {
       val raw = spark.read.textFile(path)
       // Headers are the leading few KB; `limit` keeps the driver fetch
       // bounded (4096 header lines is far beyond any real VCF header).
-      val headerLines = raw.filter(_.startsWith("#")).limit(4096).collect().toSeq
+      val headerLines = raw.where(isComment).limit(4096).collect().toSeq
       val header = VcfHeader.parse(headerLines)
-      VcfDataset(parse(raw.filter(l => !l.startsWith("#")), header), header)
+      VcfDataset(parse(body(raw), header), header)
     }
   }
+
+  /** Header (`#`) lines, as a column predicate: Catalyst tests the
+    * scanned bytes in place, where a typed lambda would deserialize
+    * every line to a JVM string first.
+    */
+  private val isComment: Column = col("value").startsWith("#")
+
+  private def body(lines: Dataset[String]): Dataset[String] = lines.where(!isComment)
 
   /** Tabix-indexed range read over a BGZF VCF: only the compressed
     * blocks whose index chunks overlap `chr:[beg, end]` (1-based
@@ -145,7 +165,7 @@ object VcfReader {
       col("chr") === c && col("pos") <= e &&
         col("pos") + length(col("ref")) - 1 >= b
     }.reduce(_ || _)
-    val parsed = parse(raw.filter(l => !l.startsWith("#")), header).where(overlap)
+    val parsed = parse(body(raw), header).where(overlap)
     VcfDataset(parsed, header)
   }
 
@@ -176,12 +196,21 @@ object VcfReader {
     * when no info column survives.)
     */
   def parse(lines: Dataset[String], header: VcfHeaderInfo): DataFrame = {
+    // a malformed line fails the scan that meets it, with the reason
+    // and the line, instead of a bare index or cast error downstream
+    def malformed(reason: String): Column =
+      raise_error(concat(lit(s"malformed VCF line ($reason): "),
+        substring(col("value"), 1, 200)))
     // prefix tokenization: fixed fields + INFO; stops before the tail
-    val p = split(col("value"), "\t", 9)
-    // FORMAT + untokenized sample columns; sites-only VCFs stop after
-    // INFO, so access must be null-tolerant (ANSI get(), not ordinal
-    // indexing)
-    val tail = split(get(p, lit(8)), "\t", 2)
+    val split9 = split(col("value"), "\t", 9)
+    val p = when(size(split9) >= 8, split9)
+      .otherwise(malformed("fewer than 8 tab-separated fields"))
+    val pos = p.getItem(1).try_cast(LongType)
+    // FORMAT + untokenized sample columns, from the unguarded split (a
+    // malformed line fails on its fixed fields); sites-only VCFs stop
+    // after INFO, so access must be null-tolerant (ANSI get(), not
+    // ordinal indexing)
+    val tail = split(get(split9, lit(8)), "\t", 2)
 
     def nullable(c: Column): Column = when(c === Missing, lit(null)).otherwise(c)
 
@@ -191,7 +220,7 @@ object VcfReader {
 
     val fixed = lines.select(
       p.getItem(0).as("chr"),
-      p.getItem(1).cast(LongType).as("pos"),
+      when(pos.isNull, malformed("POS is not an integer")).otherwise(pos).as("pos"),
       nullable(p.getItem(2)).as("id"),
       p.getItem(3).as("ref"),
       p.getItem(4).as("alt"),

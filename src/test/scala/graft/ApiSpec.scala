@@ -124,16 +124,35 @@ class ApiSpec extends SparkSpec {
     assert(spark.read.parquet(s"$out/variant_geno").count() == 12)
   }
 
+  test("VcfPipeline.run: a fingerprint killed before its rename does not block the build") {
+    import java.nio.file.{Files, Paths}
+    val dir = Files.createTempDirectory("vcfmark").toString
+    val vcfFile = s"$dir/toy.vcf"
+    Files.write(Paths.get(vcfFile), ToyVcf.lines.mkString("\n").getBytes("UTF-8"))
+    val out = s"$dir/db"
+    // a torn fingerprint write leaves only its temp name, never `_input`
+    Files.createDirectories(Paths.get(out))
+    Files.write(Paths.get(s"$out/_input.tmp"), vcfFile.take(3).getBytes("UTF-8"))
+    assert(VcfPipeline.run(spark, vcfFile, out).size == 9)
+    assert(Files.exists(Paths.get(s"$out/_input")) && !Files.exists(Paths.get(s"$out/_input.tmp")))
+    assert(new String(Files.readAllBytes(Paths.get(s"$out/_input")), "UTF-8").contains(vcfFile))
+    assert(VcfPipeline.run(spark, vcfFile, out).isEmpty)
+  }
+
   test("VcfPipeline.run resumes from the last committed stage after a kill") {
-    import java.nio.file.{Files, Paths, Path}
+    import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._
     val dir = Files.createTempDirectory("vcfresume").toString
     val vcfFile = s"$dir/toy.vcf"
-    Files.write(Paths.get(vcfFile),
-      ToyVcf.lines.mkString("\n").getBytes("UTF-8"))
+    // two more records on rs2's key, differing in QUAL and GT: only the
+    // sort's tie-break orders them, and a resume must reproduce it
+    val rs2 = ToyVcf.lines.find(_.startsWith("1\t200\t")).get.split("\t").take(9)
+    val lines = ToyVcf.lines ++ Seq(
+      (rs2.updated(5, "7") ++ Seq("0|1:3", "1|1:4")).mkString("\t"),
+      (rs2.updated(5, "8") ++ Seq("./.:0", "0|0:5")).mkString("\t"))
+    Files.write(Paths.get(vcfFile), lines.mkString("\n").getBytes("UTF-8"))
     val out = s"$dir/db"
-    VcfPipeline.run(spark, vcfFile, out)
-    assert(VcfPipeline.isComplete(spark, s"$out/_staging/ids"))
+    assert(VcfPipeline.run(spark, vcfFile, out).size == 9)
 
     // (relative name → (size, mtime)) + content digest: "skipped" must
     // mean byte-identical files never touched, not rewritten-same
@@ -151,35 +170,62 @@ class ApiSpec extends SparkSpec {
         .foreach(p => md.update(Files.readAllBytes(p)))
       md.digest().map(b => f"$b%02x").mkString
     }
-    val stagingSig = files("_staging/ids")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
     val infoSig = files("variant_info")
     val infoMd5 = digest("variant_info")
+    val clean = Caches.scoped(rows(VcfBuild.build(VcfReader.read(spark, vcfFile)).geno))
+    assert(rows(spark.read.parquet(s"$out/variant_geno")) == clean)
 
     // kill mid-geno-write: a torn output has no _SUCCESS marker (the
-    // committer writes it last); drop the marker and a data file
+    // committer writes it last), and the build's own marker is never
+    // reached; drop both markers and a data file
     val genoDir = Paths.get(s"$out/variant_geno")
     Files.delete(genoDir.resolve("_SUCCESS"))
+    Files.delete(Paths.get(s"$out/_SUCCESS"))
     Files.walk(genoDir).iterator().asScala
       .find(p => p.getFileName.toString.startsWith("part-"))
       .foreach(Files.delete)
-    VcfPipeline.run(spark, vcfFile, out)
-    // completed stages byte-identical and untouched; torn one recommitted
-    assert(files("_staging/ids") == stagingSig,
-      "resume re-ran the staging scan despite its commit marker")
+    // completed tables byte-identical and untouched; torn one recommitted
+    // from a fresh sort, with the committed ids
+    assert(VcfPipeline.run(spark, vcfFile, out) == Seq("variant_geno"))
     assert(files("variant_info") == infoSig && digest("variant_info") == infoMd5,
       "resume rewrote a committed table")
     assert(Files.exists(genoDir.resolve("_SUCCESS")))
-    assert(spark.read.parquet(s"$out/variant_geno").count() == 12)
+    assert(rows(spark.read.parquet(s"$out/variant_geno")) == clean,
+      "the rewritten rows disagree with a clean build's")
 
-    // kill during staging: no staging marker → the scan re-runs (and
-    // committed downstream tables still skip)
-    Files.delete(Paths.get(s"$out/_staging/ids/_SUCCESS"))
-    VcfPipeline.run(spark, vcfFile, out)
-    assert(VcfPipeline.isComplete(spark, s"$out/_staging/ids"))
-    assert(files("_staging/ids") != stagingSig, "staging was not rebuilt")
-    assert(files("variant_info") == infoSig,
-      "staging rebuild must not rewrite committed tables")
-    assert(spark.read.parquet(s"$out/variant_info").count() == 6)
+    // a complete outDir: nothing to do, and no Spark job to learn that
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.SpecAccess.drainListeners(sc)
+    sc.addSparkListener(listener)
+    try {
+      assert(VcfPipeline.run(spark, vcfFile, out).isEmpty)
+      org.apache.spark.SpecAccess.drainListeners(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get == 0, s"${jobs.get} Spark job(s) on a complete outDir")
+
+    // an edited input must not resume into the old build's tables
+    Files.write(Paths.get(vcfFile), lines.init.mkString("\n").getBytes("UTF-8"))
+    val e = intercept[IllegalStateException](VcfPipeline.run(spark, vcfFile, out))
+    assert(e.getMessage.contains(out) && e.getMessage.contains(vcfFile), e.getMessage)
+    assert(files("variant_info") == infoSig)
+  }
+
+  test("VcfPipeline.main rejects unknown flags and a dangling argument with the usage line") {
+    Seq(
+      Array("--vcf", "x.vcf", "--out", "db", "--mode", "table"),
+      Array("--vcf", "x.vcf", "--out"),
+      Array("--vcf", "x.vcf")
+    ).foreach { args =>
+      val e = intercept[IllegalArgumentException](VcfPipeline.main(args))
+      assert(e.getMessage.startsWith("usage: VcfPipeline --vcf <path> --out <dir>"),
+        e.getMessage)
+    }
   }
 
   test("VcfPipeline.run writes a multiallelic TSV report then aborts") {

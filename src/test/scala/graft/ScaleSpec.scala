@@ -899,4 +899,22 @@ class ScaleSpec extends SparkSpec {
     // the caller's own thread never carries the pool's job tag
     assert(sc.getJobTags().isEmpty)
   }
+
+  test("a file read filters header lines with a column predicate, not a typed lambda") {
+    import org.apache.spark.sql.catalyst.plans.logical.{DeserializeToObject, TypedFilter}
+    val dir = java.nio.file.Files.createTempDirectory("graft_comment_filter")
+    val plain = dir.resolve("toy.vcf")
+    java.nio.file.Files.write(plain, ToyVcf.lines.mkString("\n").getBytes("UTF-8"))
+    val bgzf = dir.resolve("toy.vcf.gz").toString
+    vcf.Bgzf.writeLocalFile(bgzf, ToyVcf.lines)
+    for (path <- Seq(plain.toString, bgzf)) {
+      val qe = VcfReader.read(spark, path).df.queryExecution
+      Seq(qe.analyzed, qe.optimizedPlan).foreach { plan =>
+        assert(plan.find {
+          case _: TypedFilter | _: DeserializeToObject => true
+          case _ => false
+        }.isEmpty, s"$path:\n$plan")
+      }
+    }
+  }
 }

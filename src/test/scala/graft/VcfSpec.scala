@@ -230,7 +230,9 @@ class VcfSpec extends SparkSpec {
     val bad = ToyVcf.lines.map(l =>
       if (l.startsWith("1\t100")) l.replace("\tG\t", "\tG,C\t") else l)
     val v = VcfReader.fromLines(spark, bad)
-    intercept[IllegalArgumentException](VcfBuild.requireNormalized(v.df))
+    val e = intercept[IllegalArgumentException](Caches.scoped(VcfBuild.build(v)))
+    assert(e.getMessage.contains("1 multiallelic record(s) found (e.g. 1 100 A G,C)"),
+      e.getMessage)
     assert(VcfBuild.multiallelicSites(v.df).count() == 1)
   }
 
