@@ -143,7 +143,8 @@ object VcfApi {
   def pullByGene(
       impact: DataFrame, info: DataFrame, geno: DataFrame,
       symbol: String, afMax: Double = 0.01): DataFrame = {
-    val ids = filterByGene(impact, info, symbol, afMax).select("variant_id").distinct()
+    // `info` rows are unique per variant_id: the ids need no dedup
+    val ids = filterByGene(impact, info, symbol, afMax).select("variant_id")
     geno.join(broadcast(ids), Seq("variant_id"))
   }
 
@@ -256,16 +257,6 @@ object VcfApi {
           round(col("n_ts") / col("n_tv").cast("double"), 4)))
   }
 
-  /** Folded allele-frequency spectrum — the histogram of minor-allele
-    * frequencies over all variants, the population-genetics summary a
-    * cohort store reports per build (an excess of rare bins flags call
-    * artifacts; the folded form maf = min(af, 1−af) is ascertainment-
-    * neutral). Output: `bin, maf_lo, n` where bin = floor(maf·10)
-    * (maf exactly 0.5 lands in bin 5).
-    *
-    * Scale shape: one row-local projection + one 11-group aggregation
-    * over `info` — no joins, no windows.
-    */
   /** Per-sample missingness (call-rate) report — the first QC gate of
     * any genotype pipeline (plink `--missing`): for each sample the
     * total sites, called sites (gt non-null) and call rate. Output:
@@ -292,7 +283,15 @@ object VcfApi {
     * side), impact deduplicates to (variant, symbol) — a variant with
     * many consequence rows counts once — and the alt-carrying geno
     * rows equi-join on variant_id (AQE broadcasts the site side when
-    * small). One combinable aggregate; no windows.
+    * small). One combinable (sample, symbol) aggregate; no windows.
+    *
+    * Precondition: `geno` is keyed on (variant_id, sample), as every
+    * `variant_geno` the build writes is (`variant_id` is a total order
+    * and the header rejects duplicate sample names). With `sites`
+    * distinct per (variant_id, symbol), each joined row is then unique
+    * per (variant_id, sample, symbol), so `n_sites` counts rows — a
+    * plain count, where `countDistinct(variant_id)` would plan a second
+    * aggregation level and shuffle.
     */
   def burdenReport(geno: DataFrame, impact: DataFrame, info: DataFrame,
       afMax: Double): DataFrame = {
@@ -302,7 +301,7 @@ object VcfApi {
     geno.where(col("gt") > 0)
       .join(sites, Seq("variant_id"))
       .groupBy(col("sample"), col("symbol"))
-      .agg(countDistinct(col("variant_id")).as("n_sites"),
+      .agg(count(lit(1)).as("n_sites"),
         sum(col("gt")).cast("long").as("n_alleles"))
   }
 
@@ -339,6 +338,16 @@ object VcfApi {
       .select("sample", "chr", "start_pos", "end_pos", "n_sites")
   }
 
+  /** Folded allele-frequency spectrum — the histogram of minor-allele
+    * frequencies over all variants, the population-genetics summary a
+    * cohort store reports per build (an excess of rare bins flags call
+    * artifacts; the folded form maf = min(af, 1−af) is ascertainment-
+    * neutral). Output: `bin, maf_lo, n` where bin = floor(maf·10)
+    * (maf exactly 0.5 lands in bin 5).
+    *
+    * Scale shape: one row-local projection + one 11-group aggregation
+    * over `info` — no joins, no windows.
+    */
   def alleleFrequencySpectrum(info: DataFrame): DataFrame =
     info
       .select(least(col("af"), lit(1d) - col("af")).as("maf"))
@@ -479,28 +488,6 @@ object VcfApi {
         round(num * num / (denA * denB).cast("double"), 4)).as("r2"))
   }
 
-  /** Pairwise sample relatedness by identity-by-state — the
-    * PLINK-`--genome`-shaped audit that catches duplicates and
-    * unexpected relatives in a cohort: for each sample pair, over the
-    * variants where both are called, count sites sharing 0/1/2 alleles
-    * (|dosage gap| 2/1/0) and report the mean shared-allele fraction.
-    * Output: `sample_a, sample_b, n, ibs0, ibs1, ibs2, ibs_frac`
-    * (fraction rounded to 4).
-    *
-    * Scale shape: a geno self-join co-keyed on variant_id (no
-    * re-keying — both sides arrive partitioned by the join column)
-    * followed by ONE combinable aggregation on the sample pair. The
-    * pair blow-up is inherently O(variants · samples²); the standard
-    * production bound is `maxVariants`: an md5-lowest deterministic
-    * variant sample (the PLINK practice of estimating IBS on a pruned
-    * subset), keeping cost O(maxVariants · S²) independent of corpus
-    * size. 0 = no sampling. `sampleBlocks` > 1 additionally
-    * grid-partitions the pair space ([[samplePairGrid]], the KING
-    * `--parallel` decomposition) so no single task ever materializes
-    * more than ⌈S/B⌉² pairs of a variant — the knob that keeps biobank
-    * sample width (100k+) from turning the self-join into one
-    * S²-sized straggler partition.
-    */
   /** Grid-blocked sample-pair self-join shared by [[ibsReport]],
     * [[kingReport]] and [[grmReport]] — the KING `--parallel`
     * decomposition. `a`/`b` carry (variant_id, sample_a/sample_b,
@@ -551,6 +538,28 @@ object VcfApi {
     }
   }
 
+  /** Pairwise sample relatedness by identity-by-state — the
+    * PLINK-`--genome`-shaped audit that catches duplicates and
+    * unexpected relatives in a cohort: for each sample pair, over the
+    * variants where both are called, count sites sharing 0/1/2 alleles
+    * (|dosage gap| 2/1/0) and report the mean shared-allele fraction.
+    * Output: `sample_a, sample_b, n, ibs0, ibs1, ibs2, ibs_frac`
+    * (fraction rounded to 4).
+    *
+    * Scale shape: a geno self-join co-keyed on variant_id (no
+    * re-keying — both sides arrive partitioned by the join column)
+    * followed by ONE combinable aggregation on the sample pair. The
+    * pair blow-up is inherently O(variants · samples²); the standard
+    * production bound is `maxVariants`: an md5-lowest deterministic
+    * variant sample (the PLINK practice of estimating IBS on a pruned
+    * subset), keeping cost O(maxVariants · S²) independent of corpus
+    * size. 0 = no sampling. `sampleBlocks` > 1 additionally
+    * grid-partitions the pair space ([[samplePairGrid]], the KING
+    * `--parallel` decomposition) so no single task ever materializes
+    * more than ⌈S/B⌉² pairs of a variant — the knob that keeps biobank
+    * sample width (100k+) from turning the self-join into one
+    * S²-sized straggler partition.
+    */
   def ibsReport(geno: DataFrame, maxVariants: Long = 0L,
       sampleBlocks: Int = 1): DataFrame = {
     val called = geno.where(col("gt").isNotNull)

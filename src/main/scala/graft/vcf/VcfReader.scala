@@ -1,5 +1,11 @@
 package graft.vcf
 
+import java.io.{BufferedReader, InputStream, InputStreamReader}
+import java.nio.charset.StandardCharsets
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.hadoop.io.compress.CompressionCodecFactory
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -77,38 +83,46 @@ object VcfReader {
           s"non-BGZF files (${plain.map(_._1.getName).take(3).mkString(", ")}...)" +
           "; read them separately or re-bgzip the plain shards")
     }
-    val first = files.headOption
     val isBgzf = sniffed.nonEmpty && sniffed.forall(_._2)
-    if (isBgzf) {
-      val reader = spark.read.format("bgzf-text")
-      val withOpt = splitSize.fold(reader)(s => reader.option("splitSize", s))
-      val raw = withOpt.load(path).select("value").as[String]
-      // Header blocks sit at the file head: decompress them driver-side
-      // instead of filtering the distributed scan.
-      def headOf(st: org.apache.hadoop.fs.FileStatus) =
-        Bgzf.headLines(st.getPath.getFileSystem(conf), st.getPath)
-      val headerLines = headOf(first.get)
-      // every shard's sample columns are named by the first one's
-      // header; a headerless shard (as `VcfExport.exportSharded` writes
-      // after shard 0) inherits it
-      def chromLine(lines: Seq[String]) = lines.find(_.startsWith("#CHROM"))
-      val chrom = chromLine(headerLines)
-      files.tail.find(st => chromLine(headOf(st)).exists(c => !chrom.contains(c)))
-        .foreach { st =>
-          throw new IllegalArgumentException(
-            s"VCF shards disagree on their #CHROM line: ${st.getPath} " +
-              s"differs from ${first.get.getPath}; read them separately")
-        }
-      val header = VcfHeader.parse(headerLines)
-      VcfDataset(parse(body(raw), header), header)
-    } else {
-      val raw = spark.read.textFile(path)
-      // Headers are the leading few KB; `limit` keeps the driver fetch
-      // bounded (4096 header lines is far beyond any real VCF header).
-      val headerLines = raw.where(isComment).limit(4096).collect().toSeq
-      val header = VcfHeader.parse(headerLines)
-      VcfDataset(parse(body(raw), header), header)
+    // Header lines sit at the file head: read them straight from the
+    // first listed file only, instead of filtering the distributed scan.
+    def headOf(st: FileStatus): Seq[String] = {
+      val fs = st.getPath.getFileSystem(conf)
+      if (isBgzf) Bgzf.headLines(fs, st.getPath) else textHeadLines(fs, st.getPath, conf)
     }
+    val headerLines = files.headOption.fold(Seq.empty[String])(headOf)
+    // every shard's sample columns are named by the first one's header;
+    // a headerless shard (as `VcfExport.exportSharded` writes after
+    // shard 0) inherits it
+    def chromLine(lines: Seq[String]) = lines.find(_.startsWith("#CHROM"))
+    val chrom = chromLine(headerLines)
+    files.drop(1).find(st => chromLine(headOf(st)).exists(c => !chrom.contains(c)))
+      .foreach { st =>
+        throw new IllegalArgumentException(
+          s"VCF shards disagree on their #CHROM line: ${st.getPath} " +
+            s"differs from ${files.head.getPath}; read them separately")
+      }
+    val header = VcfHeader.parse(headerLines)
+    val raw =
+      if (isBgzf) {
+        val reader = spark.read.format("bgzf-text")
+        splitSize.fold(reader)(s => reader.option("splitSize", s))
+          .load(path).select("value").as[String]
+      } else spark.read.textFile(path)
+    VcfDataset(parse(body(raw), header), header)
+  }
+
+  /** The leading `#` lines of a plain-text (or plain gzip, by the same
+    * extension-based codec choice `spark.read.text` makes) file.
+    */
+  private def textHeadLines(fs: FileSystem, path: Path, conf: Configuration): Seq[String] = {
+    val raw = fs.open(path)
+    val in = Option(new CompressionCodecFactory(conf).getCodec(path))
+      .fold[InputStream](raw)(_.createInputStream(raw))
+    val lines = new BufferedReader(new InputStreamReader(in, StandardCharsets.UTF_8))
+    try Iterator.continually(lines.readLine())
+      .takeWhile(l => l != null && l.startsWith("#")).toVector
+    finally lines.close()
   }
 
   /** Header (`#`) lines, as a column predicate: Catalyst tests the
@@ -213,6 +227,17 @@ object VcfReader {
     val tail = split(get(split9, lit(8)), "\t", 2)
 
     def nullable(c: Column): Column = when(c === Missing, lit(null)).otherwise(c)
+    // "." → null; any other value that does not cast to a number fails
+    // the scan like a bad POS
+    def typed(v: Column, t: DataType, field: String): Column = t match {
+      case LongType | DoubleType =>
+        val c = v.try_cast(t)
+        val kind = if (t == LongType) "an integer" else "a float"
+        when(v === Missing, lit(null))
+          .when(c.isNull && v.isNotNull, malformed(s"$field is not $kind"))
+          .otherwise(c)
+      case _ => nullable(v).cast(t)
+    }
 
     // INFO "K=V;K2;K3=V3" → map; flag keys get a null value slot, so
     // flag presence = map_contains_key.
@@ -224,7 +249,7 @@ object VcfReader {
       nullable(p.getItem(2)).as("id"),
       p.getItem(3).as("ref"),
       p.getItem(4).as("alt"),
-      nullable(p.getItem(5)).cast(DoubleType).as("qual"),
+      typed(p.getItem(5), DoubleType, "QUAL").as("qual"),
       nullable(p.getItem(6)).as("filter"),
       // a sites-only line has exactly 8 fields, so the prefix split's
       // item 7 is the complete INFO field either way; with samples
@@ -232,7 +257,9 @@ object VcfReader {
       // fields 0-7 intact and only leaves the tail unsplit in item 8
       p.getItem(7).as("_info_raw"),
       get(tail, lit(0)).as("format"),
-      get(tail, lit(1)).as("genotypes"))
+      get(tail, lit(1)).as("genotypes"),
+      // kept for the INFO casts' error messages; the last select drops it
+      col("value"))
 
     val withInfo = fixed.withColumn("_info", infoMap)
 
@@ -248,10 +275,9 @@ object VcfReader {
         case VcfFieldDef("CSQ", _, _, _) =>
           split(v, ",")
         case VcfFieldDef(_, "1", t, _) =>
-          when(v === Missing, lit(null)).otherwise(v).cast(sqlType(t))
+          typed(v, sqlType(t), s"INFO ${d.id}")
         case VcfFieldDef(_, _, t, _) => // A / R / G / . / n>1 → array
-          transform(split(v, ","),
-            e => when(e === Missing, lit(null)).otherwise(e).cast(sqlType(t)))
+          transform(split(v, ","), e => typed(e, sqlType(t), s"INFO ${d.id}"))
       }
       c.as(if (d.id == "CSQ") "csq" else d.id.toLowerCase)
     }

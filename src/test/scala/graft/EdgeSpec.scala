@@ -207,19 +207,52 @@ class EdgeSpec extends SparkSpec {
     assert(VcfReader.read(spark, dir.toString).df.count() == 12)
   }
 
+  test("a plain-text shard directory reads its first shard's header once") {
+    val dir = Files.createTempDirectory("vcfplain")
+    def put(name: String, lines: Seq[String]): String = {
+      val f = dir.resolve(name)
+      Files.createDirectories(f.getParent)
+      Files.write(f, lines.mkString("", "\n", "\n").getBytes("UTF-8")).toString
+    }
+    val one = put("one.vcf", ToyVcf.lines)
+    put("shards/part0.vcf", ToyVcf.lines)
+    val part1 = put("shards/part1.vcf", ToyVcf.lines)
+    val shards = dir.resolve("shards").toString
+    def shape(path: String) = Caches.scoped {
+      val v = VcfReader.read(spark, path)
+      val t = VcfBuild.build(v)
+      (v.header, t.meta.map { case (n, df) => n -> df.collect().map(_.toString).sorted.toSeq },
+        t.geno.columns.toSeq)
+    }
+    val (h1, meta1, geno1) = shape(one)
+    val (h2, meta2, geno2) = shape(shards)
+    assert(h2 == h1 && h1.formatDefs.map(_.id) == Seq("GT", "DP"))
+    assert(meta2 == meta1 && geno2 == geno1)
+    assert(VcfReader.read(spark, shards).df.count() == 12)
+    // a shard naming other samples is rejected, both files named
+    put("shards/part1.vcf",
+      ToyVcf.lines.map(l => if (l.startsWith("#CHROM")) l.replace("\tS2", "\tS3") else l))
+    val e = intercept[IllegalArgumentException](VcfReader.read(spark, shards))
+    assert(e.getMessage.contains(part1) && e.getMessage.contains("part0.vcf"), e.getMessage)
+  }
+
   test("malformed body lines fail the build naming the reason and the line") {
     def built(lines: Seq[String]): Seq[(Long, String, Long)] = Caches.scoped {
       VcfBuild.build(VcfReader.fromLines(spark, lines)).info
         .select("variant_id", "chr", "start").as[(Long, String, Long)].collect().sorted.toSeq
     }
-    // the guard leaves a clean build as it was
+    // the guard leaves a clean build as it was; "." INFO and QUAL
+    // values stay null
     assert(built(ToyVcf.lines) == Seq((1L, "1", 100L), (2L, "1", 200L), (3L, "1", 300L),
       (4L, "2", 150L), (5L, "2", 250L), (6L, "2", 400L)))
     val at = ToyVcf.lines.indexWhere(!_.startsWith("#")) + 2
     Seq(
       "" -> "fewer than 8 tab-separated fields",
       "1\t500\t.\tA\tG" -> "fewer than 8 tab-separated fields",
-      "1\tabc\t.\tA\tG\t5\tPASS\t.\tGT:DP\t0|0:1\t0|1:2" -> "POS is not an integer"
+      "1\tabc\t.\tA\tG\t5\tPASS\t.\tGT:DP\t0|0:1\t0|1:2" -> "POS is not an integer",
+      "1\t500\t.\tA\tG\tx\tPASS\t.\tGT:DP\t0|0:1\t0|1:2" -> "QUAL is not a float",
+      "1\t500\t.\tA\tG\t5\tPASS\tAF=abc\tGT:DP\t0|0:1\t0|1:2" -> "INFO AF is not a float",
+      "1\t500\t.\tA\tG\t5\tPASS\tDP=1.5x\tGT:DP\t0|0:1\t0|1:2" -> "INFO DP is not an integer"
     ).foreach { case (line, reason) =>
       val e = intercept[Exception](built(ToyVcf.lines.patch(at, Seq(line), 0)))
       val msg = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)

@@ -3574,6 +3574,21 @@ class OperatorsSpec extends SparkSpec {
     assert(got == Seq(("S1", "G1", 2L, 3L))) // sites {1,3}, alleles 2+1
   }
 
+  test("VcfApi.burdenReport: a variant in two genes counts once in each, repeats ignored") {
+    import graft.vcf.VcfApi
+    val info = Seq((1L, 0.1), (2L, 0.2), (3L, 0.5)).toDF("variant_id", "af")
+    // variant 1 hits G1 and G2, each through two consequence rows;
+    // variant 3 is common and excluded
+    val impact = Seq((1L, "G1"), (1L, "G2"), (1L, "G1"), (1L, "G2"), (2L, "G1"),
+      (3L, "G2")).toDF("variant_id", "symbol")
+    val geno = Seq((1L, "S1", 1d), (1L, "S2", 2d), (2L, "S1", 2d), (2L, "S2", 0d),
+      (3L, "S1", 1d)).toDF("variant_id", "sample", "gt")
+    val got = VcfApi.burdenReport(geno, impact, info, afMax = 0.3)
+      .as[(String, String, Long, Long)].collect().sorted.toSeq
+    assert(got == Seq(("S1", "G1", 2L, 3L), ("S1", "G2", 1L, 1L),
+      ("S2", "G1", 1L, 2L), ("S2", "G2", 1L, 2L)))
+  }
+
   test("VcfApi.rohReport: missing call breaks the run, short runs dropped") {
     import graft.vcf.VcfApi
     val geno = Seq(

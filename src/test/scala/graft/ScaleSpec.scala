@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.{Dedup, Layout, Skew}
-import graft.vcf.{SyntheticVcf, ToyVcf, VcfBuild, VcfHeader, VcfReader}
+import graft.vcf.{SyntheticVcf, ToyVcf, VcfApi, VcfBuild, VcfHeader, VcfReader}
 
 /** Specs for the scale techniques: salted skew joins and bucketed
   * co-located joins.
@@ -161,6 +161,27 @@ class ScaleSpec extends SparkSpec {
       case ArrayType(_: StructType, _) => true
       case _ => false
     }), staged.schema)
+  }
+
+  test("burdenReport is one (sample, symbol) aggregate: no distinct, one geno-side shuffle") {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    Caches.scoped {
+      val t = VcfBuild.build(SyntheticVcf.generate(spark, 200, nSamples = 4, nGenes = 5))
+      val out = VcfApi.burdenReport(t.geno, t.impact.get, t.info, afMax = 0.1)
+      out.collect()
+      val plan = out.queryExecution.executedPlan
+      assert(!plan.toString.contains("count(distinct"), plan)
+      // shuffle keys by column name; only geno-side exchanges carry `sample`
+      val keys = new AdaptiveSparkPlanHelper {}.collect(plan) {
+        case e: ShuffleExchangeExec => e.outputPartitioning
+      }.collect { case h: HashPartitioning =>
+        h.expressions.map { case a: Attribute => a.name; case e => e.sql }
+      }
+      assert(keys.filter(_.contains("sample")) == Seq(Seq("sample", "symbol")), plan)
+    }
   }
 
   test("sampleToTokenBudget never windows over a bare group (skew-immune plan)") {

@@ -255,6 +255,28 @@ class VcfSpec extends SparkSpec {
     assert(g.count() == 4) // variants 1,2 × 2 samples
   }
 
+  test("burdenReport over a built store equals a countDistinct oracle; geno is keyed on (variant_id, sample)") {
+    Caches.scoped {
+      val t = VcfBuild.build(SyntheticVcf.generate(spark, 600, nSamples = 6, nGenes = 12))
+      // the precondition burdenReport's plain row count rests on
+      assert(t.geno.groupBy("variant_id", "sample").count().where($"count" > 1).isEmpty)
+      assert(t.geno.count() == 600L * 6)
+      val impact = t.impact.get
+      for (afMax <- Seq(0.05, 0.15)) {
+        val rare = t.info.where($"af" < afMax).select("variant_id")
+        val sites = impact.select("variant_id", "symbol").distinct()
+          .join(rare, Seq("variant_id"), "left_semi")
+        val want = t.geno.where($"gt" > 0).join(sites, "variant_id")
+          .groupBy("sample", "symbol")
+          .agg(countDistinct("variant_id").as("n_sites"),
+            sum("gt").cast("long").as("n_alleles"))
+        val got = VcfApi.burdenReport(t.geno, impact, t.info, afMax)
+        assert(!want.isEmpty, s"afMax $afMax")
+        assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty, s"afMax $afMax")
+      }
+    }
+  }
+
   test("overlapJoin matches naive interval predicate") {
     val regions = Seq(("1", 150L, 350L), ("2", 100L, 260L), ("1", 90L, 105L))
       .toDF("chr", "start", "end")
