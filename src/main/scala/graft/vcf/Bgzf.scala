@@ -256,14 +256,19 @@ object Bgzf {
 
   /** Driver-side header fetch: decompress leading blocks and return the
     * `#`-prefixed header lines (headers sit at the start of the file; a
-    * 16 MiB cap bounds the driver read far beyond any real header).
+    * 16 MiB cap bounds the driver read far beyond any real header, and
+    * reaching it before a complete data line or EOF fails, naming the
+    * file, rather than return a header cut short).
     */
   def headLines(fs: FileSystem, path: Path, maxBytes: Int = 16 << 20): Seq[String] = {
     val in = fs.open(path)
     try {
       val acc = new ByteArrayOutputStream(64 << 10)
       var stop = false
-      while (!stop && acc.size < maxBytes) {
+      while (!stop) {
+        if (acc.size >= maxBytes)
+          throw new IllegalArgumentException(
+            s"VCF header of $path exceeds $maxBytes bytes with no data line or end of file")
         readBlock(in) match {
           case Some((data, _)) =>
             acc.write(data)

@@ -1,13 +1,15 @@
 package graft.vcf
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.RangeJoin
 
 /** The reference's read-query surface (VCFdbR
   * `benchmarks/00-benchmark-functions.R:10-147`) as composable
-  * DataFrame functions. All are lazy plans; Catalyst composes them with
-  * caller filters exactly like dbplyr composed one SQL statement.
+  * DataFrame functions: lazy plans that Catalyst composes with caller
+  * filters exactly like dbplyr composed one SQL statement. Two resolve
+  * their ids with one job at call time: [[VcfApi.pullByGene]], and
+  * [[VcfApi.filterByGeneIndexed]] over a spilled index.
   */
 object VcfApi {
 
@@ -44,11 +46,10 @@ object VcfApi {
     * driver heap. [[buildGeneIndex]] therefore counts first and above
     * `maxDriverIds` returns the SPILLED form — `ids` empty, `spill` a
     * distinct (symbol, variant_id) DataFrame cached in the caller's
-    * [[graft.Caches]] scope, which lives as long as the index — and
-    * [[filterByGeneIndexed]] serves point lookups from it with a
-    * per-gene broadcast semi-join (cluster memory, executor-side
-    * filter; the per-gene subset is always gene-sized even when the
-    * whole index is not driver-sized).
+    * [[graft.Caches]] scope, which lives as long as the index. Either
+    * form answers [[idsOf]]; the spilled one with one collect of the
+    * gene's rows (gene-sized even when the whole index is not
+    * driver-sized).
     */
   final case class GeneIndex(
       ids: Map[String, Array[Long]],
@@ -58,15 +59,15 @@ object VcfApi {
       case Some(df) =>
         df.select("symbol").distinct().collect().map(_.getString(0)).toSeq
     }
-  }
 
-  /** Above this many ids the point lookup switches from an IN-list
-    * predicate to a broadcast left-semi join: a 100k-element `isin`
-    * is a planning-time killer (one expression-tree node per id),
-    * while a broadcast of 100k longs is ~1 MB — trivially fine. Used
-    * by [[filterByGeneIndexed]] and [[pullByIds]] alike.
-    */
-  private val InListMaxIds = 1000
+    /** The variant ids of `symbol` (empty for an unknown gene). */
+    def idsOf(symbol: String): Array[Long] = spill match {
+      case None => ids.getOrElse(symbol, Array.emptyLongArray)
+      case Some(df) =>
+        df.where(col("symbol") === symbol).select("variant_id")
+          .collect().map(_.getLong(0))
+    }
+  }
 
   /** Build the index; above `maxDriverIds` total (gene, id) pairs the
     * index spills to a cached DataFrame instead of driver heap (see
@@ -88,65 +89,52 @@ object VcfApi {
     else
       // range-partition + sort the spilled pairs by symbol: the
       // per-gene `where(symbol = s)` then prunes cached batches by
-      // their min/max stats instead of scanning the full pair table —
-      // the same batch-stats pruning the in-heap path gets from the
-      // pushed IN-list (measured at exome shape: 0.164 → ~0.07 s/gene)
+      // their min/max stats instead of scanning the full pair table
+      // (measured at exome shape: 0.164 → ~0.07 s/gene)
       GeneIndex(Map.empty, Some(graft.Caches.persist(
         pairs.repartitionByRange(64, col("symbol"))
           .sortWithinPartitions("symbol"))))
   }
 
   /** [[filterByGene]] through a prebuilt [[GeneIndex]]: the impact-side
-    * scan+join disappears entirely — one pushed-predicate pass over
-    * `info` for typical genes (id list ≤ [[InListMaxIds]], pushed as an
-    * IN filter), a broadcast semi-join for giant genes. Results are
-    * identical to [[filterByGene]].
+    * scan+join disappears — the gene's ids ([[GeneIndex.idsOf]]) become
+    * one pushed [[keepIds]] predicate over `info`. Results are identical
+    * to [[filterByGene]].
     */
   def filterByGeneIndexed(
       index: GeneIndex, info: DataFrame,
-      symbol: String, afMax: Double = 0.01): DataFrame = {
-    val base = info.filter(col("af") < afMax)
-    val matched = index.spill match {
-      case Some(pairs) =>
-        // spilled index: the per-gene id set stays executor-side — a
-        // broadcast semi-join against the cached pairs filtered to the
-        // gene (gene-sized, broadcastable even when the index is not)
-        base.join(
-          broadcast(pairs.where(col("symbol") === symbol).select("variant_id")),
-          Seq("variant_id"), "left_semi")
-      case None =>
-        keepIds(base, index.ids.getOrElse(symbol, Array.empty[Long]).toSeq)
-    }
-    matched.withColumn("symbol", lit(symbol))
-  }
+      symbol: String, afMax: Double = 0.01): DataFrame =
+    keepIds(info.filter(col("af") < afMax), index.idsOf(symbol))
+      .withColumn("symbol", lit(symbol))
 
-  /** Rows of `df` whose `variant_id` is in `ids`: a pushed IN filter up
-    * to [[InListMaxIds]] ids, a broadcast left-semi join above.
+  /** Rows of `df` whose (long) `variant_id` is in `ids`: the one id
+    * predicate of every point query, `variant_id INSET ids`
+    * ([[GraftBridge.inSet]]), pushed to the scan as an `In` filter. Its
+    * generated code holds the set as an object, so a new id set of any
+    * size reuses the compiled plan. No ids plans an empty relation: an
+    * empty `InSet` would still scan the table.
     */
-  private def keepIds(df: DataFrame, ids: Seq[Long]): DataFrame =
-    if (ids.size <= InListMaxIds) df.filter(col("variant_id").isin(ids: _*))
-    else {
-      val spark = df.sparkSession
-      import spark.implicits._
-      df.join(broadcast(ids.toDF("variant_id")), Seq("variant_id"), "left_semi")
-    }
+  private def keepIds(df: DataFrame, ids: Iterable[Long]): DataFrame =
+    if (ids.isEmpty) df.where(lit(false))
+    else df.where(GraftBridge.inSet(df, "variant_id", ids))
 
-  /** Genotype pull by id set (`pull_vars_by_id`, `00:10-55`): a
-    * broadcast semi-join filter on the long geno table. The sorted
-    * `variant_id` parquet layout makes this a stats-pruned scan — the
-    * replacement for both the file-per-variant mode and the B-tree
-    * index mode.
+  /** Genotype pull by id set (`pull_vars_by_id`, `00:10-55`): one
+    * [[keepIds]] filter on the long geno table. The sorted `variant_id`
+    * parquet layout makes this a stats-pruned scan — the replacement
+    * for both the file-per-variant mode and the B-tree index mode.
     */
   def pullByIds(geno: DataFrame, ids: Seq[Long]): DataFrame = keepIds(geno, ids)
 
-  /** Composed filter + pull (`pull_geno_test`, `00:105-147`). */
+  /** Composed filter + pull (`pull_geno_test`, `00:105-147`): the gene's
+    * passing ids are collected on the driver (one job at call time;
+    * `info` rows are unique per variant_id, so they need no dedup), then
+    * pulled with [[pullByIds]].
+    */
   def pullByGene(
       impact: DataFrame, info: DataFrame, geno: DataFrame,
-      symbol: String, afMax: Double = 0.01): DataFrame = {
-    // `info` rows are unique per variant_id: the ids need no dedup
-    val ids = filterByGene(impact, info, symbol, afMax).select("variant_id")
-    geno.join(broadcast(ids), Seq("variant_id"))
-  }
+      symbol: String, afMax: Double = 0.01): DataFrame =
+    pullByIds(geno, filterByGene(impact, info, symbol, afMax)
+      .select("variant_id").collect().map(_.getLong(0)).toSeq)
 
   /** Interval-overlap variant lookup — the GRanges sidecar's role
     * (`03-index-db.R:72-82`), as a distributed range join over the

@@ -46,7 +46,7 @@ object VcfBuild {
     * as the staging of unscoped builds: a delegate to
     * [[graft.Caches.releaseUnscoped]], kept only because the benchmark
     * (`perfbench`) calls it. Once the benchmark calls
-    * `Caches.releaseUnscoped` itself (ROADMAP item 1), delete it.
+    * `Caches.releaseUnscoped` itself (ROADMAP item 3), delete it.
     */
   def clearCaches(): Int = graft.Caches.releaseUnscoped()
 
@@ -71,6 +71,9 @@ object VcfBuild {
     * The SORTED scan persists into the caller's [[graft.Caches]]
     * scope: info, impact and geno all fan out from it, so the one
     * unavoidable wide stage — parse + global sort — runs exactly once.
+    * The cache is MEMORY_AND_DISK: its rows carry the sample columns as
+    * one string, about the VCF line's own bytes (a 200k × 1,000 build
+    * held it in a 7 GB heap, 4 cores, with no spill).
     * One eager job then collects the per-partition row counts over that
     * cache, and counts the multiallelic records with them: the engine,
     * like the reference (`01-generate-variant-ranges-index.R:43-53`),
@@ -100,20 +103,7 @@ object VcfBuild {
   def withVariantIds(parsed: DataFrame): DataFrame = {
     val keys = Seq(col("chr"), col("pos"), col("ref"), col("alt"),
       input_file_name(), input_file_block_start(), monotonically_increasing_id())
-    // `spark.graft.stagingStorage` escapes to DISK_ONLY for giant
-    // builds: the sorted rows carry the sample columns as one string
-    // and columnar-cache at ~7 KB/row at 1,000 samples (about the VCF
-    // line itself; the per-sample struct array this row once carried
-    // cached at ~48 KB/row), and MEMORY_AND_DISK builds every in-flight
-    // partition's batches ON HEAP before it can decide to spill — at
-    // 1.4M×1000 the wide form GC-starved a 96 GB driver until its own
-    // heartbeats expired. DISK_ONLY streams batches out and bounds heap
-    // by in-flight partitions only; the layout invariant above cares
-    // about partitioning, not residence.
-    val level = org.apache.spark.storage.StorageLevel.fromString(
-      parsed.sparkSession.conf.get("spark.graft.stagingStorage",
-        "MEMORY_AND_DISK"))
-    numberSorted(graft.Caches.persist(parsed.orderBy(keys: _*), level))
+    numberSorted(graft.Caches.persist(parsed.orderBy(keys: _*)))
   }
 
   /** The id job of [[withVariantIds]] over its pinned sorted cache:

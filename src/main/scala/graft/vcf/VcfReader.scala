@@ -66,42 +66,7 @@ object VcfReader {
   def read(spark: SparkSession, path: String,
       splitSize: Option[Long] = None): VcfDataset = {
     import spark.implicits._
-    val conf = spark.sessionState.newHadoopConf()
-    val files = BgzfTextSource.listFiles(path, conf)
-    // Sniff EVERY listed file, not just the first: a directory mixing
-    // BGZF and plain-text shards must fail loudly here — routed through
-    // one codec path, the wrong half would throw mid-scan (plain text
-    // through the BGZF reader) or decode garbage (BGZF through
-    // spark.read.text).
-    val sniffed = files.map(st =>
-      st.getPath -> Bgzf.isBgzfFile(st.getPath.getFileSystem(conf), st.getPath))
-    if (sniffed.nonEmpty && sniffed.exists(_._2) && !sniffed.forall(_._2)) {
-      val (bgzf, plain) = sniffed.partition(_._2)
-      throw new IllegalArgumentException(
-        s"mixed-compression VCF input under $path: BGZF files " +
-          s"(${bgzf.map(_._1.getName).take(3).mkString(", ")}...) alongside " +
-          s"non-BGZF files (${plain.map(_._1.getName).take(3).mkString(", ")}...)" +
-          "; read them separately or re-bgzip the plain shards")
-    }
-    val isBgzf = sniffed.nonEmpty && sniffed.forall(_._2)
-    // Header lines sit at the file head: read them straight from the
-    // first listed file only, instead of filtering the distributed scan.
-    def headOf(st: FileStatus): Seq[String] = {
-      val fs = st.getPath.getFileSystem(conf)
-      if (isBgzf) Bgzf.headLines(fs, st.getPath) else textHeadLines(fs, st.getPath, conf)
-    }
-    val headerLines = files.headOption.fold(Seq.empty[String])(headOf)
-    // every shard's sample columns are named by the first one's header;
-    // a headerless shard (as `VcfExport.exportSharded` writes after
-    // shard 0) inherits it
-    def chromLine(lines: Seq[String]) = lines.find(_.startsWith("#CHROM"))
-    val chrom = chromLine(headerLines)
-    files.drop(1).find(st => chromLine(headOf(st)).exists(c => !chrom.contains(c)))
-      .foreach { st =>
-        throw new IllegalArgumentException(
-          s"VCF shards disagree on their #CHROM line: ${st.getPath} " +
-            s"differs from ${files.head.getPath}; read them separately")
-      }
+    val (isBgzf, headerLines) = inputHeader(spark, path)
     val header = VcfHeader.parse(headerLines)
     val raw =
       if (isBgzf) {
@@ -110,6 +75,44 @@ object VcfReader {
           .load(path).select("value").as[String]
       } else spark.read.textFile(path)
     VcfDataset(parse(body(raw), header), header)
+  }
+
+  /** Whether the input under `path` is BGZF, and its header, for
+    * [[read]] and [[readRegions]] alike. EVERY file is sniffed: a BGZF
+    * and plain-text mix fails here, where one codec path would throw
+    * mid-scan or decode garbage. The header is read from the first file
+    * only, straight from its head; every other shard's `#CHROM` line
+    * must match it (a headerless shard, as `VcfExport.exportSharded`
+    * writes after shard 0, inherits it).
+    */
+  private def inputHeader(spark: SparkSession, path: String): (Boolean, Seq[String]) = {
+    val conf = spark.sessionState.newHadoopConf()
+    val files = BgzfTextSource.listFiles(path, conf)
+    val sniffed = files.map(st =>
+      st.getPath -> Bgzf.isBgzfFile(st.getPath.getFileSystem(conf), st.getPath))
+    if (sniffed.exists(_._2) && !sniffed.forall(_._2)) {
+      val (bgzf, plain) = sniffed.partition(_._2)
+      throw new IllegalArgumentException(
+        s"mixed-compression VCF input under $path: BGZF files " +
+          s"(${bgzf.map(_._1.getName).take(3).mkString(", ")}...) alongside " +
+          s"non-BGZF files (${plain.map(_._1.getName).take(3).mkString(", ")}...)" +
+          "; read them separately or re-bgzip the plain shards")
+    }
+    val isBgzf = sniffed.nonEmpty && sniffed.forall(_._2)
+    def headOf(st: FileStatus): Seq[String] = {
+      val fs = st.getPath.getFileSystem(conf)
+      if (isBgzf) Bgzf.headLines(fs, st.getPath) else textHeadLines(fs, st.getPath, conf)
+    }
+    val headerLines = files.headOption.fold(Seq.empty[String])(headOf)
+    def chromLine(lines: Seq[String]) = lines.find(_.startsWith("#CHROM"))
+    val chrom = chromLine(headerLines)
+    files.drop(1).find(st => chromLine(headOf(st)).exists(c => !chrom.contains(c)))
+      .foreach { st =>
+        throw new IllegalArgumentException(
+          s"VCF shards disagree on their #CHROM line: ${st.getPath} " +
+            s"differs from ${files.head.getPath}; read them separately")
+      }
+    (isBgzf, headerLines)
   }
 
   /** The leading `#` lines of a plain-text (or plain gzip, by the same
@@ -159,19 +162,14 @@ object VcfReader {
       indexPath: Option[String] = None): VcfDataset = {
     import spark.implicits._
     require(regions.nonEmpty, "need at least one region")
-    val conf = spark.sessionState.newHadoopConf()
-    val first = BgzfTextSource.listFiles(path, conf).headOption.getOrElse(
-      throw new IllegalArgumentException(s"no input files under $path"))
-    require(Bgzf.isBgzfFile(first.getPath.getFileSystem(conf), first.getPath),
-      s"range reads need a BGZF (bgzip) file; $path is not one")
+    val (isBgzf, headerLines) = inputHeader(spark, path)
+    require(isBgzf, s"range reads need BGZF (bgzip) input; $path is not")
     val reader = spark.read.format("bgzf-text")
       .option("region",
         regions.map { case (c, b, e) => s"$c:$b-$e" }.mkString(";"))
     val withIdx = indexPath.fold(reader)(p => reader.option("index", p))
     val raw = splitSize.fold(withIdx)(s => withIdx.option("splitSize", s))
       .load(path).select("value").as[String]
-    val headerLines = Bgzf.headLines(
-      first.getPath.getFileSystem(conf), first.getPath)
     val header = VcfHeader.parse(headerLines)
     // tabix overlap semantics: record interval [pos, pos+len(ref)-1]
     // intersects any requested region

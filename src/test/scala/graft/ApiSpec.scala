@@ -37,53 +37,62 @@ class ApiSpec extends SparkSpec {
     assert(VcfApi.filterByGeneIndexed(idx, tables.info, "NOPE").count() == 0)
   }
 
-  test("filterByGeneIndexed giant gene: semi-join fallback, no IN-list in plan") {
-    // a gene with >1k variant ids must NOT plan as an IN-list predicate
-    // (100k-node expression trees are a planning-time killer at genome
-    // scale) — it takes the broadcast left-semi path and stays ≡ to the
-    // join-based filterByGene
+  /** The one shape of every id lookup's plan: no join, a pushed
+    * `In(variant_id, …)` scan filter, and no scan at all for no ids.
+    */
+  private def assertIdScan(df: org.apache.spark.sql.DataFrame, empty: Boolean, what: String): Unit = {
+    val plan = df.queryExecution.executedPlan.toString
+    assert(!plan.contains("LeftSemi") && !plan.contains("BroadcastExchange"),
+      s"$what: the id filter must not join:\n$plan")
+    if (empty) assert(!plan.contains("FileScan"), s"$what: no ids must scan nothing:\n$plan")
+    else assert(plan.contains("In(variant_id"), s"$what: the ids must reach the scan:\n$plan")
+  }
+
+  test("filterByGeneIndexed giant gene: one pushed INSET predicate in both index forms") {
+    // a 1,500-id gene plans the same single id predicate as a small
+    // one, from the driver map and from the spilled index alike, and
+    // stays ≡ to the join-based filterByGene
     val n = 2500
     val impact = (1 to n)
       .map(i => (i.toLong, if (i <= 1500) "BIG" else s"G${i % 7}"))
       .toDF("variant_id", "symbol")
-    val info = (1 to n).map(i => (i.toLong, (i % 100) / 100.0))
-      .toDF("variant_id", "af")
-    val idx = VcfApi.buildGeneIndex(impact)
-    assert(idx.ids("BIG").length == 1500)
-    val indexed = VcfApi.filterByGeneIndexed(idx, info, "BIG", afMax = 0.5)
-    val plan = indexed.queryExecution.executedPlan.toString
-    assert(plan.contains("LeftSemi"), s"expected semi-join fallback:\n$plan")
-    assert(!plan.contains("INSET") && !plan.contains(" IN ("),
-      s"giant gene must not plan an IN-list:\n$plan")
-    val a = VcfApi.filterByGene(impact, info, "BIG", afMax = 0.5)
-      .select("variant_id").as[Long].collect().sorted.toSeq
-    val b = indexed.select("variant_id").as[Long].collect().sorted.toSeq
-    assert(a == b && b.nonEmpty)
-    // small gene keeps the IN-list point-lookup path (no join stages)
-    val small = VcfApi.filterByGeneIndexed(idx, info, "G3", afMax = 0.5)
-    assert(!small.queryExecution.executedPlan.toString.contains("LeftSemi"))
+    val dir = java.nio.file.Files.createTempDirectory("geneidx")
+    (1 to n).map(i => (i.toLong, (i % 100) / 100.0)).toDF("variant_id", "af")
+      .write.parquet(s"$dir/info")
+    val info = spark.read.parquet(s"$dir/info")
+    val spilled = VcfApi.buildGeneIndex(impact, maxDriverIds = 100L)
+    for (idx <- Seq(VcfApi.buildGeneIndex(impact), spilled)) {
+      val form = if (idx.spill.isDefined) "spilled" else "driver"
+      assert(idx.idsOf("BIG").length == 1500, form)
+      for ((g, afMax) <- Seq("BIG" -> 0.5, "G3" -> 0.5, "BIG" -> 0.0, "NOPE" -> 0.5)) {
+        val indexed = VcfApi.filterByGeneIndexed(idx, info, g, afMax)
+        val a = VcfApi.filterByGene(impact, info, g, afMax)
+          .select("variant_id").as[Long].collect().sorted.toSeq
+        val b = indexed.select("variant_id").as[Long].collect().sorted.toSeq
+        assert(a == b, s"$form $g $afMax")
+        assert(b.nonEmpty == (g != "NOPE" && afMax > 0), s"$form $g $afMax")
+        assertIdScan(indexed, empty = g == "NOPE", s"$form $g $afMax")
+      }
+    }
+    spilled.spill.foreach(_.unpersist(false))
   }
 
-  test("pullByIds above 1k ids: semi-join fallback, no IN-list in plan") {
-    // same id-set switch as the giant-gene lookup, on the genotype side:
-    // >1k ids take the broadcast left-semi path and return every
-    // requested variant's genotype rows
-    val geno = (1 to 3000).flatMap(i => Seq("S1", "S2").map(s => (i.toLong, s, 1)))
-      .toDF("variant_id", "sample", "gt")
-    val ids = (1 to 3000 by 2).map(_.toLong)
-    assert(ids.size > 1000)
-    val pulled = VcfApi.pullByIds(geno, ids)
-    val plan = pulled.queryExecution.executedPlan.toString
-    assert(plan.contains("LeftSemi"), s"expected semi-join fallback:\n$plan")
-    assert(!plan.contains("INSET") && !plan.contains(" IN ("),
-      s"large id set must not plan an IN-list:\n$plan")
-    val got = pulled.select("variant_id").as[Long].collect()
-    assert(got.length == 2 * ids.size)
-    assert(got.toSet == ids.toSet)
-    // exactly 1k ids keeps the IN-list path
-    val small = VcfApi.pullByIds(geno, ids.take(1000))
-    assert(!small.queryExecution.executedPlan.toString.contains("LeftSemi"))
-    assert(small.count() == 2000)
+  test("pullByIds: one pushed INSET predicate at every id count") {
+    // 0 to 3,000 ids (all of them) return exactly the requested
+    // variants' genotype rows through the same single id predicate
+    val dir = java.nio.file.Files.createTempDirectory("pullids")
+    (1 to 3000).flatMap(i => Seq("S1", "S2").map(s => (i.toLong, s, 1)))
+      .toDF("variant_id", "sample", "gt").write.parquet(s"$dir/geno")
+    val geno = spark.read.parquet(s"$dir/geno")
+    for (n <- Seq(0, 1, 5, 50, 1000, 1001, 3000)) {
+      // 7 is coprime to 3000: n distinct ids spread over the table
+      val ids = (0 until n).map(i => (i * 7L) % 3000 + 1)
+      val pulled = VcfApi.pullByIds(geno, ids)
+      val got = pulled.select("variant_id", "sample").as[(Long, String)].collect().sorted.toSeq
+      assert(got == ids.sorted.flatMap(i => Seq((i, "S1"), (i, "S2"))), s"$n ids")
+      assertIdScan(pulled, empty = n == 0, s"$n ids")
+    }
+    assert(VcfApi.pullByIds(geno, Nil).schema == geno.schema)
   }
 
   test("buildGeneIndex spills to a DataFrame-backed index above the driver cap") {

@@ -180,4 +180,19 @@ class BgzfSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("mixed-compression"))
   }
+
+  test("headLines: a header past the byte cap fails naming the file and the cap") {
+    val (meta, rest) = ToyVcf.lines.partition(_.startsWith("##"))
+    val big = meta ++ (0 until 100).map(i => s"##contig=<ID=c$i,length=${1000 + i}>") ++ rest
+    val f = tmpFile(big, blockData = 256)
+    val path = new org.apache.hadoop.fs.Path(f)
+    val fs = path.getFileSystem(new org.apache.hadoop.conf.Configuration())
+    val header = big.takeWhile(_.startsWith("#"))
+    assert(header.mkString("\n").length > 2048)
+    val e = intercept[IllegalArgumentException](Bgzf.headLines(fs, path, maxBytes = 2048))
+    assert(e.getMessage.contains(f) && e.getMessage.contains("2048 bytes"), e.getMessage)
+    // under a cap the header fits, it is returned whole, #CHROM included
+    assert(Bgzf.headLines(fs, path, maxBytes = 64 << 10) == header)
+    assert(Bgzf.headLines(fs, path) == header)
+  }
 }

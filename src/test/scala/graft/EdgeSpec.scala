@@ -207,6 +207,27 @@ class EdgeSpec extends SparkSpec {
     assert(VcfReader.read(spark, dir.toString).df.count() == 12)
   }
 
+  test("tabix-indexed BGZF shards with different #CHROM lines fail readRange, both named") {
+    val dir = Files.createTempDirectory("vcfrangeshards")
+    def put(name: String, lines: Seq[String]): Unit = {
+      val f = dir.resolve(name).toString
+      Bgzf.writeLocalFile(f, lines)
+      val p = new org.apache.hadoop.fs.Path(f)
+      Tabix.build(p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+    }
+    put("part0.vcf.gz", ToyVcf.lines)
+    put("part1.vcf.gz",
+      ToyVcf.lines.map(l => if (l.startsWith("#CHROM")) l.replace("\tS2", "\tS3") else l))
+    val shards = dir.resolve("*.vcf.gz").toString
+    val e = intercept[IllegalArgumentException](
+      VcfReader.readRange(spark, shards, "1", 1L, 1000L))
+    assert(e.getMessage.contains("part0.vcf.gz") && e.getMessage.contains("part1.vcf.gz"),
+      e.getMessage)
+    // equal #CHROM lines: one region read over both shards
+    put("part1.vcf.gz", ToyVcf.lines)
+    assert(VcfReader.readRange(spark, shards, "1", 1L, 1000L).df.count() == 6)
+  }
+
   test("a plain-text shard directory reads its first shard's header once") {
     val dir = Files.createTempDirectory("vcfplain")
     def put(name: String, lines: Seq[String]): String = {

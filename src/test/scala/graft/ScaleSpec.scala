@@ -184,6 +184,42 @@ class ScaleSpec extends SparkSpec {
     }
   }
 
+  test("lookup point queries compile nothing once warm: new ids or genes reuse the code") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val dir = java.nio.file.Files.createTempDirectory("graft_codegen_pin")
+    val n = 3000
+    (1 to n).flatMap(i => Seq("S1", "S2").map(s => (i.toLong, s, i % 3)))
+      .toDF("variant_id", "sample", "gt").write.parquet(s"$dir/geno")
+    (1 to n).map(i => (i.toLong, (i % 100) / 1000.0))
+      .toDF("variant_id", "af").write.parquet(s"$dir/info")
+    // genes of 5, 6 and 7 ids (`isin` inlines up to 10 literals into
+    // the generated code), the rest in one large gene
+    val impact = (1 to n).map(i => (i.toLong,
+      if (i <= 5) "A5" else if (i <= 11) "B6" else if (i <= 18) "C7" else "BIG"))
+      .toDF("variant_id", "symbol")
+    val geno = spark.read.parquet(s"$dir/geno")
+    val info = spark.read.parquet(s"$dir/info")
+    val idx = VcfApi.buildGeneIndex(impact)
+    def ids(k: Int, from: Long) = (0 until k).map(i => from + 2L * i)
+    // per lookup kind: one warm-up call, then fresh arguments that must
+    // add no compile (a `region` kind joins this table once its reads
+    // compile nothing)
+    val kinds: Seq[(String, () => Any, Seq[() => Any])] = Seq(
+      ("id_pull", () => VcfApi.pullByIds(geno, ids(3, 100)).collect(),
+        Seq(1, 5, 7, 50, 1500).map(k => () => VcfApi.pullByIds(geno, ids(k, 1)).collect())),
+      ("gene_filter", () => VcfApi.filterByGeneIndexed(idx, info, "C7", 0.05).collect(),
+        Seq("A5", "B6").map(g => () => VcfApi.filterByGeneIndexed(idx, info, g, 0.05).collect())),
+      ("gene_pull", () => VcfApi.pullByGene(impact, info, geno, "C7", 0.05).collect(),
+        Seq("A5", "B6").map(g => () => VcfApi.pullByGene(impact, info, geno, g, 0.05).collect())))
+    for ((kind, warmUp, calls) <- kinds) {
+      warmUp()
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      calls.foreach(_())
+      assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == before,
+        s"$kind: a fresh call compiled ${CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before} classes")
+    }
+  }
+
   test("sampleToTokenBudget never windows over a bare group (skew-immune plan)") {
     // one giant group next to small ones: the correctness is covered by
     // the OperatorsSpec equivalence test; here we pin the PLAN — every

@@ -250,9 +250,27 @@ class VcfSpec extends SparkSpec {
   }
 
   test("pullByGene composes filter and genotype fetch") {
-    val g = VcfApi.pullByGene(tables.impact.get, tables.info, tables.geno,
-      "GENE1", afMax = 0.6)
+    val impact = tables.impact.get
+    val g = VcfApi.pullByGene(impact, tables.info, tables.geno, "GENE1", afMax = 0.6)
     assert(g.count() == 4) // variants 1,2 × 2 samples
+    // ≡ pullByIds over the gene filter's ids: every toy gene, an unknown
+    // gene, and an afMax under which GENE1 (AF 0.25, 0.5) keeps no id
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    for ((sym, afMax) <- Seq("GENE1" -> 0.6, "GENE2" -> 0.6, "GENE3" -> 0.8,
+        "NOPE" -> 0.6, "GENE1" -> 0.1)) {
+      val ids = VcfApi.filterByGene(impact, tables.info, sym, afMax)
+        .select("variant_id").as[Long].collect().toSeq
+      val pulled = VcfApi.pullByGene(impact, tables.info, tables.geno, sym, afMax)
+      assert(rows(pulled) == rows(VcfApi.pullByIds(tables.geno, ids)), s"$sym $afMax")
+      assert(ids.isEmpty == (sym == "NOPE" || afMax < 0.25), s"$sym $afMax")
+      if (ids.isEmpty) {
+        // the empty pull keeps geno's schema and plans no scan
+        assert(pulled.schema == tables.geno.schema)
+        val plan = pulled.queryExecution.executedPlan
+        assert(plan.collectLeaves().forall(
+          _.isInstanceOf[org.apache.spark.sql.execution.LocalTableScanExec]), plan.toString)
+      }
+    }
   }
 
   test("burdenReport over a built store equals a countDistinct oracle; geno is keyed on (variant_id, sample)") {
