@@ -1,7 +1,8 @@
 package graft.vcf
 
 import java.io.{ByteArrayOutputStream, EOFException, IOException, InputStream, OutputStream}
-import java.util.zip.{CRC32, Deflater, Inflater}
+import java.nio.charset.StandardCharsets
+import java.util.zip.{CRC32, Deflater, GZIPInputStream, Inflater}
 
 import org.apache.hadoop.fs.{FSDataInputStream, FileSystem, Path}
 
@@ -19,9 +20,10 @@ import org.apache.hadoop.fs.{FSDataInputStream, FileSystem, Path}
   * on plain gzip).
   *
   * This object holds the block-level codec (writer for fixtures and
-  * exports, header sync, block inflate) plus [[BgzfSplitLineIterator]],
-  * the split-semantics line reader used by [[BgzfTextSource]]'s
-  * DataSource V2 partitions.
+  * exports, header sync, block inflate). [[BgzfSplitLineIterator]], the
+  * split-semantics line reader behind [[BgzfTextSource]]'s DataSource V2
+  * partitions, reads BGZF through it, and plain text and plain gzip
+  * beside it.
   */
 object Bgzf {
 
@@ -142,51 +144,26 @@ object Bgzf {
     -1
   }
 
-  /** True if the file at `path` begins with a valid BGZF block. */
-  def isBgzfFile(fs: FileSystem, path: Path): Boolean = {
-    val in = fs.open(path)
-    try {
-      val buf = new Array[Byte](HeaderLen)
-      var n = 0
-      while (n < buf.length) {
-        val r = in.read(buf, n, buf.length - n)
-        if (r < 0) return false
-        n += r
-      }
-      headerBlockSize(buf, 0, buf.length) > 0
-    } finally in.close()
-  }
-
-  private def readFully(in: InputStream, buf: Array[Byte], off: Int, len: Int): Unit = {
-    var n = 0
-    while (n < len) {
-      val r = in.read(buf, off + n, len - n)
-      if (r < 0) throw new EOFException("truncated BGZF block")
-      n += r
-    }
-  }
+  private def readFully(in: InputStream, buf: Array[Byte], off: Int, len: Int): Unit =
+    if (in.readNBytes(buf, off, len) < len) throw new EOFException("truncated BGZF block")
 
   /** Read + inflate one block from a stream positioned at a block
     * boundary. Returns (decompressed bytes, compressed block size), or
     * None at a clean EOF.
     */
   def readBlock(in: InputStream): Option[(Array[Byte], Int)] = {
-    val head = new Array[Byte](12)
-    val first = in.read()
-    if (first < 0) return None // clean EOF
-    head(0) = first.toByte
-    readFully(in, head, 1, 11)
+    val head = in.readNBytes(12)
+    if (head.isEmpty) return None // clean EOF
+    if (head.length < 12) throw new EOFException("truncated BGZF block")
     if (head(0) != 0x1f.toByte || head(1) != 0x8b.toByte || head(2) != 8.toByte ||
       (head(3) & 4) != 4)
       throw new IOException("stream not at a BGZF block boundary")
     val xlen = u16(head, 10)
-    val block = new Array[Byte](12 + xlen)
-    System.arraycopy(head, 0, block, 0, 12)
+    val block = java.util.Arrays.copyOf(head, 12 + xlen)
     readFully(in, block, 12, xlen)
     val bsize = headerBlockSize(block, 0, block.length)
     if (bsize < 0) throw new IOException("BGZF header lacks a BC subfield")
-    val full = new Array[Byte](bsize)
-    System.arraycopy(block, 0, full, 0, block.length)
+    val full = java.util.Arrays.copyOf(block, bsize)
     readFully(in, full, block.length, bsize - block.length)
     Some((inflateBlock(full, 0, bsize), bsize))
   }
@@ -253,163 +230,190 @@ object Bgzf {
     throw new IOException(
       s"no BGZF block boundary within ${MaxBlockSize + HeaderLen} bytes of offset $start")
   }
+}
 
-  /** Driver-side header fetch: decompress leading blocks and return the
-    * `#`-prefixed header lines (headers sit at the start of the file; a
-    * 16 MiB cap bounds the driver read far beyond any real header, and
-    * reaching it before a complete data line or EOF fails, naming the
-    * file, rather than return a header cut short).
-    */
-  def headLines(fs: FileSystem, path: Path, maxBytes: Int = 16 << 20): Seq[String] = {
+/** An input file's framing, sniffed from its first bytes (never from its
+  * name): BGZF blocks, one plain (non-block) gzip stream, or plain text.
+  */
+sealed trait InputKind extends Serializable
+
+object InputKind {
+  case object Bgzf extends InputKind
+  case object Gzip extends InputKind
+  case object Plain extends InputKind
+
+  def of(fs: FileSystem, path: Path): InputKind = {
     val in = fs.open(path)
-    try {
-      val acc = new ByteArrayOutputStream(64 << 10)
-      var stop = false
-      while (!stop) {
-        if (acc.size >= maxBytes)
-          throw new IllegalArgumentException(
-            s"VCF header of $path exceeds $maxBytes bytes with no data line or end of file")
-        readBlock(in) match {
-          case Some((data, _)) =>
-            acc.write(data)
-            // stop once a complete non-# line exists in the buffer
-            val s = acc.toString("UTF-8")
-            val lastNl = s.lastIndexOf('\n')
-            if (lastNl >= 0 &&
-              s.substring(0, lastNl).linesIterator.exists(l => !l.startsWith("#")))
-              stop = true
-          case None => stop = true
-        }
-      }
-      acc.toString("UTF-8").linesIterator.takeWhile(_.startsWith("#")).toSeq
-    } finally in.close()
+    val head = try in.readNBytes(graft.vcf.Bgzf.HeaderLen) finally in.close()
+    if (graft.vcf.Bgzf.headerBlockSize(head, 0, head.length) > 0) Bgzf
+    else if (head.length >= 2 && head(0) == 0x1f.toByte && head(1) == 0x8b.toByte) Gzip
+    else Plain
   }
 }
 
-/** Complete text lines for the byte split `[start, end)` of a BGZF file,
-  * with Hadoop-text-split semantics adapted to block granularity:
-  *
-  *   - a split owns the blocks whose compressed offset lies in
-  *     `[start, end)`; the reader syncs to the first owned block;
-  *   - a split with `start > 0` discards bytes up to and including the
-  *     first `\n` (that prefix belongs to the previous split);
-  *   - a line begun in an owned block is completed by reading past `end`
-  *     into non-owned blocks;
-  *   - if the owned region ends exactly on a line terminator, the split
-  *     additionally emits ONE line starting at the first non-owned byte
-  *     (mirroring the unconditional discard done by the next split).
-  *
-  * Together these assign every line of the file to exactly one split.
-  *
-  * Two extensions support tabix-indexed region reads ([[Tabix]]):
-  *
-  *   - `uStart >= 0`: `start` is known to be an exact block boundary and
-  *     reading begins `uStart` uncompressed bytes into that block (a
-  *     tabix virtual offset) with NO first-line discard — the offset
-  *     points at a record start, not mid-line;
-  *   - `vEnd`: virtual-offset cap — no line may START at or after
-  *     `(blockOffset << 16) | inBlockOffset >= vEnd` (a chunk's
-  *     `cnk_end`). Lines that start before the cap still complete.
+/** One split's decompressed bytes, a chunk at a time: `bytes[from, len)`,
+  * `owned` if it starts inside the split. `pos(i)` is the input position
+  * of `bytes(i)`; `pos(len)` the one just past the chunk, and, once
+  * `fill` returns false, `pos(0)` the end of the input.
   */
-final class BgzfSplitLineIterator(
-    in: FSDataInputStream, start: Long, end: Long, fileLen: Long,
-    uStart: Int = -1, vEnd: Long = Long.MaxValue)
-  extends Iterator[String] with java.io.Closeable {
+private[vcf] abstract class LineChunks(in: java.io.Closeable) extends java.io.Closeable {
+  var bytes: Array[Byte] = Array.emptyByteArray
+  var from = 0
+  var len = 0
+  var owned = true
+  def fill(): Boolean
+  def pos(i: Int): Long
+  override def close(): Unit = in.close()
+}
 
-  private var done = false
-  private var pending: String = _
-  private var skipping = start > 0 && uStart < 0 // discard up to the first '\n'
-  private var pendingUSkip = uStart
-
-  private var chunk: Array[Byte] = Array.emptyByteArray
-  private var cOff = 0
-  private var chunkOwned = true
-  private var firstNonOwnedChunk = false // `chunk` is the first block past `end`
-  private var extraUsed = false
-  private var curBlockStart = 0L // compressed offset of the block in `chunk`
-
-  private val line = new ByteArrayOutputStream(256)
-  private var lineOpen = false
-
-  private var nextBlockStart: Long = {
-    val s =
-      if (start == 0L || uStart >= 0) start // uStart ⇒ exact boundary, no sync
-      else Bgzf.sync(in, start, fileLen)
-    if (s < 0 || s >= end) done = true else in.seek(s)
-    s
+/** BGZF blocks, owned when their compressed offset is in `[start, end)`;
+  * positions are virtual offsets. Reading syncs to the first block from
+  * `start` on, unless `uStart >= 0` marks `start` as a block boundary to
+  * read from `uStart` on (a tabix chunk's start).
+  */
+private final class BgzfChunks(in: FSDataInputStream, start: Long, end: Long,
+    fileLen: Long, uStart: Int) extends LineChunks(in) {
+  private var blockStart = 0L
+  private var skip = uStart
+  private var next: Long = {
+    val s = if (start == 0L || uStart >= 0) start else Bgzf.sync(in, start, fileLen)
+    if (s < 0 || s >= end) fileLen // no block starts in the split
+    else { in.seek(s); s }
   }
 
-  /** Read the next non-empty block into `chunk`; false at EOF. */
-  private def fillChunk(): Boolean = {
-    while (true) {
-      if (nextBlockStart >= fileLen) return false
-      val owned = nextBlockStart < end
-      val blockStart = nextBlockStart
+  override def fill(): Boolean = {
+    while (next < fileLen) {
+      blockStart = next
       Bgzf.readBlock(in) match {
-        case None => return false
+        case None => next = fileLen
         case Some((data, csize)) =>
-          nextBlockStart += csize
+          next += csize
           if (data.length > 0) {
-            firstNonOwnedChunk = !owned && chunkOwned
-            chunkOwned = owned
-            chunk = data
-            curBlockStart = blockStart
-            cOff =
-              if (pendingUSkip >= 0) math.min(pendingUSkip, data.length) else 0
-            pendingUSkip = -1
+            bytes = data
+            len = data.length
+            owned = blockStart < end
+            from = if (skip >= 0) math.min(skip, len) else 0
+            skip = -1
             return true
           }
       }
     }
-    false // unreachable
+    len = 0
+    false
   }
 
-  private def takeLine(): String = {
-    val b = line.toByteArray
+  override def pos(i: Int): Long = if (i < len) (blockStart << 16) | i else next << 16
+}
+
+/** A byte stream in windows that never cross `end`: plain text from
+  * `start` (byte offsets), or one gzip stream (decompressed offsets).
+  */
+private final class StreamChunks(in: InputStream, start: Long, end: Long)
+    extends LineChunks(in) {
+  bytes = new Array[Byte](64 << 10)
+  private var base = start
+
+  override def fill(): Boolean = {
+    base += len
+    owned = base < end
+    val want = if (owned) math.min(bytes.length.toLong, end - base).toInt else bytes.length
+    len = math.max(in.read(bytes, 0, want), 0)
+    len > 0
+  }
+
+  override def pos(i: Int): Long = base + i
+}
+
+/** Complete text lines of one input split, each with its position: the
+  * one place where input bytes become lines ([[BgzfTextSource]] splits,
+  * VCF headers, [[Tabix.build]]). Hadoop-text-split semantics over the
+  * split's [[LineChunks]]: a split owns the chunks that start in
+  * `[start, end)`; with `skipFirst` (a split starting mid-file, not at a
+  * known record) it discards up to and including the first `\n`; a line
+  * begun in an owned chunk completes past `end`; and if the owned chunks
+  * end exactly on a `\n`, the split also emits the ONE line starting at
+  * the first non-owned byte, which the next split discards. So every line
+  * belongs to exactly one split. No line may START at or after `vEnd` (a
+  * tabix chunk's `cnk_end`). After `maxBytes` decompressed bytes the
+  * iterator stops, `capped`, instead of buffering further.
+  *
+  * Lines are UTF-8 bytes without their `\n` or `\r\n`. Until the next
+  * `hasNext`, `lineStart` and `lineEnd` are the positions of the returned
+  * line's first byte (the BGZF virtual offset, the byte offset, or the
+  * decompressed gzip offset) and of the byte after its terminator.
+  */
+final class BgzfSplitLineIterator private[vcf] (chunks: LineChunks, skipFirst: Boolean,
+    vEnd: Long = Long.MaxValue, maxBytes: Long = Long.MaxValue)
+  extends Iterator[Array[Byte]] with java.io.Closeable {
+
+  private var done = false
+  private var pending: Array[Byte] = _
+  private var skipping = skipFirst
+  private var cOff = 0
+  private var stop = 0 // the chunk's end, or where the byte budget ends in it
+  private var firstNonOwned = false // the chunk is the first one past `end`
+  private var extraUsed = false
+  private var consumed = 0L
+  private val line = new ByteArrayOutputStream(256)
+  private var lineOpen = false
+  private var openAt = 0L
+
+  private[vcf] var lineStart, lineEnd = -1L
+  private[vcf] var capped = false
+
+  private def fill(): Boolean = {
+    if (consumed >= maxBytes) { capped = true; return false }
+    val wasOwned = chunks.owned
+    if (!chunks.fill()) return false
+    firstNonOwned = wasOwned && !chunks.owned
+    cOff = chunks.from
+    stop = chunks.from + math.min(chunks.len - chunks.from, maxBytes - consumed).toInt
+    consumed += stop - cOff
+    true
+  }
+
+  /** Close the open line with `b[from, to)`, less a trailing `\r`. */
+  private def take(b: Array[Byte], from: Int, to: Int, past: Long): Unit = {
+    line.write(b, from, to - from)
+    val all = line.toByteArray
     line.reset()
-    val n = if (b.nonEmpty && b(b.length - 1) == '\r'.toByte) b.length - 1 else b.length
-    new String(b, 0, n, "UTF-8")
+    val n = all.length
+    pending = if (n > 0 && all(n - 1) == '\r') java.util.Arrays.copyOf(all, n - 1) else all
+    lineStart = openAt
+    lineEnd = past
+    lineOpen = false
   }
 
   private def advance(): Unit = {
     while (pending == null && !done) {
-      if (cOff >= chunk.length) {
-        if (!fillChunk()) { // EOF: flush a final unterminated line
-          if (lineOpen && !skipping) pending = takeLine()
+      if (cOff >= stop && !fill()) {
+        // end of input: flush a final unterminated line, unless the byte
+        // budget cut it short
+        if (lineOpen && !skipping && !capped) take(chunks.bytes, 0, 0, chunks.pos(0))
+        done = true
+        return
+      }
+      if (!lineOpen && !skipping) {
+        // a line starts at bytes(cOff): the vEnd cap comes first (a tabix
+        // chunk ends at an exact record boundary, so the extra-line rule
+        // never applies past it), then whether this split emits it
+        val at = chunks.pos(cOff)
+        if (at >= vEnd || !(chunks.owned || (firstNonOwned && cOff == 0 && !extraUsed))) {
           done = true
           return
         }
-      }
-      if (!lineOpen && !skipping) {
-        // a new line starts at chunk(cOff): the virtual cap is checked
-        // first (a tabix chunk ends at an exact record boundary — the
-        // extra-line rule never applies past it) ...
-        if (((curBlockStart << 16) | cOff.toLong) >= vEnd) { done = true; return }
-        // ... then decide whether this split emits it
-        val emits = chunkOwned ||
-          (firstNonOwnedChunk && cOff == 0 && !extraUsed)
-        if (!emits) { done = true; return }
-        if (!chunkOwned) extraUsed = true
+        if (!chunks.owned) extraUsed = true
         lineOpen = true
+        openAt = at
       }
-      var nl = -1
+      val b = chunks.bytes
       var i = cOff
-      while (nl < 0 && i < chunk.length) {
-        if (chunk(i) == '\n'.toByte) nl = i
-        i += 1
-      }
-      if (nl < 0) {
-        if (!skipping) line.write(chunk, cOff, chunk.length - cOff)
-        cOff = chunk.length
-      } else if (skipping) {
-        skipping = false
-        cOff = nl + 1
-      } else {
-        line.write(chunk, cOff, nl - cOff)
-        pending = takeLine()
-        lineOpen = false
-        cOff = nl + 1
-      }
+      while (i < stop && b(i) != '\n') i += 1
+      if (i == stop) {
+        if (!skipping) line.write(b, cOff, stop - cOff)
+      } else if (skipping) skipping = false
+      else take(b, cOff, i, chunks.pos(i + 1))
+      cOff = math.min(i + 1, stop)
     }
   }
 
@@ -418,12 +422,53 @@ final class BgzfSplitLineIterator(
     pending != null
   }
 
-  override def next(): String = {
+  override def next(): Array[Byte] = {
     if (!hasNext) throw new NoSuchElementException("end of split")
     val r = pending
     pending = null
     r
   }
 
-  override def close(): Unit = in.close()
+  override def close(): Unit = chunks.close()
+}
+
+object BgzfSplitLineIterator {
+
+  /** The lines of split `[start, end)` of `path`, read as `kind`; `uStart`
+    * and `vEnd` bound a BGZF tabix chunk. Plain gzip is one split.
+    */
+  def open(fs: FileSystem, path: Path, kind: InputKind, start: Long, end: Long,
+      fileLen: Long, uStart: Int = -1, vEnd: Long = Long.MaxValue,
+      maxBytes: Long = Long.MaxValue): BgzfSplitLineIterator = {
+    val in = fs.open(path)
+    try {
+      val chunks = kind match {
+        case InputKind.Bgzf => new BgzfChunks(in, start, end, fileLen, uStart)
+        case InputKind.Plain => in.seek(start); new StreamChunks(in, start, end)
+        case InputKind.Gzip =>
+          require(start == 0L, s"plain gzip $path cannot be split")
+          new StreamChunks(new GZIPInputStream(in, 64 << 10), 0L, Long.MaxValue)
+      }
+      new BgzfSplitLineIterator(chunks, start > 0 && uStart < 0, vEnd, maxBytes)
+    } catch { case e: Throwable => in.close(); throw e }
+  }
+
+  /** A VCF file's header: its leading `#` lines. `maxBytes` bounds the
+    * driver read far beyond any real header; reaching it before a
+    * complete data line or the end of the file fails, naming the file,
+    * rather than return a header cut short.
+    */
+  def headLines(fs: FileSystem, path: Path, kind: InputKind,
+      maxBytes: Long = 16L << 20): Seq[String] = {
+    val len = fs.getFileStatus(path).getLen
+    val lines = open(fs, path, kind, 0L, len, len, maxBytes = maxBytes)
+    try {
+      val head = lines.takeWhile(l => l.nonEmpty && l(0) == '#')
+        .map(new String(_, StandardCharsets.UTF_8)).toVector
+      if (lines.capped)
+        throw new IllegalArgumentException(
+          s"VCF header of $path exceeds $maxBytes bytes with no data line or end of file")
+      head
+    } finally lines.close()
+  }
 }

@@ -12,18 +12,21 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapabil
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources.DataSourceRegister
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-/** DataSource V2 `bgzf-text` format: reads bgzip-compressed text as one
-  * `value: string` row per line, SPLITTABLE — each input partition is a
-  * byte range of the compressed file, synced to BGZF block boundaries by
-  * [[BgzfSplitLineIterator]]. This is the Spark-native replacement for
-  * the reference's tabix-chunked VCF scan (`02-build-db.R:256`): instead
-  * of a driver loop over genomic chunks, Catalyst plans one scan whose
-  * partitions decompress independently, so a 100 GB `.vcf.gz` parses on
-  * every executor at once rather than in a single gzip task.
+/** DataSource V2 `bgzf-text` format: one `(value, file, offset)` row per
+  * line, SPLITTABLE, read by [[BgzfSplitLineIterator]]. `file` is the
+  * file's index in the sorted listing, `offset` the line's start in it:
+  * a total order on the input, whatever the split sizes. Each file's
+  * content picks its kind: BGZF splits by compressed byte range (offset:
+  * the virtual offset), plain text by byte range (the byte offset), and
+  * plain gzip is one split per file (the decompressed offset). This is
+  * the Spark-native replacement for the reference's tabix-chunked VCF
+  * scan (`02-build-db.R:256`): instead of a driver loop over genomic
+  * chunks, Catalyst plans one scan whose partitions decompress
+  * independently, so a 100 GB `.vcf.gz` parses on every executor at once.
   *
   *   spark.read.format("bgzf-text")
   *     .option("splitSize", 64 << 20)   // default: files.maxPartitionBytes
@@ -53,8 +56,10 @@ class BgzfTextSource extends TableProvider with DataSourceRegister {
 }
 
 object BgzfTextSource {
-  val Schema: StructType =
-    StructType(Seq(StructField("value", StringType, nullable = false)))
+  val Schema: StructType = StructType(Seq(
+    StructField("value", StringType, nullable = false),
+    StructField("file", IntegerType, nullable = false),
+    StructField("offset", LongType, nullable = false)))
 
   /** Spark encodes multi-path `.load(p1, p2)` as a JSON string array in
     * the "paths" option; decode with the same Jackson Spark uses.
@@ -81,7 +86,7 @@ object BgzfTextSource {
     }
   }
 
-  /** Non-hidden data files under a path/glob. */
+  /** Non-hidden data files under a path/glob (index files are not data). */
   def listFiles(path: String, conf: Configuration): Seq[FileStatus] = {
     val p = new Path(path)
     val fs = p.getFileSystem(conf)
@@ -91,7 +96,8 @@ object BgzfTextSource {
       }
       .filter { st =>
         val n = st.getPath.getName
-        st.isFile && st.getLen > 0 && !n.startsWith("_") && !n.startsWith(".")
+        st.isFile && st.getLen > 0 && !n.startsWith("_") && !n.startsWith(".") &&
+          !n.endsWith(".tbi") && !n.endsWith(".csi")
       }
       .sortBy(_.getPath.toString)
   }
@@ -107,15 +113,14 @@ private[vcf] class BgzfTextTable(paths: Seq[String], splitSize: Option[Long],
     util.EnumSet.of(TableCapability.BATCH_READ)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder {
-      override def build(): Scan = new BgzfTextScan(paths, splitSize, region, index)
-    }
+    new BgzfTextScan(paths, splitSize, region, index)
 }
 
 private[vcf] class BgzfTextScan(paths: Seq[String], splitSizeOpt: Option[Long],
     region: Option[String], index: Option[String])
-  extends Scan with Batch {
+  extends ScanBuilder with Scan with Batch {
 
+  override def build(): Scan = this
   override def readSchema(): StructType = BgzfTextSource.Schema
   override def toBatch: Batch = this
   override def description(): String =
@@ -124,19 +129,22 @@ private[vcf] class BgzfTextScan(paths: Seq[String], splitSizeOpt: Option[Long],
   override def planInputPartitions(): Array[InputPartition] = {
     val spark = SparkSession.active
     val conf = spark.sessionState.newHadoopConf()
-    // One partition per `splitSize` compressed bytes — the same knob
-    // parquet scans use, so executor-memory tuning carries over. A split
-    // smaller than one block is harmless: a split containing no block
-    // start syncs past its end and emits nothing.
+    // One partition per `splitSize` file bytes (compressed, for BGZF) —
+    // the same knob parquet scans use, so executor-memory tuning carries
+    // over — and one per plain gzip file. A BGZF split smaller than one
+    // block is harmless: a split containing no block start syncs past
+    // its end and emits nothing.
     val splitSize = splitSizeOpt.getOrElse(spark.sessionState.conf.filesMaxPartitionBytes)
     require(splitSize > 0, s"splitSize must be positive, got $splitSize")
-    val files = paths.flatMap(p => BgzfTextSource.listFiles(p, conf))
+    val files = paths.flatMap(p => BgzfTextSource.listFiles(p, conf)).zipWithIndex
+      .map { case (st, i) => (st, i, InputKind.of(st.getPath.getFileSystem(conf), st.getPath)) }
     region match {
       case None =>
-        files.flatMap { st =>
+        files.flatMap { case (st, i, kind) =>
           val len = st.getLen
-          (0L until len by splitSize).map { s =>
-            BgzfSplit(st.getPath.toString, s, math.min(s + splitSize, len), len)
+          val step = if (kind == InputKind.Gzip) len else splitSize
+          (0L until len by step).map { s =>
+            BgzfSplit(st.getPath.toString, i, kind, s, math.min(s + step, len), len)
           }
         }.toArray
       case Some(r) =>
@@ -153,7 +161,10 @@ private[vcf] class BgzfTextScan(paths: Seq[String], splitSizeOpt: Option[Long],
           throw new IllegalArgumentException(
             "explicit 'index' option requires a single input file; " +
               "multi-file region reads use per-file <file>.tbi indexes")
-        files.flatMap { st =>
+        files.flatMap { case (st, i, kind) =>
+          if (kind != InputKind.Bgzf)
+            throw new IllegalArgumentException(
+              s"region read requires BGZF (bgzip) input; ${st.getPath} is not")
           val fs = st.getPath.getFileSystem(conf)
           val tbi = index.map(new Path(_)).getOrElse(st.getPath.suffix(".tbi"))
           if (!fs.exists(tbi))
@@ -162,22 +173,15 @@ private[vcf] class BgzfTextScan(paths: Seq[String], splitSizeOpt: Option[Long],
                 "(build one with graft.vcf.Tabix.build)")
           val len = st.getLen
           val idx = Tabix.read(fs, tbi)
-          val all = regions.flatMap { case (chr, beg, end) => idx.query(chr, beg, end) }
-            .sortBy(_.beg)
-          val merged = scala.collection.mutable.ArrayBuffer.empty[Tabix.Chunk]
-          all.foreach { c =>
-            if (merged.nonEmpty && c.beg <= merged.last.end)
-              merged(merged.length - 1) =
-                Tabix.Chunk(merged.last.beg, math.max(c.end, merged.last.end))
-            else merged += c
-          }
-          merged.flatMap { c =>
+          Tabix.merge(regions.flatMap { case (chr, beg, end) =>
+            idx.query(chr, beg, end)
+          }).flatMap { c =>
             val cBeg = c.beg >>> 16
             val cOwnEnd = (c.end >>> 16) + 1 // block holding vEnd is owned
             val bounds = (cBeg until cOwnEnd by splitSize) :+ cOwnEnd
-            bounds.zip(bounds.tail).zipWithIndex.map { case ((s, e), i) =>
-              BgzfSplit(st.getPath.toString, s, e, len,
-                uStart = if (i == 0) (c.beg & 0xffff).toInt else -1,
+            bounds.zip(bounds.tail).zipWithIndex.map { case ((s, e), j) =>
+              BgzfSplit(st.getPath.toString, i, kind, s, e, len,
+                uStart = if (j == 0) (c.beg & 0xffff).toInt else -1,
                 vEnd = c.end)
             }
           }
@@ -193,8 +197,8 @@ private[vcf] class BgzfTextScan(paths: Seq[String], splitSizeOpt: Option[Long],
   }
 }
 
-private[vcf] case class BgzfSplit(path: String, start: Long, end: Long, fileLen: Long,
-    uStart: Int = -1, vEnd: Long = Long.MaxValue)
+private[vcf] case class BgzfSplit(path: String, file: Int, kind: InputKind,
+    start: Long, end: Long, fileLen: Long, uStart: Int = -1, vEnd: Long = Long.MaxValue)
   extends InputPartition
 
 private[vcf] class BgzfReaderFactory(confEntries: Array[(String, String)])
@@ -205,14 +209,14 @@ private[vcf] class BgzfReaderFactory(confEntries: Array[(String, String)])
     val conf = new Configuration(false)
     confEntries.foreach { case (k, v) => conf.set(k, v) }
     val p = new Path(sp.path)
-    val it = new BgzfSplitLineIterator(
-      p.getFileSystem(conf).open(p), sp.start, sp.end, sp.fileLen,
-      sp.uStart, sp.vEnd)
+    val it = BgzfSplitLineIterator.open(p.getFileSystem(conf), p, sp.kind,
+      sp.start, sp.end, sp.fileLen, sp.uStart, sp.vEnd)
     new PartitionReader[InternalRow] {
       private var row: InternalRow = _
-      override def next(): Boolean =
-        if (it.hasNext) { row = InternalRow(UTF8String.fromString(it.next())); true }
-        else false
+      override def next(): Boolean = it.hasNext && {
+        row = InternalRow(UTF8String.fromBytes(it.next()), sp.file, it.lineStart)
+        true
+      }
       override def get(): InternalRow = row
       override def close(): Unit = it.close()
     }

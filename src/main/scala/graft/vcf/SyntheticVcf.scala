@@ -1,6 +1,6 @@
 package graft.vcf
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 /** Deterministic synthetic VCF generator for benchmarks and scale
   * tests: body lines are generated distributed (`spark.range` → line
@@ -60,13 +60,13 @@ object SyntheticVcf {
       .mkString("\t")
   }
 
-  /** Distributed body + parsed VcfDataset. */
+  /** Distributed body + parsed VcfDataset; row i is offset i of `<synthetic>`. */
   def generate(spark: SparkSession, nVariants: Long, nSamples: Int,
       nGenes: Int = 200): VcfDataset = {
     import spark.implicits._
     val h = VcfHeader.parse(header(nSamples))
-    val body: Dataset[String] =
-      spark.range(nVariants).map(i => line(i, nSamples, nGenes))
-    VcfDataset(VcfReader.parse(body, h), h)
+    val body = spark.range(nVariants).map(i => (line(i, nSamples, nGenes), 0, i))
+      .toDF("value", "file", "offset")
+    VcfDataset(VcfReader.parse(body, h, Seq("<synthetic>")), h)
   }
 }

@@ -33,6 +33,14 @@ object Tabix {
   /** `[beg, end)` virtual-offset range of records in the data file. */
   final case class Chunk(beg: Long, end: Long)
 
+  /** `chunks` sorted, with overlapping and adjacent ones merged. */
+  def merge(chunks: Seq[Chunk]): Seq[Chunk] =
+    chunks.sortBy(_.beg).foldLeft(List.empty[Chunk]) {
+      case (last :: done, c) if c.beg <= last.end =>
+        Chunk(last.beg, math.max(c.end, last.end)) :: done
+      case (done, c) => c :: done
+    }.reverse
+
   /** Index of one reference sequence: binned chunks + linear index. */
   final case class Ref(name: String, bins: Map[Int, Seq[Chunk]], linear: Array[Long])
 
@@ -81,16 +89,10 @@ object Tabix {
 
   /** Parse a `.tbi` file (BGZF-compressed binary). */
   def read(fs: FileSystem, path: Path): TabixIndex = {
-    val in = fs.open(path)
-    val raw = try {
-      val acc = new java.io.ByteArrayOutputStream(64 << 10)
-      var more = true
-      while (more) Bgzf.readBlock(in) match {
-        case Some((data, _)) => acc.write(data)
-        case None => more = false
-      }
-      acc.toByteArray
-    } finally in.close()
+    val blocks = new BgzfChunks(fs.open(path), 0L, Long.MaxValue, Long.MaxValue, -1)
+    val acc = new java.io.ByteArrayOutputStream(64 << 10)
+    try while (blocks.fill()) acc.write(blocks.bytes, 0, blocks.len) finally blocks.close()
+    val raw = acc.toByteArray
 
     val b = ByteBuffer.wrap(raw).order(ByteOrder.LITTLE_ENDIAN)
     val magic = new Array[Byte](4)
@@ -134,60 +136,30 @@ object Tabix {
     */
   def build(fs: FileSystem, path: Path, indexPath: Option[Path] = None): Path = {
     val refs = mutable.LinkedHashMap.empty[String, RefBuilder]
+    var lastRef: String = null
+    var lastBeg = -1L
     val fileLen = fs.getFileStatus(path).getLen
-    val in = fs.open(path)
-    try {
-      var blockStart = 0L
-      var lineStartV = 0L // virtual offset of the current line's first byte
-      val lineBuf = new java.io.ByteArrayOutputStream(256)
-      var lastRef: String = null
-      var lastBeg = -1L
-
-      def record(line: String, vBeg: Long, vEnd: Long): Unit = {
-        if (line.nonEmpty && line.charAt(0) != VcfMeta.toChar) {
-          val f = line.split('\t')
-          if (f.length < 4)
-            throw new IOException(s"malformed VCF line at virtual offset $vBeg")
-          val chr = f(VcfColSeq - 1)
-          val beg0 = f(VcfColBeg - 1).toLong - 1
-          val end0 = beg0 + f(3).length // ref-allele span, htslib's VCF rule
-          if (chr == lastRef && beg0 < lastBeg)
-            throw new IOException(
-              s"cannot index: $chr:${beg0 + 1} out of order (tabix requires a sorted VCF)")
-          if (chr != lastRef && refs.contains(chr))
-            throw new IOException(s"cannot index: reference $chr is not grouped")
-          lastRef = chr; lastBeg = beg0
-          refs.getOrElseUpdate(chr, new RefBuilder).add(beg0, end0, vBeg, vEnd)
-        }
+    // each line's start and end virtual offsets come from the one line
+    // reader: a chunk [vBeg, vEnd) covers the record and its terminator
+    val lines = BgzfSplitLineIterator.open(fs, path, InputKind.Bgzf, 0L, fileLen, fileLen)
+    try lines.foreach { b =>
+      if (b.nonEmpty && b(0) != VcfMeta) {
+        val vBeg = lines.lineStart
+        val f = new String(b, StandardCharsets.UTF_8).split('\t')
+        if (f.length < 4)
+          throw new IOException(s"malformed VCF line at virtual offset $vBeg")
+        val chr = f(VcfColSeq - 1)
+        val beg0 = f(VcfColBeg - 1).toLong - 1
+        val end0 = beg0 + f(3).length // ref-allele span, htslib's VCF rule
+        if (chr == lastRef && beg0 < lastBeg)
+          throw new IOException(
+            s"cannot index: $chr:${beg0 + 1} out of order (tabix requires a sorted VCF)")
+        if (chr != lastRef && refs.contains(chr))
+          throw new IOException(s"cannot index: reference $chr is not grouped")
+        lastRef = chr; lastBeg = beg0
+        refs.getOrElseUpdate(chr, new RefBuilder).add(beg0, end0, vBeg, lines.lineEnd)
       }
-
-      var more = true
-      while (more) {
-        Bgzf.readBlock(in) match {
-          case None => more = false
-          case Some((data, csize)) =>
-            var off = 0
-            var i = 0
-            while (i < data.length) {
-              if (data(i) == '\n'.toByte) {
-                lineBuf.write(data, off, i - off)
-                val vEnd =
-                  if (i + 1 < data.length) (blockStart << 16) | (i + 1).toLong
-                  else (blockStart + csize) << 16
-                record(lineBuf.toString("UTF-8").stripSuffix("\r"), lineStartV, vEnd)
-                lineBuf.reset()
-                lineStartV = vEnd
-                off = i + 1
-              }
-              i += 1
-            }
-            if (off < data.length) lineBuf.write(data, off, data.length - off)
-            blockStart += csize
-        }
-      }
-      if (lineBuf.size > 0) // unterminated final line
-        record(lineBuf.toString("UTF-8").stripSuffix("\r"), lineStartV, fileLen << 16)
-    } finally in.close()
+    } finally lines.close()
 
     val out = indexPath.getOrElse(path.suffix(".tbi"))
     val payload = serialize(refs)
@@ -273,18 +245,9 @@ final case class TabixIndex(refs: Seq[Tabix.Ref]) {
         val minIoff =
           if (ref.linear.isEmpty) 0L
           else ref.linear(math.min((beg0 >> 14).toInt, ref.linear.length - 1))
-        val hits = Tabix.reg2bins(beg0, end0)
+        Tabix.merge(Tabix.reg2bins(beg0, end0)
           .flatMap(ref.bins.get).flatten
-          .filter(_.end > minIoff)
-          .sortBy(_.beg)
-        val merged = mutable.ArrayBuffer.empty[Tabix.Chunk]
-        hits.foreach { c =>
-          if (merged.nonEmpty && c.beg <= merged.last.end)
-            merged(merged.length - 1) =
-              Tabix.Chunk(merged.last.beg, math.max(c.end, merged.last.end))
-          else merged += c
-        }
-        merged.toSeq
+          .filter(_.end > minIoff))
     }
   }
 }

@@ -58,15 +58,12 @@ object VcfBuild {
     * offset + position within the partition (X4,
     * `02-build-db.R:258-259`).
     *
-    * Input position is (file name, split start,
-    * `monotonically_increasing_id`), all taken BEFORE the sort. The id
-    * encodes (input partition, line within it), and both in-memory
-    * lines and the BGZF scan plan their partitions in (sorted path,
-    * byte offset) order; there the file name and split start read as
-    * the constants "" and -1. A file-source scan (plain text) packs
-    * splits by size instead, so there those two lead. Spark computes
-    * the keys in a projection below the sort and drops them above: the
-    * cached rows are the parsed columns only.
+    * Input position is the parse's (`_file`, `_offset`): the file's
+    * index in the sorted listing and the line's offset in that file
+    * (in-memory lines: file 0, line index), which every line carries
+    * from the one line source. It orders the input whatever the split
+    * sizes or partition layout. Both columns drop right after the
+    * sort: the cached rows are the parsed columns only.
     *
     * The SORTED scan persists into the caller's [[graft.Caches]]
     * scope: info, impact and geno all fan out from it, so the one
@@ -101,9 +98,8 @@ object VcfBuild {
     * of the same input in another scope from releasing it.
     */
   def withVariantIds(parsed: DataFrame): DataFrame = {
-    val keys = Seq(col("chr"), col("pos"), col("ref"), col("alt"),
-      input_file_name(), input_file_block_start(), monotonically_increasing_id())
-    numberSorted(graft.Caches.persist(parsed.orderBy(keys: _*)))
+    val keys = Seq("chr", "pos", "ref", "alt", "_file", "_offset").map(col)
+    numberSorted(graft.Caches.persist(parsed.orderBy(keys: _*).drop("_file", "_offset")))
   }
 
   /** The id job of [[withVariantIds]] over its pinned sorted cache:
@@ -199,8 +195,9 @@ object VcfBuild {
       .where(col("csq").isNotNull)
       .select(col("variant_id"), explode(col("csq")).as("_csq"))
       .withColumn("_parts", split(col("_csq"), "\\|", csqCols.size))
+    // sub-fields a CSQ entry lacks read "" (ANSI get(), not ordinal indexing)
     val splitCols = csqCols.zipWithIndex.map { case (name, i) =>
-      coalesce(col("_parts").getItem(i), lit("")).as(name)
+      coalesce(get(col("_parts"), lit(i)), lit("")).as(name)
     }
     val wide0 = ann.select((col("variant_id") +: splitCols): _*)
     val wide =
@@ -270,17 +267,19 @@ object VcfBuild {
     val posCols = keys.zipWithIndex.map { case (k, i) =>
       array_position(split(col("format"), ":"), k).as(s"_p$i")
     }
+    // chr and pos ride along for the FORMAT casts' error messages only
+    val site = Seq(col("chr"), col("pos"))
     val base = ids.select(
-      (Seq(col("variant_id"), col("genotypes")) ++ posCols): _*)
+      (Seq(col("variant_id"), col("genotypes")) ++ site ++ posCols): _*)
       .select(
         (Seq(col("variant_id"),
           explode(VcfReader.sampleFields(col("genotypes"), header)).as("g")) ++
-          keys.indices.map(i => col(s"_p$i"))): _*)
+          site ++ keys.indices.map(i => col(s"_p$i"))): _*)
       .select(
         (Seq(col("variant_id"),
           col("g.sample").as("sample"),
           split(col("g.raw"), ":").as("_vals")) ++
-          keys.indices.map(i => col(s"_p$i"))): _*)
+          site ++ keys.indices.map(i => col(s"_p$i"))): _*)
 
     def fmtField(key: String): Column = {
       val pos = col(s"_p${keys.indexOf(key)}")
@@ -291,12 +290,21 @@ object VcfBuild {
         .otherwise(lit(null).cast(StringType))
     }
 
+    // a numeric FORMAT value that does not cast fails the build naming
+    // the site, the sample and the value, not with a bare cast error; the
+    // check runs only where the cast gave null, so a clean value pays for
+    // the cast alone
     def typed(d: VcfFieldDef): Column = {
       val raw = fmtField(d.id)
       val nn = when(raw === ".", lit(null)).otherwise(raw)
       val c = d.vcfType match {
-        case "Integer" => nn.cast(LongType)
-        case "Float" => nn.cast(DoubleType)
+        case t @ ("Integer" | "Float") =>
+          val (sqlType, kind) =
+            if (t == "Integer") (LongType, "an integer") else (DoubleType, "a float")
+          coalesce(nn.try_cast(sqlType), when(nn.isNotNull,
+            raise_error(concat(lit(s"malformed VCF genotype (FORMAT ${d.id} is not $kind) at "),
+              col("chr"), lit(":"), col("pos").cast(StringType), lit(" sample "),
+              col("sample"), lit(": "), nn)).cast(sqlType)))
         case _ => nn
       }
       c.as(d.id.toLowerCase)

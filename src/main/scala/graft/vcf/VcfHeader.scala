@@ -60,7 +60,7 @@ object VcfHeaderInfo {
   /** Engine column names INFO fields must not shadow. */
   val reservedNames: Set[String] = Set(
     "variant_id", "chr", "pos", "start", "end", "id", "ref", "alt",
-    "qual", "filter", "format", "genotypes")
+    "qual", "filter", "format", "genotypes", "_file", "_offset")
 }
 
 object VcfHeader {

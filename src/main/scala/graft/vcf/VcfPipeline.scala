@@ -10,7 +10,8 @@ import org.apache.spark.sql.SparkSession
   * reduced to its Spark-native essence:
   *
   *   - stage 1 (scan planning / chunk ranges) disappears: Catalyst
-  *     plans the distributed scan, `spark.read.text` splits by block;
+  *     plans the distributed scan, the `bgzf-text` line source splits
+  *     the input by byte range;
   *   - stage 2 (chunked ETL loop + progress file) becomes the one build
   *     path, [[VcfBuild.build]] + [[VcfTables.write]], with each table
   *     committed independently. Task failure is Spark retry; JOB failure

@@ -1,12 +1,6 @@
 package graft.vcf
 
-import java.io.{BufferedReader, InputStream, InputStreamReader}
-import java.nio.charset.StandardCharsets
-
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.hadoop.io.compress.CompressionCodecFactory
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -15,11 +9,13 @@ import org.apache.spark.sql.types._
   * Spark-first replacement for the reference's tabix-chunked scan
   * (VCFdbR `pipeline/01-generate-variant-ranges-index.R`,
   * `02-build-db.R:249-529`): instead of a driver-side loop over genomic
-  * range chunks, the file is read as distributed text (`spark.read.text`
-  * splits by HDFS block), every data line is parsed by codegen'd column
-  * expressions in one narrow pass, and all downstream "chunking" is
-  * ordinary Spark partitioning. Column pruning through the nested schema
-  * gives the reference's projection-pushdown scans (S2) for free.
+  * range chunks, the files are read as distributed lines (the
+  * `bgzf-text` source, [[BgzfTextSource]]: byte-range splits, each line
+  * tagged with its file and offset), every data line is parsed by
+  * codegen'd column expressions in one narrow pass, and all downstream
+  * "chunking" is ordinary Spark partitioning. Column pruning through
+  * the nested schema gives the reference's projection-pushdown scans
+  * (S2) for free.
   *
   * Output schema (per data line = one variant):
   *   chr string, pos long, id string?, ref string, alt string,
@@ -29,6 +25,8 @@ import org.apache.spark.sql.types._
   *   genotypes string?               (the sample columns, tab-separated,
   *                                    exactly as in the file)
   *   format string?                  (per-row FORMAT key order)
+  *   _file int, _offset long         (the line's input position; the
+  *                                    build sorts ties on it, then drops it)
   *
   * The sample columns stay one untokenized string through the build's
   * global sort and staging cache, so those carry about the file's own
@@ -53,88 +51,60 @@ object VcfReader {
   }
 
   /** Read a VCF file: header parsed driver-side from the leading `#`
-    * lines, body parsed distributed.
-    *
-    * Compression dispatch by content sniff, not extension:
-    *   - BGZF (bgzip/tabix output — virtually every real `.vcf.gz`) →
-    *     the splittable [[BgzfTextSource]] scan: the compressed file is
-    *     range-partitioned and each task decompresses its own blocks.
-    *   - plain text → `spark.read.text` (splits by file block).
-    *   - plain (non-block) gzip → `spark.read.text`'s gzip codec; this
-    *     is inherently one partition per file — re-bgzip for scale.
+    * lines, body parsed distributed from the `bgzf-text` line source.
+    * BGZF (virtually every real `.vcf.gz`) and plain text split by byte
+    * range (`splitSize`, default `spark.sql.files.maxPartitionBytes`);
+    * plain (non-block) gzip is one partition per file — re-bgzip for
+    * scale.
     */
   def read(spark: SparkSession, path: String,
       splitSize: Option[Long] = None): VcfDataset = {
-    import spark.implicits._
-    val (isBgzf, headerLines) = inputHeader(spark, path)
+    val (files, _, headerLines) = inputHeader(spark, path)
     val header = VcfHeader.parse(headerLines)
-    val raw =
-      if (isBgzf) {
-        val reader = spark.read.format("bgzf-text")
-        splitSize.fold(reader)(s => reader.option("splitSize", s))
-          .load(path).select("value").as[String]
-      } else spark.read.textFile(path)
-    VcfDataset(parse(body(raw), header), header)
+    val reader = spark.read.format("bgzf-text")
+    val lines = splitSize.fold(reader)(s => reader.option("splitSize", s)).load(path)
+    VcfDataset(parse(body(lines), header, files), header)
   }
 
-  /** Whether the input under `path` is BGZF, and its header, for
-    * [[read]] and [[readRegions]] alike. EVERY file is sniffed: a BGZF
-    * and plain-text mix fails here, where one codec path would throw
-    * mid-scan or decode garbage. The header is read from the first file
-    * only, straight from its head; every other shard's `#CHROM` line
-    * must match it (a headerless shard, as `VcfExport.exportSharded`
-    * writes after shard 0, inherits it).
+  /** The input files under `path` (the source's sorted listing, which
+    * its `file` column indexes), whether they are BGZF, and their
+    * header, for [[read]] and [[readRegions]] alike. EVERY file is
+    * sniffed: a BGZF and non-BGZF mix fails here. The header is read
+    * from the first file only, straight from its head; every other
+    * shard's `#CHROM` line must match it (a headerless shard, as
+    * `VcfExport.exportSharded` writes after shard 0, inherits it).
     */
-  private def inputHeader(spark: SparkSession, path: String): (Boolean, Seq[String]) = {
+  private def inputHeader(spark: SparkSession,
+      path: String): (Seq[String], Boolean, Seq[String]) = {
     val conf = spark.sessionState.newHadoopConf()
-    val files = BgzfTextSource.listFiles(path, conf)
-    val sniffed = files.map(st =>
-      st.getPath -> Bgzf.isBgzfFile(st.getPath.getFileSystem(conf), st.getPath))
-    if (sniffed.exists(_._2) && !sniffed.forall(_._2)) {
-      val (bgzf, plain) = sniffed.partition(_._2)
+    val files = BgzfTextSource.listFiles(path, conf).map(_.getPath)
+    val kinds = files.map(p => p -> InputKind.of(p.getFileSystem(conf), p))
+    val (bgzf, other) = kinds.partition(_._2 == InputKind.Bgzf)
+    if (bgzf.nonEmpty && other.nonEmpty)
       throw new IllegalArgumentException(
         s"mixed-compression VCF input under $path: BGZF files " +
           s"(${bgzf.map(_._1.getName).take(3).mkString(", ")}...) alongside " +
-          s"non-BGZF files (${plain.map(_._1.getName).take(3).mkString(", ")}...)" +
+          s"non-BGZF files (${other.map(_._1.getName).take(3).mkString(", ")}...)" +
           "; read them separately or re-bgzip the plain shards")
-    }
-    val isBgzf = sniffed.nonEmpty && sniffed.forall(_._2)
-    def headOf(st: FileStatus): Seq[String] = {
-      val fs = st.getPath.getFileSystem(conf)
-      if (isBgzf) Bgzf.headLines(fs, st.getPath) else textHeadLines(fs, st.getPath, conf)
-    }
-    val headerLines = files.headOption.fold(Seq.empty[String])(headOf)
+    def headOf(f: (org.apache.hadoop.fs.Path, InputKind)): Seq[String] =
+      BgzfSplitLineIterator.headLines(f._1.getFileSystem(conf), f._1, f._2)
+    val headerLines = kinds.headOption.fold(Seq.empty[String])(headOf)
     def chromLine(lines: Seq[String]) = lines.find(_.startsWith("#CHROM"))
     val chrom = chromLine(headerLines)
-    files.drop(1).find(st => chromLine(headOf(st)).exists(c => !chrom.contains(c)))
-      .foreach { st =>
+    kinds.drop(1).find(f => chromLine(headOf(f)).exists(c => !chrom.contains(c)))
+      .foreach { f =>
         throw new IllegalArgumentException(
-          s"VCF shards disagree on their #CHROM line: ${st.getPath} " +
-            s"differs from ${files.head.getPath}; read them separately")
+          s"VCF shards disagree on their #CHROM line: ${f._1} " +
+            s"differs from ${files.head}; read them separately")
       }
-    (isBgzf, headerLines)
-  }
-
-  /** The leading `#` lines of a plain-text (or plain gzip, by the same
-    * extension-based codec choice `spark.read.text` makes) file.
-    */
-  private def textHeadLines(fs: FileSystem, path: Path, conf: Configuration): Seq[String] = {
-    val raw = fs.open(path)
-    val in = Option(new CompressionCodecFactory(conf).getCodec(path))
-      .fold[InputStream](raw)(_.createInputStream(raw))
-    val lines = new BufferedReader(new InputStreamReader(in, StandardCharsets.UTF_8))
-    try Iterator.continually(lines.readLine())
-      .takeWhile(l => l != null && l.startsWith("#")).toVector
-    finally lines.close()
+    (files.map(_.toString), other.isEmpty && bgzf.nonEmpty, headerLines)
   }
 
   /** Header (`#`) lines, as a column predicate: Catalyst tests the
     * scanned bytes in place, where a typed lambda would deserialize
     * every line to a JVM string first.
     */
-  private val isComment: Column = col("value").startsWith("#")
-
-  private def body(lines: Dataset[String]): Dataset[String] = lines.where(!isComment)
+  private def body(lines: DataFrame): DataFrame = lines.where(!col("value").startsWith("#"))
 
   /** Tabix-indexed range read over a BGZF VCF: only the compressed
     * blocks whose index chunks overlap `chr:[beg, end]` (1-based
@@ -160,16 +130,14 @@ object VcfReader {
   def readRegions(spark: SparkSession, path: String,
       regions: Seq[(String, Long, Long)], splitSize: Option[Long] = None,
       indexPath: Option[String] = None): VcfDataset = {
-    import spark.implicits._
     require(regions.nonEmpty, "need at least one region")
-    val (isBgzf, headerLines) = inputHeader(spark, path)
+    val (files, isBgzf, headerLines) = inputHeader(spark, path)
     require(isBgzf, s"range reads need BGZF (bgzip) input; $path is not")
     val reader = spark.read.format("bgzf-text")
       .option("region",
         regions.map { case (c, b, e) => s"$c:$b-$e" }.mkString(";"))
     val withIdx = indexPath.fold(reader)(p => reader.option("index", p))
-    val raw = splitSize.fold(withIdx)(s => withIdx.option("splitSize", s))
-      .load(path).select("value").as[String]
+    val lines = splitSize.fold(withIdx)(s => withIdx.option("splitSize", s)).load(path)
     val header = VcfHeader.parse(headerLines)
     // tabix overlap semantics: record interval [pos, pos+len(ref)-1]
     // intersects any requested region
@@ -177,19 +145,23 @@ object VcfReader {
       col("chr") === c && col("pos") <= e &&
         col("pos") + length(col("ref")) - 1 >= b
     }.reduce(_ || _)
-    val parsed = parse(body(raw), header).where(overlap)
+    val parsed = parse(body(lines), header, files).where(overlap)
     VcfDataset(parsed, header)
   }
 
-  /** Parse in-memory lines (tests, embedded fixtures). */
+  /** Parse in-memory lines (tests, embedded fixtures); line i is offset i of `<lines>`. */
   def fromLines(spark: SparkSession, lines: Seq[String]): VcfDataset = {
     import spark.implicits._
     val header = VcfHeader.parse(lines.filter(_.startsWith("#")))
-    val body = spark.createDataset(lines.filterNot(_.startsWith("#")))
-    VcfDataset(parse(body, header), header)
+    val body = lines.zipWithIndex.collect {
+      case (l, i) if !l.startsWith("#") => (l, 0, i.toLong)
+    }.toDF("value", "file", "offset")
+    VcfDataset(parse(body, header, Seq("<lines>")), header)
   }
 
   /** The distributed line parse: pure column expressions, one pass.
+    * `lines` are the `bgzf-text` source's rows: `value`, `file` (an index
+    * into `files`, the names errors report) and `offset`.
     *
     * PHYSICAL skip-parse (the reference's
     * `ScanVcfParam(fixed="ALT", info=NA, samples=NA)` byte-level
@@ -207,12 +179,16 @@ object VcfReader {
     * per sample. (`str_to_map` on INFO was already pruned logically
     * when no info column survives.)
     */
-  def parse(lines: Dataset[String], header: VcfHeaderInfo): DataFrame = {
-    // a malformed line fails the scan that meets it, with the reason
-    // and the line, instead of a bare index or cast error downstream
+  def parse(lines: DataFrame, header: VcfHeaderInfo, files: Seq[String]): DataFrame = {
+    // a malformed line fails the scan that meets it, naming file, offset,
+    // reason and line, not with a bare index or cast error downstream; the
+    // `file:` prefixes are one array literal, which generated code takes by
+    // reference (and each call is a copy of this code in the parse's
+    // generated class, so it stays small)
+    val where = get(typedLit(files.map(_ + ":")), col("file"))
     def malformed(reason: String): Column =
-      raise_error(concat(lit(s"malformed VCF line ($reason): "),
-        substring(col("value"), 1, 200)))
+      raise_error(concat(where, col("offset").cast(StringType),
+        lit(s": malformed VCF line ($reason): "), substring(col("value"), 1, 200)))
     // prefix tokenization: fixed fields + INFO; stops before the tail
     val split9 = split(col("value"), "\t", 9)
     val p = when(size(split9) >= 8, split9)
@@ -256,8 +232,9 @@ object VcfReader {
       p.getItem(7).as("_info_raw"),
       get(tail, lit(0)).as("format"),
       get(tail, lit(1)).as("genotypes"),
-      // kept for the INFO casts' error messages; the last select drops it
-      col("value"))
+      // kept for the INFO casts' error messages; the last select drops
+      // the line and renames its position
+      col("value"), col("file"), col("offset"))
 
     val withInfo = fixed.withColumn("_info", infoMap)
 
@@ -284,7 +261,8 @@ object VcfReader {
       (Seq(col("chr"), col("pos"), col("id"), col("ref"), col("alt"),
         col("qual"), col("filter")) ++
         infoCols ++
-        Seq(col("genotypes"), col("format"))): _*)
+        Seq(col("genotypes"), col("format"), col("file").as("_file"),
+          col("offset").as("_offset"))): _*)
   }
 
   /** The per-sample form of a parsed row's `genotypes` string:

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import graft.vcf.{Bgzf, SyntheticVcf, ToyVcf, VcfReader}
+import graft.vcf.{Bgzf, BgzfSplitLineIterator, InputKind, SyntheticVcf, ToyVcf, VcfReader}
 
 class BgzfSpec extends SparkSpec {
   import spark.implicits._
@@ -11,6 +11,13 @@ class BgzfSpec extends SparkSpec {
     val f = Files.createTempFile("graft_bgzf", ".vcf.gz").toFile
     f.deleteOnExit()
     Bgzf.writeLocalFile(f.getAbsolutePath, lines, blockData)
+    f.getAbsolutePath
+  }
+
+  private def plainFile(lines: Seq[String]): String = {
+    val f = Files.createTempFile("graft_plain", ".vcf").toFile
+    f.deleteOnExit()
+    Files.write(f.toPath, lines.mkString("", "\n", "\n").getBytes("UTF-8"))
     f.getAbsolutePath
   }
 
@@ -56,7 +63,7 @@ class BgzfSpec extends SparkSpec {
   private def readLines(path: String, splitSize: Long): (Seq[String], Int) = {
     val df = spark.read.format("bgzf-text")
       .option("splitSize", splitSize).load(path)
-    (df.as[String].collect().toSeq, df.rdd.getNumPartitions)
+    (df.select("value").as[String].collect().toSeq, df.rdd.getNumPartitions)
   }
 
   test("splittable read: many small splits reproduce exact line sequence") {
@@ -107,7 +114,8 @@ class BgzfSpec extends SparkSpec {
     val viaLines = VcfReader.fromLines(spark, ToyVcf.lines)
     assert(viaBgzf.df.rdd.getNumPartitions > 1, "bgzf scan must be splittable")
     assert(viaBgzf.header == viaLines.header)
-    val cols = viaLines.df.columns.sorted.toSeq
+    // the input position differs between a file and in-memory lines
+    val cols = viaLines.df.columns.filterNot(Set("_file", "_offset")).sorted.toSeq
     val a = viaBgzf.df.selectExpr(cols.map(c => s"`$c`"): _*)
       .orderBy("chr", "pos").collect().map(_.toString).toSeq
     val b = viaLines.df.selectExpr(cols.map(c => s"`$c`"): _*)
@@ -144,6 +152,14 @@ class BgzfSpec extends SparkSpec {
       val (got, parts) = readLines(path, splitSize)
       assert(got == lines,
         s"trial $trial (block=$blockData split=$splitSize parts=$parts): mismatch")
+      // plain text: the same split rule over byte windows, and every
+      // line's offset is its byte position in the file
+      val plain = plainFile(lines)
+      val rows = spark.read.format("bgzf-text").option("splitSize", splitSize).load(plain)
+        .as[(String, Int, Long)].collect().toSeq
+      val starts = lines.scanLeft(0L)(_ + _.getBytes("UTF-8").length + 1).init
+      assert(rows == lines.zip(starts).map { case (l, o) => (l, 0, o) },
+        s"trial $trial (plain split=$splitSize): mismatch")
     }
   }
 
@@ -184,15 +200,27 @@ class BgzfSpec extends SparkSpec {
   test("headLines: a header past the byte cap fails naming the file and the cap") {
     val (meta, rest) = ToyVcf.lines.partition(_.startsWith("##"))
     val big = meta ++ (0 until 100).map(i => s"##contig=<ID=c$i,length=${1000 + i}>") ++ rest
-    val f = tmpFile(big, blockData = 256)
-    val path = new org.apache.hadoop.fs.Path(f)
-    val fs = path.getFileSystem(new org.apache.hadoop.conf.Configuration())
     val header = big.takeWhile(_.startsWith("#"))
     assert(header.mkString("\n").length > 2048)
-    val e = intercept[IllegalArgumentException](Bgzf.headLines(fs, path, maxBytes = 2048))
-    assert(e.getMessage.contains(f) && e.getMessage.contains("2048 bytes"), e.getMessage)
-    // under a cap the header fits, it is returned whole, #CHROM included
-    assert(Bgzf.headLines(fs, path, maxBytes = 64 << 10) == header)
-    assert(Bgzf.headLines(fs, path) == header)
+    val conf = new org.apache.hadoop.conf.Configuration()
+    def headLines(f: String, maxBytes: Long) = {
+      val path = new org.apache.hadoop.fs.Path(f)
+      val fs = path.getFileSystem(conf)
+      BgzfSplitLineIterator.headLines(fs, path, InputKind.of(fs, path), maxBytes)
+    }
+    for (f <- Seq(tmpFile(big, blockData = 256), plainFile(big))) {
+      val e = intercept[IllegalArgumentException](headLines(f, maxBytes = 2048))
+      assert(e.getMessage.contains(f) && e.getMessage.contains("2048 bytes"), e.getMessage)
+      // under a cap the header fits, it is returned whole, #CHROM included
+      assert(headLines(f, maxBytes = 64 << 10) == header)
+      assert(headLines(f, maxBytes = 16L << 20) == header)
+    }
+    // one header line longer than the cap fails at the cap: the reader
+    // stops after the cap's worth of chunks instead of buffering the line
+    val long = Seq("##" + "x" * (1 << 20), "#CHROM\tPOS")
+    for (f <- Seq(tmpFile(long, blockData = 4096), plainFile(long))) {
+      val e = intercept[IllegalArgumentException](headLines(f, maxBytes = 2048))
+      assert(e.getMessage.contains(f) && e.getMessage.contains("2048 bytes"), e.getMessage)
+    }
   }
 }

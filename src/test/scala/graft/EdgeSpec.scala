@@ -1,8 +1,10 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
+import java.util.zip.GZIPOutputStream
 
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 import graft.vcf._
@@ -10,6 +12,43 @@ import graft.vcf._
 /** Edge-shape inputs: sites-only VCF (no samples), no-CSQ VCF. */
 class EdgeSpec extends SparkSpec {
   import spark.implicits._
+
+  /** Write `lines` to `f` as one input kind; returns the path. */
+  private def put(f: Path, lines: Seq[String], kind: InputKind,
+      blockData: Int = 200): String = {
+    Files.createDirectories(f.getParent)
+    val text = lines.mkString("", "\n", "\n").getBytes("UTF-8")
+    kind match {
+      case InputKind.Bgzf => Bgzf.writeLocalFile(f.toString, lines, blockData)
+      case InputKind.Plain => Files.write(f, text)
+      case InputKind.Gzip =>
+        val out = new GZIPOutputStream(Files.newOutputStream(f))
+        try out.write(text) finally out.close()
+    }
+    f.toString
+  }
+
+  /** The start offset of each of `lines` (and the end) in its file. */
+  private def byteStarts(lines: Seq[String]): Seq[Long] =
+    lines.scanLeft(0L)(_ + _.getBytes("UTF-8").length + 1)
+
+  /** The BGZF virtual offset of byte `p` of `lines`, written with
+    * `blockData` bytes per block: the compressed sizes of the blocks
+    * before it, and `p`'s place in its block.
+    */
+  private def virtualOffset(lines: Seq[String], blockData: Int, p: Long): Long = {
+    val text = lines.mkString("", "\n", "\n").getBytes("UTF-8")
+    val before = (0 until (p / blockData).toInt).map { j =>
+      val out = new java.io.ByteArrayOutputStream()
+      Bgzf.writeBlock(out, text, j * blockData, math.min(blockData, text.length - j * blockData))
+      out.size.toLong
+    }.sum
+    (before << 16) | (p % blockData)
+  }
+
+  /** Every message of `e` and its causes. */
+  private def messages(e: Throwable): String =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString("\n")
 
   test("sites-only VCF (no samples): info builds, geno is empty") {
     val lines = Seq(
@@ -258,15 +297,16 @@ class EdgeSpec extends SparkSpec {
   }
 
   test("malformed body lines fail the build naming the reason and the line") {
-    def built(lines: Seq[String]): Seq[(Long, String, Long)] = Caches.scoped {
-      VcfBuild.build(VcfReader.fromLines(spark, lines)).info
+    def built(v: => VcfDataset): Seq[(Long, String, Long)] = Caches.scoped {
+      VcfBuild.build(v).info
         .select("variant_id", "chr", "start").as[(Long, String, Long)].collect().sorted.toSeq
     }
     // the guard leaves a clean build as it was; "." INFO and QUAL
     // values stay null
-    assert(built(ToyVcf.lines) == Seq((1L, "1", 100L), (2L, "1", 200L), (3L, "1", 300L),
-      (4L, "2", 150L), (5L, "2", 250L), (6L, "2", 400L)))
+    assert(built(VcfReader.fromLines(spark, ToyVcf.lines)) == Seq((1L, "1", 100L),
+      (2L, "1", 200L), (3L, "1", 300L), (4L, "2", 150L), (5L, "2", 250L), (6L, "2", 400L)))
     val at = ToyVcf.lines.indexWhere(!_.startsWith("#")) + 2
+    val dir = Files.createTempDirectory("vcfbad")
     Seq(
       "" -> "fewer than 8 tab-separated fields",
       "1\t500\t.\tA\tG" -> "fewer than 8 tab-separated fields",
@@ -274,12 +314,23 @@ class EdgeSpec extends SparkSpec {
       "1\t500\t.\tA\tG\tx\tPASS\t.\tGT:DP\t0|0:1\t0|1:2" -> "QUAL is not a float",
       "1\t500\t.\tA\tG\t5\tPASS\tAF=abc\tGT:DP\t0|0:1\t0|1:2" -> "INFO AF is not a float",
       "1\t500\t.\tA\tG\t5\tPASS\tDP=1.5x\tGT:DP\t0|0:1\t0|1:2" -> "INFO DP is not an integer"
-    ).foreach { case (line, reason) =>
-      val e = intercept[Exception](built(ToyVcf.lines.patch(at, Seq(line), 0)))
-      val msg = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
-        .map(_.getMessage).mkString("\n")
-      assert(msg.contains(s"malformed VCF line ($reason): $line"), msg)
-      assert(!msg.contains("INVALID_ARRAY_INDEX") && !msg.contains("CAST_INVALID_INPUT"), msg)
+    ).zipWithIndex.foreach { case ((line, reason), k) =>
+      val lines = ToyVcf.lines.patch(at, Seq(line), 0)
+      // the same lines in memory (line `at` of `<lines>`) and as BGZF,
+      // plain and plain gzip files (at the line's offset in each file)
+      val start = byteStarts(lines)(at)
+      val inputs = Seq(
+        (() => VcfReader.fromLines(spark, lines), "<lines>", at.toLong)) ++
+        Seq((InputKind.Bgzf, virtualOffset(lines, 200, start)), (InputKind.Plain, start),
+          (InputKind.Gzip, start)).map { case (kind, offset) =>
+            val f = put(dir.resolve(s"bad$k.$kind"), lines, kind)
+            (() => VcfReader.read(spark, f, splitSize = Some(256L)), f, offset)
+          }
+      inputs.foreach { case (read, name, offset) =>
+        val msg = messages(intercept[Exception](built(read())))
+        assert(msg.contains(s"$name:$offset: malformed VCF line ($reason): $line"), msg)
+        assert(!msg.contains("INVALID_ARRAY_INDEX") && !msg.contains("CAST_INVALID_INPUT"), msg)
+      }
     }
   }
 
@@ -295,37 +346,39 @@ class EdgeSpec extends SparkSpec {
     val want = body.zipWithIndex.sortBy { case (l, i) => (l.split("\t")(1).toInt, i) }
       .zipWithIndex.map { case ((l, i), r) => (r + 1L, i.toDouble, l.split("\t")(9)) }
     val dir = Files.createTempDirectory("vcfdup")
-    def put(name: String, lines: Seq[String], bgzf: Boolean): String = {
-      val f = dir.resolve(name)
-      Files.createDirectories(f.getParent)
-      if (bgzf) Bgzf.writeLocalFile(f.toString, lines, blockData = 200)
-      else Files.write(f, lines.mkString("", "\n", "\n").getBytes("UTF-8"))
-      f.toString
-    }
+    def put(name: String, lines: Seq[String], kind: InputKind): String =
+      this.put(dir.resolve(name), lines, kind)
     val (a, b) = body.splitAt(30)
-    val bgzf = put("all.vcf.gz", header ++ body, bgzf = true)
-    val bgzfShards = put("bgzf/part1.vcf.gz", header ++ b, bgzf = true)
+    val bgzf = put("all.vcf.gz", header ++ body, InputKind.Bgzf)
+    val bgzfShards = put("bgzf/part1.vcf.gz", header ++ b, InputKind.Bgzf)
       .stripSuffix("/part1.vcf.gz")
-    put("bgzf/part0.vcf.gz", header ++ a, bgzf = true)
-    val plain = put("all.vcf", header ++ body, bgzf = false)
-    // the plain text scan packs splits by size, not in file order
-    val plainShards = put("plain/part1.vcf", b, bgzf = false).stripSuffix("/part1.vcf")
-    put("plain/part0.vcf", header ++ a, bgzf = false)
-    // (path, BGZF splitSize, spark.sql.files.maxPartitionBytes)
-    val reads: Seq[(String, Option[Long], Option[String])] = Seq(
-      (bgzf, Some(512L), None), (bgzf, None, None), (bgzfShards, Some(512L), None),
-      (plain, None, Some("256")), (plainShards, None, Some("256")))
+    put("bgzf/part0.vcf.gz", header ++ a, InputKind.Bgzf)
+    val plain = put("all.vcf", header ++ body, InputKind.Plain)
+    // a headerless second shard, as exportSharded writes them
+    val plainShards = put("plain/part1.vcf", b, InputKind.Plain).stripSuffix("/part1.vcf")
+    put("plain/part0.vcf", header ++ a, InputKind.Plain)
+    val gzip = put("all.gz.vcf.gz", header ++ body, InputKind.Gzip)
+    val gzipShards = put("gzip/part1.vcf.gz", b, InputKind.Gzip).stripSuffix("/part1.vcf.gz")
+    put("gzip/part0.vcf.gz", header ++ a, InputKind.Gzip)
+    // (path, splitSize, spark.sql.files.maxPartitionBytes, partitions:
+    // one per plain gzip file, whatever the split size)
+    val reads: Seq[(String, Option[Long], Option[String], Option[Int])] = Seq(
+      (bgzf, Some(512L), None, None), (bgzf, None, None, Some(1)),
+      (bgzfShards, Some(512L), None, None),
+      (plain, None, Some("256"), None), (plain, Some(256L), None, None),
+      (plainShards, None, Some("256"), None),
+      (gzip, Some(256L), None, Some(1)), (gzipShards, None, Some("256"), Some(2)))
     val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.files.maxPartitionBytes",
       "spark.sql.adaptive.coalescePartitions.enabled")
     val prev = keys.map(k => k -> spark.conf.getOption(k))
     spark.conf.set(keys(2), "false")
-    try for (shuffle <- Seq(2, 16); (path, split, maxBytes) <- reads) {
+    try for (shuffle <- Seq(2, 16); (path, split, maxBytes, parts) <- reads) {
       spark.conf.set(keys(0), shuffle.toString)
       maxBytes.fold(spark.conf.unset(keys(1)))(spark.conf.set(keys(1), _))
       val got = Caches.scoped {
         val vcf = VcfReader.read(spark, path, split)
-        if (split.orElse(maxBytes).isDefined)
-          assert(vcf.df.rdd.getNumPartitions > 1, path)
+        val n = vcf.df.rdd.getNumPartitions
+        assert(parts.fold(n > 1)(_ == n), s"$path: $n partitions")
         val t = VcfBuild.build(vcf)
         t.geno.join(t.info, "variant_id").select("variant_id", "qual", "gt_raw")
           .as[(Long, Double, String)].collect().sorted.toSeq
@@ -335,5 +388,95 @@ class EdgeSpec extends SparkSpec {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
     }
+  }
+
+  test("a directory's tabix indexes are not input: read sees the data, readRange the index") {
+    val dir = Files.createTempDirectory("vcftbi")
+    val f = put(dir.resolve("part0.vcf.gz"), ToyVcf.lines, InputKind.Bgzf)
+    val p = new org.apache.hadoop.fs.Path(f)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Tabix.build(fs, p)
+    assert(fs.exists(p.suffix(".tbi")))
+    assert(BgzfTextSource.listFiles(dir.toString, spark.sparkContext.hadoopConfiguration)
+      .map(_.getPath.getName) == Seq("part0.vcf.gz"))
+    assert(VcfReader.read(spark, dir.toString).df.count() == 6)
+    assert(VcfReader.readRange(spark, dir.toString, "2", 200L, 300L).df
+      .select("pos").as[Long].collect().toSeq == Seq(250L))
+  }
+
+  test("seeded mutation sweep: a mutated file builds as its lines do, or fails naming it") {
+    // 30 randomly mutated copies of ToyVcf (and two fixed ones), each a
+    // plain and a BGZF file. Each file either builds exactly the tables
+    // its cleaned lines build in memory, or fails as they do: naming the
+    // file, the line's offset and the reason (a genotype value: the
+    // site, the sample and the value) — never with a bare Spark cast or
+    // index error.
+    val rnd = new scala.util.Random(2024)
+    val (head, body) = ToyVcf.lines.partition(_.startsWith("#"))
+    def mutate(l: String): Seq[String] = rnd.nextInt(7) match {
+      case 0 => Seq(l.take(rnd.nextInt(l.length))) // truncated
+      case 1 => // one tab dropped
+        val tabs = l.indices.filter(l(_) == '\t')
+        val t = tabs(rnd.nextInt(tabs.size))
+        Seq(l.take(t) + l.drop(t + 1))
+      case k @ (2 | 3) => // non-numeric POS or QUAL
+        Seq(l.split("\t", -1).updated(if (k == 2) 1 else 5, "x" + rnd.nextInt(9)).mkString("\t"))
+      case 4 => // a non-numeric INFO value
+        val key = Seq("AC", "AF", "DP")(rnd.nextInt(3))
+        Seq(l.replaceFirst(s"(^|[\t;])$key=[^;\t]*", s"$$1$key=n/a"))
+      case 5 => // a stray carriage return
+        val i = rnd.nextInt(l.length + 1)
+        Seq(l.take(i) + "\r" + l.drop(i))
+      case _ => Seq("", l) // an empty line
+    }
+    def digest(v: => VcfDataset): Either[String, Seq[(Long, Long)]] =
+      try Caches.scoped {
+        val t = VcfBuild.build(v)
+        Right((Seq(t.info, t.geno) ++ t.impact).map { df =>
+          val r = df.agg(count(lit(1)), coalesce(bit_xor(xxhash64(df.columns.map(col): _*)),
+            lit(0L))).head
+          (r.getLong(0), r.getLong(1))
+        })
+      } catch { case e: Exception => Left(messages(e)) }
+    val LineError = """<lines>:(\d+): (malformed VCF line \(.*?\): )""".r
+    val GenoError = """malformed VCF genotype \(.*?\) at .*""".r
+    val copies = Seq.fill(30) {
+      val i = rnd.nextInt(body.size)
+      body.patch(i, mutate(body(i)), 1)
+    } ++ Seq( // a non-numeric FORMAT DP; a CSQ entry cut short
+      body.patch(0, Seq(body(0).replace("0|1:12", "0|1:x")), 1),
+      body.patch(1, Seq(body(1).replaceFirst("\\|HIGH.*?\t", "\t")), 1))
+    val dir = Files.createTempDirectory("vcfmutants")
+    val t0 = System.nanoTime()
+    for ((mutated, copy) <- copies.zipWithIndex) {
+      val lines = head ++ mutated
+      // the line reader drops each line's trailing \r
+      val want = digest(VcfReader.fromLines(spark, lines.map(_.stripSuffix("\r"))))
+      val blockData = 64 + rnd.nextInt(400)
+      for (kind <- Seq(InputKind.Plain, InputKind.Bgzf)) {
+        val f = put(dir.resolve(s"m$copy.$kind"), lines, kind, blockData)
+        val got = digest(VcfReader.read(spark, f, splitSize = Some(128L)))
+        val clue = s"copy $copy ($kind): ${lines.drop(head.size).mkString(" | ")}"
+        (want, got) match {
+          case (Right(w), Right(g)) => assert(g == w, clue)
+          case (Left(w), Left(g)) =>
+            assert(Seq(w, g).forall(m =>
+              !m.contains("INVALID_ARRAY_INDEX") && !m.contains("CAST_INVALID_INPUT")),
+              s"$clue\n$w\n$g")
+            (LineError.findFirstMatchIn(w), GenoError.findFirstIn(w)) match {
+              case (Some(m), _) =>
+                val start = byteStarts(lines)(m.group(1).toInt)
+                val offset =
+                  if (kind == InputKind.Plain) start else virtualOffset(lines, blockData, start)
+                assert(g.contains(s"$f:$offset: ${m.group(2)}"), s"$clue\n$g")
+              case (None, Some(e)) => assert(g.contains(e), s"$clue\n$g")
+              case _ => fail(s"$clue: the in-memory build failed unnamed\n$w")
+            }
+          case _ => fail(s"$clue: file $got, lines $want")
+        }
+      }
+    }
+    val secs = (System.nanoTime() - t0) / 1e9
+    assert(secs < 60, s"sweep took $secs s")
   }
 }

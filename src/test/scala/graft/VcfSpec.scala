@@ -44,9 +44,11 @@ class VcfSpec extends SparkSpec {
     // away before the projection shape could be observed
     import spark.implicits._
     val header = VcfHeader.parse(ToyVcf.lines.filter(_.startsWith("#")))
-    val body = spark.createDataset(spark.sparkContext.parallelize(
-      ToyVcf.lines.filterNot(_.startsWith("#"))))
-    val parsed = VcfReader.parse(body, header)
+    val body = spark.createDataFrame(spark.sparkContext.parallelize(
+      ToyVcf.lines.filterNot(_.startsWith("#")).zipWithIndex
+        .map { case (l, i) => org.apache.spark.sql.Row(l, 0, i.toLong) }),
+      BgzfTextSource.Schema)
+    val parsed = VcfReader.parse(body, header, Seq("<lines>"))
     val narrow = parsed.select("chr", "pos")
     val plan = narrow.queryExecution.optimizedPlan.toString
     assert(plan.contains("split(value"), plan)
