@@ -144,26 +144,36 @@ object Bgzf {
     -1
   }
 
-  private def readFully(in: InputStream, buf: Array[Byte], off: Int, len: Int): Unit =
-    if (in.readNBytes(buf, off, len) < len) throw new EOFException("truncated BGZF block")
+  private def readFully(in: InputStream, buf: Array[Byte], off: Int, len: Int): Unit = {
+    var n = 0
+    while (n < len) {
+      val r = in.read(buf, off + n, len - n)
+      if (r < 0) throw new EOFException("truncated BGZF block")
+      n += r
+    }
+  }
 
   /** Read + inflate one block from a stream positioned at a block
     * boundary. Returns (decompressed bytes, compressed block size), or
     * None at a clean EOF.
     */
   def readBlock(in: InputStream): Option[(Array[Byte], Int)] = {
-    val head = in.readNBytes(12)
-    if (head.isEmpty) return None // clean EOF
-    if (head.length < 12) throw new EOFException("truncated BGZF block")
+    val head = new Array[Byte](12)
+    val first = in.read()
+    if (first < 0) return None // clean EOF
+    head(0) = first.toByte
+    readFully(in, head, 1, 11)
     if (head(0) != 0x1f.toByte || head(1) != 0x8b.toByte || head(2) != 8.toByte ||
       (head(3) & 4) != 4)
       throw new IOException("stream not at a BGZF block boundary")
     val xlen = u16(head, 10)
-    val block = java.util.Arrays.copyOf(head, 12 + xlen)
+    val block = new Array[Byte](12 + xlen)
+    System.arraycopy(head, 0, block, 0, 12)
     readFully(in, block, 12, xlen)
     val bsize = headerBlockSize(block, 0, block.length)
     if (bsize < 0) throw new IOException("BGZF header lacks a BC subfield")
-    val full = java.util.Arrays.copyOf(block, bsize)
+    val full = new Array[Byte](bsize)
+    System.arraycopy(block, 0, full, 0, block.length)
     readFully(in, full, block.length, bsize - block.length)
     Some((inflateBlock(full, 0, bsize), bsize))
   }
@@ -234,6 +244,8 @@ object Bgzf {
 
 /** An input file's framing, sniffed from its first bytes (never from its
   * name): BGZF blocks, one plain (non-block) gzip stream, or plain text.
+  * Other compressions (bzip2, zstd, xz) fail here, naming the file,
+  * rather than read as text.
   */
 sealed trait InputKind extends Serializable
 
@@ -242,12 +254,31 @@ object InputKind {
   case object Gzip extends InputKind
   case object Plain extends InputKind
 
-  def of(fs: FileSystem, path: Path): InputKind = {
-    val in = fs.open(path)
-    val head = try in.readNBytes(graft.vcf.Bgzf.HeaderLen) finally in.close()
+  private val Foreign = Seq(
+    "bzip2" -> Array[Int]('B', 'Z', 'h'),
+    "zstd" -> Array(0x28, 0xb5, 0x2f, 0xfd),
+    "xz" -> Array(0xfd, '7', 'z', 'X', 'Z', 0x00))
+
+  /** The kind of the file `in` reads; leaves `in` at offset 0. */
+  def of(in: FSDataInputStream, path: Path): InputKind = {
+    in.seek(0L)
+    val head = in.readNBytes(graft.vcf.Bgzf.HeaderLen)
+    in.seek(0L)
+    Foreign.find { case (_, magic) =>
+      head.length >= magic.length && magic.indices.forall(i => (head(i) & 0xff) == magic(i))
+    }.foreach { case (name, _) =>
+      throw new IllegalArgumentException(
+        s"$path is $name-compressed; VCF input must be BGZF, gzip or plain text " +
+          "(re-compress it with bgzip)")
+    }
     if (graft.vcf.Bgzf.headerBlockSize(head, 0, head.length) > 0) Bgzf
     else if (head.length >= 2 && head(0) == 0x1f.toByte && head(1) == 0x8b.toByte) Gzip
     else Plain
+  }
+
+  def of(fs: FileSystem, path: Path): InputKind = {
+    val in = fs.open(path)
+    try of(in, path) finally in.close()
   }
 }
 
@@ -438,9 +469,12 @@ object BgzfSplitLineIterator {
     * and `vEnd` bound a BGZF tabix chunk. Plain gzip is one split.
     */
   def open(fs: FileSystem, path: Path, kind: InputKind, start: Long, end: Long,
-      fileLen: Long, uStart: Int = -1, vEnd: Long = Long.MaxValue,
-      maxBytes: Long = Long.MaxValue): BgzfSplitLineIterator = {
-    val in = fs.open(path)
+      fileLen: Long, uStart: Int = -1, vEnd: Long = Long.MaxValue): BgzfSplitLineIterator =
+    over(fs.open(path), path, kind, start, end, fileLen, uStart, vEnd)
+
+  private def over(in: FSDataInputStream, path: Path, kind: InputKind, start: Long,
+      end: Long, fileLen: Long, uStart: Int = -1, vEnd: Long = Long.MaxValue,
+      maxBytes: Long = Long.MaxValue): BgzfSplitLineIterator =
     try {
       val chunks = kind match {
         case InputKind.Bgzf => new BgzfChunks(in, start, end, fileLen, uStart)
@@ -451,24 +485,26 @@ object BgzfSplitLineIterator {
       }
       new BgzfSplitLineIterator(chunks, start > 0 && uStart < 0, vEnd, maxBytes)
     } catch { case e: Throwable => in.close(); throw e }
-  }
 
-  /** A VCF file's header: its leading `#` lines. `maxBytes` bounds the
-    * driver read far beyond any real header; reaching it before a
-    * complete data line or the end of the file fails, naming the file,
-    * rather than return a header cut short.
+  /** A VCF file's kind, sniffed from the stream the header is read from,
+    * and its header: its leading `#` lines. `maxBytes` bounds the driver
+    * read far beyond any real header; reaching it before a complete data
+    * line or the end of the file fails, naming the file, rather than
+    * return a header cut short.
     */
-  def headLines(fs: FileSystem, path: Path, kind: InputKind,
-      maxBytes: Long = 16L << 20): Seq[String] = {
+  def headLines(fs: FileSystem, path: Path,
+      maxBytes: Long = 16L << 20): (InputKind, Seq[String]) = {
     val len = fs.getFileStatus(path).getLen
-    val lines = open(fs, path, kind, 0L, len, len, maxBytes = maxBytes)
+    val in = fs.open(path)
+    val kind = try InputKind.of(in, path) catch { case e: Throwable => in.close(); throw e }
+    val lines = over(in, path, kind, 0L, len, len, maxBytes = maxBytes)
     try {
       val head = lines.takeWhile(l => l.nonEmpty && l(0) == '#')
         .map(new String(_, StandardCharsets.UTF_8)).toVector
       if (lines.capped)
         throw new IllegalArgumentException(
           s"VCF header of $path exceeds $maxBytes bytes with no data line or end of file")
-      head
+      (kind, head)
     } finally lines.close()
   }
 }

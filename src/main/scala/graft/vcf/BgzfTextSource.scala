@@ -11,6 +11,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionDirectory}
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -29,7 +30,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * independently, so a 100 GB `.vcf.gz` parses on every executor at once.
   *
   *   spark.read.format("bgzf-text")
-  *     .option("splitSize", 64 << 20)   // default: files.maxPartitionBytes
+  *     .option("splitSize", 64 << 20)   // default: the file source's split size
   *     .load("/data/cohort.vcf.gz")
   */
 class BgzfTextSource extends TableProvider with DataSourceRegister {
@@ -86,6 +87,30 @@ object BgzfTextSource {
     }
   }
 
+  /** Consecutive splits packed into partitions by the file source's rule,
+    * in listing order (the file source sorts them by size first): a split
+    * joins the open partition unless that would take it past `maxBytes`,
+    * and each split counts its length plus `openCost`.
+    * So a directory of small shards reads in a few tasks, not one each,
+    * while splits of `maxBytes` (any file larger than that) stay alone.
+    */
+  def pack(splits: Seq[BgzfSplit], maxBytes: Long, openCost: Long): Array[InputPartition] = {
+    val parts = Array.newBuilder[InputPartition]
+    var open = Vector.empty[BgzfSplit]
+    var size = 0L
+    splits.foreach { sp =>
+      if (open.nonEmpty && size + (sp.end - sp.start) > maxBytes) {
+        parts += BgzfPartition(open.toArray)
+        open = Vector.empty
+        size = 0L
+      }
+      open :+= sp
+      size += sp.end - sp.start + openCost
+    }
+    if (open.nonEmpty) parts += BgzfPartition(open.toArray)
+    parts.result()
+  }
+
   /** Non-hidden data files under a path/glob (index files are not data). */
   def listFiles(path: String, conf: Configuration): Seq[FileStatus] = {
     val p = new Path(path)
@@ -113,14 +138,15 @@ private[vcf] class BgzfTextTable(paths: Seq[String], splitSize: Option[Long],
     util.EnumSet.of(TableCapability.BATCH_READ)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new BgzfTextScan(paths, splitSize, region, index)
+    new ScanBuilder {
+      override def build(): Scan = new BgzfTextScan(paths, splitSize, region, index)
+    }
 }
 
 private[vcf] class BgzfTextScan(paths: Seq[String], splitSizeOpt: Option[Long],
     region: Option[String], index: Option[String])
-  extends ScanBuilder with Scan with Batch {
+  extends Scan with Batch {
 
-  override def build(): Scan = this
   override def readSchema(): StructType = BgzfTextSource.Schema
   override def toBatch: Batch = this
   override def description(): String =
@@ -129,24 +155,29 @@ private[vcf] class BgzfTextScan(paths: Seq[String], splitSizeOpt: Option[Long],
   override def planInputPartitions(): Array[InputPartition] = {
     val spark = SparkSession.active
     val conf = spark.sessionState.newHadoopConf()
-    // One partition per `splitSize` file bytes (compressed, for BGZF) —
-    // the same knob parquet scans use, so executor-memory tuning carries
-    // over — and one per plain gzip file. A BGZF split smaller than one
-    // block is harmless: a split containing no block start syncs past
-    // its end and emits nothing.
-    val splitSize = splitSizeOpt.getOrElse(spark.sessionState.conf.filesMaxPartitionBytes)
-    require(splitSize > 0, s"splitSize must be positive, got $splitSize")
-    val files = paths.flatMap(p => BgzfTextSource.listFiles(p, conf)).zipWithIndex
+    val listed = paths.flatMap(p => BgzfTextSource.listFiles(p, conf))
+    val files = listed.zipWithIndex
       .map { case (st, i) => (st, i, InputKind.of(st.getPath.getFileSystem(conf), st.getPath)) }
+    // One split per `splitSize` file bytes (compressed, for BGZF) and one
+    // per plain gzip file; small splits share a partition ([[pack]]).
+    // `splitSize` is by default the file source's split size,
+    // min(files.maxPartitionBytes, max(files.openCostInBytes, input bytes
+    // / default parallelism)), so executor-memory tuning carries over and
+    // a mid-sized file still fills every core. A BGZF split smaller than
+    // one block is harmless: a split containing no block start syncs past
+    // its end and emits nothing.
+    val splitSize = splitSizeOpt.getOrElse(FilePartition.maxSplitBytes(spark,
+      Seq(PartitionDirectory(InternalRow.empty, listed.toArray))))
+    require(splitSize > 0, s"splitSize must be positive, got $splitSize")
     region match {
       case None =>
-        files.flatMap { case (st, i, kind) =>
+        BgzfTextSource.pack(files.flatMap { case (st, i, kind) =>
           val len = st.getLen
           val step = if (kind == InputKind.Gzip) len else splitSize
           (0L until len by step).map { s =>
             BgzfSplit(st.getPath.toString, i, kind, s, math.min(s + step, len), len)
           }
-        }.toArray
+        }, splitSize, spark.sessionState.conf.filesOpenCostInBytes)
       case Some(r) =>
         // Tabix-pruned scan: only the blocks whose virtual-offset chunks
         // overlap the region(s) are planned at all — the DSv2 analog of
@@ -180,9 +211,9 @@ private[vcf] class BgzfTextScan(paths: Seq[String], splitSizeOpt: Option[Long],
             val cOwnEnd = (c.end >>> 16) + 1 // block holding vEnd is owned
             val bounds = (cBeg until cOwnEnd by splitSize) :+ cOwnEnd
             bounds.zip(bounds.tail).zipWithIndex.map { case ((s, e), j) =>
-              BgzfSplit(st.getPath.toString, i, kind, s, e, len,
+              BgzfPartition(Array(BgzfSplit(st.getPath.toString, i, kind, s, e, len,
                 uStart = if (j == 0) (c.beg & 0xffff).toInt else -1,
-                vEnd = c.end)
+                vEnd = c.end)))
             }
           }
         }.toArray
@@ -199,26 +230,36 @@ private[vcf] class BgzfTextScan(paths: Seq[String], splitSizeOpt: Option[Long],
 
 private[vcf] case class BgzfSplit(path: String, file: Int, kind: InputKind,
     start: Long, end: Long, fileLen: Long, uStart: Int = -1, vEnd: Long = Long.MaxValue)
-  extends InputPartition
+
+/** One task's splits, read in turn. */
+private[vcf] case class BgzfPartition(splits: Array[BgzfSplit]) extends InputPartition
 
 private[vcf] class BgzfReaderFactory(confEntries: Array[(String, String)])
   extends PartitionReaderFactory {
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val sp = partition.asInstanceOf[BgzfSplit]
+    val splits = partition.asInstanceOf[BgzfPartition].splits.iterator
     val conf = new Configuration(false)
     confEntries.foreach { case (k, v) => conf.set(k, v) }
-    val p = new Path(sp.path)
-    val it = BgzfSplitLineIterator.open(p.getFileSystem(conf), p, sp.kind,
-      sp.start, sp.end, sp.fileLen, sp.uStart, sp.vEnd)
     new PartitionReader[InternalRow] {
+      private var sp: BgzfSplit = _
+      private var it: BgzfSplitLineIterator = _
       private var row: InternalRow = _
-      override def next(): Boolean = it.hasNext && {
-        row = InternalRow(UTF8String.fromBytes(it.next()), sp.file, it.lineStart)
-        true
+      override def next(): Boolean = {
+        while ((it == null || !it.hasNext) && splits.hasNext) {
+          close()
+          sp = splits.next()
+          val p = new Path(sp.path)
+          it = BgzfSplitLineIterator.open(p.getFileSystem(conf), p, sp.kind,
+            sp.start, sp.end, sp.fileLen, sp.uStart, sp.vEnd)
+        }
+        it != null && it.hasNext && {
+          row = InternalRow(UTF8String.fromBytes(it.next()), sp.file, it.lineStart)
+          true
+        }
       }
       override def get(): InternalRow = row
-      override def close(): Unit = it.close()
+      override def close(): Unit = if (it != null) { it.close(); it = null }
     }
   }
 }

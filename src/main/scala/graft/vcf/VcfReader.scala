@@ -53,9 +53,8 @@ object VcfReader {
   /** Read a VCF file: header parsed driver-side from the leading `#`
     * lines, body parsed distributed from the `bgzf-text` line source.
     * BGZF (virtually every real `.vcf.gz`) and plain text split by byte
-    * range (`splitSize`, default `spark.sql.files.maxPartitionBytes`);
-    * plain (non-block) gzip is one partition per file — re-bgzip for
-    * scale.
+    * range (`splitSize`, by default the file source's split size);
+    * plain (non-block) gzip is one split per file — re-bgzip for scale.
     */
   def read(spark: SparkSession, path: String,
       splitSize: Option[Long] = None): VcfDataset = {
@@ -68,30 +67,28 @@ object VcfReader {
 
   /** The input files under `path` (the source's sorted listing, which
     * its `file` column indexes), whether they are BGZF, and their
-    * header, for [[read]] and [[readRegions]] alike. EVERY file is
-    * sniffed: a BGZF and non-BGZF mix fails here. The header is read
-    * from the first file only, straight from its head; every other
-    * shard's `#CHROM` line must match it (a headerless shard, as
-    * `VcfExport.exportSharded` writes after shard 0, inherits it).
+    * header, for [[read]] and [[readRegions]] alike. EVERY file's head is
+    * read, which sniffs its kind: a BGZF and non-BGZF mix fails here. The
+    * header is the first file's; every other shard's `#CHROM` line must
+    * match it (a headerless shard, as `VcfExport.exportSharded` writes
+    * after shard 0, inherits it).
     */
   private def inputHeader(spark: SparkSession,
       path: String): (Seq[String], Boolean, Seq[String]) = {
     val conf = spark.sessionState.newHadoopConf()
     val files = BgzfTextSource.listFiles(path, conf).map(_.getPath)
-    val kinds = files.map(p => p -> InputKind.of(p.getFileSystem(conf), p))
-    val (bgzf, other) = kinds.partition(_._2 == InputKind.Bgzf)
+    val heads = files.map(p => p -> BgzfSplitLineIterator.headLines(p.getFileSystem(conf), p))
+    val (bgzf, other) = heads.partition(_._2._1 == InputKind.Bgzf)
     if (bgzf.nonEmpty && other.nonEmpty)
       throw new IllegalArgumentException(
         s"mixed-compression VCF input under $path: BGZF files " +
           s"(${bgzf.map(_._1.getName).take(3).mkString(", ")}...) alongside " +
           s"non-BGZF files (${other.map(_._1.getName).take(3).mkString(", ")}...)" +
           "; read them separately or re-bgzip the plain shards")
-    def headOf(f: (org.apache.hadoop.fs.Path, InputKind)): Seq[String] =
-      BgzfSplitLineIterator.headLines(f._1.getFileSystem(conf), f._1, f._2)
-    val headerLines = kinds.headOption.fold(Seq.empty[String])(headOf)
+    val headerLines = heads.headOption.fold(Seq.empty[String])(_._2._2)
     def chromLine(lines: Seq[String]) = lines.find(_.startsWith("#CHROM"))
     val chrom = chromLine(headerLines)
-    kinds.drop(1).find(f => chromLine(headOf(f)).exists(c => !chrom.contains(c)))
+    heads.drop(1).find(f => chromLine(f._2._2).exists(c => !chrom.contains(c)))
       .foreach { f =>
         throw new IllegalArgumentException(
           s"VCF shards disagree on their #CHROM line: ${f._1} " +

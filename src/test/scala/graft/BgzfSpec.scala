@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import graft.vcf.{Bgzf, BgzfSplitLineIterator, InputKind, SyntheticVcf, ToyVcf, VcfReader}
+import graft.vcf.{Bgzf, BgzfSplitLineIterator, SyntheticVcf, ToyVcf, VcfReader}
 
 class BgzfSpec extends SparkSpec {
   import spark.implicits._
@@ -185,6 +185,19 @@ class BgzfSpec extends SparkSpec {
     val df = spark.read.format("bgzf-text").option("splitSize", 256).load(a, b)
     assert(df.count() == 200)
     assert(df.rdd.getNumPartitions > 2)
+    // small files share a partition, as the file source packs them: with
+    // no per-file open cost, a 1 MiB split holds all three files, in order
+    val c = plainFile((0 until 100).map(i => s"c$i"))
+    def packed = spark.read.format("bgzf-text").option("splitSize", 1 << 20).load(a, b, c)
+    val openCost = "spark.sql.files.openCostInBytes"
+    spark.conf.set(openCost, "0")
+    try {
+      assert(packed.rdd.getNumPartitions == 1)
+      assert(packed.select("value", "file").as[(String, Int)].collect().toSeq ==
+        Seq("a" -> 0, "b" -> 1, "c" -> 2).flatMap { case (f, i) => (0 until 100).map(j => (s"$f$j", i)) })
+    } finally spark.conf.unset(openCost)
+    // at the default 4 MiB open cost, each file fills a 1 MiB partition
+    assert(packed.rdd.getNumPartitions == 3)
 
     // a directory mixing a bgzf shard and a plain-text shard must fail fast
     val dir = Files.createTempDirectory("graft_mixed")
@@ -205,8 +218,7 @@ class BgzfSpec extends SparkSpec {
     val conf = new org.apache.hadoop.conf.Configuration()
     def headLines(f: String, maxBytes: Long) = {
       val path = new org.apache.hadoop.fs.Path(f)
-      val fs = path.getFileSystem(conf)
-      BgzfSplitLineIterator.headLines(fs, path, InputKind.of(fs, path), maxBytes)
+      BgzfSplitLineIterator.headLines(path.getFileSystem(conf), path, maxBytes)._2
     }
     for (f <- Seq(tmpFile(big, blockData = 256), plainFile(big))) {
       val e = intercept[IllegalArgumentException](headLines(f, maxBytes = 2048))

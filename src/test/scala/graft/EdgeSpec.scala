@@ -404,6 +404,19 @@ class EdgeSpec extends SparkSpec {
       .select("pos").as[Long].collect().toSeq == Seq(250L))
   }
 
+  test("bzip2, zstd and xz input fails naming the file, not read as text") {
+    val dir = Files.createTempDirectory("vcfforeign")
+    val rnd = new scala.util.Random(7)
+    for ((name, magic) <- Seq("bzip2" -> Seq[Int]('B', 'Z', 'h', '9', 0x31, 0x41),
+        "zstd" -> Seq(0x28, 0xb5, 0x2f, 0xfd), "xz" -> Seq(0xfd, '7', 'z', 'X', 'Z', 0))) {
+      val f = dir.resolve(s"toy.vcf.$name")
+      Files.write(f, magic.map(_.toByte).toArray ++ Array.fill(4096)(rnd.nextInt(256).toByte))
+      val e = intercept[IllegalArgumentException](VcfReader.read(spark, f.toString))
+      assert(e.getMessage.contains(f.toString) && e.getMessage.contains(s"$name-compressed") &&
+        e.getMessage.contains("bgzip"), e.getMessage)
+    }
+  }
+
   test("seeded mutation sweep: a mutated file builds as its lines do, or fails naming it") {
     // 30 randomly mutated copies of ToyVcf (and two fixed ones), each a
     // plain and a BGZF file. Each file either builds exactly the tables
