@@ -32,6 +32,11 @@ import org.apache.spark.unsafe.types.UTF8String
   *   spark.read.format("bgzf-text")
   *     .option("splitSize", 64 << 20)   // default: the file source's split size
   *     .load("/data/cohort.vcf.gz")
+  *
+  * The `region` option (`"chr:beg-end"`, `;`-separated for several) reads
+  * a tabix-indexed BGZF file and is exact: the scan plans only the blocks
+  * the index names, and the reader drops each of their VCF records that
+  * overlaps no region ([[RegionOverlap]]).
   */
 class BgzfTextSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "bgzf-text"
@@ -74,16 +79,16 @@ object BgzfTextSource {
     * numbers, as in the tabix CLI) → (chr, beg, end).
     */
   def parseRegion(s: String): (String, Long, Long) = {
+    def bad = new IllegalArgumentException(
+      s"bad region '$s': expected chr or chr:beg-end (1-based, inclusive)")
     val colon = s.lastIndexOf(':')
     if (colon < 0) (s, 1L, Long.MaxValue >> 17) // whole chromosome
     else {
       val range = s.substring(colon + 1).replace(",", "")
       val dash = range.indexOf('-')
-      if (dash < 0)
-        throw new IllegalArgumentException(
-          s"bad region '$s': expected chr or chr:beg-end")
-      (s.substring(0, colon), range.substring(0, dash).toLong,
-        range.substring(dash + 1).toLong)
+      if (dash < 0) throw bad
+      def num(t: String) = t.toLongOption.getOrElse(throw bad)
+      (s.substring(0, colon), num(range.substring(0, dash)), num(range.substring(dash + 1)))
     }
   }
 
@@ -152,6 +157,9 @@ private[vcf] class BgzfTextScan(paths: Seq[String], splitSizeOpt: Option[Long],
   override def description(): String =
     s"bgzf-text ${paths.mkString(",")}" + region.fold("")(r => s" region=$r")
 
+  private val regions = region.map(_.split(';').toSeq.filter(_.nonEmpty)
+    .map(BgzfTextSource.parseRegion))
+
   override def planInputPartitions(): Array[InputPartition] = {
     val spark = SparkSession.active
     val conf = spark.sessionState.newHadoopConf()
@@ -169,7 +177,7 @@ private[vcf] class BgzfTextScan(paths: Seq[String], splitSizeOpt: Option[Long],
     val splitSize = splitSizeOpt.getOrElse(FilePartition.maxSplitBytes(spark,
       Seq(PartitionDirectory(InternalRow.empty, listed.toArray))))
     require(splitSize > 0, s"splitSize must be positive, got $splitSize")
-    region match {
+    regions match {
       case None =>
         BgzfTextSource.pack(files.flatMap { case (st, i, kind) =>
           val len = st.getLen
@@ -178,7 +186,7 @@ private[vcf] class BgzfTextScan(paths: Seq[String], splitSizeOpt: Option[Long],
             BgzfSplit(st.getPath.toString, i, kind, s, math.min(s + step, len), len)
           }
         }, splitSize, spark.sessionState.conf.filesOpenCostInBytes)
-      case Some(r) =>
+      case Some(regions) =>
         // Tabix-pruned scan: only the blocks whose virtual-offset chunks
         // overlap the region(s) are planned at all — the DSv2 analog of
         // the reference's readVcf(param = chunk_ranges[i]), including
@@ -186,8 +194,8 @@ private[vcf] class BgzfTextScan(paths: Seq[String], splitSizeOpt: Option[Long],
         // regions merge before planning so a block shared by two nearby
         // regions is read exactly once. Big chunks (a whole-chromosome
         // region) still split by `splitSize` for executor parallelism.
-        val regions = r.split(';').toSeq.filter(_.nonEmpty)
-          .map(BgzfTextSource.parseRegion)
+        // The index is conservative (bin granularity); the reader makes
+        // the read exact ([[RegionOverlap]]).
         if (index.isDefined && files.length > 1)
           throw new IllegalArgumentException(
             "explicit 'index' option requires a single input file; " +
@@ -224,7 +232,7 @@ private[vcf] class BgzfTextScan(paths: Seq[String], splitSizeOpt: Option[Long],
     val conf = SparkSession.active.sessionState.newHadoopConf()
     // Hadoop Configuration is not serializable; ship the merged entries.
     val entries = conf.iterator().asScala.map(e => (e.getKey, e.getValue)).toArray
-    new BgzfReaderFactory(entries)
+    new BgzfReaderFactory(entries, regions.getOrElse(Nil))
   }
 }
 
@@ -234,14 +242,18 @@ private[vcf] case class BgzfSplit(path: String, file: Int, kind: InputKind,
 /** One task's splits, read in turn. */
 private[vcf] case class BgzfPartition(splits: Array[BgzfSplit]) extends InputPartition
 
-private[vcf] class BgzfReaderFactory(confEntries: Array[(String, String)])
+/** Reads a partition's splits in turn; with `regions`, only the lines
+  * [[RegionOverlap]] keeps.
+  */
+private[vcf] class BgzfReaderFactory(confEntries: Array[(String, String)],
+    regions: Seq[(String, Long, Long)])
   extends PartitionReaderFactory {
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val splits = partition.asInstanceOf[BgzfPartition].splits.iterator
     val conf = new Configuration(false)
     confEntries.foreach { case (k, v) => conf.set(k, v) }
-    new PartitionReader[InternalRow] {
+    val lines = new PartitionReader[InternalRow] {
       private var sp: BgzfSplit = _
       private var it: BgzfSplitLineIterator = _
       private var row: InternalRow = _
@@ -260,6 +272,59 @@ private[vcf] class BgzfReaderFactory(confEntries: Array[(String, String)])
       }
       override def get(): InternalRow = row
       override def close(): Unit = if (it != null) { it.close(); it = null }
+    }
+    if (regions.isEmpty) lines
+    else new PartitionReader[InternalRow] {
+      private val keep = new RegionOverlap(regions)
+      override def next(): Boolean = {
+        // the value wraps the line's own array: getBytes does not copy
+        while (lines.next()) if (keep(lines.get().getUTF8String(0).getBytes)) return true
+        false
+      }
+      override def get(): InternalRow = lines.get()
+      override def close(): Unit = lines.close()
+    }
+  }
+}
+
+/** A region read's exact overlap, tested on each line in the reader, so
+  * the parse downstream stays the full read's (and its generated code is
+  * reused: a filter on the parsed columns would inline each query's
+  * bounds and compile anew). A line is dropped only when it has at least
+  * 8 tab-separated fields, its POS parses as [[VcfReader.parse]] casts it
+  * (`UTF8String.toLong`, which trims whitespace), and its interval
+  * `[pos, pos + length(ref) - 1]` misses every region (tabix overlap).
+  * Every other line goes on to the parse, which fails a malformed one
+  * naming its file and offset. One instance per task: it reuses buffers.
+  */
+private[vcf] final class RegionOverlap(regions: Seq[(String, Long, Long)])
+  extends (Array[Byte] => Boolean) {
+
+  private val chrs = regions.map(r => UTF8String.fromString(r._1)).toArray
+  private val begs = regions.map(_._2).toArray
+  private val ends = regions.map(_._3).toArray
+  private val tabs = new Array[Int](4) // the tabs ending CHROM, POS, ID and REF
+  private val pos = new UTF8String.LongWrapper
+
+  private def field(line: Array[Byte], k: Int): UTF8String = {
+    val from = if (k == 0) 0 else tabs(k - 1) + 1
+    UTF8String.fromBytes(line, from, tabs(k) - from)
+  }
+
+  override def apply(line: Array[Byte]): Boolean = {
+    var n = 0
+    var i = 0
+    while (n < 7 && i < line.length) {
+      if (line(i) == '\t') { if (n < 4) tabs(n) = i; n += 1 }
+      i += 1
+    }
+    n < 7 || !field(line, 1).toLong(pos) || {
+      val chr = field(line, 0)
+      val last = pos.value + field(line, 3).numChars - 1
+      var r = 0
+      while (r < chrs.length && !(chrs(r) == chr && pos.value <= ends(r) && last >= begs(r)))
+        r += 1
+      r < chrs.length
     }
   }
 }

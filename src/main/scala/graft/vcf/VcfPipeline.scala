@@ -1,6 +1,7 @@
 package graft.vcf
 
 import java.nio.charset.StandardCharsets.UTF_8
+import java.security.MessageDigest
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
@@ -69,8 +70,9 @@ object VcfPipeline {
     * `skipComplete`, restartable: returns the names of the tables this
     * call wrote.
     *
-    *   - `<out>/_input` fingerprints the input (path, size and mtime of
-    *     every input file) before any table is written. A rerun whose
+    *   - `<out>/_input` fingerprints the input (path, size, mtime and a
+    *     hash of the header lines of every input file) before any table
+    *     is written. A rerun whose
     *     input differs from it, or that finds tables without it, fails
     *     naming `outDir` and the changed file: resuming would mix tables
     *     of two inputs.
@@ -97,8 +99,14 @@ object VcfPipeline {
     val fs = out.getFileSystem(conf)
     val inputMark = new Path(out, "_input")
     val report = new Path(out, "multiallelic_sites")
-    val fingerprint = BgzfTextSource.listFiles(vcfPath, conf)
-      .map(st => s"${st.getPath}\t${st.getLen}\t${st.getModificationTime}")
+    val fingerprint = BgzfTextSource.listFiles(vcfPath, conf).map { st =>
+      // the header the read parses; an edit that keeps size and mtime
+      // (a sample renamed in place) still changes the fingerprint
+      val (_, head) = BgzfSplitLineIterator.headLines(st.getPath.getFileSystem(conf), st.getPath)
+      val hash = MessageDigest.getInstance("SHA-256")
+        .digest(head.mkString("\n").getBytes(UTF_8)).map(b => f"$b%02x").mkString
+      s"${st.getPath}\t${st.getLen}\t${st.getModificationTime}\t$hash"
+    }
     val built =
       if (fs.exists(inputMark)) {
         val in = fs.open(inputMark)

@@ -107,9 +107,11 @@ object VcfReader {
     * blocks whose index chunks overlap `chr:[beg, end]` (1-based
     * inclusive) are planned as input partitions — the pre-ETL analog of
     * the reference's `readVcf(param = chunk_ranges[i])`
-    * (`02-build-db.R:256`). The index is conservative (bin granularity),
-    * so an exact interval-overlap filter is layered on top; Catalyst
-    * keeps it next to the scan.
+    * (`02-build-db.R:256`). The index is conservative (bin granularity);
+    * the `bgzf-text` reader drops each record of those blocks whose
+    * interval `[pos, pos + length(ref) - 1]` misses the range, so the
+    * read is exact and its plan is [[read]]'s parse: a new range
+    * compiles no code.
     *
     * Requires `<path>.tbi` (or `indexPath`) — build one for the engine's
     * own exports with [[Tabix.build]].
@@ -122,7 +124,8 @@ object VcfReader {
   /** Multi-region variant of [[readRange]] — the reference's chunked
     * ETL reads a BATCH of ranges per call (`chunk_ranges[i]` holds many
     * intervals); index chunks from all regions merge before planning,
-    * so blocks shared between nearby regions are read once.
+    * so blocks shared between nearby regions are read once, and a record
+    * is kept when it overlaps any region.
     */
   def readRegions(spark: SparkSession, path: String,
       regions: Seq[(String, Long, Long)], splitSize: Option[Long] = None,
@@ -136,14 +139,7 @@ object VcfReader {
     val withIdx = indexPath.fold(reader)(p => reader.option("index", p))
     val lines = splitSize.fold(withIdx)(s => withIdx.option("splitSize", s)).load(path)
     val header = VcfHeader.parse(headerLines)
-    // tabix overlap semantics: record interval [pos, pos+len(ref)-1]
-    // intersects any requested region
-    val overlap = regions.map { case (c, b, e) =>
-      col("chr") === c && col("pos") <= e &&
-        col("pos") + length(col("ref")) - 1 >= b
-    }.reduce(_ || _)
-    val parsed = parse(body(lines), header, files).where(overlap)
-    VcfDataset(parsed, header)
+    VcfDataset(parse(body(lines), header, files), header)
   }
 
   /** Parse in-memory lines (tests, embedded fixtures); line i is offset i of `<lines>`. */

@@ -148,6 +148,29 @@ class ApiSpec extends SparkSpec {
     assert(VcfPipeline.run(spark, vcfFile, out).isEmpty)
   }
 
+  test("VcfPipeline.run: a header edited in place, size and mtime kept, fails the rerun") {
+    import java.nio.file.{Files, Paths}
+    val dir = Files.createTempDirectory("vcfheader").toString
+    val vcfFile = s"$dir/toy.vcf"
+    def write(lines: Seq[String]) =
+      Files.write(Paths.get(vcfFile), lines.mkString("\n").getBytes("UTF-8"))
+    write(ToyVcf.lines)
+    val out = s"$dir/db"
+    assert(VcfPipeline.run(spark, vcfFile, out).size == 9)
+    assert(VcfPipeline.run(spark, vcfFile, out).isEmpty)
+    // a sample renamed in place: the same size, and the old mtime put back
+    val p = new org.apache.hadoop.fs.Path(vcfFile)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val before = fs.getFileStatus(p)
+    write(ToyVcf.lines.map(l => if (l.startsWith("#CHROM")) l.replace("\tS2", "\tS3") else l))
+    fs.setTimes(p, before.getModificationTime, -1)
+    val after = fs.getFileStatus(p)
+    assert(after.getLen == before.getLen &&
+      after.getModificationTime == before.getModificationTime)
+    val e = intercept[IllegalStateException](VcfPipeline.run(spark, vcfFile, out))
+    assert(e.getMessage.contains(out) && e.getMessage.contains(vcfFile), e.getMessage)
+  }
+
   test("VcfPipeline.run resumes from the last committed stage after a kill") {
     import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._

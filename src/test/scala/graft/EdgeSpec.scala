@@ -334,6 +334,32 @@ class EdgeSpec extends SparkSpec {
     }
   }
 
+  test("a malformed line in a region read's planned block fails it, naming file, offset and reason") {
+    // ToyVcf fits one BGZF block, so a line rewritten to the same length
+    // keeps every virtual offset: the clean file's index plans the
+    // malformed file's read. 1:300 is outside 1:150-250 but in the block
+    // its index chunk plans.
+    val dir = Files.createTempDirectory("vcfregionbad")
+    val clean = put(dir.resolve("clean.vcf.gz"), ToyVcf.lines, InputKind.Bgzf, Bgzf.DefaultBlockData)
+    val cleanPath = new org.apache.hadoop.fs.Path(clean)
+    Tabix.build(cleanPath.getFileSystem(spark.sparkContext.hadoopConfiguration), cleanPath)
+    val at = ToyVcf.lines.indexWhere(_.startsWith("1\t300\t"))
+    val fields = ToyVcf.lines(at).split('\t')
+    Seq(
+      fields.updated(1, "3x0").mkString("\t") -> "POS is not an integer",
+      (fields.take(4).mkString("\t") + " " + fields.drop(4).mkString(" ")) ->
+        "fewer than 8 tab-separated fields"
+    ).zipWithIndex.foreach { case ((line, reason), k) =>
+      val lines = ToyVcf.lines.updated(at, line)
+      val f = put(dir.resolve(s"bad$k.vcf.gz"), lines, InputKind.Bgzf, Bgzf.DefaultBlockData)
+      Files.copy(dir.resolve("clean.vcf.gz.tbi"), dir.resolve(s"bad$k.vcf.gz.tbi"))
+      val offset = virtualOffset(lines, Bgzf.DefaultBlockData, byteStarts(lines)(at))
+      val msg = messages(intercept[Exception](
+        VcfReader.readRange(spark, f, "1", 150L, 250L).df.collect()))
+      assert(msg.contains(s"$f:$offset: malformed VCF line ($reason): $line"), msg)
+    }
+  }
+
   test("variant_id is a total order: duplicate records get ids in file order on every read") {
     val header = Seq(
       "##FORMAT=<ID=GT,Number=1,Type=String,Description=\"gt\">",

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.{Dedup, Layout, Skew}
-import graft.vcf.{SyntheticVcf, ToyVcf, VcfApi, VcfBuild, VcfHeader, VcfReader}
+import graft.vcf.{Bgzf, SyntheticVcf, Tabix, ToyVcf, VcfApi, VcfBuild, VcfHeader, VcfReader}
 
 /** Specs for the scale techniques: salted skew joins and bucketed
   * co-located joins.
@@ -203,16 +203,25 @@ class ScaleSpec extends SparkSpec {
     val info = spark.read.parquet(s"$dir/info")
     val idx = VcfApi.buildGeneIndex(impact)
     def ids(k: Int, from: Long) = (0 until k).map(i => from + 2L * i)
+    // ToyVcf as tabix-indexed BGZF, for range reads
+    val toy = s"$dir/toy.vcf.gz"
+    Bgzf.writeLocalFile(toy, ToyVcf.lines)
+    val toyPath = new org.apache.hadoop.fs.Path(toy)
+    Tabix.build(toyPath.getFileSystem(spark.sessionState.newHadoopConf()), toyPath)
+    def range(chr: String, beg: Long, end: Long) =
+      VcfReader.readRange(spark, toy, chr, beg, end).df.collect()
     // per lookup kind: one warm-up call, then fresh arguments that must
-    // add no compile (a `region` kind joins this table once its reads
-    // compile nothing)
+    // add no compile
     val kinds: Seq[(String, () => Any, Seq[() => Any])] = Seq(
       ("id_pull", () => VcfApi.pullByIds(geno, ids(3, 100)).collect(),
         Seq(1, 5, 7, 50, 1500).map(k => () => VcfApi.pullByIds(geno, ids(k, 1)).collect())),
       ("gene_filter", () => VcfApi.filterByGeneIndexed(idx, info, "C7", 0.05).collect(),
         Seq("A5", "B6").map(g => () => VcfApi.filterByGeneIndexed(idx, info, g, 0.05).collect())),
       ("gene_pull", () => VcfApi.pullByGene(impact, info, geno, "C7", 0.05).collect(),
-        Seq("A5", "B6").map(g => () => VcfApi.pullByGene(impact, info, geno, g, 0.05).collect())))
+        Seq("A5", "B6").map(g => () => VcfApi.pullByGene(impact, info, geno, g, 0.05).collect())),
+      ("region", () => range("1", 100L, 200L),
+        Seq(("1", 150L, 300L), ("2", 1L, 260L), ("2", 390L, 1000L))
+          .map { case (c, b, e) => () => range(c, b, e) }))
     for ((kind, warmUp, calls) <- kinds) {
       warmUp()
       val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount

@@ -25,17 +25,24 @@ class TabixSpec extends SparkSpec {
     assert(Tabix.reg2bin(0L, 100L) != Tabix.reg2bin(16384L, 16484L))
   }
 
-  /** Sorted multi-chromosome bgzf VCF + index; returns (vcfPath, lines). */
-  private def fixture(n: Int, blockData: Int): (String, Seq[String]) = {
+  /** `lines` written as a BGZF file at `path`, with its tabix index. */
+  private def indexed(path: String, lines: Seq[String], blockData: Int): String = {
+    Bgzf.writeLocalFile(path, lines, blockData)
+    val p = new Path(path)
+    Tabix.build(p.getFileSystem(spark.sessionState.newHadoopConf()), p)
+    path
+  }
+
+  /** Sorted multi-chromosome bgzf VCF (n synthetic records and `extra`)
+    * + index; returns (vcfPath, lines).
+    */
+  private def fixture(n: Int, blockData: Int,
+      extra: Seq[String] = Nil): (String, Seq[String]) = {
     val header = SyntheticVcf.header(2)
-    val body = (0L until n.toLong).map(i => SyntheticVcf.line(i, 2, 10))
+    val body = ((0L until n.toLong).map(i => SyntheticVcf.line(i, 2, 10)) ++ extra)
       .sortBy { l => val f = l.split('\t'); (f(0), f(1).toLong) }
     val dir = Files.createTempDirectory("graft_tabix")
-    val vcf = dir.resolve("fix.vcf.gz").toString
-    Bgzf.writeLocalFile(vcf, header ++ body, blockData)
-    val p = new Path(vcf)
-    Tabix.build(p.getFileSystem(spark.sessionState.newHadoopConf()), p)
-    (vcf, header ++ body)
+    (indexed(dir.resolve("fix.vcf.gz").toString, header ++ body, blockData), header ++ body)
   }
 
   test("index roundtrip: write → read preserves refs and chunks") {
@@ -98,25 +105,70 @@ class TabixSpec extends SparkSpec {
     assert(df.rdd.getNumPartitions > 1, "chunk must split for parallelism")
     val f = split(col("value"), "\t")
     val got = df.select(f.getItem(0)).as[String].collect()
-    // conservative superset is fine for the scan; the full chr must be there
+    // exact: every record of the chromosome, and no other
     val expect = (0L until 6000L).map(i => SyntheticVcf.line(i, 2, 10))
       .count(_.startsWith("5\t"))
-    assert(got.count(_ == "5") == expect)
+    assert(got.count(_ == "5") == expect && got.forall(_ == "5"))
   }
 
   test("VcfReader.readRange ≡ full read + overlap filter") {
-    val (vcf, _) = fixture(3000, blockData = 512)
-    val (chr, beg, end) = ("13", 2000L, 9000L)
-    val ranged = VcfReader.readRange(spark, vcf, chr, beg, end,
-      splitSize = Some(2048L))
-    val fullF = VcfReader.read(spark, vcf, splitSize = Some(2048L)).df
-      .where(col("chr") === chr && col("pos") <= end &&
-        col("pos") + length(col("ref")) - 1 >= beg)
-    val a = ranged.df.select("chr", "pos", "id").orderBy("pos")
-      .collect().map(_.toString).toSeq
-    val b = fullF.select("chr", "pos", "id").orderBy("pos")
-      .collect().map(_.toString).toSeq
-    assert(a == b && a.nonEmpty)
+    // synthetic SNVs on every chromosome, plus chr 13 records at the
+    // range's edges: a deletion from before `beg` whose REF reaches into
+    // the range and one that stops short of it, a REF of multi-byte
+    // characters (its length counts characters, as `length` does), and
+    // records at `beg - 1`, `end` and `end + 1`
+    val (beg, end) = (2000L, 9000L)
+    val chr13 = SyntheticVcf.line(12, 2, 10).split('\t')
+    def at(pos: Long, id: String, ref: String) =
+      chr13.updated(1, pos.toString).updated(2, id).updated(3, ref).mkString("\t")
+    val edges = Seq(at(1995, "del_into", "ACGTACGTAC"), at(1991, "del_short", "ACGTA"),
+      at(1997, "wide_ref", "\u00c4\u00c4\u00c4"), at(beg - 1, "before", "A"),
+      at(end, "at_end", "AC"), at(end + 1, "past_end", "A"))
+    val (vcf, lines) = fixture(3000, blockData = 512, extra = edges)
+    // the same records as a directory of two indexed shards, cut inside
+    // the range
+    val (header, body) = lines.span(_.startsWith("#"))
+    val cut = body.indexWhere(l => l.startsWith("13\t") && l.split('\t')(1).toLong >= 5000)
+    val shards = Files.createTempDirectory("graft_tabix_shards")
+    indexed(shards.resolve("part0.vcf.gz").toString, header ++ body.take(cut), 512)
+    indexed(shards.resolve("part1.vcf.gz").toString, header ++ body.drop(cut), 512)
+
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("chr", "pos", "id").collect().map(_.toString).sorted.toSeq
+    for (input <- Seq(vcf, shards.toString); regions <- Seq(
+        Seq(("13", beg, end)),
+        Seq(("chrZZ", 1L, 1000000L)), // a chromosome absent from the index
+        Seq(("13", 2000L, 2450L), ("13", 2550L, 3000L)), // nearby: they share a block
+        Seq(("13", end, end), ("chrZZ", 1L, 10L), ("7", 1000L, 1500L)))) {
+      val read =
+        if (regions.size == 1) {
+          val (c, b, e) = regions.head
+          VcfReader.readRange(spark, input, c, b, e, splitSize = Some(2048L))
+        } else VcfReader.readRegions(spark, input, regions, splitSize = Some(2048L))
+      val oracle = VcfReader.read(spark, input, splitSize = Some(2048L)).df
+        .where(regions.map { case (c, b, e) =>
+          col("chr") === c && col("pos") <= e && col("pos") + length(col("ref")) - 1 >= b
+        }.reduce(_ || _))
+      val (got, want) = (rows(read.df), rows(oracle))
+      assert(got == want, s"$input $regions")
+      assert(got.nonEmpty == regions.exists(_._1 != "chrZZ"), s"$input $regions")
+      assert(got.distinct == got, s"$input $regions: a record read twice")
+    }
+    val ids = VcfReader.readRange(spark, vcf, "13", beg, end).df
+      .select("id").as[String].collect().toSet
+    assert(Set("del_into", "at_end").subsetOf(ids), ids)
+    assert(ids.intersect(Set("del_short", "wide_ref", "before", "past_end")).isEmpty, ids)
+  }
+
+  test("a region option that is not chr or chr:beg-end fails naming it") {
+    val (vcf, _) = fixture(200, blockData = 512)
+    for (bad <- Seq("1:abc-200", "1:100", "1:100-2x")) {
+      val e = intercept[IllegalArgumentException](
+        spark.read.format("bgzf-text").option("region", bad).load(vcf).count())
+      assert(e.getMessage.contains(s"'$bad'") && e.getMessage.contains("chr:beg-end"),
+        e.getMessage)
+    }
+    assert(graft.vcf.BgzfTextSource.parseRegion("1:1,000-2,000") == (("1", 1000L, 2000L)))
   }
 
   test("randomized region sweep equals full-scan filter") {
